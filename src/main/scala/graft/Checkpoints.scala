@@ -27,18 +27,10 @@ import org.apache.spark.sql.graftshim.PlanBridge
   *    use [[checkpointPinned]] and survive `releaseAll`; their owners
   *    release them explicitly on eviction.
   *
-  * No-checkpoint mode: `-Dgraft.noCheckpoint=true` makes [[checkpoint]]
-  * the identity (and [[release]] a structural no-op), so plan auditors
-  * ([[Explain]] --audit) can see THROUGH the checkpoint boundary to the
-  * full logical plan. Only for small-sf inspection: iterative plans
-  * grow per round without truncation.
+  * Checkpointing is always on: [[Explain]] --audit reads the executed
+  * plans, so no mode exists that turns a checkpoint into the identity.
   */
 object Checkpoints {
-
-  /** System property consumed by [[checkpoint]]: "true" disables
-    * checkpointing so audits see untruncated plans. */
-  val NoCheckpointProp = "graft.noCheckpoint"
-  private def disabled: Boolean = java.lang.Boolean.getBoolean(NoCheckpointProp)
 
   // (context, rddId) -> (rdd, pinned). Keyed by context so concurrent
   // sessions don't release each other's blocks.
@@ -52,58 +44,23 @@ object Checkpoints {
     * explicitly (e.g. the GraphQueries co-ship spine). */
   def checkpointPinned(df: DataFrame): DataFrame = doCheckpoint(df, pin = true)
 
-  /** Like [[checkpoint]] but applied EVEN in no-checkpoint audit mode —
-    * for a loop's INPUT relation when that input is itself an expensive
-    * audited-elsewhere subtree (e.g. the ER pair list feeding star
-    * contraction: the pair plan is audited via q25 and the loop via
-    * q78/q34, while an un-truncated loop would replicate the pair
-    * subtree ~4^rounds times and make planning alone intractable). */
-  def checkpointAlways(df: DataFrame): DataFrame =
-    doCheckpoint(df, pin = false, force = true)
-
-  /** [[checkpointPinned]] ∩ [[checkpointAlways]]: survives
-    * [[releaseAll]] AND stays a real checkpoint in no-checkpoint audit
-    * mode — for SESSION-LIFETIME materializations that back registered
-    * SQL views (`GraphQueries.registerGraphViews`): a view over a
-    * non-pinned block breaks unrecoverably after releaseAll (truncated
-    * lineage, block gone), and a view over an un-truncated iterative
-    * plan makes audit-mode planning intractable. */
-  def checkpointPinnedAlways(df: DataFrame): DataFrame =
-    doCheckpoint(df, pin = true, force = true)
-
-  private def doCheckpoint(df: DataFrame, pin: Boolean,
-                           force: Boolean = false): DataFrame = {
-    if (disabled && !force) df
-    else {
-      val cp = df.localCheckpoint()
-      PlanBridge.checkpointRdd(cp).foreach { r =>
-        tracked.put((r.sparkContext, r.id), (r, pin))
-      }
-      cp
+  private def doCheckpoint(df: DataFrame, pin: Boolean): DataFrame = {
+    val cp = df.localCheckpoint()
+    PlanBridge.checkpointRdd(cp).foreach { r =>
+      tracked.put((r.sparkContext, r.id), (r, pin))
     }
+    cp
   }
 
   /** Immediately unpersist one checkpointed DataFrame's blocks.
-    * Structural no-op when `df` is not a bare checkpoint (so loop code
-    * stays correct under no-checkpoint mode). Callers must guarantee no
-    * consumer re-executes `df` afterwards — a truncated lineage cannot
-    * recompute. */
+    * No-op when `df` is not a bare checkpoint. Callers must guarantee
+    * no consumer re-executes `df` afterwards — a truncated lineage
+    * cannot recompute. */
   def release(df: DataFrame): Unit =
     PlanBridge.checkpointRdd(df).foreach { r =>
       r.unpersist(blocking = false)
       tracked.remove((r.sparkContext, r.id))
     }
-
-  /** [[release]] except in no-checkpoint audit mode, where it keeps
-    * the block: with [[checkpoint]] an identity there, a consumer's
-    * UNTRUNCATED plan may still reference this [[checkpointAlways]]
-    * block, and an eager downstream materialization (e.g.
-    * louvainTwoLevel checkpointing the refineCommunities output it
-    * builds on) would hit the unrecoverable lost-block error. The
-    * skipped block is non-pinned, so the harness' [[releaseAll]]
-    * reclaims it after the query. Normal-mode behavior is unchanged. */
-  def releaseAfterLoop(df: DataFrame): Unit =
-    if (!disabled) release(df)
 
   /** Unpersist every non-pinned tracked block of this session's context
     * (and forget entries of stopped contexts). Call between queries,

@@ -1,6 +1,11 @@
 package graft
 
+import org.apache.spark.graftshim.SchedulerBridge
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+  SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 
 /** Plan-hygiene inspector.
   *
@@ -9,33 +14,27 @@ import org.apache.spark.sql.SparkSession
   * default set) so scan pushdown, broadcast choices, and
   * WholeStageCodegen spans can be reviewed.
   *
-  * `runMain graft.Explain --audit [sfDir]` — one summary line per
-  * declared query: shuffle / join-node counts, flagging nested-loop
-  * joins outside the intended set (broadcast grids, scalars, centroid
-  * assignment, and the documented brute-force baselines). The audit is
-  * the mechanical form of the "explain-and-iterate" discipline: a new
-  * query that silently plans a cartesian shows up here before it shows
-  * up in the bench.
+  * `runMain graft.Explain --audit [sfDir] [queryName...]` — executes
+  * every declared query (or the named ones) through the noop sink in
+  * the production configuration, checkpoints on, each in a fresh
+  * session and twice: a warm pass that builds the session-pinned spines
+  * and persisted indexes the query serves from, then a measured pass.
+  * It writes one row per query to AUDIT.json (`GRAFT_AUDIT_OUT`
+  * overrides the path):
   *
-  * The audit runs in no-checkpoint mode
-  * (`-Dgraft.noCheckpoint=true`, consumed by [[Checkpoints]]): the
-  * operators skip `localCheckpoint`, so the audited plan covers the
-  * FULL dataflow of the iterative/spine queries — including the
-  * segments a checkpoint would truncate. Iterative plans grow per
-  * round without truncation, so audit at sf0.001 (loops converge in a
-  * few rounds there); production runs keep checkpointing on.
+  *  - `rt_*`: what the measured pass ran — jobs, completed, skipped
+  *    (AQE exchange reuse, already-computed checkpoint parents) and
+  *    failed stages, stage retries;
+  *  - the plan census over BOTH passes: shuffle exchanges and
+  *    bhj/smj/shj/nlj join nodes of the final (AQE) plan of every SQL
+  *    execution — the action itself, and every eager checkpoint round,
+  *    loop guard or scalar collect the query runs while it is built.
   *
-  * `runMain graft.Explain --audit-runtime [sfDir]` — the COMPLEMENT:
-  * checkpoints stay ON (the production configuration) and each query
-  * is EXECUTED through the noop sink while a SparkListener counts what
-  * actually ran — jobs, completed stages, and skipped stages (AQE
-  * exchange reuse). The static audit's exchange counts describe the
-  * untruncated plan (q104 counts thousands of planned exchanges the
-  * runtime never executes once checkpoints cut the lineage); this pass
-  * records the executed truth, so a bench regression can be matched to
-  * an executed-plan change rather than an audit artifact (r12 VERDICT
-  * item 6). Results merge into AUDIT.json as rt_* keys next to the
-  * static counts.
+  * Nested-loop joins outside the intended set (broadcast grids,
+  * scalars, centroid assignment, and the documented brute-force
+  * baselines) are flagged. The audit is the mechanical form of the
+  * "explain-and-iterate" discipline: a new query that silently plans a
+  * cartesian shows up here before it shows up in the bench.
   */
 object Explain {
 
@@ -80,6 +79,7 @@ object Explain {
     "q214_dataset_card",    // broadcast 1-row metric scalars (q42 shape)
     "q51_ann_ivf_topk",     // broadcast centroid assignment
     "q72_embed_neardup_ivf", // broadcast centroid assignment (same as q51)
+    "q141_semantic_dedup",  // index build: broadcast centroid assignment (q51 shape)
     "q56_embed_neardup",    // exact all-pairs baseline (documented)
     "q66_tfidf_topterms",   // broadcast corpus-size scalar
     "q250_citation_context_terms", // broadcast token-total scalar (q66 shape)
@@ -93,6 +93,7 @@ object Explain {
     "q118_bpe_budget",      // broadcast corpus-total scalar (q42 shape)
     "q119_ann_ivf_indexed", // broadcast centroid probe assignment (q51 shape)
     "q252_ivf_append_serve", // broadcast centroid probe assignment (q119 shape)
+    "q253_ivf_append_drift", // index build: broadcast centroid assignment (q252 shape)
     "q261_semantic_contamination", // broadcast centroid probe assignment (q119 shape)
     "q120_quantile_sketch", // broadcast 1-row sketch scalar (q42 shape)
     "q121_bloom_join",      // broadcast 1-row Bloom-filter scalar (q42 shape)
@@ -127,14 +128,26 @@ object Explain {
     "q211_ann_mrr_at_k",    // brute-force exact side (q28) + centroid assignment (q51)
     "q215_hard_negatives")  // brute-force exact side (q28) + centroid assignment (q51)
 
-  /** Per-query runtime counters: jobs started, stages submitted with
-    * them, stages actually completed. Skipped = submitted − completed
-    * (AQE exchange reuse / already-computed checkpoint parents).
-    * `lastEvent` supports the post-action quiescence wait — the
-    * listener bus is asynchronous, so counts settle shortly after the
-    * action returns. */
-  private final class RuntimeCounts
-      extends org.apache.spark.scheduler.SparkListener {
+  /** Census key of each counted plan node; `Exchange` is a shuffle
+    * exchange (a BroadcastExchange is not counted). */
+  private val censusKey = Map("Exchange" -> "shuffles",
+    "BroadcastHashJoin" -> "bhj", "SortMergeJoin" -> "smj",
+    "ShuffledHashJoin" -> "shj",
+    "BroadcastNestedLoopJoin" -> "nlj", "CartesianProduct" -> "nlj")
+  private val censusKeys = Seq("shuffles", "bhj", "smj", "shj", "nlj")
+
+  /** Census keys of one plan tree's counted nodes. A reused exchange or
+    * subquery ran once, where its original appears, so its subtree is
+    * not re-counted. */
+  private def censusNodes(p: SparkPlanInfo): Seq[String] =
+    censusKey.get(p.nodeName).toSeq ++ (if (p.nodeName.startsWith("Reused")) Nil
+      else p.children.flatMap(censusNodes))
+
+  /** Per-pass executed counters: jobs started, stages submitted with
+    * them, stages actually completed, and the census of every SQL
+    * execution's final plan. Skipped = planned − submitted (AQE
+    * exchange reuse / already-computed checkpoint parents). */
+  private[graft] final class RuntimeCounts extends SparkListener {
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     // distinct stage ids planned by job DAGs vs actually submitted:
     // a stage in a DAG that never submits was SKIPPED (its output was
@@ -149,134 +162,117 @@ object Explain {
     val attempts = new java.util.concurrent.atomic.AtomicInteger
     val completedOk = new java.util.concurrent.atomic.AtomicInteger
     val failed = new java.util.concurrent.atomic.AtomicInteger
-    @volatile var lastEvent: Long = System.nanoTime()
-    private def touch(): Unit = lastEvent = System.nanoTime()
-    override def onJobStart(
-        js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+    // executionId -> latest plan: the start event's plan, replaced by
+    // each AQE re-plan; the one left at execution end is the final plan
+    private val plans = new java.util.concurrent.ConcurrentHashMap[Long, SparkPlanInfo]
+    private val counts = scala.collection.concurrent.TrieMap[String, Int]()
+    override def onJobStart(js: SparkListenerJobStart): Unit = {
       jobs.incrementAndGet()
       js.stageInfos.foreach(si => plannedIds.add(si.stageId))
-      touch()
     }
-    override def onStageSubmitted(
-        ss: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit = {
+    override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit = {
       attempts.incrementAndGet()
       submittedIds.add(ss.stageInfo.stageId)
-      touch()
     }
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
       if (sc.stageInfo.failureReason.isEmpty) completedOk.incrementAndGet()
       else failed.incrementAndGet()
-      touch()
     }
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => plans.put(s.executionId, s.sparkPlanInfo)
+      case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+        plans.put(u.executionId, u.sparkPlanInfo)
+      case end: SparkListenerSQLExecutionEnd =>
+        Option(plans.remove(end.executionId))
+          .foreach(censusNodes(_).foreach(k => counts(k) = census(k) + 1))
+      case _ =>
+    }
+    /** Census count of one of [[censusKeys]]. */
+    def census(key: String): Int = counts.getOrElse(key, 0)
     /** Planned-but-never-submitted stages (reused outputs). */
     def skipped: Int = plannedIds.size - submittedIds.size
     /** Re-attempts beyond each stage's first submission. */
     def retries: Int = attempts.get - submittedIds.size
-    /** Wait until no listener event has arrived for `quietMs`. */
-    def quiesce(quietMs: Long = 250, capMs: Long = 5000): Unit = {
-      val deadline = System.nanoTime() + capMs * 1000000L
-      while (System.nanoTime() - lastEvent < quietMs * 1000000L &&
-             System.nanoTime() < deadline) Thread.sleep(25)
-    }
+  }
+
+  /** Runs `body` with a fresh [[RuntimeCounts]] attached; returns the
+    * counts, settled by draining the listener bus, and the failure, if
+    * any. */
+  private[graft] def counted(spark: SparkSession)(body: => Unit)
+      : (RuntimeCounts, Option[Throwable]) = {
+    val c = new RuntimeCounts
+    spark.sparkContext.addSparkListener(c)
+    val err = try { body; None } catch { case e: Throwable => Some(e) }
+    SchedulerBridge.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.removeSparkListener(c)
+    (c, err)
   }
 
   def main(args: Array[String]): Unit = {
     val audit = args.headOption.contains("--audit")
-    val auditRt = args.headOption.contains("--audit-runtime")
-    if (audit) System.setProperty(Checkpoints.NoCheckpointProp, "true")
-    val rest = if (audit || auditRt) args.drop(1) else args
+    val rest = if (audit) args.drop(1) else args
     val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (rest.length > 1) rest.drop(1).toSeq
-      else if (audit || auditRt) SparkEntry.queries.keys.toSeq.sorted
+      else if (audit) SparkEntry.queries.keys.toSeq.sorted
       else Seq("q01_pricing_summary", "q03_topk_revenue", "q05_region_volume",
         "q15_cosupply_edges", "q28_cosine_topk")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    def session(): SparkSession = {
+      val s = SparkSession.builder()
+        .master("local[4]")
+        .config("spark.sql.shuffle.partitions", "4")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+      s.sparkContext.setLogLevel("ERROR")
+      s
+    }
 
-    if (auditRt) {
+    if (audit) {
+      var flagged = 0
       val rows = names.map { n =>
-        // WARM pass, unmeasured: builds the session-pinned spines,
-        // persisted indexes, and same-file fixtures this query serves
-        // from, so the measured pass records the query's OWN dataflow
-        // — not the first-toucher build cost the r15 verdict flagged
-        // as attribution noise. Spines are NOT released between the
-        // two passes (release happens after the measured pass).
-        try SparkEntry.queries(n)(spark, sfDir)
+        // A fresh session per query: its warm pass builds every
+        // session-pinned spine and persisted index it serves from (even
+        // one another query shares), so the census over both passes
+        // covers them, and the measured pass's rt_* record the query's
+        // OWN dataflow. A warm-pass failure recurs in the measured pass.
+        val spark = session()
+        def run(): Unit = SparkEntry.queries(n)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () } // measured pass reports it
-        val c = new RuntimeCounts
-        spark.sparkContext.addSparkListener(c)
-        val ok =
-          try {
-            SparkEntry.queries(n)(spark, sfDir)
-              .write.format("noop").mode("overwrite").save()
-            true
-          } catch { case e: Throwable =>
-            System.err.println(s"[audit-rt] $n FAILED: ${e.getMessage}")
-            false
-          } finally {
-            Checkpoints.releaseAll(spark)
-            c.quiesce()
-            spark.sparkContext.removeSparkListener(c)
-          }
-        println(f"[audit-rt] $n%-28s jobs=${c.jobs.get}%-4d " +
+        val (warm, _) = counted(spark)(run())
+        val (c, err) = counted(spark)(try run() finally Checkpoints.releaseAll(spark))
+        spark.stop()
+        err.foreach(e => System.err.println(s"[audit] $n FAILED: ${e.getMessage}"))
+        val ok = err.isEmpty
+        val k = censusKeys.map(key => key -> (warm.census(key) + c.census(key))).toMap
+        val unintended = k("nlj") > 0 && !intendedNlj(n)
+        if (unintended) flagged += 1
+        println(f"[audit] $n%-28s jobs=${c.jobs.get}%-4d " +
           f"stages=${c.completedOk.get}%-5d skipped=${c.skipped}%-5d " +
-          f"failed=${c.failed.get}%-3d retries=${c.retries}%-3d " +
-          (if (ok) "" else "FAILED"))
+          censusKeys.map(key => f"$key=${k(key)}%-4d").mkString(" ") +
+          (if (unintended) "  <-- UNINTENDED NLJ" else "") +
+          (if (ok) "" else "  FAILED"))
         s""""$n": {"rt_jobs": ${c.jobs.get}, """ +
           s""""rt_stages": ${c.completedOk.get}, """ +
           s""""rt_stages_skipped": ${c.skipped}, """ +
           s""""rt_stages_failed": ${c.failed.get}, """ +
-          s""""rt_stage_retries": ${c.retries}, "rt_ok": $ok}"""
-      }
-      println(s"[audit-rt] ${names.size} queries executed")
-      val out = sys.env.getOrElse("GRAFT_AUDIT_RT_OUT", "AUDIT_runtime.json")
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
-        rows.mkString(s"""{"sf": "$sfDir", "queries": {""", ",\n", "}}"))
-    } else if (audit) {
-      var flagged = 0
-      val rows = names.map { n =>
-        val plan = SparkEntry.queries(n)(spark, sfDir)
-          .queryExecution.executedPlan.toString
-        def cnt(p: String) = p.r.findAllIn(plan).size
-        val nlj = cnt("BroadcastNestedLoopJoin") + cnt("CartesianProduct")
-        val unintended = nlj > 0 && !intendedNlj(n)
-        val flag = if (unintended) { flagged += 1; "  <-- UNINTENDED NLJ" }
-                   else ""
-        // shuffle exchanges only (hash/range) — "Exchange" alone would
-        // also match every BroadcastExchange and overstate shuffles.
-        // (WholeStageCodegen spans are not counted: AQE materializes
-        // them lazily, so the pre-execution plan string shows none)
-        val shuffles = cnt("Exchange hashpartitioning") +
-          cnt("Exchange rangepartitioning") + cnt("Exchange SinglePartition") +
-          cnt("Exchange RoundRobinPartitioning")
-        val (bhj, smj, shj) =
-          (cnt("BroadcastHashJoin"), cnt("SortMergeJoin"), cnt("ShuffledHashJoin"))
-        println(f"[audit] $n%-28s shuf=$shuffles%-3d bhj=$bhj%-3d smj=$smj%-3d shj=$shj%-3d nlj=$nlj%-2d$flag")
-        s""""$n": {"shuffles": $shuffles, "bhj": $bhj, "smj": $smj, """ +
-          s""""shj": $shj, "nlj": $nlj, "nlj_intended": ${intendedNlj(n)}, """ +
+          s""""rt_stage_retries": ${c.retries}, "rt_ok": $ok, """ +
+          censusKeys.map(key => s""""$key": ${k(key)}, """).mkString +
+          s""""nlj_intended": ${intendedNlj(n)}, """ +
           s""""unintended_nlj": $unintended}"""
       }
       println(s"[audit] ${names.size} queries, $flagged unintended nested-loop plans")
-      // machine-readable per-round artifact (the prose line above used
-      // to be the only record): query → plan counts + NLJ verdict
       val out = sys.env.getOrElse("GRAFT_AUDIT_OUT", "AUDIT.json")
       java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
         rows.mkString(
           s"""{"sf": "$sfDir", "unintended_nlj_total": $flagged, "queries": {""",
           ",\n", "}}"))
     } else {
+      val spark = session()
       names.foreach { n =>
         println(s"\n===== $n =====")
         SparkEntry.queries(n)(spark, sfDir).explain("formatted")
       }
+      spark.stop()
     }
-    spark.stop()
   }
 }

@@ -644,9 +644,9 @@ object Dedup {
   def nearDupKeeper(docs: DataFrame, idCol: String, textCol: String,
                     minAgree: Int = 16, numPerms: Int = 32): DataFrame = {
     val sigs = minhashSignatures(docs, idCol, textCol, numPerms)
-    // pinned even in no-checkpoint audit mode: the star-contraction
-    // loop's per-round guards would otherwise re-run the LSH subtree
-    val edges = graft.Checkpoints.checkpointAlways(
+    // checkpointed: the star-contraction loop's per-round guards
+    // would otherwise re-run the LSH subtree
+    val edges = graft.Checkpoints.checkpoint(
       minhashEstimate(lshCandidates(sigs, idCol, numPerms), sigs, idCol)
         .filter(col("est_jaccard") >= minAgree.toDouble / numPerms)
         .select(col("id_a"), col("id_b")))
@@ -689,10 +689,9 @@ object Dedup {
   def resolveEntities(df: DataFrame, idCol: String, textCol: String,
                       minJaccard: Double = 0.8,
                       starComponents: Boolean = false): DataFrame = {
-    // pinned EVEN in no-checkpoint audit mode (Checkpoints scaladoc):
-    // the component loop's guards would otherwise re-plan and re-run
-    // the whole PPJoin subtree ~4^rounds times
-    val verified = graft.Checkpoints.checkpointAlways(
+    // checkpointed: the component loop's guards would otherwise
+    // re-run the whole PPJoin subtree every round
+    val verified = graft.Checkpoints.checkpoint(
       ngramJaccardPairs(df, idCol, textCol, 3, minJaccard)
         .select(col("id_a"), col("id_b")))
     val comps =
@@ -1007,13 +1006,11 @@ object Dedup {
             // k × max-doc-shingles. From remaining, rounds contribute
             // DISJOINT sets, so covered is duplicate-free by
             // construction and bounded by the union's true size.
-            // checkpointAlways (not checkpoint): in no-checkpoint audit
-            // mode an identity here left covered a lazy union of
-            // anti-join filters, so round r re-scanned base r+1 times —
-            // the accumulator is tiny, so always materializing is free.
+            // Checkpointed: as a lazy union of anti-join filters, round
+            // r would re-scan base r+1 times; the accumulator is tiny.
             val pickShingles =
               remaining.filter(col(idCol) === id).select(col("s"))
-            val newCov = graft.Checkpoints.checkpointAlways(
+            val newCov = graft.Checkpoints.checkpoint(
               covered.fold(pickShingles)(_ union pickShingles))
             covered.foreach(graft.Checkpoints.release)
             covered = Some(newCov)

@@ -110,9 +110,8 @@ object Graph {
     * so batching sources into the same rounds is the scale move; state
     * grows as sources × reach, partitioned by vertex like everything
     * else). Bounded `depth` like [[shortestPathsInt]]'s fixed rounds:
-    * exact within the horizon, oracle-unrollable, audit pays plan
-    * strings only. Returns (src, v, level), level = hop distance,
-    * sources included at level 0. */
+    * exact within the horizon, oracle-unrollable. Returns (src, v,
+    * level), level = hop distance, sources included at level 0. */
   def multiSourceBfs(edges: DataFrame, sources: Seq[Long], depth: Int,
                      a: String = "a", b: String = "b"): DataFrame = {
     val spark = edges.sparkSession
@@ -125,8 +124,6 @@ object Graph {
       .select(col("src"), col("src").as("v"), lit(0L).as("level")))
     var i = 0
     while (i < depth) {
-      // aliases for the same audit-mode ambiguity reason as
-      // shortestPathsInt: dist's untruncated lineage contains adj
       val relaxed = dist.alias("dd").join(adj.alias("aa"),
           col("dd.v") === col("aa.s"))
         .select(col("dd.src").as("src"), col("aa.d").as("v"),
@@ -163,13 +160,12 @@ object Graph {
     require(numWalks >= 1 && steps >= 1, "need numWalks, steps >= 1")
     val spark = edges.sparkSession
     import spark.implicits._
-    // checkpointAlways: both relations feed every hop (audit mode
-    // would replicate the substrate per round otherwise)
-    val adj = Checkpoints.checkpointAlways(
+    // checkpointed: both relations feed every hop
+    val adj = Checkpoints.checkpoint(
       edges.select(col(a).as("s"), col(b).as("d"))
         .union(edges.select(col(b).as("s"), col(a).as("d")))
         .filter(col("s") =!= col("d")).distinct())
-    val ranked = Checkpoints.checkpointAlways(adj.withColumn("idx",
+    val ranked = Checkpoints.checkpoint(adj.withColumn("idx",
       row_number().over(org.apache.spark.sql.expressions.Window
         .partitionBy(col("s")).orderBy(col("d"))) - 1L))
     val deg = ranked.groupBy(col("s")).agg(count(lit(1)).as("deg"))
@@ -225,11 +221,11 @@ object Graph {
     require(wReturn > 0 && wCommon > 0 && wOut > 0, "weights must be > 0")
     val spark = edges.sparkSession
     import spark.implicits._
-    val adj = Checkpoints.checkpointAlways(
+    val adj = Checkpoints.checkpoint(
       edges.select(col(a).as("s"), col(b).as("d"))
         .union(edges.select(col(b).as("s"), col(a).as("d")))
         .filter(col("s") =!= col("d")).distinct())
-    val ranked = Checkpoints.checkpointAlways(adj.withColumn("idx",
+    val ranked = Checkpoints.checkpoint(adj.withColumn("idx",
       row_number().over(org.apache.spark.sql.expressions.Window
         .partitionBy(col("s")).orderBy(col("d"))) - 1L))
     val deg = ranked.groupBy(col("s")).agg(count(lit(1)).as("deg"))
@@ -320,12 +316,9 @@ object Graph {
     require(depth >= 1, "stressCentrality needs depth >= 1")
     val spark = edges.sparkSession
     import spark.implicits._
-    // checkpointAlways: the adjacency feeds BOTH passes in every round
-    // AND every later round's visited union — untruncated in audit
-    // mode, the upstream edge subtree would replicate ~3^depth times
-    // (the resolveEntities lesson; the substrate is audited via its
-    // own queries)
-    val adj = Checkpoints.checkpointAlways(
+    // checkpointed: the adjacency feeds BOTH passes in every round AND
+    // every later round's visited union
+    val adj = Checkpoints.checkpoint(
       edges.select(col(a).as("s"), col(b).as("d"))
         .union(edges.select(col(b).as("s"), col(a).as("d")))
         .filter(col("s") =!= col("d")).distinct())
@@ -431,8 +424,7 @@ object Graph {
     * release like every loop here. Fixed `rounds` (a query parameter,
     * like PageRank's iteration count) rather than a convergence guard:
     * distances are exact for every vertex within `rounds` hops of the
-    * source, the oracle unrolls the same count, and the audit pays
-    * plan strings only — no data-dependent giant-plan re-execution.
+    * source, and the oracle unrolls the same count.
     * At 100 TB this is the standard ~diameter-bounded relaxation; a
     * full-convergence variant would add the cached-count guard used by
     * [[kCore]]. Returns (v, dist) for vertices reached within
@@ -460,9 +452,6 @@ object Graph {
     var delta = dist
     var i = 0
     while (i < rounds) {
-      // explicit aliases: in no-checkpoint audit mode dist's lineage
-      // CONTAINS sym after round 1, so dataframe-qualified column refs
-      // become an ambiguous self-join
       val relaxed = delta.alias("dd").join(sym.alias("ss"),
           col("dd.v") === col("ss.u"))
         .select(col("ss.v").as("v"),
@@ -692,15 +681,9 @@ object Graph {
         .select(col("v").as("u"), col("m").as("v"))
       val kept = if (large) rewired
         else rewired.union(mins.select(col("mu").as("u"), col("m").as("v")))
-      // checkpointAlways, not checkpoint: the fixpoint guard below
-      // EXECUTES every round (count + except), so in no-checkpoint
-      // audit mode an untruncated round isn't just a long plan string —
-      // it's ~4^rounds of re-planned re-execution, intractable past a
-      // few rounds (the q109 knn substrate takes more rounds than the
-      // q78 strong substrate and hung the audit). Rounds share one
-      // dataflow shape, so truncating loses no audit signal; the
-      // per-round shape is audited via q78's plan.
-      Checkpoints.checkpointAlways(kept.filter(col("u") =!= col("v")).distinct())
+      // checkpointed: the fixpoint guard below EXECUTES every round
+      // (count + except)
+      Checkpoints.checkpoint(kept.filter(col("u") =!= col("v")).distinct())
     }
 
     var i = 0
@@ -749,7 +732,7 @@ object Graph {
         lit(1).as("dir")))
     // lblCp stays the BARE checkpoint so releases are real (a release
     // on a projection over it would be a structural no-op)
-    var lblCp = Checkpoints.checkpointAlways(
+    var lblCp = Checkpoints.checkpoint(
       verts.select(col("v"), explode(array(lit(0), lit(1))).as("dir"))
         .withColumn("m", col("v")).withColumn("changed", lit(false)))
     var moved = 1L
@@ -784,7 +767,7 @@ object Graph {
     while (moved > 0 && i < maxIter) {
       val l0 = lblCp.drop("changed").withColumn("m0", col("m"))
       val l2 = step(step(l0))
-      val nxt = Checkpoints.checkpointAlways(
+      val nxt = Checkpoints.checkpoint(
         l2.select(col("v"), col("dir"), col("m"),
           (col("m") < col("m0")).as("changed")))
       moved = nxt.filter(col("changed")).count()
@@ -801,7 +784,7 @@ object Graph {
     require(moved == 0,
       s"SCC reachability coloring did not converge in $maxIter rounds " +
         "— raise maxInner")
-    val out = Checkpoints.checkpointAlways(
+    val out = Checkpoints.checkpoint(
       lblCp.groupBy(col("v"))
         .agg(min(when(col("dir") === 0, col("m"))).as("f"),
           min(when(col("dir") === 1, col("m"))).as("b")))
@@ -882,7 +865,7 @@ object Graph {
     val e2 = edges.select(col("s"), col("d"), lit(0).as("dir"))
       .union(edges.select(col("d").as("s"), col("s").as("d"),
         lit(1).as("dir")))
-    var reached = Checkpoints.checkpointAlways(
+    var reached = Checkpoints.checkpoint(
       pivots.flatMap(p => Seq((p, p, 0), (p, p, 1)))
         .toDF("p", "v", "dir"))
     var frontier = reached
@@ -916,7 +899,7 @@ object Graph {
       // whether ANY wave was still alive at the round's last hop — if
       // all died earlier, the fixpoint is already reached and the
       // usual confirm round (an entire extra multi-hop job) is skipped
-      val nf = Checkpoints.checkpointAlways(
+      val nf = Checkpoints.checkpoint(
         acc.groupBy(col("p"), col("v"), col("dir"))
           .agg(min(col("hop")).as("hop")))
       // cheap: nf is already materialized by the checkpoint
@@ -931,7 +914,7 @@ object Graph {
         // over projected-away attributes that crash
         // Union.rewriteConstraints (see PlanBridge.stripConstraints)
         val strip = org.apache.spark.sql.graftshim.PlanBridge.stripConstraints _
-        val nr = Checkpoints.checkpointAlways(
+        val nr = Checkpoints.checkpoint(
           strip(reached).union(
             strip(nf).select(col("p"), col("v"), col("dir"))))
         if (frontier ne reached) Checkpoints.release(frontier)
@@ -974,9 +957,9 @@ object Graph {
           if (java.lang.Boolean.getBoolean("graft.sccDebug"))
             System.err.println(
               s"[scc +${sccMs}ms]   wave dedupe ${pivots.length}->${keep.length}")
-          val nr = Checkpoints.checkpointAlways(
+          val nr = Checkpoints.checkpoint(
             reached.filter(col("p").isin(keep: _*)))
-          val nfr = Checkpoints.checkpointAlways(
+          val nfr = Checkpoints.checkpoint(
             frontier.filter(col("p").isin(keep: _*)))
           if (frontier ne reached) Checkpoints.release(frontier)
           Checkpoints.release(reached)
@@ -995,7 +978,7 @@ object Graph {
     val core = reached.groupBy(col("p"), col("v"))
       .agg(count(lit(1)).as("nd")).filter(col("nd") === 2)
       .select(col("p"), col("v"))
-    val settled = Checkpoints.checkpointAlways(
+    val settled = Checkpoints.checkpoint(
       core.join(core.groupBy(col("p")).agg(min(col("v")).as("scc_id")),
           Seq("p"))
         .select(col("v"), col("scc_id")).distinct())
@@ -1025,12 +1008,12 @@ object Graph {
     // checkpoint the RAW edge projection once: `active` and `verts`
     // both derive from it, and the input subtree (e.g. a window over
     // the co-ship spine) must not execute twice
-    val rawE = Checkpoints.checkpointAlways(
+    val rawE = Checkpoints.checkpoint(
       edges.select(col(src).cast("long").as("s"),
         col(dst).cast("long").as("d")))
-    var active = Checkpoints.checkpointAlways(
+    var active = Checkpoints.checkpoint(
       rawE.filter(col("s") =!= col("d")).distinct())
-    var verts = Checkpoints.checkpointAlways(
+    var verts = Checkpoints.checkpoint(
       rawE.select(col("s").as("v"))
         .union(rawE.select(col("d").as("v"))).distinct())
     Checkpoints.release(rawE)
@@ -1048,9 +1031,9 @@ object Graph {
       batches += org.apache.spark.sql.graftshim.PlanBridge
         .stripConstraints(batch)
     def removeSettled(settled: DataFrame): Unit = {
-      val nv = Checkpoints.checkpointAlways(
+      val nv = Checkpoints.checkpoint(
         verts.join(settled.select(col("v")), Seq("v"), "left_anti"))
-      val na = Checkpoints.checkpointAlways(active
+      val na = Checkpoints.checkpoint(active
         .join(settled.select(col("v").as("s")), Seq("s"), "left_anti")
         .join(settled.select(col("v").as("d")), Seq("d"), "left_anti"))
       Checkpoints.release(verts); Checkpoints.release(active)
@@ -1081,7 +1064,7 @@ object Graph {
         val hasIn = active.select(col("d").as("v")).distinct()
         val hasOut = active.select(col("s").as("v")).distinct()
         val ok = hasIn.join(hasOut, Seq("v")) // in AND out degree ≥ 1
-        val nxtE = Checkpoints.checkpointAlways(active
+        val nxtE = Checkpoints.checkpoint(active
           .join(ok.select(col("v").as("s")), Seq("s"), "left_semi")
           .join(ok.select(col("v").as("d")), Seq("d"), "left_semi"))
         prevCount = if (t == 0) active.count() else eCount
@@ -1095,10 +1078,10 @@ object Graph {
       // alive after the peel = vertices with both directions in the
       // surviving edge set; everything else is a singleton SCC
       if (!pivotRound) {
-        val aliveV = Checkpoints.checkpointAlways(
+        val aliveV = Checkpoints.checkpoint(
           active.select(col("d").as("v")).distinct()
             .join(active.select(col("s").as("v")).distinct(), Seq("v")))
-        val dead = Checkpoints.checkpointAlways(
+        val dead = Checkpoints.checkpoint(
           verts.join(aliveV, Seq("v"), "left_anti")
             .select(col("v"), col("v").as("scc_id")))
         val trimmed = dead.count()
@@ -1139,7 +1122,7 @@ object Graph {
       } else if (nActive > 0) {
         // 2. color both directions; 3. settle the f = b pivot SCCs
         val fb = minReachBoth(verts, active, maxInner)
-        val settled = Checkpoints.checkpointAlways(
+        val settled = Checkpoints.checkpoint(
           fb.filter(col("f") === col("b"))
             .select(col("v"), col("f").as("scc_id")))
         val nSettled = settled.count()
@@ -1180,10 +1163,10 @@ object Graph {
     * Returns (v, generation) for every vertex of the edge list. */
   def dagGenerations(edges: DataFrame, src: String = "src",
                      dst: String = "dst", maxIter: Int = 100): DataFrame = {
-    val e = Checkpoints.checkpointAlways(
+    val e = Checkpoints.checkpoint(
       edges.select(col(src).cast("long").as("s"),
         col(dst).cast("long").as("d")).distinct())
-    var lvl = Checkpoints.checkpointAlways(
+    var lvl = Checkpoints.checkpoint(
       e.select(col("s").as("v")).union(e.select(col("d").as("v"))).distinct()
         .withColumn("lvl", lit(0L)))
     var sumPrev = -1L
@@ -1194,7 +1177,7 @@ object Graph {
           col("ee.s") === col("ll.v"))
         .groupBy(col("ee.d").as("v"))
         .agg(max(col("ll.lvl") + 1L).as("pl"))
-      val nxt = Checkpoints.checkpointAlways(
+      val nxt = Checkpoints.checkpoint(
         lvl.alias("l0").join(relax, Seq("v"), "left")
           .select(col("v"),
             greatest(col("lvl"), coalesce(col("pl"), col("lvl"))).as("lvl")))
@@ -1814,11 +1797,11 @@ object Graph {
   def labelPropagation(edges: DataFrame, rounds: Int = 4,
                        a: String = "a", b: String = "b"): DataFrame = {
     require(rounds >= 1, "at least one propagation round")
-    val und = Checkpoints.checkpointAlways(
+    val und = Checkpoints.checkpoint(
       edges.select(least(col(a), col(b)).as("u"),
           greatest(col(a), col(b)).as("v"))
         .filter(col("u") =!= col("v") && col("u").isNotNull).distinct())
-    val adj = Checkpoints.checkpointAlways(
+    val adj = Checkpoints.checkpoint(
       und.select(col("u").as("s"), col("v").as("d"))
         .union(und.select(col("v").as("s"), col("u").as("d"))))
     val w = org.apache.spark.sql.expressions.Window
@@ -1853,14 +1836,14 @@ object Graph {
   def labelSpread(edges: DataFrame, seeds: DataFrame, rounds: Int = 4,
                   a: String = "a", b: String = "b"): DataFrame = {
     require(rounds >= 1, "at least one spreading round")
-    val und = Checkpoints.checkpointAlways(
+    val und = Checkpoints.checkpoint(
       edges.select(least(col(a), col(b)).as("u"),
           greatest(col(a), col(b)).as("v"))
         .filter(col("u") =!= col("v") && col("u").isNotNull).distinct())
-    val adj = Checkpoints.checkpointAlways(
+    val adj = Checkpoints.checkpoint(
       und.select(col("u").as("s"), col("v").as("d"))
         .union(und.select(col("v").as("s"), col("u").as("d"))))
-    val sd = Checkpoints.checkpointAlways(
+    val sd = Checkpoints.checkpoint(
       seeds.select(col("v"), col("label")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("s")).orderBy(col("c").desc, col("label"))
@@ -1983,21 +1966,21 @@ object Graph {
                         rounds: Int = 2, a: String = "a",
                         b: String = "b"): DataFrame = {
     require(rounds >= 1, "at least one refinement round")
-    val und = Checkpoints.checkpointAlways(
+    val und = Checkpoints.checkpoint(
       edges.select(least(col(a), col(b)).as("u"),
           greatest(col(a), col(b)).as("v"))
         .filter(col("u") =!= col("v") && col("u").isNotNull).distinct())
-    val adj = Checkpoints.checkpointAlways(
+    val adj = Checkpoints.checkpoint(
       und.select(col("u").as("s"), col("v").as("d"))
         .union(und.select(col("v").as("s"), col("u").as("d"))))
-    val deg = Checkpoints.checkpointAlways(
+    val deg = Checkpoints.checkpoint(
       adj.groupBy(col("s")).agg(count(lit(1)).as("deg"))
         .select(col("s").as("v"), col("deg")))
     // m MATERIALIZED once (guide §2.4): the 1-row broadcast is
     // consumed by prop AND the guard in EVERY round, and un-checkpointed
     // each use re-ran the count over the full edge blocks — 2 edge-scale
     // scans per round for a loop-invariant scalar.
-    val mm = Checkpoints.checkpointAlways(und.agg(count(lit(1)).as("m")))
+    val mm = Checkpoints.checkpoint(und.agg(count(lit(1)).as("m")))
     // Guard comparison Q(proposed) > Q(current) with BOTH partitions
     // scored in ONE edge-scale pass (guide §2.4): the old shape ran the
     // exact integer score qint = 4m·Σe_in − Σd_c² twice per round — two
@@ -2027,7 +2010,7 @@ object Graph {
         .select((lit(4L) * col("m") * col("en") - col("sdn") >
           lit(4L) * col("m") * col("eo") - col("sdo")).as("take_all"))
     }
-    var lab = Checkpoints.checkpointAlways(
+    var lab = Checkpoints.checkpoint(
       labels.select(col("v"), col("community").as("lab")))
     (0 until rounds).foreach { _ =>
       val dc = lab.join(deg, "v").groupBy(col("lab"))
@@ -2070,15 +2053,15 @@ object Graph {
             when(col("take_all"), col("pl"))
               .when(col("sl").isNotNull, col("sl"))
               .otherwise(col("lab")).as("lab")))
-      Checkpoints.releaseAfterLoop(lab)
-      Checkpoints.releaseAfterLoop(prop)
-      Checkpoints.releaseAfterLoop(pall)
+      Checkpoints.release(lab)
+      Checkpoints.release(prop)
+      Checkpoints.release(pall)
       lab = nxt
     }
-    Checkpoints.releaseAfterLoop(und)
-    Checkpoints.releaseAfterLoop(mm)
-    Checkpoints.releaseAfterLoop(adj)
-    Checkpoints.releaseAfterLoop(deg)
+    Checkpoints.release(und)
+    Checkpoints.release(mm)
+    Checkpoints.release(adj)
+    Checkpoints.release(deg)
     lab.select(col("v"), col("lab").as("community"))
   }
 
@@ -2113,14 +2096,14 @@ object Graph {
     // `level1` lets a caller hand in an already-materialized level-1
     // partition (v, community) — the build/serve split when the q188
     // labels are session-pinned and shared
-    val l1 = Checkpoints.checkpointAlways(level1.getOrElse(
+    val l1 = Checkpoints.checkpoint(level1.getOrElse(
       refineCommunities(edges,
         labelPropagation(edges, lpaRounds, a, b), refineRounds, a, b)))
     val und = edges.select(least(col(a), col(b)).as("u"),
         greatest(col(a), col(b)).as("v"))
       .filter(col("u") =!= col("v") && col("u").isNotNull).distinct()
     // community multigraph: cu <= cv, cu == cv rows carry internal mass
-    val ce = Checkpoints.checkpointAlways(und
+    val ce = Checkpoints.checkpoint(und
       .join(l1.select(col("v").as("u"), col("community").as("cu")), Seq("u"))
       .join(l1.select(col("v"), col("community").as("cv")), Seq("v"))
       .select(least(col("cu"), col("cv")).as("cu"),
@@ -2147,26 +2130,26 @@ object Graph {
   private[graft] def localMoveWeighted(ce: DataFrame,
                                        rounds: Int): DataFrame = {
     require(rounds >= 1, "at least one move round")
-    val cross = Checkpoints.checkpointAlways(
+    val cross = Checkpoints.checkpoint(
       ce.filter(col("cu") =!= col("cv"))
         .select(col("cu"), col("cv"), col("w")))
     // 1-row loop-invariant scalars materialized once (guide §2.4) —
     // selfW and m are broadcast into every round's guard (and m into
     // every round's proposals); un-checkpointed each broadcast re-ran
     // its aggregate over the coarse edge relation per use.
-    val selfW = Checkpoints.checkpointAlways(
+    val selfW = Checkpoints.checkpoint(
       ce.filter(col("cu") === col("cv"))
         .agg(coalesce(sum(col("w")), lit(0L)).as("sw")))
-    val adj = Checkpoints.checkpointAlways(
+    val adj = Checkpoints.checkpoint(
       cross.select(col("cu").as("s"), col("cv").as("d"), col("w"))
         .union(cross.select(col("cv").as("s"), col("cu").as("d"), col("w"))))
-    val deg = Checkpoints.checkpointAlways(
+    val deg = Checkpoints.checkpoint(
       adj.select(col("s").as("c"), col("w"))
         .union(ce.filter(col("cu") === col("cv"))
           .select(col("cu").as("c"), (col("w") * 2).as("w")))
         .groupBy(col("c")).agg(sum(col("w")).as("deg"))
         .select(col("c").as("v"), col("deg")))
-    val mm = Checkpoints.checkpointAlways(ce.agg(sum(col("w")).as("m")))
+    val mm = Checkpoints.checkpoint(ce.agg(sum(col("w")).as("m")))
     // fused guard — see [[refineCommunities]].guardFlag: both labelings
     // scored from ONE cross⋈labels⋈labels pass (weighted arithmetic;
     // the self-loop term sw rides on both sides exactly as before)
@@ -2193,7 +2176,7 @@ object Graph {
           lit(4L) * col("m") * (col("eo") + col("sw")) - col("sdo"))
           .as("take_all"))
     }
-    var lab = Checkpoints.checkpointAlways(
+    var lab = Checkpoints.checkpoint(
       ce.select(col("cu").as("v")).union(ce.select(col("cv").as("v")))
         .distinct().withColumn("lab", col("v")))
     (0 until rounds).foreach { _ =>
@@ -2237,16 +2220,16 @@ object Graph {
             when(col("take_all"), col("pl"))
               .when(col("sl").isNotNull, col("sl"))
               .otherwise(col("lab")).as("lab")))
-      Checkpoints.releaseAfterLoop(lab)
-      Checkpoints.releaseAfterLoop(prop)
-      Checkpoints.releaseAfterLoop(pall)
+      Checkpoints.release(lab)
+      Checkpoints.release(prop)
+      Checkpoints.release(pall)
       lab = nxt
     }
-    Checkpoints.releaseAfterLoop(cross)
-    Checkpoints.releaseAfterLoop(adj)
-    Checkpoints.releaseAfterLoop(deg)
-    Checkpoints.releaseAfterLoop(selfW)
-    Checkpoints.releaseAfterLoop(mm)
+    Checkpoints.release(cross)
+    Checkpoints.release(adj)
+    Checkpoints.release(deg)
+    Checkpoints.release(selfW)
+    Checkpoints.release(mm)
     lab.select(col("v").as("c"), col("lab"))
   }
 
@@ -2273,14 +2256,13 @@ object Graph {
     * which cannot change the max. Returns (v, core). */
   def coreNumbers(edges: DataFrame, a: String = "a",
                   b: String = "b"): DataFrame = {
-    // checkpointAlways: the adjacency feeds every round (and round 0
-    // twice: degree init + first H) — in audit mode an un-truncated
-    // loop input would replicate the upstream subtree per round
-    val und = Checkpoints.checkpointAlways(
+    // checkpointed: the adjacency feeds every round (and round 0
+    // twice: degree init + first H)
+    val und = Checkpoints.checkpoint(
       edges.select(least(col(a), col(b)).as("u"),
           greatest(col(a), col(b)).as("v"))
         .filter(col("u") =!= col("v") && col("u").isNotNull).distinct())
-    val adj = Checkpoints.checkpointAlways(
+    val adj = Checkpoints.checkpoint(
       und.select(col("u").as("s"), col("v").as("d"))
         .union(und.select(col("v").as("s"), col("u").as("d"))))
     val w = org.apache.spark.sql.expressions.Window

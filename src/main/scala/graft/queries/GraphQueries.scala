@@ -131,11 +131,7 @@ object GraphQueries {
     * (session, dir) as PINNED checkpoints: a registered view must
     * survive the harness's between-query `Checkpoints.releaseAll`
     * (a view over a released non-pinned block fails unrecoverably —
-    * the lineage is truncated and the block gone), and must stay a
-    * real checkpoint in no-checkpoint audit mode (composing the
-    * untruncated ~2^rounds star-contraction plan into q109's SQL makes
-    * planning intractable; the loop ITSELF stays audited through q78).
-    * Same one-dir bound and [[invalidateSpine]] hook as the spine. */
+    * the lineage is truncated and the block gone). Same one-dir bound and [[invalidateSpine]] hook as the spine. */
   private val viewMats =
     scala.collection.concurrent.TrieMap[(SparkSession, String), List[DataFrame]]()
 
@@ -152,8 +148,8 @@ object GraphQueries {
     // consumers (the raw view, the triangle pass, the component loop)
     // instead of three window computations over the spine
     val mats = viewMats.getOrElseUpdate((s, d), {
-      val knn = graft.Checkpoints.checkpointPinnedAlways(knnEdges(s, d))
-      val comps = graft.Checkpoints.checkpointPinnedAlways(
+      val knn = graft.Checkpoints.checkpointPinned(knnEdges(s, d))
+      val comps = graft.Checkpoints.checkpointPinned(
         Graph.connectedComponentsStar(knn).select(col("v"), col("comp")))
       List(knn, comps)
     })
@@ -259,9 +255,7 @@ object GraphQueries {
     * q188 partition (LPA 4 rounds + 2 guarded refine rounds), built
     * once per (session, sfDir) and served by both consumers: q188
     * reports it, q251 contracts it into the coarse community graph
-    * for the next Louvain level. Same lifecycle as [[sccSpine]]. In
-    * no-checkpoint audit mode the pin is an identity, so both
-    * queries' audited plans still cover the full fixpoint dataflow. */
+    * for the next Louvain level. Same lifecycle as [[sccSpine]]. */
   private val refinedCache =
     scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
   private def refinedLabelsSpine(s: SparkSession, d: String): DataFrame = {

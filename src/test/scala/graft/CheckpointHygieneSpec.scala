@@ -38,27 +38,12 @@ class CheckpointHygieneSpec extends AnyFunSuite with SparkTestBase {
       s"stale blocks after invalidateSpine: $afterInvalidate")
   }
 
-  test("no-checkpoint mode makes checkpoint() the identity (audit sees full plans)") {
-    import spark.implicits._
-    System.setProperty(Checkpoints.NoCheckpointProp, "true")
-    try {
-      val df = Seq(1, 2, 3).toDF("x")
-      val cp = Checkpoints.checkpoint(df)
-      assert(cp eq df) // identity: no job ran, no block pinned
-      Checkpoints.release(cp) // structural no-op, must not throw
-      // an iterative operator still computes correctly, un-truncated
-      val edges = Seq((1L, 2L), (2L, 3L)).toDF("a", "b")
-      val comps = graft.operators.Graph.connectedComponents(edges)
-        .as[(Long, Long)].collect().toMap
-      assert(comps.values.toSet == Set(1L))
-    } finally System.clearProperty(Checkpoints.NoCheckpointProp)
-  }
-
   test("iterative loops retain at most two rounds of state while running") {
     import spark.implicits._
     // a 64-node path graph forces many propagation rounds; historical
     // behavior pinned 2 checkpoints per round for the whole call
     val edges = (0L until 63L).map(i => (i, i + 1)).toDF("a", "b")
+    Checkpoints.release(edges) // not a checkpoint: a no-op, must not throw
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val comps = graft.operators.Graph
       .connectedComponentsStar(edges).collect()

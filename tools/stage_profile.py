@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
 """Summarize a Spark event log: per-job-description wall and per-stage
 task-time breakdown, so an expensive query can be attributed to the
-stages (and therefore operators) that actually cost something.
+stages (and therefore operators) that actually cost something. Task
+metrics are summed over successful task attempts only, so failed and
+killed speculative attempts do not inflate a stage's task time.
 
 Usage: stage_profile.py <event-log-file> [top_n_stages]
 """
@@ -16,7 +18,6 @@ def main() -> None:
 
     job_desc = {}          # jobId -> description
     job_wall = {}          # jobId -> (start, end)
-    job_stages = {}        # jobId -> [stageIds]
     stage_info = {}        # stageId -> dict(name, numTasks, submit, complete)
     stage_task_time = defaultdict(float)   # stageId -> summed task run time (s)
     stage_gc = defaultdict(float)
@@ -35,7 +36,6 @@ def main() -> None:
                 job_desc[jid] = ev.get("Properties", {}).get(
                     "spark.job.description", "")
                 job_wall[jid] = [ev.get("Submission Time", 0), None]
-                job_stages[jid] = [s["Stage ID"] for s in ev.get("Stage Infos", [])]
             elif e == "SparkListenerJobEnd":
                 jid = ev["Job ID"]
                 if jid in job_wall:
@@ -51,6 +51,8 @@ def main() -> None:
                     if si.get("Submission Time") else 0.0,
                 }
             elif e == "SparkListenerTaskEnd":
+                if (ev.get("Task End Reason") or {}).get("Reason") != "Success":
+                    continue
                 sid = ev["Stage ID"]
                 m = ev.get("Task Metrics") or {}
                 stage_task_time[sid] += m.get("Executor Run Time", 0) / 1e3

@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Wakeup-tax model (r17 VERDICT item 4): join AUDIT_runtime's
+"""Wakeup-tax model (r17 VERDICT item 4): join AUDIT.json's
 per-query executed-stage counts to two bench records and decompose the
 hot record's slowdown into a UNIFORM box factor plus a PER-STAGE tax.
 
@@ -16,7 +16,7 @@ cheap barriers) then reads far above the uniform factor exactly as
 observed, and the dispute becomes arithmetic: is hot/ref ≈
 (a + c·stages/ref)?
 
-Usage: wake_tax.py BENCH_hot.json BENCH_ref.json AUDIT_runtime.json
+Usage: wake_tax.py BENCH_hot.json BENCH_ref.json AUDIT.json
 """
 import json
 import sys
