@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.Tables
 
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and
@@ -125,15 +123,7 @@ object Bench {
     val (calib32, wakeLoaded) = calibrate32WithLoadedWake()
     val wakeP99 = calibrateWakeP99Us()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     Tables.all.foreach { n =>
       try {
@@ -204,8 +194,14 @@ object Bench {
     // SPARK_GRAFT_ONLY re-measure writes bench_only.json instead, so
     // it can never clobber the full-sweep record the round driver
     // reads (the r10 wart).
+    // The record file alone also carries each query's two pass walls
+    // (null for a failed query), so a contention window shows per pass.
     val recordFile = if (only.isDefined) "bench_only.json" else "bench.json"
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(recordFile), line)
+    val passes = results.map { case (k, v) =>
+      "\"" + k + "\":" + v.map { case (a, b) => s"[$a,$b]" }.getOrElse("null")
+    }.mkString("{", ",", "}")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(recordFile),
+      line.dropRight(1) + s""","passes":$passes}""")
     val centis = results.map { case (k, v) =>
       k -> v.map { case (a, b) => math.rint(math.min(a, b) * 100).toLong }
     }

@@ -1,11 +1,6 @@
 package graft
 
-import org.apache.spark.graftshim.SchedulerBridge
-import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SparkPlanInfo
-import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
-  SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
+import graft.Telemetry.{censusKeys, measure}
 
 /** Plan-hygiene inspector.
   *
@@ -128,86 +123,6 @@ object Explain {
     "q211_ann_mrr_at_k",    // brute-force exact side (q28) + centroid assignment (q51)
     "q215_hard_negatives")  // brute-force exact side (q28) + centroid assignment (q51)
 
-  /** Census key of each counted plan node; `Exchange` is a shuffle
-    * exchange (a BroadcastExchange is not counted). */
-  private val censusKey = Map("Exchange" -> "shuffles",
-    "BroadcastHashJoin" -> "bhj", "SortMergeJoin" -> "smj",
-    "ShuffledHashJoin" -> "shj",
-    "BroadcastNestedLoopJoin" -> "nlj", "CartesianProduct" -> "nlj")
-  private val censusKeys = Seq("shuffles", "bhj", "smj", "shj", "nlj")
-
-  /** Census keys of one plan tree's counted nodes. A reused exchange or
-    * subquery ran once, where its original appears, so its subtree is
-    * not re-counted. */
-  private def censusNodes(p: SparkPlanInfo): Seq[String] =
-    censusKey.get(p.nodeName).toSeq ++ (if (p.nodeName.startsWith("Reused")) Nil
-      else p.children.flatMap(censusNodes))
-
-  /** Per-pass executed counters: jobs started, stages submitted with
-    * them, stages actually completed, and the census of every SQL
-    * execution's final plan. Skipped = planned − submitted (AQE
-    * exchange reuse / already-computed checkpoint parents). */
-  private[graft] final class RuntimeCounts extends SparkListener {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    // distinct stage ids planned by job DAGs vs actually submitted:
-    // a stage in a DAG that never submits was SKIPPED (its output was
-    // already available) — the UI's definition, computed directly
-    // instead of the old max(0, planned - completions) clamp, which
-    // both under-counted (retry attempts inflated completions) and
-    // could hide real skips behind failures.
-    private val plannedIds =
-      java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    private val submittedIds =
-      java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val attempts = new java.util.concurrent.atomic.AtomicInteger
-    val completedOk = new java.util.concurrent.atomic.AtomicInteger
-    val failed = new java.util.concurrent.atomic.AtomicInteger
-    // executionId -> latest plan: the start event's plan, replaced by
-    // each AQE re-plan; the one left at execution end is the final plan
-    private val plans = new java.util.concurrent.ConcurrentHashMap[Long, SparkPlanInfo]
-    private val counts = scala.collection.concurrent.TrieMap[String, Int]()
-    override def onJobStart(js: SparkListenerJobStart): Unit = {
-      jobs.incrementAndGet()
-      js.stageInfos.foreach(si => plannedIds.add(si.stageId))
-    }
-    override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit = {
-      attempts.incrementAndGet()
-      submittedIds.add(ss.stageInfo.stageId)
-    }
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      if (sc.stageInfo.failureReason.isEmpty) completedOk.incrementAndGet()
-      else failed.incrementAndGet()
-    }
-    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-      case s: SparkListenerSQLExecutionStart => plans.put(s.executionId, s.sparkPlanInfo)
-      case u: SparkListenerSQLAdaptiveExecutionUpdate =>
-        plans.put(u.executionId, u.sparkPlanInfo)
-      case end: SparkListenerSQLExecutionEnd =>
-        Option(plans.remove(end.executionId))
-          .foreach(censusNodes(_).foreach(k => counts(k) = census(k) + 1))
-      case _ =>
-    }
-    /** Census count of one of [[censusKeys]]. */
-    def census(key: String): Int = counts.getOrElse(key, 0)
-    /** Planned-but-never-submitted stages (reused outputs). */
-    def skipped: Int = plannedIds.size - submittedIds.size
-    /** Re-attempts beyond each stage's first submission. */
-    def retries: Int = attempts.get - submittedIds.size
-  }
-
-  /** Runs `body` with a fresh [[RuntimeCounts]] attached; returns the
-    * counts, settled by draining the listener bus, and the failure, if
-    * any. */
-  private[graft] def counted(spark: SparkSession)(body: => Unit)
-      : (RuntimeCounts, Option[Throwable]) = {
-    val c = new RuntimeCounts
-    spark.sparkContext.addSparkListener(c)
-    val err = try { body; None } catch { case e: Throwable => Some(e) }
-    SchedulerBridge.drainListenerBus(spark.sparkContext)
-    spark.sparkContext.removeSparkListener(c)
-    (c, err)
-  }
-
   def main(args: Array[String]): Unit = {
     val audit = args.headOption.contains("--audit")
     val rest = if (audit) args.drop(1) else args
@@ -216,16 +131,8 @@ object Explain {
       else if (audit) SparkEntry.queries.keys.toSeq.sorted
       else Seq("q01_pricing_summary", "q03_topk_revenue", "q05_region_volume",
         "q15_cosupply_edges", "q28_cosine_topk")
-    def session(): SparkSession = {
-      val s = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("ERROR")
-      s
-    }
+    // fixed local[4], so AUDIT.json does not depend on the machine
+    def session() = Session.local(4)
 
     if (audit) {
       var flagged = 0
@@ -238,8 +145,8 @@ object Explain {
         val spark = session()
         def run(): Unit = SparkEntry.queries(n)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
-        val (warm, _) = counted(spark)(run())
-        val (c, err) = counted(spark)(try run() finally Checkpoints.releaseAll(spark))
+        val (warm, _) = measure(spark)(run())
+        val (c, err) = measure(spark)(try run() finally Checkpoints.releaseAll(spark))
         spark.stop()
         err.foreach(e => System.err.println(s"[audit] $n FAILED: ${e.getMessage}"))
         val ok = err.isEmpty

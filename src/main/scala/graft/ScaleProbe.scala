@@ -17,18 +17,52 @@ import graft.operators.{Dedup, Similarity}
   * probe skips silently if the dir is absent.)
   */
 object ScaleProbe {
+
+  /** Runs `f` under [[Telemetry.measure]] on the active session and
+    * returns the settled tap with `f`'s result; a failure propagates. */
+  private def tapped(f: => Long): (Telemetry.Tap, Long) = {
+    var n = 0L
+    val (tap, err) = Telemetry.measure(SparkSession.active) { n = f }
+    err.foreach(throw _)
+    (tap, n)
+  }
+
+  /** Wall seconds and result of `f`. */
+  private def time(f: => Long): (Double, Long) = {
+    val (tap, n) = tapped(f)
+    (tap.wallS, n)
+  }
+
+  /** Wall seconds of `f` and the shuffle records its tasks read. */
+  private def shuffled(f: => Long): (Double, Long) = {
+    val (tap, _) = tapped(f)
+    (tap.wallS, tap.tasks.map(_.shuffleRecordsRead).sum)
+  }
+
+  /** Wall seconds of `f` and the max/median of `metric` over the tasks
+    * of its heaviest stage (largest `metric` total): the straggler
+    * ratio; 0 if no task ran. */
+  private def straggler(metric: Telemetry.TaskRow => Long)(
+      f: => Long): (Double, Double) = {
+    val (tap, _) = tapped(f)
+    val byStage = tap.tasks.groupBy(_.stageId).values
+    val ratio =
+      if (byStage.isEmpty) 0.0
+      else {
+        val heavy = byStage.maxBy(_.map(metric).sum).map(metric).sorted
+        heavy.last.toDouble / math.max(1L, heavy(heavy.length / 2))
+      }
+    (tap.wallS, ratio)
+  }
+
   def main(args: Array[String]): Unit = {
     val flags = args.filter(_.startsWith("--")).toSet
     val pos = args.filterNot(_.startsWith("--"))
     val base = pos.headOption.getOrElse("/root/testdata/sf0.1")
     val big = if (pos.length > 1) pos(1) else "/tmp/scale10"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // fixed local[32]: the 32-way figures below and the README scale
+    // notes are written around it, whatever the machine
+    val spark = Session.local(32)
 
     // Probe selection (r17 ADVICE): each named probe runs only when its
     // flag is present OR no probe flag was given at all — so
@@ -41,10 +75,6 @@ object ScaleProbe {
     if (wants("--personal-net")) personalNetProbe(spark, base)
     if (selected.nonEmpty) { spark.stop(); return }
 
-    def time(f: => Long): (Double, Long) = {
-      val t0 = System.nanoTime(); val n = f
-      ((System.nanoTime() - t0) / 1e9, n)
-    }
     def jaccard(dir: String): (Double, Long) = {
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       time(Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.4).count())
@@ -232,41 +262,17 @@ object ScaleProbe {
           .select(col("s_suppkey").as("k"), col("s_nationkey"))
         def agg(j: DataFrame) = j.groupBy(col("s_nationkey"))
           .agg(count(lit(1)).as("n"), sum(col("l_quantity")).as("q"))
-        // per-task (stage, shuffle-read RECORDS) capture: the straggler
-        // is the one reduce task of the join stage that receives the
+        // the straggler is the one reduce task of the join stage (the
+        // stage reading the most shuffle records) that receives the
         // hot key's rows — max/median shuffle-read within that stage
         // is the skew itself, deterministic and free of timing noise.
         // Records, not bytes: the hot partition is a single repeated
         // key and lz4-compresses far better than mixed partitions,
         // which deflates a byte-based ratio.
-        val tasks =
-          new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (t.taskMetrics != null)
-              tasks.add((t.stageId,
-                t.taskMetrics.shuffleReadMetrics.recordsRead))
-        }
-        def measured(f: => Long): (Double, Double) = {
-          tasks.clear()
-          spark.sparkContext.addSparkListener(listener)
-          val (wall, _) = time(f)
-          Thread.sleep(1000) // listener bus drains async
-          spark.sparkContext.removeSparkListener(listener)
-          val byStage = tasks.toArray(Array.empty[(Int, Long)])
-            .groupBy(_._1).values
-          val reduceStage = // the stage reading the big shuffle
-            if (byStage.isEmpty) Array.empty[Long]
-            else byStage.maxBy(_.map(_._2).sum).map(_._2).sorted
-          val ratio =
-            if (reduceStage.isEmpty) 0.0
-            else reduceStage.last.toDouble /
-              math.max(1L, reduceStage(reduceStage.length / 2))
-          (wall, ratio)
-        }
-        def unsalted() = measured(agg(li.join(sup, "k")).count())
-        def salted() = measured(agg(Joins.saltedJoin(li, sup, "k", 32)).count())
+        def unsalted() =
+          straggler(_.shuffleRecordsRead)(agg(li.join(sup, "k")).count())
+        def salted() = straggler(_.shuffleRecordsRead)(
+          agg(Joins.saltedJoin(li, sup, "k", 32)).count())
         unsalted(); salted() // codegen warmup
         val (ub, us) = unsalted(); val (sb, ss) = salted()
         println(f"[probe] skew-join:   unsalted reduce-read max/median $us%.1fx vs salted $ss%.1fx (wall $ub%.1fs vs $sb%.1fs, hot key ~20%%)")
@@ -369,21 +375,6 @@ object ScaleProbe {
           .filter(col("o_totalprice") > 450000.0) // ~10% of orders
           .select(col("o_orderkey"), col("o_orderpriority"))
           .localCheckpoint()
-        val recs = new java.util.concurrent.atomic.AtomicLong(0L)
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (t.taskMetrics != null)
-              recs.addAndGet(t.taskMetrics.shuffleReadMetrics.recordsRead)
-        }
-        def shuffled(f: => Long): (Double, Long) = {
-          recs.set(0L)
-          spark.sparkContext.addSparkListener(listener)
-          val (wall, _) = time(f)
-          Thread.sleep(1000) // listener bus drains async
-          spark.sparkContext.removeSparkListener(listener)
-          (wall, recs.get)
-        }
         def plain() = shuffled(
           li.join(dim, col("l_orderkey") === col("o_orderkey")).count())
         def bloomed() = shuffled(
@@ -451,21 +442,6 @@ object ScaleProbe {
     {
       import graft.operators.{Cdc, Sketches}
       import graft.functions.QDigestAgg
-      val recs = new java.util.concurrent.atomic.AtomicLong(0L)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null)
-            recs.addAndGet(t.taskMetrics.shuffleReadMetrics.recordsRead)
-      }
-      def shuffled(f: => Long): (Double, Long) = {
-        recs.set(0L)
-        spark.sparkContext.addSparkListener(listener)
-        val (wall, _) = time(f)
-        Thread.sleep(1000) // listener bus drains async
-        spark.sparkContext.removeSparkListener(listener)
-        (wall, recs.get)
-      }
       val li = spark.read.parquet(s"$base/lineitem.parquet")
         .select(col("l_suppkey").cast("string").as("k"),
           (col("l_extendedprice") * 100).cast("long").as("v"))
@@ -558,21 +534,6 @@ object ScaleProbe {
       // q140 grouped heavy hitters: shuffle-read records at fixed 32
       // partitions — per-group candidate state (≤ s·partitions·groups),
       // never the keyspace; honest records ratio ~1x at 10x rows
-      val recs = new java.util.concurrent.atomic.AtomicLong(0L)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null)
-            recs.addAndGet(t.taskMetrics.shuffleReadMetrics.recordsRead)
-      }
-      def shuffled(f: => Long): (Double, Long) = {
-        recs.set(0L)
-        spark.sparkContext.addSparkListener(listener)
-        val (wall, _) = time(f)
-        Thread.sleep(1000) // listener bus drains async
-        spark.sparkContext.removeSparkListener(listener)
-        (wall, recs.get)
-      }
       val li = spark.read.parquet(s"$base/lineitem.parquet")
         .select(pmod(col("l_orderkey"), lit(4)).cast("string").as("g"),
           when(col("l_suppkey") % 5 === 0, lit("hot"))
@@ -900,21 +861,10 @@ object ScaleProbe {
           .asScala.filter(java.nio.file.Files.isRegularFile(_))
           .map(java.nio.file.Files.size).sum
       }
-      val inBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-      val inLst = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null)
-            inBytes.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-      }
       def served(dir: String): (Double, Double) = {
-        spark.sparkContext.addSparkListener(inLst)
-        inBytes.set(0L)
-        val (w, _) = time(graft.operators.TextIndex.bm25TopKIndexed(
+        val (tap, _) = tapped(graft.operators.TextIndex.bm25TopKIndexed(
           spark, dir, terms, 20).count())
-        Thread.sleep(1000) // listener bus drains async
-        spark.sparkContext.removeSparkListener(inLst)
-        (w, inBytes.get.toDouble / dirBytes(dir))
+        (tap.wallS, tap.tasks.map(_.inputBytes).sum.toDouble / dirBytes(dir))
       }
       served(idxB) // codegen warmup
       val (svb, fracB) = served(idxB)
@@ -1169,10 +1119,6 @@ object ScaleProbe {
   // considered a swap-in.
   private def distWindowsProbe(spark: SparkSession,
                                base: String): Unit = {
-    def time(f: => Long): (Double, Long) = {
-      val t0 = System.nanoTime(); val n = f
-      ((System.nanoTime() - t0) / 1e9, n)
-    }
     import graft.operators.Relational
     import org.apache.spark.sql.expressions.Window
     val cust = spark.read.parquet(s"$base/customer.parquet")
@@ -1236,35 +1182,7 @@ object ScaleProbe {
     }
     // per-task durations of the heaviest stage (by total duration):
     // the straggler is the one task sorting the biggest nation
-    val tasks =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskInfo != null)
-          tasks.add((t.stageId, t.taskInfo.duration))
-    }
-    def straggler(f: => Long): (Double, Double) = {
-      tasks.clear()
-      spark.sparkContext.addSparkListener(listener)
-      val (wall, _) = time(f)
-      // deterministic drain (r17 ADVICE): a fixed sleep drops late
-      // task-end events on a loaded box, undercounting the heaviest
-      // stage and skewing the straggler ratio
-      org.apache.spark.graftshim.SchedulerBridge
-        .drainListenerBus(spark.sparkContext)
-      spark.sparkContext.removeSparkListener(listener)
-      val byStage = tasks.toArray(Array.empty[(Int, Long)])
-        .groupBy(_._1).values
-      val heavy =
-        if (byStage.isEmpty) Array.empty[Long]
-        else byStage.maxBy(_.map(_._2).sum).map(_._2).sorted
-      val ratio =
-        if (heavy.isEmpty) 0.0
-        else heavy.last.toDouble /
-          math.max(1L, heavy(heavy.length / 2))
-      (wall, ratio)
-    }
+    def timedStraggler(f: => Long) = straggler(_.durationMs)(f)
     // the rewrite must be row-identical before its wall means
     // anything (ntile bucket-rule + pct/cume reproduction)
     val diff = windowed(rev).except(twoPhase(rev)).count() +
@@ -1281,12 +1199,12 @@ object ScaleProbe {
       Checkpoints.releaseAll(spark)
       n
     }
-    straggler(force(windowed(rev))) // codegen warmup
-    val (wwb, _) = straggler(force(windowed(rev)))
-    val (wwB, wsB) = straggler(force(windowed(rev10)))
-    straggler(force(twoPhase(rev))) // codegen warmup
-    val (tpb, _) = straggler(force(twoPhase(rev)))
-    val (tpB, tsB) = straggler(force(twoPhase(rev10)))
+    timedStraggler(force(windowed(rev))) // codegen warmup
+    val (wwb, _) = timedStraggler(force(windowed(rev)))
+    val (wwB, wsB) = timedStraggler(force(windowed(rev10)))
+    timedStraggler(force(twoPhase(rev))) // codegen warmup
+    val (tpb, _) = timedStraggler(force(twoPhase(rev)))
+    val (tpB, tsB) = timedStraggler(force(twoPhase(rev10)))
     println(f"[probe] dist-windows: windowed $wwb%.1fs -> $wwB%.1fs " +
       f"(straggler max/med $wsB%.1fx at 10x) vs two-phase " +
       f"$tpb%.1fs -> $tpB%.1fs ($tsB%.1fx), rewrite-diff $diff%d " +
@@ -1306,10 +1224,6 @@ object ScaleProbe {
   private def personalNetProbe(spark: SparkSession,
                                base: String): Unit = {
     import graft.operators.CoOccur
-    def time(f: => Long): (Double, Long) = {
-      val t0 = System.nanoTime(); val n = f
-      ((System.nanoTime() - t0) / 1e9, n)
-    }
     val li = spark.read.parquet(s"$base/lineitem.parquet")
       .filter(col("l_orderkey") % 17 === 0)
       .select(col("l_orderkey").as("paper"), col("l_suppkey").as("author"))

@@ -800,14 +800,7 @@ object StreamRun {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val workDir = args.lift(1).getOrElse(
       Files.createTempDirectory("graft_stream").toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val (tBad, cBad, tRows, cRows) = run(spark, sfDir, workDir)
     val (aBad, aRows) = runAdmission(spark, sfDir, workDir)
     val (nBad, nRows) = runNovelty(spark, sfDir, workDir)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 /** Deterministic hash-spread of a scan ahead of an expensive per-row
   * chain.
   *
-  * The round-19 stage profile (event-log truth, `tools/stage_profile.py`)
+  * The round-19 stage profile (per-stage task time, now `graft.ProfileRun`)
   * found the engine's costliest residual pattern: every fixture table is
   * ONE parquet file under `spark.sql.files.maxPartitionBytes`, so a scan
   * is ONE input split — and any expensive per-row projection chain

@@ -2034,9 +2034,10 @@ object TextQueries {
     // pixels cannot fake it (the q106 discipline).
     "q207_image_phash_neardup" -> { (s, d) =>
       import s.implicits._
-      // spread before the PNG-synth mapPartitions (operators.Spread);
-      // the un-checkpointed sig is consumed twice by hammingPairs64,
-      // so the synth+hash runs twice — 2 × ~0.95 s of 1-task wall
+      // spread before the PNG-synth mapPartitions (operators.Spread)
+      // + checkpoint: hammingPairs64 consumes sig twice, so the
+      // synth+hash would otherwise run twice (2 × ~0.95 s of 1-task
+      // wall measured)
       val media = graft.operators.Spread.byKey(
           Tables.documents(s, d)
             .filter(col("doc_id") >= 0).select(col("doc_id")),
@@ -2050,8 +2051,8 @@ object TextQueries {
                 + y * 7 * (1 + dec % 7) + (x + y + dec) % 11
                 + (if (x == 0 && y == 0) pert else 0)) % 256).toInt))
         })
-      val sig = graft.operators.Multimodal.dHash64(media)
-        .filter(col("ok"))
+      val sig = graft.Checkpoints.checkpoint(
+        graft.operators.Multimodal.dHash64(media).filter(col("ok")))
       Dedup.hammingPairs64(sig, "media_id", "dhash", 3)
     },
 

@@ -5,11 +5,10 @@ import org.apache.spark.SparkContext
 /** `SparkContext.listenerBus` is `private[spark]`; this bridge (in an
   * `org.apache.spark` subpackage, like the sql-side `graftshim`)
   * exposes the one hook measurement code needs: a DETERMINISTIC drain
-  * of the async listener bus. Probes that aggregate per-task metrics
-  * from a `SparkListener` (ScaleProbe's straggler ratio) previously
-  * slept a fixed 1 s and hoped the bus had drained — on a loaded box
-  * (the exact scenario those probes target) late task-end events were
-  * silently dropped, undercounting the heaviest stage. */
+  * of the async listener bus. In the engine its one caller is
+  * `graft.Telemetry.measure`, which drains before it reads a tap, so
+  * every task-end event of the measured body is counted; a fixed sleep
+  * instead would drop late events on a loaded box. */
 object SchedulerBridge {
 
   /** Block until every event posted to the listener bus so far has

@@ -13,10 +13,10 @@ class AuditCensusSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     val one = Seq(1L).toDF("k") // 1-row side: a broadcast nested-loop join
     var cp: DataFrame = null
-    val (build, buildErr) = Explain.counted(spark) {
+    val (build, buildErr) = Telemetry.measure(spark) {
       cp = Checkpoints.checkpoint(spark.range(8).crossJoin(one))
     }
-    val (action, actionErr) = Explain.counted(spark) {
+    val (action, actionErr) = Telemetry.measure(spark) {
       cp.write.format("noop").mode("overwrite").save()
     }
     Checkpoints.release(cp)
@@ -28,7 +28,7 @@ class AuditCensusSpec extends AnyFunSuite with SparkTestBase {
 
   test("census counts shuffle exchanges once, not per reuse") {
     import org.apache.spark.sql.functions.col
-    val (c, err) = Explain.counted(spark) {
+    val (c, err) = Telemetry.measure(spark) {
       val agg = spark.range(64).repartition(4, col("id"))
         .groupBy(col("id") % 3 as "g").count()
       // the same aggregate on both sides: AQE reuses its exchange

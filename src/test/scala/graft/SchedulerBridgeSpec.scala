@@ -6,11 +6,10 @@ import org.apache.spark.graftshim.SchedulerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the listener-bus drain the ScaleProbe straggler aggregation
-  * relies on (r17 ADVICE): after [[SchedulerBridge.drainListenerBus]]
-  * returns, every task-end event of already-completed jobs has been
-  * DELIVERED — no fixed-sleep race in which late events are dropped
-  * from the measurement. */
+/** Pins the listener-bus drain `Telemetry.measure` relies on: after
+  * [[SchedulerBridge.drainListenerBus]] returns, every task-end event
+  * of already-completed jobs has been DELIVERED — no fixed-sleep race
+  * in which late events are dropped from the measurement. */
 class SchedulerBridgeSpec extends AnyFunSuite with SparkTestBase {
 
   test("drainListenerBus delivers every completed job's task-end event") {
