@@ -24,8 +24,10 @@ import org.apache.spark.sql.graftshim.PlanBridge
   *  - harness mains (Bench, Verify) call [[releaseAll]] once a query's
   *    action completes, dropping every block the finished query left
   *    behind. Session-lifetime materializations (the co-ship spine)
-  *    use [[checkpointPinned]] and survive `releaseAll`; their owners
-  *    release them explicitly on eviction.
+  *    use [[checkpointPinned]] and survive `releaseAll`; every pinned
+  *    block is held by a [[graft.queries.SessionMemo]], which releases
+  *    it on a sfDir switch, after its session stops, and on
+  *    `SessionMemo.invalidate`.
   *
   * Checkpointing is always on: [[Explain]] --audit reads the executed
   * plans, so no mode exists that turns a checkpoint into the identity.
@@ -40,8 +42,8 @@ object Checkpoints {
   def checkpoint(df: DataFrame): DataFrame = doCheckpoint(df, pin = false)
 
   /** Like [[checkpoint]] but the block survives [[releaseAll]] — for
-    * session-lifetime materialized views whose owner releases them
-    * explicitly (e.g. the GraphQueries co-ship spine). */
+    * session-lifetime materialized views held by a
+    * [[graft.queries.SessionMemo]] (e.g. the co-ship spine). */
   def checkpointPinned(df: DataFrame): DataFrame = doCheckpoint(df, pin = true)
 
   private def doCheckpoint(df: DataFrame, pin: Boolean): DataFrame = {
@@ -53,12 +55,13 @@ object Checkpoints {
   }
 
   /** Immediately unpersist one checkpointed DataFrame's blocks.
-    * No-op when `df` is not a bare checkpoint. Callers must guarantee
-    * no consumer re-executes `df` afterwards — a truncated lineage
-    * cannot recompute. */
+    * No-op when `df` is not a bare checkpoint, and no unpersist when
+    * its context is stopped (the blocks died with it). Callers must
+    * guarantee no consumer re-executes `df` afterwards — a truncated
+    * lineage cannot recompute. */
   def release(df: DataFrame): Unit =
     PlanBridge.checkpointRdd(df).foreach { r =>
-      r.unpersist(blocking = false)
+      if (!r.sparkContext.isStopped) r.unpersist(blocking = false)
       tracked.remove((r.sparkContext, r.id))
     }
 

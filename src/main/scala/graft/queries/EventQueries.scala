@@ -25,11 +25,9 @@ object EventQueries {
     * object (event_id, event_type, value), with the q186 deterministic
     * corruption protocol (event_id % 17 → prefix garbage, so the whole
     * LINE is invalid JSON in any engine). Written once per session;
-    * both the Spark scan and the DuckDB oracle read the SAME file.
-    * NOT an [[IndexCache]]: the oracle is executed by the DRIVER'S
-    * DuckDB after this JVM exits, so the fixture must survive the
-    * exit-time sweep — the path is deterministic per scale factor
-    * (bounded: one dir per SF, overwritten by the next session).
+    * both the Spark scan and the DuckDB oracle read the SAME file — a
+    * [[SessionMemo.fixtureDirs]] fixture, since the oracle check runs
+    * after this JVM exits.
     * SINGLE-DRIVER ASSUMPTION, accepted explicitly: a concurrent
     * second session on the SAME scale factor could overwrite the file
     * between this session's Spark run and the driver's post-exit
@@ -37,23 +35,16 @@ object EventQueries {
     * round contract), and the overwrite is byte-identical anyway (the
     * fixture is a deterministic function of the SF's events table), so
     * even a concurrent writer converges to the same content. */
-  private val jsonDirs =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), String]()
-  private def jsonEventsDir(s: SparkSession, d: String): String = {
-    jsonDirs.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    jsonDirs.getOrElseUpdate((s, d), {
-      val sfName = d.split('/').filter(_.nonEmpty).last
-      val dir = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_jsonl_$sfName").toString
+  private val jsonDirs = SessionMemo.fixtureDirs("graft_jsonl")
+  private def jsonEventsDir(s: SparkSession, d: String): String =
+    jsonDirs(s, d) { dir =>
       val line = to_json(struct(col("event_id"), col("event_type"),
         col("value")))
       Tables.events(s, d)
         .select(when(col("event_id") % 17 === 0, concat(lit("x"), line))
           .otherwise(line).as("value"))
         .write.mode("overwrite").text(dir)
-      dir
-    })
-  }
+    }
 
   /** DYNAMIC oracle for q190 (the file path is session-scoped): DuckDB
     * reads the same file with its own `read_json`; `ignore_errors`

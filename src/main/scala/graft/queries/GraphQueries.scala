@@ -37,25 +37,12 @@ object GraphQueries {
     * join), and the (much larger) pair stream flows straight into each
     * consumer's aggregation with no further join.
     *
-    * Cache hygiene: the checkpoint is PINNED (survives the harness'
-    * per-query `Checkpoints.releaseAll`) but BOUNDED — one dir per
-    * session; switching dirs evicts and unpersists the previous spine,
-    * so the cache never accumulates blocks across data directories.
-    * Entries of stopped sessions are evicted on access; within a live
-    * session the source files are assumed immutable (the same
-    * assumption Spark's FileIndex caching makes). [[invalidateSpine]]
-    * is the explicit drop-everything hook. */
-  private val spine =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private def pairYears(s: SparkSession, d: String): DataFrame = {
-    spine.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    // serialized first-use build — TrieMap.getOrElseUpdate may run the
-    // builder twice under concurrency and leak the losing PINNED block
-    // (the IndexCache race, fixed there in r12)
-    spine.synchronized { spine.getOrElseUpdate((s, d), {
-      spine.keys.filter(k => k._1 == s && k._2 != d).foreach { k =>
-        spine.remove(k).foreach(graft.Checkpoints.release)
-      }
+    * The checkpoint is PINNED (survives the harness' per-query
+    * `Checkpoints.releaseAll`); build, sharing and release follow the
+    * [[SessionMemo]] policy. */
+  private val spine = SessionMemo.pinned[DataFrame](Seq(_))
+  private def pairYears(s: SparkSession, d: String): DataFrame =
+    spine(s, d) {
       val m = Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_suppkey")).distinct()
         .join(Tables.orders(s, d).select(col("o_orderkey").as("l_orderkey"),
@@ -67,8 +54,7 @@ object GraphQueries {
             Seq("l_orderkey"))
           .filter(col("a") < col("b"))
           .select(col("a"), col("b"), col("yr")))
-    }) }
-  }
+    }
 
   /** Session-scoped BUCKETED physical copy of the lineitem membership
     * columns, bucketed (and sorted) by the join key `l_orderkey` — the
@@ -78,43 +64,18 @@ object GraphQueries {
     * aggregation's ClusteredDistribution since {l_orderkey} ⊆
     * {l_orderkey, l_suppkey}). Written once per (session, dir) via
     * [[graft.sources.Ingest.writeBucketed]]. */
-  private val bucketedDirs = new IndexCache("graft_bucketed")
+  private val bucketedDirs = SessionMemo.indexDirs("graft_bucketed")
   private def bucketedMembership(s: SparkSession, d: String): DataFrame = {
     // full sanitized dir, not a 32-bit hash: colliding hashCodes of
     // two dirs would silently serve one dir's data for the other
     val tbl = s"graft_li_bucketed_${d.replaceAll("[^A-Za-z0-9]", "_")}"
-    // IndexCache (vs the r6 bare TrieMap) so the on-disk copy is swept
-    // on session eviction and at JVM exit — the bucketed dir used to
-    // outlive every run that made one
-    bucketedDirs.get(s, d) { path =>
+    bucketedDirs(s, d) { path =>
       graft.sources.Ingest.writeBucketed(
         Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
         tbl, s"$path/$tbl", "l_orderkey", buckets = 16,
         sortKey = Some("l_orderkey"))
     }
     s.table(tbl)
-  }
-
-  /** Evict and unpersist this session's materialized views (pair spine
-    * + thresholded edge set). Callers that need a fully clean block
-    * manager (specs, session teardown) use this; normal operation
-    * relies on the one-dir bound above. */
-  def invalidateSpine(s: SparkSession): Unit = {
-    spine.keys.filter(_._1 == s).foreach { k =>
-      spine.remove(k).foreach(graft.Checkpoints.release)
-    }
-    strongCache.keys.filter(_._1 == s).foreach { k =>
-      strongCache.remove(k).foreach(graft.Checkpoints.release)
-    }
-    knnDirCache.keys.filter(_._1 == s).foreach { k =>
-      knnDirCache.remove(k).foreach(graft.Checkpoints.release)
-    }
-    sccCache.keys.filter(_._1 == s).foreach { k =>
-      sccCache.remove(k).foreach(graft.Checkpoints.release)
-    }
-    viewMats.keys.filter(_._1 == s).foreach { k =>
-      viewMats.remove(k).foreach(_.foreach(graft.Checkpoints.release))
-    }
   }
 
   /** Register the graph layer as composable temp VIEWS so a SQL-only
@@ -131,28 +92,24 @@ object GraphQueries {
     * (session, dir) as PINNED checkpoints: a registered view must
     * survive the harness's between-query `Checkpoints.releaseAll`
     * (a view over a released non-pinned block fails unrecoverably —
-    * the lineage is truncated and the block gone). Same one-dir bound and [[invalidateSpine]] hook as the spine. */
-  private val viewMats =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), List[DataFrame]]()
+    * the lineage is truncated and the block gone). A [[SessionMemo]]
+    * like the spine. */
+  private val viewMats = SessionMemo.pinned[List[DataFrame]](identity)
 
   private[graft] def registerGraphViews(s: SparkSession, d: String): Unit = {
     coShip(s, d)
       .select(col("a"), col("b"), col("weight"),
         col("first_yr").as("first_year"))
       .createOrReplaceTempView("coship_edges")
-    viewMats.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    viewMats.keys.filter(k => k._1 == s && k._2 != d).foreach { k =>
-      viewMats.remove(k).foreach(_.foreach(graft.Checkpoints.release))
-    }
     // one materialization of the k-NN window, shared by all three
     // consumers (the raw view, the triangle pass, the component loop)
     // instead of three window computations over the spine
-    val mats = viewMats.getOrElseUpdate((s, d), {
+    val mats = viewMats(s, d) {
       val knn = graft.Checkpoints.checkpointPinned(knnEdges(s, d))
       val comps = graft.Checkpoints.checkpointPinned(
         Graph.connectedComponentsStar(knn).select(col("v"), col("comp")))
       List(knn, comps)
-    })
+    }
     mats.head.createOrReplaceTempView("knn_edges")
     Graph.triangleCounts(mats.head).createOrReplaceTempView("triangle_counts")
     mats(1).createOrReplaceTempView("components")
@@ -171,22 +128,15 @@ object GraphQueries {
 
   /** Thresholded edge set shared by the iterative queries (q17, q34,
     * q35) — an aggregation over the materialized spine, itself cached
-    * as a second PINNED materialized view with the same one-dir bound
-    * and [[invalidateSpine]] hook, so one bench pass builds it once
-    * instead of once per consumer. */
-  private val strongCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private def strongEdges(s: SparkSession, d: String): DataFrame = {
-    strongCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    strongCache.synchronized { strongCache.getOrElseUpdate((s, d), {
-      strongCache.keys.filter(k => k._1 == s && k._2 != d).foreach { k =>
-        strongCache.remove(k).foreach(graft.Checkpoints.release)
-      }
+    * as a second PINNED materialized view in a [[SessionMemo]], so one
+    * bench pass builds it once instead of once per consumer. */
+  private val strongCache = SessionMemo.pinned[DataFrame](Seq(_))
+  private def strongEdges(s: SparkSession, d: String): DataFrame =
+    strongCache(s, d) {
       graft.Checkpoints.checkpointPinned(
         coShip(s, d).filter(col("weight") >= MinWeight)
           .select(col("a"), col("b"), col("first_yr").as("year")))
-    }) }
-  }
+    }
 
   /** k-NN sparsification of the co-supply graph (q83/q84): each vertex
     * keeps its `KnnK` strongest edges (ties broken by partner id, so
@@ -203,21 +153,16 @@ object GraphQueries {
     * its `KnnK` strongest partners. Unreciprocated picks stay one-way,
     * so the digraph is cyclic in the wild (mutual picks are 2-cycles,
     * pick-chains close longer ones) — the q187 SCC substrate. */
-  private val knnDirCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private def knnDirected(s: SparkSession, d: String): DataFrame = {
-    // PINNED like [[strongEdges]]/[[pairYears]]: a dozen queries
-    // (q83/q84/q147/q165/q187/q188, triangles, common-neighbors, …)
-    // consume the k-NN selection, and each un-cached call would re-run
-    // the co-ship groupBy AND the per-vertex top-k window — the two
-    // most expensive steps of the whole graph substrate. One bench
-    // pass builds it once; every later consumer reads the pinned
-    // 2·KnnK-per-vertex edge list.
-    knnDirCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    knnDirCache.synchronized { knnDirCache.getOrElseUpdate((s, d), {
-      knnDirCache.keys.filter(k => k._1 == s && k._2 != d).foreach { k =>
-        knnDirCache.remove(k).foreach(graft.Checkpoints.release)
-      }
+  private val knnDirCache = SessionMemo.pinned[DataFrame](Seq(_))
+  // PINNED like [[strongEdges]]/[[pairYears]]: a dozen queries
+  // (q83/q84/q147/q165/q187/q188, triangles, common-neighbors, …)
+  // consume the k-NN selection, and each un-cached call would re-run
+  // the co-ship groupBy AND the per-vertex top-k window — the two
+  // most expensive steps of the whole graph substrate. One bench
+  // pass builds it once; every later consumer reads the pinned
+  // 2·KnnK-per-vertex edge list.
+  private def knnDirected(s: SparkSession, d: String): DataFrame =
+    knnDirCache(s, d) {
       val e = coShip(s, d)
       val sym = e.select(col("a").as("s"), col("b").as("nbr"), col("weight"))
         .unionByName(e.select(col("b").as("s"), col("a").as("nbr"),
@@ -228,67 +173,47 @@ object GraphQueries {
         sym.withColumn("rn", row_number().over(byStrength))
           .filter(col("rn") <= KnnK)
           .select(col("s").as("src"), col("nbr").as("dst")))
-    }) }
-  }
+    }
 
   /** Session-pinned SCC assignment over [[knnDirected]] — the
-    * build/serve split at the GRAPH-ANALYTICS layer (the q119/q125
-    * IndexCache convention): the SCC fixpoint runs once per
-    * (session, sfDir), and every consumer (q187's membership report,
-    * q199's condensation DAG) serves from the pinned (v, scc_id)
-    * relation. The pin is a fresh materialized block, so the
-    * operator's internal settle batches stay releasable. */
-  private val sccCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private def sccSpine(s: SparkSession, d: String): DataFrame = {
-    sccCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    sccCache.synchronized { sccCache.getOrElseUpdate((s, d), {
-      sccCache.keys.filter(k => k._1 == s && k._2 != d).foreach { k =>
-        sccCache.remove(k).foreach(graft.Checkpoints.release)
-      }
+    * build/serve split at the GRAPH-ANALYTICS layer, in a
+    * [[SessionMemo]]: the SCC fixpoint runs once per (session, sfDir),
+    * and every consumer (q187's membership report, q199's condensation
+    * DAG) serves from the pinned (v, scc_id) relation. The pin is a
+    * fresh materialized block, so the operator's internal settle
+    * batches stay releasable. */
+  private val sccCache = SessionMemo.pinned[DataFrame](Seq(_))
+  private def sccSpine(s: SparkSession, d: String): DataFrame =
+    sccCache(s, d) {
       graft.Checkpoints.checkpointPinned(
         Graph.stronglyConnectedComponents(knnDirected(s, d)))
-    }) }
-  }
+    }
 
   /** Session-pinned REFINED community labels over [[knnEdges]] — the
     * q188 partition (LPA 4 rounds + 2 guarded refine rounds), built
     * once per (session, sfDir) and served by both consumers: q188
     * reports it, q251 contracts it into the coarse community graph
-    * for the next Louvain level. Same lifecycle as [[sccSpine]]. */
-  private val refinedCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private def refinedLabelsSpine(s: SparkSession, d: String): DataFrame = {
-    refinedCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    refinedCache.synchronized { refinedCache.getOrElseUpdate((s, d), {
-      refinedCache.keys.filter(k => k._1 == s && k._2 != d).foreach { k =>
-        refinedCache.remove(k).foreach(graft.Checkpoints.release)
-      }
+    * for the next Louvain level. A [[SessionMemo]]. */
+  private val refinedCache = SessionMemo.pinned[DataFrame](Seq(_))
+  private def refinedLabelsSpine(s: SparkSession, d: String): DataFrame =
+    refinedCache(s, d) {
       val edges = knnEdges(s, d)
       graft.Checkpoints.checkpointPinned(
         Graph.refineCommunities(edges,
           Graph.labelPropagation(edges, rounds = 4), rounds = 2))
-    }) }
-  }
+    }
 
   /** Session-pinned KMV-register relation (v, hop, n_reg, kth_min,
     * est_reach) over the k-NN spine — the HyperBall sketch state built
     * once per (session, sfDir) and served by both consumers: q206
     * reports the registers themselves, q227 aggregates them into the
-    * neighborhood function N(h). Same lifecycle discipline as
-    * [[sccSpine]]: pin is a fresh materialized block, internal hop
-    * batches stay releasable. */
-  private val anfCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private def anfSpine(s: SparkSession, d: String): DataFrame = {
-    anfCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    anfCache.synchronized { anfCache.getOrElseUpdate((s, d), {
-      anfCache.keys.filter(k => k._1 == s && k._2 != d).foreach { k =>
-        anfCache.remove(k).foreach(graft.Checkpoints.release)
-      }
+    * neighborhood function N(h). A [[SessionMemo]]; the pin is a fresh
+    * materialized block, so internal hop batches stay releasable. */
+  private val anfCache = SessionMemo.pinned[DataFrame](Seq(_))
+  private def anfSpine(s: SparkSession, d: String): DataFrame =
+    anfCache(s, d) {
       graft.Checkpoints.checkpointPinned(Graph.anfKmv(knnEdges(s, d)))
-    }) }
-  }
+    }
 
   /** Condensation edges shared by q199/q200: every directed k-NN pick
     * edge lifted to its endpoints' SCCs, cross-SCC pairs only (with
@@ -354,25 +279,17 @@ object GraphQueries {
     * deterministically from `orders` and written tab-separated, so the
     * declared-schema ingest path ([[graft.schema.MagTables]]) is
     * exercised end-to-end with DuckDB reading the SAME files via
-    * `read_csv`. Same lifecycle as the q190 JSON fixture: the path is
-    * deterministic per SF (one dir, overwritten; content is a pure
-    * function of the SF's orders table, so a concurrent overwrite
-    * converges byte-identically) because the driver's DuckDB pass runs
-    * after this JVM exits.
+    * `read_csv`. A [[SessionMemo.fixtureDirs]] fixture: the DuckDB
+    * oracle check reads it after this JVM exits.
     *
     * Shape: every order is a "paper" with one landing-page URL whose
     * sourceType cycles 1..3 on `key % 3`, plus a type-4 PDF-mirror row
     * for every fifth key (so papers have 1–2 URLs — the aux table is a
     * genuine 1:N), and exactly one language from a 7-way key split
     * skewed toward 'en' (the real table's shape). */
-  private val magAuxDirs =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), String]()
-  private def magAuxDir(s: SparkSession, d: String): String = {
-    magAuxDirs.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    magAuxDirs.synchronized { magAuxDirs.getOrElseUpdate((s, d), {
-      val sfName = d.split('/').filter(_.nonEmpty).last
-      val dir = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_magaux_$sfName").toString
+  private val magAuxDirs = SessionMemo.fixtureDirs("graft_magaux")
+  private def magAuxDir(s: SparkSession, d: String): String =
+    magAuxDirs(s, d) { dir =>
       val k = Tables.orders(s, d).select(col("o_orderkey").as("paper"))
       val landing = k.select(col("paper"),
         (col("paper") % 3 + 1).cast("int").as("st"),
@@ -482,9 +399,7 @@ object GraphQueries {
           (col("id") % 70000).cast("string"), lit("2016-06-24"))
           .as("value"))
         .write.mode("overwrite").text(s"$dir/ConferenceSeries.txt")
-      dir
-    }) }
-  }
+    }
 
   /** PaperCitationContexts-shaped TSV fixture per (session, sfDir) —
     * the q250 substrate and the reference's stated text-analysis
@@ -493,19 +408,12 @@ object GraphQueries {
     * row per citation-spine edge, context = a tab-free normalized
     * slice of a real `documents` row picked by hashing the edge into
     * the dense 0-based doc_id space, wrapped in a citation-marker
-    * skeleton. Separate cache from [[magAuxDir]] so the q249 fixture
-    * never pays the citation-spine build. Lifecycle identical to the
-    * q190 convention (deterministic per-SF path; content a pure
-    * function of the SF tables; DuckDB reads the same files post-JVM).
-    */
-  private val ctxDirs =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), String]()
-  private def citationContextsDir(s: SparkSession, d: String): String = {
-    ctxDirs.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    ctxDirs.synchronized { ctxDirs.getOrElseUpdate((s, d), {
-      val sfName = d.split('/').filter(_.nonEmpty).last
-      val dir = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_magctx_$sfName").toString
+    * skeleton. Separate memo from [[magAuxDir]] so the q249 fixture
+    * never pays the citation-spine build. A
+    * [[SessionMemo.fixtureDirs]] fixture. */
+  private val ctxDirs = SessionMemo.fixtureDirs("graft_magctx")
+  private def citationContextsDir(s: SparkSession, d: String): String =
+    ctxDirs(s, d) { dir =>
       val docs = Tables.documents(s, d).select(col("doc_id"),
         regexp_replace(col("text"), "\\s+", " ").as("t"))
       val e = citationEdges(s, d)
@@ -519,9 +427,7 @@ object GraphQueries {
             col("cited").cast("string"), lit(" ) "),
             substring(col("t"), 1, 160))).as("value"))
         .write.mode("overwrite").text(s"$dir/PaperCitationContexts.txt")
-      dir
-    }) }
-  }
+    }
 
   /** MAG-snapshot TSV fixture per (session, sfDir) for the two
     * REFERENCE-JOURNEY queries (q264/q265) — the exact day-one flow a
@@ -535,17 +441,12 @@ object GraphQueries {
     * readers' distinct() is part of the journey). References: each
     * paper cites the min-key paper of two other key buckets — bounded
     * fan-in, deterministic, and the oracle reads the written file so no
-    * replay is needed. q190/magAuxDir lifecycle. */
-  private val journeyDirs =
-    scala.collection.concurrent.TrieMap[(SparkSession, String, Int), String]()
+    * replay is needed. A [[SessionMemo.fixtureDirs]] fixture, one
+    * dir per stride. */
+  private val journeyDirs = SessionMemo.fixtureDirs("graft_magjourney")
   private def magJourneyDir(s: SparkSession, d: String,
-                            stride: Int = 97): String = {
-    journeyDirs.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    journeyDirs.synchronized { journeyDirs.getOrElseUpdate((s, d, stride), {
-      val sfName = d.split('/').filter(_.nonEmpty).last
-      val suffix = if (stride == 97) "" else s"_s$stride"
-      val dir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_magjourney_$sfName$suffix").toString
+                            stride: Int = 97): String =
+    journeyDirs(s, d, if (stride == 97) "" else s"_s$stride") { dir =>
       val sel = Tables.orders(s, d).filter(col("o_orderkey") % stride === 0)
         .select(col("o_orderkey").as("id"), col("o_orderdate").as("dt"))
       sel.select(concat_ws("\t",
@@ -580,9 +481,7 @@ object GraphQueries {
         .filter(col("citing") =!= col("cited"))
       refs.select(concat_ws("\t", col("citing"), col("cited")).as("value"))
         .coalesce(1).write.mode("overwrite").text(s"$dir/PaperReferences.txt")
-      dir
-    }) }
-  }
+    }
 
   /** DYNAMIC oracles for the MAG-aux fixture queries (paths are
     * session-scoped): DuckDB reads the very TSV files the Spark side

@@ -24,9 +24,9 @@ object TextQueries {
     * serve split for q192's incremental admission (built with q26's
     * signature parameters; the oracle recomputes the same chain from
     * the documents table, so it never reads these files). */
-  private val minhashIndexDirs = new IndexCache("graft_minhash")
+  private val minhashIndexDirs = SessionMemo.indexDirs("graft_minhash")
   private def minhashIndexDir(s: SparkSession, d: String): String =
-    minhashIndexDirs.get(s, d) { dir =>
+    minhashIndexDirs(s, d) { dir =>
       graft.operators.Dedup.buildMinhashIndex(
         Tables.documents(s, d), "doc_id", "text", dir)
     }
@@ -46,70 +46,45 @@ object TextQueries {
       .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
   }
 
-  /** Session-pinned q195 census shared with q198 (the spine
-    * convention): the corpus-wide 5-gram shingling + broadcast probe
-    * is the dominant stage of both queries and runs once per
-    * (session, sfDir). Build serialized (the IndexCache race). */
-  private val censusCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String),
-      org.apache.spark.sql.DataFrame]()
-  private def censusSpine(s: SparkSession,
-                          d: String): org.apache.spark.sql.DataFrame = {
-    censusCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    censusCache.synchronized { censusCache.getOrElseUpdate((s, d), {
-      censusCache.keys.filter(k => k._1 == s && k._2 != d).foreach { k =>
-        censusCache.remove(k).foreach(graft.Checkpoints.release)
-      }
+  /** Session-pinned q195 census shared with q198 (a [[SessionMemo]]):
+    * the corpus-wide 5-gram shingling + broadcast probe is the dominant
+    * stage of both queries and runs once per (session, sfDir). */
+  private val censusCache = SessionMemo.pinned[DataFrame](Seq(_))
+  private def censusSpine(s: SparkSession, d: String): DataFrame =
+    censusCache(s, d) {
       val docs = Tables.documents(s, d)
       graft.Checkpoints.checkpointPinned(Dedup.contaminationCensus(
         docs.filter(col("doc_id") % 50 =!= 0),
         docs.filter(col("doc_id") % 50 === 0),
         "doc_id", "text", n = 5))
-    }) }
-  }
+    }
 
   /** Session-pinned q202 near-dup CLUSTER verdicts shared by q202 /
-    * q213 / q214 (the censusSpine convention): the LSH chain + star
-    * contraction is the dominant stage of all three and runs once per
-    * (session, sfDir). Build serialized (the IndexCache race). */
-  private val clusterCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String),
-      org.apache.spark.sql.DataFrame]()
-  private def clusterSpine(s: SparkSession,
-                           d: String): org.apache.spark.sql.DataFrame = {
-    clusterCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    clusterCache.synchronized { clusterCache.getOrElseUpdate((s, d), {
-      clusterCache.keys.filter(k => k._1 == s && k._2 != d).foreach { k =>
-        clusterCache.remove(k).foreach(graft.Checkpoints.release)
-      }
+    * q213 / q214 (a [[SessionMemo]]): the LSH chain + star contraction
+    * is the dominant stage of all three and runs once per
+    * (session, sfDir). */
+  private val clusterCache = SessionMemo.pinned[DataFrame](Seq(_))
+  private def clusterSpine(s: SparkSession, d: String): DataFrame =
+    clusterCache(s, d) {
       graft.Checkpoints.checkpointPinned(Dedup.nearDupKeeper(
         Tables.documents(s, d), "doc_id", "text"))
-    }) }
-  }
+    }
 
   /** Session-pinned EXACT 3-gram Jaccard ≥ 0.3 truth relation
     * (id_a, id_b, jaccard) — the PPJoin pass both eval queries grade
-    * against (q210 keeps the jaccard, q221 keeps the pair ids). Same
-    * lifecycle discipline as [[clusterSpine]]: one PPJoin per
-    * (session, sfDir), every consumer serves from the pin. */
-  private val truthCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String),
-      org.apache.spark.sql.DataFrame]()
-  private def jaccardTruth(s: SparkSession,
-                           d: String): org.apache.spark.sql.DataFrame = {
-    truthCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    truthCache.synchronized { truthCache.getOrElseUpdate((s, d), {
-      truthCache.keys.filter(k => k._1 == s && k._2 != d).foreach { k =>
-        truthCache.remove(k).foreach(graft.Checkpoints.release)
-      }
+    * against (q210 keeps the jaccard, q221 keeps the pair ids). A
+    * [[SessionMemo]]: one PPJoin per (session, sfDir), every consumer
+    * serves from the pin. */
+  private val truthCache = SessionMemo.pinned[DataFrame](Seq(_))
+  private def jaccardTruth(s: SparkSession, d: String): DataFrame =
+    truthCache(s, d) {
       graft.Checkpoints.checkpointPinned(Dedup.ngramJaccardPairs(
         Tables.documents(s, d), "doc_id", "text", 3, 0.3))
-    }) }
-  }
+    }
 
-  private val bm25IndexDirs = new IndexCache("graft_bm25")
+  private val bm25IndexDirs = SessionMemo.indexDirs("graft_bm25")
   private def bm25IndexDir(s: SparkSession, d: String): String =
-    bm25IndexDirs.get(s, d) { dir =>
+    bm25IndexDirs(s, d) { dir =>
       graft.operators.TextIndex.buildBm25Index(
         graft.sources.Tables.documents(s, d), "doc_id", "text", dir)
     }
@@ -119,9 +94,9 @@ object TextQueries {
     * (TextIndex.appendToBm25Index) — the q192 ingestion shape for the
     * retrieval index. Serving from it is bit-equal to the one-shot
     * build, which is exactly what q212's oracle (= q175's) checks. */
-  private val bm25IncIndexDirs = new IndexCache("graft_bm25i")
+  private val bm25IncIndexDirs = SessionMemo.indexDirs("graft_bm25i")
   private def bm25IncIndexDir(s: SparkSession, d: String): String =
-    bm25IncIndexDirs.get(s, d) { dir =>
+    bm25IncIndexDirs(s, d) { dir =>
       val docs = graft.sources.Tables.documents(s, d)
       graft.operators.TextIndex.buildBm25Index(
         docs.filter(col("doc_id") % 5 =!= 4), "doc_id", "text", dir)
@@ -174,25 +149,17 @@ object TextQueries {
     * declared catalog read (`data/samples/PaperAbstractsInvertedIndex
     * .txt`: one (paper_id, json) row per paper). Content is a pure
     * function of the SF tables (every `documents` row serialized by
-    * [[invertedIndexJson]]); lifecycle identical to the q190/magAuxDir
-    * convention: deterministic per-SF path, DuckDB reads the SAME
-    * files post-JVM, so the declared-schema quote-free TSV read itself
-    * sits under the hash gate. */
-  private val absDirs =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), String]()
-  private def abstractsDir(s: SparkSession, d: String): String = {
-    absDirs.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    absDirs.synchronized { absDirs.getOrElseUpdate((s, d), {
-      val sfName = d.split('/').filter(_.nonEmpty).last
-      val dir = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_magabs_$sfName").toString
+    * [[invertedIndexJson]]); a [[SessionMemo.fixtureDirs]] fixture:
+    * DuckDB reads the SAME files post-JVM, so the declared-schema
+    * quote-free TSV read itself sits under the hash gate. */
+  private val absDirs = SessionMemo.fixtureDirs("graft_magabs")
+  private def abstractsDir(s: SparkSession, d: String): String =
+    absDirs(s, d) { dir =>
       invertedIndexJson(Tables.documents(s, d))
         .select(concat_ws("\t", col("doc_id"), col("js")).as("value"))
         .write.mode("overwrite")
         .text(s"$dir/PaperAbstractsInvertedIndex.txt")
-      dir
-    }) }
-  }
+    }
 
   val defs: Map[String, Q] = Map(
     // WILSON LOWER-BOUND RANKING (Wilson 1927; the sort-by-LCB rule) —

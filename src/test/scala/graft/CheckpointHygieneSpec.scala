@@ -2,12 +2,14 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.GraphQueries
+import graft.queries.SessionMemo
 
 /** Storage hygiene contract (round-2 VERDICT "What's wrong" #2): a
   * bench-style pass — run query, then `Checkpoints.releaseAll` — must
   * leave ZERO checkpoint blocks in the block manager, except the
-  * deliberately pinned co-ship spine, which `invalidateSpine` drops.
+  * deliberately pinned session views (co-ship spine and the substrates
+  * derived from it), which `SessionMemo.invalidate` drops — every one
+  * of them, whichever query family built it.
   * The session is shared with other suites, so all assertions are on
   * the DELTA of persistent RDD ids. */
 class CheckpointHygieneSpec extends AnyFunSuite with SparkTestBase {
@@ -17,25 +19,31 @@ class CheckpointHygieneSpec extends AnyFunSuite with SparkTestBase {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     // the checkpoint-heavy members of every family: spine (q15/q17),
     // PPJoin dedup (q25), iterative CC + BFS (q34/q35), shared
-    // intermediates (q50), IVF index (q51), LSH near-dup (q70)
+    // intermediates (q50), IVF index (q51), LSH near-dup (q70), and one
+    // consumer of each pinned view outside the spine family: refined
+    // communities (q188), ANF registers (q206), contamination census
+    // (q195), graded (exact, ann) rankings (q196)
     val heavy = Seq("q15_cosupply_edges", "q17_supplier_triangles",
       "q25_ngram_jaccard", "q34_cosupply_components", "q35_ego_bfs",
-      "q50_sole_blame", "q51_ann_ivf_topk", "q70_embed_neardup_lsh")
+      "q50_sole_blame", "q51_ann_ivf_topk", "q70_embed_neardup_lsh",
+      "q188_communities_refined", "q206_anf_reach",
+      "q195_contamination_census", "q196_ann_recall_at_k")
     heavy.foreach { q =>
       SparkEntry.queries(q)(spark, d)
         .write.format("noop").mode("overwrite").save()
       Checkpoints.releaseAll(spark)
     }
     assert(Checkpoints.trackedCount(spark, includePinned = false) == 0)
-    // at most the two pinned materialized views (pair spine +
-    // thresholded edge set) may remain
+    // at most the pinned materialized views these queries build may
+    // remain: pair spine, thresholded edge set, directed k-NN, refined
+    // labels, ANF registers, census, and the (exact, ann) pair
     val afterRun = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(afterRun.size <= 2, s"stale non-spine blocks: $afterRun")
+    assert(afterRun.size <= 8, s"stale non-pinned blocks: $afterRun")
 
-    GraphQueries.invalidateSpine(spark)
+    SessionMemo.invalidate(spark)
     val afterInvalidate = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(afterInvalidate.isEmpty,
-      s"stale blocks after invalidateSpine: $afterInvalidate")
+      s"stale blocks after SessionMemo.invalidate: $afterInvalidate")
   }
 
   test("iterative loops retain at most two rounds of state while running") {

@@ -6,10 +6,11 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps two decisions in one module each: the session configuration
-  * in [[Session]] and the runtime listener in [[Telemetry]]. A harness
-  * or spec that builds its own session, or main code that hand-writes a
-  * listener, fails here. */
+/** Keeps three decisions in one module each: the session configuration
+  * in [[Session]], the runtime listener in [[Telemetry]] and the
+  * per-(session, sfDir) substrate cache in [[graft.queries.SessionMemo]].
+  * A harness or spec that builds its own session, or main code that
+  * hand-writes a listener or a session-keyed cache, fails here. */
 class SingleSourceSpec extends AnyFunSuite {
 
   /** Scala sources under `roots` whose text contains any of `needles`. */
@@ -35,5 +36,11 @@ class SingleSourceSpec extends AnyFunSuite {
       "new org.apache.spark.scheduler.SparkListener")
     assert(containing(Seq("src/main"), needles) ==
       Set("src/main/scala/graft/Telemetry.scala"))
+  }
+
+  test("only SessionMemo keys a cache by SparkSession in main code") {
+    val memoKey = "TrieMap[" + "(SparkSession"
+    assert(containing(Seq("src/main"), Seq(memoKey)) ==
+      Set("src/main/scala/graft/queries/SessionMemo.scala"))
   }
 }
