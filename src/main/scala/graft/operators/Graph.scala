@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Checkpoints
+import graft.Strings.jsonEscape
 
 /** Iterative graph operators — the reference's distinctive layer
   * (SURVEY.md §2.9), redesigned as whole-graph dataflow: one distributed
@@ -2342,8 +2343,6 @@ object Graph {
         (l, r) => when(l.getField(period) < r.getField(period), -1)
           .when(l.getField(period) > r.getField(period), 1)
           .otherwise(0))).as("by_period"))
-
-  private def jsonEscape(s: String): String = graft.Strings.jsonEscape(s)
 
   /** D3 force-layout JSON export (G9's second format — the reference's
     * `jsNets.scala:115-1207` renders its nets through a browser force

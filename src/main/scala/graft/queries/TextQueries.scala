@@ -2087,27 +2087,17 @@ object TextQueries {
     * with the SAME literal constants as Dedup.minhashPerms → 8 band
     * LCG folds → bucket self-join. Every step is exact nonnegative
     * int64 arithmetic — hash parity is by construction, not luck. */
-  private def minhashLshSql: String = {
-    val perms = Dedup.minhashPerms(32)
-    val mins = perms.zipWithIndex.map { case ((a, b), i) =>
-      s"min((k * $a + $b) % ${Dedup.MinhashMod}) AS m$i"
-    }.mkString(",\n    ")
-    def bandKey(b: Int): String =
-      (0 until 4).foldLeft("0")((h, r) =>
-        s"(($h * 1103515245 + m${b * 4 + r}) % $LcgMod)")
-    val bands = (0 until 8).map(b =>
-      s"SELECT doc_id, $b AS band, ${bandKey(b)} AS bkey FROM sig")
-      .mkString("\n  UNION ALL ")
-    s"""WITH ${minhashBandsBody(mins, bands)}
+  private def minhashLshSql: String =
+    s"""WITH $minhashBandsBody
        |SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
        |FROM bands a JOIN bands b
        |  ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id""".stripMargin
-  }
 
   /** The shared CTE chain of the minhash family (q26/q108): word
     * hashes → shingle keys → 32-slot signatures (`sig`, columns
     * m0..m31) → 8 band keys (`bands`). */
-  private def minhashBandsBody(mins: String, bands: String): String =
+  private def minhashBandsBody: String = {
+    val (mins, bands) = minhashSigBands("sig")
     s"""w AS (SELECT doc_id, string_split(${normSql("text")}, ' ') AS ws
        |           FROM documents),
        |wh AS (SELECT doc_id, list_transform(ws, w -> ${wordHashSql("w")}) AS hs
@@ -2120,22 +2110,37 @@ object TextQueries {
        |    $mins
        |  FROM shk GROUP BY doc_id),
        |bands AS ($bands)""".stripMargin
+  }
 
-  /** [[minhashBandsBody]] generalized to any source relation and a CTE
-    * -name suffix, so the q192 oracle can run the SAME chain over the
-    * corpus and over the derived increment side by side (`sig$sfx`,
-    * `bands$sfx`). */
-  private def minhashChainSql(src: String, sfx: String): String = {
-    val perms = Dedup.minhashPerms(32)
-    val mins = perms.zipWithIndex.map { case ((a, b), i) =>
+  /** The SQL fragment every minhash oracle shares: 32 affine
+    * min-aggregates `m0..m31` (the SAME literal constants as
+    * Dedup.minhashPerms) and the 8 band-key selects (4-slot LCG folds)
+    * over the signature relation `sig`. Returns (mins, bands). */
+  private def minhashSigBands(sig: String): (String, String) = {
+    val mins = Dedup.minhashPerms(32).zipWithIndex.map { case ((a, b), i) =>
       s"min((k * $a + $b) % ${Dedup.MinhashMod}) AS m$i"
     }.mkString(",\n    ")
     def bandKey(b: Int): String =
       (0 until 4).foldLeft("0")((h, r) =>
         s"(($h * 1103515245 + m${b * 4 + r}) % $LcgMod)")
     val bands = (0 until 8).map(b =>
-      s"SELECT doc_id, $b AS band, ${bandKey(b)} AS bkey FROM sig$sfx")
+      s"SELECT doc_id, $b AS band, ${bandKey(b)} AS bkey FROM $sig")
       .mkString("\n  UNION ALL ")
+    (mins, bands)
+  }
+
+  /** Number of the 32 signature slots on which relations `l` and `r`
+    * agree, as a SQL sum. */
+  private def slotMatches(l: String, r: String): String =
+    (0 until 32).map(i => s"CASE WHEN $l.m$i = $r.m$i THEN 1 ELSE 0 END")
+      .mkString(" + ")
+
+  /** [[minhashBandsBody]] generalized to any source relation and a CTE
+    * -name suffix, so the q192 oracle can run the SAME chain over the
+    * corpus and over the derived increment side by side (`sig$sfx`,
+    * `bands$sfx`). */
+  private def minhashChainSql(src: String, sfx: String): String = {
+    val (mins, bands) = minhashSigBands(s"sig$sfx")
     s"""w$sfx AS (SELECT doc_id, string_split(${normSql("text")}, ' ') AS ws
        |           FROM $src),
        |wh$sfx AS (SELECT doc_id, list_transform(ws, w -> ${wordHashSql("w")})
@@ -2160,9 +2165,7 @@ object TextQueries {
   // admission verdict — term for term Dedup.incrementalNearDup over
   // the recomputed index.
   private def incrementalNearDupSql: String = {
-    val matches = (0 until 32)
-      .map(i => s"CASE WHEN sb.m$i = sc.m$i THEN 1 ELSE 0 END")
-      .mkString(" + ")
+    val matches = slotMatches("sb", "sc")
     val nws = s"string_split(${normSql("text")}, ' ')"
     s"""WITH bt0 AS (SELECT doc_id,
        |    CASE WHEN doc_id % 14 = 0 THEN ${normSql("text")}
@@ -2194,20 +2197,8 @@ object TextQueries {
     * 32-slot agreement count + exact 3-gram Jaccard (string shingles,
     * candidates only) bucketed per agreement level. */
   private def sketchCalibrationSql: String = {
-    val perms = Dedup.minhashPerms(32)
-    val mins = perms.zipWithIndex.map { case ((a, b), i) =>
-      s"min((k * $a + $b) % ${Dedup.MinhashMod}) AS m$i"
-    }.mkString(",\n    ")
-    def bandKey(b: Int): String =
-      (0 until 4).foldLeft("0")((h, r) =>
-        s"(($h * 1103515245 + m${b * 4 + r}) % $LcgMod)")
-    val bands = (0 until 8).map(b =>
-      s"SELECT doc_id, $b AS band, ${bandKey(b)} AS bkey FROM sig")
-      .mkString("\n  UNION ALL ")
-    val matches = (0 until 32)
-      .map(i => s"CASE WHEN sa.m$i = sb.m$i THEN 1 ELSE 0 END")
-      .mkString(" + ")
-    s"""WITH ${minhashBandsBody(mins, bands)},
+    val matches = slotMatches("sa", "sb")
+    s"""WITH $minhashBandsBody,
        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
        |  FROM bands a JOIN bands b
        |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
@@ -2244,20 +2235,8 @@ object TextQueries {
     * per-dropped-doc canonical. Also the batch side of the STREAMING
     * parity gate (EventStreams.bandedNearDup ≡ this pair set). */
   private def bandedNearDupSql: String = {
-    val perms = Dedup.minhashPerms(32)
-    val mins = perms.zipWithIndex.map { case ((a, b), i) =>
-      s"min((k * $a + $b) % ${Dedup.MinhashMod}) AS m$i"
-    }.mkString(",\n    ")
-    def bandKey(b: Int): String =
-      (0 until 4).foldLeft("0")((h, r) =>
-        s"(($h * 1103515245 + m${b * 4 + r}) % $LcgMod)")
-    val bands = (0 until 8).map(b =>
-      s"SELECT doc_id, $b AS band, ${bandKey(b)} AS bkey FROM sig")
-      .mkString("\n  UNION ALL ")
-    val matches = (0 until 32)
-      .map(i => s"CASE WHEN sa.m$i = sb.m$i THEN 1 ELSE 0 END")
-      .mkString(" + ")
-    s"""WITH ${minhashBandsBody(mins, bands)},
+    val matches = slotMatches("sa", "sb")
+    s"""WITH $minhashBandsBody,
        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
        |  FROM bands a JOIN bands b
        |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
@@ -2282,20 +2261,8 @@ object TextQueries {
     * cluster_id)` (min reachable id ≡ the star contraction's component
     * minimum). Callers prepend WITH RECURSIVE and append their tail. */
   private def minhashClusterCtes(minMatches: Int): String = {
-    val perms = Dedup.minhashPerms(32)
-    val mins = perms.zipWithIndex.map { case ((a, b), i) =>
-      s"min((k * $a + $b) % ${Dedup.MinhashMod}) AS m$i"
-    }.mkString(",\n    ")
-    def bandKey(b: Int): String =
-      (0 until 4).foldLeft("0")((h, r) =>
-        s"(($h * 1103515245 + m${b * 4 + r}) % $LcgMod)")
-    val bands = (0 until 8).map(b =>
-      s"SELECT doc_id, $b AS band, ${bandKey(b)} AS bkey FROM sig")
-      .mkString("\n  UNION ALL ")
-    val matches = (0 until 32)
-      .map(i => s"CASE WHEN sa.m$i = sb.m$i THEN 1 ELSE 0 END")
-      .mkString(" + ")
-    s"""${minhashBandsBody(mins, bands)},
+    val matches = slotMatches("sa", "sb")
+    s"""$minhashBandsBody,
        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
        |  FROM bands a JOIN bands b
        |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
@@ -2402,20 +2369,8 @@ object TextQueries {
   }
 
   private def lshDedupEvalSql: String = {
-    val perms = Dedup.minhashPerms(32)
-    val mins = perms.zipWithIndex.map { case ((a, b), i) =>
-      s"min((k * $a + $b) % ${Dedup.MinhashMod}) AS m$i"
-    }.mkString(",\n    ")
-    def bandKey(b: Int): String =
-      (0 until 4).foldLeft("0")((h, r) =>
-        s"(($h * 1103515245 + m${b * 4 + r}) % $LcgMod)")
-    val bands = (0 until 8).map(b =>
-      s"SELECT doc_id, $b AS band, ${bandKey(b)} AS bkey FROM sig")
-      .mkString("\n  UNION ALL ")
-    val matches = (0 until 32)
-      .map(i => s"CASE WHEN sa.m$i = sb.m$i THEN 1 ELSE 0 END")
-      .mkString(" + ")
-    s"""WITH ${minhashBandsBody(mins, bands)},
+    val matches = slotMatches("sa", "sb")
+    s"""WITH $minhashBandsBody,
        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
        |  FROM bands a JOIN bands b
        |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),

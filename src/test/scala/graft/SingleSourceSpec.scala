@@ -6,23 +6,30 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps three decisions in one module each: the session configuration
-  * in [[Session]], the runtime listener in [[Telemetry]] and the
-  * per-(session, sfDir) substrate cache in [[graft.queries.SessionMemo]].
+/** Keeps four decisions in one module each: the session configuration
+  * in [[Session]], the runtime listener in [[Telemetry]], the
+  * per-(session, sfDir) substrate cache in [[graft.queries.SessionMemo]]
+  * and the stream start-and-drain in [[StreamRun]]'s drain helper.
   * A harness or spec that builds its own session, or main code that
-  * hand-writes a listener or a session-keyed cache, fails here. */
+  * hand-writes a listener, a session-keyed cache or a stream query,
+  * fails here. */
 class SingleSourceSpec extends AnyFunSuite {
 
-  /** Scala sources under `roots` whose text contains any of `needles`. */
-  private def containing(roots: Seq[String], needles: Seq[String]): Set[String] =
+  private def scalaFiles(roots: Seq[String]): Seq[Path] =
     roots.flatMap { r =>
       val w = Files.walk(Paths.get(r))
       try w.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally w.close()
-    }.filter { p: Path =>
+    }
+
+  /** Scala sources under `roots` whose text contains any of `needles`. */
+  private def containing(roots: Seq[String], needles: Seq[String]): Set[String] =
+    scalaFiles(roots).filter { p =>
       val text = Files.readString(p)
       needles.exists(text.contains)
     }.map(_.toString).toSet
+
+  private val Def = """\s*(?:private )?def (\w+)\b.*""".r
 
   test("only Session builds a SparkSession") {
     // split so this file does not match its own scan
@@ -42,5 +49,19 @@ class SingleSourceSpec extends AnyFunSuite {
     val memoKey = "TrieMap[" + "(SparkSession"
     assert(containing(Seq("src/main"), Seq(memoKey)) ==
       Set("src/main/scala/graft/queries/SessionMemo.scala"))
+  }
+
+  test("only StreamRun's drain helper starts and drains a stream in main code") {
+    for (needle <- Seq(".writeStream", "processAllAvailable")) {
+      // (file, enclosing def) of every line that mentions the needle
+      val sites = for {
+        p <- scalaFiles(Seq("src/main"))
+        lines = Files.readAllLines(p).asScala.toVector
+        i <- lines.indices if lines(i).contains(needle)
+      } yield (p.toString,
+        lines.take(i).reverseIterator.collectFirst { case Def(name) => name })
+      assert(sites == Seq(("src/main/scala/graft/StreamRun.scala", Some("drain"))),
+        needle)
+    }
   }
 }

@@ -4,133 +4,20 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The full file-drop → stream → foreachBatch-sink → parity harness
   * (StreamRun) must be green on the sf0.001 fixture inside the test
-  * suite; the driver-visible sf0.1 run is `runMain graft.StreamRun
+  * suite: one test per claim of [[StreamRun.channels]] (tumbling and
+  * co-edges share one), so a channel added to the table is tested
+  * automatically. The sf0.1 run is `runMain graft.StreamRun
   * /root/testdata/sf0.1` (recorded in COVERAGE.md). */
 class StreamEndToEndSpec extends AnyFunSuite with SparkTestBase {
 
-  test("streamed tumbling windows and co-edges match the oracle-checked batch twins") {
+  for (claim <- StreamRun.channels.map(_.claim).distinct) test(claim) {
     val work = java.nio.file.Files.createTempDirectory("stream_e2e").toString
-    val (tBad, cBad, tRows, cRows) =
-      StreamRun.run(spark, "/root/testdata/sf0.001", work)
-    assert(tRows > 0 && cRows > 0)
-    assert(tBad == 0, s"$tBad tumbling windows diverge from batch twin")
-    assert(cBad == 0, s"$cBad co-edge groups diverge from batch twin")
-  }
-
-  test("streamed incremental near-dup admission matches q192's batch verdicts") {
-    val work = java.nio.file.Files.createTempDirectory("stream_adm").toString
-    val (aBad, aRows) =
-      StreamRun.runAdmission(spark, "/root/testdata/sf0.001", work)
-    assert(aRows > 0)
-    assert(aBad == 0, s"$aBad admission verdicts diverge from the q192 batch")
-  }
-
-  test("streamed incremental novelty (evolving first-sighting index) " +
-       "matches q205's one-shot census") {
-    val work = java.nio.file.Files.createTempDirectory("stream_nov").toString
-    val (nBad, nRows) =
-      StreamRun.runNovelty(spark, "/root/testdata/sf0.001", work)
-    assert(nRows > 0)
-    assert(nBad == 0, s"$nBad novelty verdicts diverge from the q205 batch")
-  }
-
-  test("streamed benchmark decontamination (micro-batch probe against " +
-       "the fixed key set) matches q195's one-shot census") {
-    val work = java.nio.file.Files.createTempDirectory("stream_cont").toString
-    val (kBad, kRows) =
-      StreamRun.runContamination(spark, "/root/testdata/sf0.001", work)
-    assert(kRows > 0)
-    assert(kBad == 0, s"$kBad contamination verdicts diverge from the q195 batch")
-  }
-
-  test("streamed CUSUM drift monitor (additive day-grain state across " +
-       "micro-batches) matches q232's one-shot changepoint census") {
-    val work = java.nio.file.Files.createTempDirectory("stream_cusum").toString
-    val (dBad, dRows) =
-      StreamRun.runCusum(spark, "/root/testdata/sf0.001", work)
-    assert(dRows > 0)
-    assert(dBad == 0, s"$dBad CUSUM rows diverge from the q232 batch")
-  }
-
-  test("watermarked dedup absorbs ~20% duplicated arrivals and restores " +
-       "the base relation exactly") {
-    val work =
-      java.nio.file.Files.createTempDirectory("stream_dedup").toString
-    val (uBad, uRows) =
-      StreamRun.runDedup(spark, "/root/testdata/sf0.001", work)
-    assert(uRows > 0)
-    assert(uBad == 0, s"$uBad deduped rows diverge from the base relation")
-  }
-
-  test("streamed sliding windows (append mode, 2 windows per event) " +
-       "match the batch operator exactly") {
-    val work =
-      java.nio.file.Files.createTempDirectory("stream_sliding").toString
-    val (lBad, lRows) =
-      StreamRun.runSliding(spark, "/root/testdata/sf0.001", work)
-    assert(lRows > 0)
-    assert(lBad == 0, s"$lBad sliding windows diverge from the batch twin")
-  }
-
-  test("streamed per-user integer EWMA (Update-mode keyed state) " +
-       "matches q115's one-shot recursion") {
-    val work =
-      java.nio.file.Files.createTempDirectory("stream_ewma").toString
-    val (eBad, eRows) =
-      StreamRun.runEwma(spark, "/root/testdata/sf0.001", work)
-    assert(eRows > 0)
-    assert(eBad == 0, s"$eBad EWMA rows diverge from the q115 batch")
-  }
-
-  test("streamed per-user transitions (event-time-ordered keyed state) " +
-       "re-aggregate to q90's one-shot matrix") {
-    val work =
-      java.nio.file.Files.createTempDirectory("stream_transitions").toString
-    val (xBad, xRows) =
-      StreamRun.runTransitions(spark, "/root/testdata/sf0.001", work)
-    assert(xRows > 0)
-    assert(xBad == 0, s"$xBad transition cells diverge from the q90 batch")
-  }
-
-  test("streamed staged funnel (Update-mode keyed state, last emission " +
-       "per user) matches q85's one-shot funnel") {
-    val work =
-      java.nio.file.Files.createTempDirectory("stream_funnel").toString
-    val (fBad, fRows) =
-      StreamRun.runFunnel(spark, "/root/testdata/sf0.001", work)
-    assert(fRows > 0)
-    assert(fBad == 0, s"$fBad funnel rows diverge from the q85 batch")
-  }
-
-  test("streamed session windows (watermarked session_window, append " +
-       "mode) match q32's one-shot sessionization") {
-    val work =
-      java.nio.file.Files.createTempDirectory("stream_sessions").toString
-    val (sBad, sRows) =
-      StreamRun.runSessions(spark, "/root/testdata/sf0.001", work)
-    assert(sRows > 0)
-    assert(sBad == 0, s"$sBad sessions diverge from the q32 batch")
-  }
-
-  test("streamed IVF appends (micro-batch assignment against frozen " +
-       "centroids) yield the one-shot batch index and identical serving") {
-    val work =
-      java.nio.file.Files.createTempDirectory("stream_ivf").toString
-    val (vBad, vRows) =
-      StreamRun.runIvfAppend(spark, "/root/testdata/sf0.001", work)
-    assert(vRows > 0)
-    assert(vBad == 0,
-      s"$vBad assignment/serve rows diverge from the one-shot append")
-  }
-
-  test("a stateful query stopped mid-corpus and resumed from its " +
-       "checkpoint still equals the batch twin with no re-emissions") {
-    val work =
-      java.nio.file.Files.createTempDirectory("stream_restart").toString
-    val (rBad, rRows) =
-      StreamRun.runRestart(spark, "/root/testdata/sf0.001", work)
-    assert(rRows > 0)
-    assert(rBad == 0,
-      s"$rBad window rows diverge (or were re-emitted) across the restart")
+    for (ch <- StreamRun.channels if ch.claim == claim) {
+      val (bad, rows) = ch.run(spark, "/root/testdata/sf0.001", work)
+      assert(rows > 0, s"${ch.verdict}: the batch twin is empty")
+      assert(bad == 0, s"$bad ${ch.verdict} rows diverge from the batch twin")
+      assert(Checkpoints.trackedCount(spark, includePinned = false) == 0,
+        s"${ch.verdict} left unpinned checkpoint blocks behind")
+    }
   }
 }
