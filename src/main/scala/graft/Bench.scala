@@ -123,6 +123,7 @@ object Bench {
     val (calib32, wakeLoaded) = calibrate32WithLoadedWake()
     val wakeP99 = calibrateWakeP99Us()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val revision = Telemetry.revision()
     val spark = Session.local()
 
     Tables.all.foreach { n =>
@@ -195,13 +196,14 @@ object Bench {
     // it can never clobber the full-sweep record the round driver
     // reads (the r10 wart).
     // The record file alone also carries each query's two pass walls
-    // (null for a failed query), so a contention window shows per pass.
+    // (null for a failed query), so a contention window shows per pass,
+    // and the revision of the code the sweep ran.
     val recordFile = if (only.isDefined) "bench_only.json" else "bench.json"
     val passes = results.map { case (k, v) =>
       "\"" + k + "\":" + v.map { case (a, b) => s"[$a,$b]" }.getOrElse("null")
     }.mkString("{", ",", "}")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(recordFile),
-      line.dropRight(1) + s""","passes":$passes}""")
+      line.dropRight(1) + s""","passes":$passes,${revision.json}}""")
     val centis = results.map { case (k, v) =>
       k -> v.map { case (a, b) => math.rint(math.min(a, b) * 100).toLong }
     }

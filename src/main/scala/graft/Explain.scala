@@ -15,7 +15,8 @@ import graft.Telemetry.{censusKeys, measure}
   * session and twice: a warm pass that builds the session-pinned spines
   * and persisted indexes the query serves from, then a measured pass.
   * It writes one row per query to AUDIT.json (`GRAFT_AUDIT_OUT`
-  * overrides the path):
+  * overrides the path), under a header naming the code it ran
+  * ([[Telemetry.Revision]]):
   *
   *  - `rt_*`: what the measured pass ran — jobs, completed, skipped
   *    (AQE exchange reuse, already-computed checkpoint parents) and
@@ -135,6 +136,7 @@ object Explain {
     def session() = Session.local(4)
 
     if (audit) {
+      val revision = Telemetry.revision()
       var flagged = 0
       val rows = names.map { n =>
         // A fresh session per query: its warm pass builds every
@@ -171,7 +173,8 @@ object Explain {
       val out = sys.env.getOrElse("GRAFT_AUDIT_OUT", "AUDIT.json")
       java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
         rows.mkString(
-          s"""{"sf": "$sfDir", "unintended_nlj_total": $flagged, "queries": {""",
+          s"""{"sf": "$sfDir", ${revision.json}, """ +
+            s""""unintended_nlj_total": $flagged, "queries": {""",
           ",\n", "}}"))
     } else {
       val spark = session()

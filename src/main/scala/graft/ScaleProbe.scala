@@ -590,28 +590,14 @@ object ScaleProbe {
           val dir = dirPath.toString
           Similarity.buildIvfIndex(corpus, "vec_id", "embedding", dir,
             cells = 16, lloydIters = 2)
-          val centroids = spark.read.parquet(s"$dir/centroids.parquet")
-          val index = spark.read.parquet(s"$dir/assignments.parquet")
-          val q = emb.filter(col("vec_id") % 20 === 0)
-            .select(col("vec_id").as("q_id"),
-              graft.functions.VectorFns.toDoubleArr(col("embedding"))
-                .as("qv"))
-          val probes = Similarity.assignCells(
-              q.select(col("q_id").as("n_id"), col("qv").as("cv")),
-              centroids, 4)
-            .select(col("n_id").as("q_id"), col("cell"))
-          val cand = probes.join(index, "cell")
-            .select(col("q_id"), col("n_id")).distinct()
+          val q = Similarity.vectors(emb.filter(col("vec_id") % 20 === 0),
+            "vec_id", "embedding", Similarity.Query)
+          val cand = Similarity.ivfProbe(q, Similarity.ivfCentroids(spark, dir),
+            Similarity.ivfPostings(spark, dir), 4, keep = lit(true))
           deconCand = cand.count()
-          val c = corpus.select(col("vec_id").as("n_id"),
-            graft.functions.VectorFns.toDoubleArr(col("embedding"))
-              .as("cv"))
-          val scored = cand.join(c, "n_id").join(broadcast(q), "q_id")
-            .select(col("q_id"),
-              graft.functions.ArrayCosine.cosine(col("qv"), col("cv"))
-                .as("cos"))
-          val screened = graft.operators.Relational.topKPerGroup(scored,
-            Seq(col("q_id")), Seq(col("cos").desc), 1).count()
+          val screened = Similarity.bestPerQuery(Similarity.rerank(cand,
+              Similarity.vectors(corpus, "vec_id", "embedding"), q,
+              Similarity.cosScore), "cos", 1).count()
           Checkpoints.releaseAll(spark)
           screened
         } finally {

@@ -56,14 +56,17 @@ object StreamRun {
 
     /** Stage `df` as [[NumDrops]] file drops, split in `order` row
       * order, each slice passed through `slice`, plus an optional final
-      * `sentinel` drop. Returns the drop directory. */
+      * `sentinel` drop. Returns the drop directory. The numbered frame
+      * is checkpointed, so the one-partition global window runs once,
+      * not once per drop; the channel harness releases the block. */
     def stage(df: DataFrame, order: Seq[Column],
               slice: DataFrame => DataFrame = identity,
               sentinel: Option[DataFrame] = None): String = {
       val drops = Paths.get(dir, "drops")
       Files.createDirectories(drops)
-      val n = df.count()
-      val withIdx = df.withColumn("_rn", row_number().over(Window.orderBy(order: _*)))
+      val withIdx = Checkpoints.checkpoint(
+        df.withColumn("_rn", row_number().over(Window.orderBy(order: _*))))
+      val n = withIdx.count()
       (0 until NumDrops).foreach { i =>
         val lo = i * n / NumDrops + 1
         val hi = (i + 1) * n / NumDrops

@@ -121,4 +121,44 @@ object Telemetry {
       (tap, err)
     } finally sc.removeSparkListener(tap)
   }
+
+  /** The code a run ran: HEAD's commit, whether `src/` differs from
+    * HEAD's, and the tree id of `src/` as it is on disk. Each field is
+    * None when git or the repository is unavailable. */
+  final case class Revision(head: Option[String], srcDirty: Option[Boolean],
+                            srcTree: Option[String]) {
+    /** The three fields as JSON members (no braces); None is null. */
+    def json: String = {
+      def str(o: Option[String]) = o.map("\"" + _ + "\"").getOrElse("null")
+      s""""git_head": ${str(head)}, "src_dirty": ${srcDirty.getOrElse("null")}, """ +
+        s""""src_tree": ${str(srcTree)}"""
+    }
+  }
+
+  /** The [[Revision]] of the working directory's repository. The `src/`
+    * tree is hashed through a temporary index (`GIT_INDEX_FILE`, then
+    * `git add -A src` and `git write-tree`), so it equals
+    * `git rev-parse <commit>:src` for the commit that carries the same
+    * files, and HEAD's own index is never touched. A failing git call
+    * yields None; it never fails the run. */
+  def revision(): Revision = {
+    import scala.sys.process._
+    def git(env: (String, String)*)(args: String*): Option[String] =
+      try {
+        val out = new StringBuilder
+        val code = Process("git" +: args, None, env: _*)
+          .!(ProcessLogger(l => out.append(l), _ => ()))
+        if (code == 0) Some(out.toString.trim) else None
+      } catch { case _: Exception => None }
+    val head = git()("rev-parse", "HEAD")
+    val index = java.nio.file.Files.createTempFile("graft_rev", ".index")
+    // git starts an absent index file empty; an empty existing one is corrupt
+    java.nio.file.Files.delete(index)
+    val tmp = "GIT_INDEX_FILE" -> index.toString
+    val tree =
+      try git(tmp)("add", "-A", "src").flatMap(_ => git(tmp)("write-tree", "--prefix=src/"))
+      finally java.nio.file.Files.deleteIfExists(index)
+    val dirty = for (t <- tree; h <- git()("rev-parse", "HEAD:src")) yield t != h
+    Revision(head, dirty, tree)
+  }
 }

@@ -21,8 +21,102 @@ import graft.operators.Relational
   * Hyperplanes are seeded-random, generated once on the driver and
   * shipped as literals — reproducible across runs, no per-row RNG or
   * hashing.
+  *
+  * Every search is composed from one definition of each stage: the
+  * [[vectors]] projection, the [[ivfProbe]], the [[rerank]] with
+  * [[bestPerQuery]], the exact pair verify ([[verifyPairs]] over
+  * [[cellPairs]] or band buckets), the routed cell assignment
+  * ([[assignRouted]]) and, for PQ, [[pqCodes]]/[[readPqCodes]].
   */
 object Similarity {
+
+  /** Column names of one side of a vector search: the id and the
+    * double-array vector. */
+  private[graft] final case class Side(id: String, vec: String)
+  /** The corpus side, (n_id, cv): what assignment, probes and re-ranks
+    * key by. */
+  private[graft] val Corpus = Side("n_id", "cv")
+  /** The query side, (q_id, qv). */
+  private[graft] val Query = Side("q_id", "qv")
+
+  /** The vector projection every search stage starts from: `df`'s `id`
+    * as `side.id`, then the `carry` columns, then `vec` cast to a double
+    * array as `side.vec`. With `spread` the result is hash-partitioned
+    * by the id ([[Spread.byKey]]): a small vector relation otherwise
+    * arrives as one scan partition (or gets AQE-coalesced to one), which
+    * serializes a broadcast scoring join through a single core, and the
+    * exchange rewrites transform-built BOXED array columns into
+    * UnsafeRow primitive arrays, [[ArrayCosine]]'s fast path (the q152
+    * lesson: 11 s → 3.5 s from the two effects together). */
+  private[graft] def vectors(df: DataFrame, id: String, vec: String,
+                             side: Side = Corpus, carry: Seq[Column] = Nil,
+                             spread: Boolean = false): DataFrame = {
+    val v = df.select((col(id).as(side.id) +: carry) :+
+      VectorFns.toDoubleArr(col(vec)).as(side.vec): _*)
+    if (spread) Spread.byKey(v, col(side.id)) else v
+  }
+
+  /** round(cos(query, corpus), 4) as `cos`: the cosine re-rank score. */
+  private[graft] def cosScore: Column =
+    round(ArrayCosine.cosine(col("qv"), col("cv")), 4).as("cos")
+
+  /** The candidate re-rank: (q_id, n_id) candidates joined to the corpus
+    * rows `c` by n_id and to the broadcast query rows `q` by q_id, then
+    * scored → (q_id, n_id, score). `c` and `q` carry whatever `score`
+    * reads: vectors for an exact score, codes and lookup tables for
+    * ADC. */
+  private[graft] def rerank(cand: DataFrame, c: DataFrame, q: DataFrame,
+                            score: Column): DataFrame =
+    cand.join(c, "n_id").join(broadcast(q), "q_id")
+      .select(col("q_id"), col("n_id"), score)
+
+  /** Each query's `k` best rows by `score` desc, ties on the lower n_id
+    * — fully deterministic. */
+  private[graft] def bestPerQuery(scored: DataFrame, score: String,
+                                  k: Int): DataFrame =
+    Relational.topKPerGroup(scored, Seq(col("q_id")),
+      Seq(col(score).desc, col("n_id")), k)
+
+  /** The IVF probe: every query of `q` (q_id, qv) is routed to its
+    * `nprobe` nearest `centroids` cells, joined to the cell `postings`
+    * (n_id, cell) and filtered by `keep` (by default: no self-match) →
+    * distinct (q_id, n_id) candidates. The query side is the small
+    * side; the postings shuffle on cell id only. */
+  private[graft] def ivfProbe(q: DataFrame, centroids: DataFrame,
+                              postings: DataFrame, nprobe: Int,
+                              keep: Column = col("q_id") =!= col("n_id"))
+      : DataFrame =
+    assignCells(q.select(col("q_id").as("n_id"), col("qv").as("cv")),
+        centroids, nprobe)
+      .select(col("n_id").as("q_id"), col("cell"))
+      .join(postings, "cell")
+      .filter(keep)
+      .select(col("q_id"), col("n_id")).distinct()
+
+  /** round(cos(a, b), 4) as `cos` over a pair's two vectors. */
+  private def pairCos: Column =
+    round(ArrayCosine.cosine(col("va"), col("vb")), 4).as("cos")
+
+  /** The exact pair verify: (id_a, id_b) candidates joined to both
+    * vectors of the (n_id, cv) relation `c`, kept at
+    * round(cos, 4) >= minCos → (id_a, id_b, cos). Every emitted pair is
+    * exactly as correct as the brute-force [[cosinePairs]]; only recall
+    * depends on how the candidates were blocked. */
+  private def verifyPairs(cand: DataFrame, c: DataFrame,
+                          minCos: Double): DataFrame =
+    cand
+      .join(c.select(col("n_id").as("id_a"), col("cv").as("va")), "id_a")
+      .join(c.select(col("n_id").as("id_b"), col("cv").as("vb")), "id_b")
+      .select(col("id_a"), col("id_b"), pairCos)
+      .filter(col("cos") >= minCos)
+
+  /** IVF blocking: the distinct pairs id_a < id_b that share a cell of
+    * the (n_id, cell) assignments. */
+  private def cellPairs(assigned: DataFrame): DataFrame =
+    assigned.select(col("cell"), col("n_id").as("id_a"))
+      .join(assigned.select(col("cell"), col("n_id").as("id_b")), Seq("cell"))
+      .filter(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b")).distinct()
 
   /** Exact cosine top-k: queries × corpus with rank on (rounded cosine
     * desc, neighbor id) — fully deterministic. Self-pairs excluded.
@@ -30,18 +124,11 @@ object Similarity {
     * dot+norms loop per pair, no per-row lambda interpretation. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, id: String,
                      vec: String, k: Int): DataFrame = {
-    // explicit spread of the streamed corpus side — see [[cosinePairs]]
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val c = corpus.select(col(id).as("n_id"),
-      VectorFns.toDoubleArr(col(vec)).as("cv"))
-      .repartition(par, col("n_id"))
-    val q = queries.select(col(id).as("q_id"),
-      VectorFns.toDoubleArr(col(vec)).as("qv"))
+    val c = vectors(corpus, id, vec, spread = true)
+    val q = vectors(queries, id, vec, Query)
     val scored = c.join(broadcast(q), col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"),
-        round(ArrayCosine.cosine(col("qv"), col("cv")), 4).as("cos"))
-    Relational.topKPerGroup(scored, Seq(col("q_id")),
-      Seq(col("cos").desc, col("n_id")), k)
+      .select(col("q_id"), col("n_id"), cosScore)
+    bestPerQuery(scored, "cos", k)
   }
 
   /** Exact embedding-cosine near-duplicate pairs — the dense-vector
@@ -54,23 +141,12 @@ object Similarity {
     * space is never materialized. */
   def cosinePairs(emb: DataFrame, id: String, vec: String,
                   minCos: Double): DataFrame = {
-    // The streamed side is explicitly spread across the executors:
-    // a small vector relation otherwise arrives as one scan partition
-    // (or gets AQE-coalesced to one), which serializes the O(n²)
-    // nested-loop pair scan through a single core — the n² work is
-    // the cost here, not the n-row exchange. The exchange also
-    // rewrites transform-built BOXED array columns into UnsafeRow
-    // primitive arrays, ArrayCosine's fast path (the q152 lesson:
-    // 11 s → 3.5 s from the two effects together).
-    val par = emb.sparkSession.sparkContext.defaultParallelism
-    val a = emb.select(col(id).as("id_a"),
-      VectorFns.toDoubleArr(col(vec)).as("va"))
-      .repartition(par, col("id_a"))
-    val b = emb.select(col(id).as("id_b"),
-      VectorFns.toDoubleArr(col(vec)).as("vb"))
+    // the streamed side is spread ([[vectors]]): the n² nested-loop
+    // pair scan is the cost here, not the n-row exchange
+    val a = vectors(emb, id, vec, Side("id_a", "va"), spread = true)
+    val b = vectors(emb, id, vec, Side("id_b", "vb"))
     a.join(broadcast(b), col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(ArrayCosine.cosine(col("va"), col("vb")), 4).as("cos"))
+      .select(col("id_a"), col("id_b"), pairCos)
       .filter(col("cos") >= minCos)
   }
 
@@ -112,14 +188,7 @@ object Similarity {
     val cand = l.join(r, Seq("band", "bkey"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b")).distinct()
-    val v = emb.select(col(id).as("vid"),
-      VectorFns.toDoubleArr(col(vec)).as("v"))
-    cand
-      .join(v.select(col("vid").as("id_a"), col("v").as("va")), "id_a")
-      .join(v.select(col("vid").as("id_b"), col("v").as("vb")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(ArrayCosine.cosine(col("va"), col("vb")), 4).as("cos"))
-      .filter(col("cos") >= minCos)
+    verifyPairs(cand, vectors(emb, id, vec), minCos)
   }
 
   /** Deterministic random hyperplanes, generated ONCE on the driver and
@@ -220,19 +289,28 @@ object Similarity {
       .select(monotonically_increasing_id().as("cell"), col("cv").as("ctr")))
     (0 until iters).foreach { _ =>
       val assigned = assign(c, centroids, 1)
-      val refined = graft.Checkpoints.checkpoint(assigned.join(c, "n_id")
-        .select(col("cell"), posexplode(col("cv")))
-        .groupBy(col("cell"), col("pos"))
-        .agg((sum(round(col("col") * MeanScale).cast("long")).cast("double")
-          / count(lit(1)) / MeanScale).as("m"))
-        .groupBy(col("cell"))
-        .agg(map_from_entries(array_sort(
-          collect_list(struct(col("pos"), col("m"))))).as("mm"))
-        .select(col("cell"), map_values(col("mm")).as("ctr")))
+      val refined = graft.Checkpoints.checkpoint(
+        integerMeans(assigned.join(c, "n_id"), Seq("cell")))
       graft.Checkpoints.release(centroids)
       centroids = refined
     }
     centroids
+  }
+
+  /** The Lloyd recentering step shared by the IVF cells and the PQ
+    * codebooks: per `keys` group, the component-wise mean of the member
+    * vectors `cv`, summed as round(x·2^32) longs ([[MeanScale]]) and
+    * reassembled in component order → (`keys`…, ctr). */
+  private def integerMeans(members: DataFrame, keys: Seq[String]): DataFrame = {
+    val k = keys.map(col)
+    members.select(k :+ posexplode(col("cv")): _*)
+      .groupBy(k :+ col("pos"): _*)
+      .agg((sum(round(col("col") * MeanScale).cast("long")).cast("double")
+        / count(lit(1)) / MeanScale).as("m"))
+      .groupBy(k: _*)
+      .agg(map_from_entries(array_sort(
+        collect_list(struct(col("pos"), col("m"))))).as("mm"))
+      .select(k :+ map_values(col("mm")).as("ctr"): _*)
   }
 
   /** The Lloyd centroids [[ivfTopK]]/[[cosinePairsIvf]] compute,
@@ -243,8 +321,7 @@ object Similarity {
     * the ones the query recomputes inside Verify. */
   def collectedCentroids(emb: DataFrame, id: String, vec: String,
                          cells: Int, lloydIters: Int): Seq[(Long, Seq[Double])] = {
-    val c = graft.Checkpoints.checkpoint(emb.select(col(id).as("n_id"),
-      VectorFns.toDoubleArr(col(vec)).as("cv")))
+    val c = graft.Checkpoints.checkpoint(vectors(emb, id, vec))
     val cents = lloydCentroids(c, cells, lloydIters)
     val rows = cents.collect().toSeq
       .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
@@ -254,21 +331,26 @@ object Similarity {
     rows
   }
 
-  /** Build the IVF index ONCE and PERSIST it: the Lloyd centroids
-    * (cell, ctr) and the corpus cell assignments (n_id, cell) land as
-    * parquet under `outDir`. At 100 TB the index build — one Lloyd
-    * pipeline plus one corpus pass — is a scheduled job, not something
-    * recomputed per query ([[ivfTopK]] recomputes it; that is its toy
-    * form). Queries then run against the written index via
-    * [[ivfTopKIndexed]], touching the corpus only in the final
-    * candidate re-rank. The pipeline is bit-deterministic (exact
-    * integer Lloyd recentering, [[MeanScale]]) and parquet round-trips
-    * doubles bit-exact, so an index built in one session replays
-    * identically in another — which is also what lets the q119 oracle
-    * reuse the q51 literal-centroid replay. */
   /** Requested cell count above which assignment routes through the
     * hierarchical two-level router ([[assignCellsHierarchical]]). */
   private[graft] val HierCellThreshold = 64
+
+  /** Whether `cells` requested cells assign through the two-level
+    * router: past ~64 cells, flat assignment's n·cells cosines dominate
+    * and the coarse-quantizer route costs n·superProbe·√cells. */
+  private[graft] def hierarchical(cells: Long): Boolean = cells > HierCellThreshold
+
+  /** Nearest-`take` cell assignment, flat ([[assignCells]]) or through
+    * the two-level router ([[assignCellsHierarchical]]). */
+  private def assignRouted(vecs: DataFrame, centroids: DataFrame, take: Int,
+                           hier: Boolean): DataFrame =
+    if (hier) assignCellsHierarchical(vecs, centroids, take)
+    else assignCells(vecs, centroids, take)
+
+  /** The data-adaptive cell count of the dedup regime:
+    * max(4, n / targetCellSize), one count job. */
+  private[graft] def dedupCells(c: DataFrame, targetCellSize: Int): Int =
+    math.max(4L, c.count() / targetCellSize).toInt
 
   private def ivfMetaPath(dir: String) =
     new org.apache.hadoop.fs.Path(s"$dir/_ivf_meta")
@@ -286,7 +368,7 @@ object Similarity {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
     try out.write(
-      s"cells=$cells\nhierarchical=${cells > HierCellThreshold}\n"
+      s"cells=$cells\nhierarchical=${hierarchical(cells)}\n"
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
@@ -311,25 +393,53 @@ object Similarity {
     }
   }
 
-  def buildIvfIndex(corpus: DataFrame, id: String, vec: String,
-                    outDir: String, cells: Int = 16,
-                    lloydIters: Int = 2): Unit = {
-    val c = graft.Checkpoints.checkpoint(corpus.select(col(id).as("n_id"),
-      VectorFns.toDoubleArr(col(vec)).as("cv")))
+  /** A persisted IVF index's centroids (cell, ctr). */
+  private[graft] def ivfCentroids(spark: org.apache.spark.sql.SparkSession,
+                                  dir: String): DataFrame =
+    spark.read.parquet(s"$dir/centroids.parquet")
+
+  /** A persisted IVF index's postings, the corpus assignments
+    * (n_id, cell). */
+  private[graft] def ivfPostings(spark: org.apache.spark.sql.SparkSession,
+                                 dir: String): DataFrame =
+    spark.read.parquet(s"$dir/assignments.parquet")
+
+  /** The one IVF index build sequence: Lloyd centroids over the
+    * checkpointed (n_id, cv) corpus `c`, written with the assignment-mode
+    * sidecar; the corpus is then assigned to its `nprobe` nearest cells
+    * against the WRITTEN centroids (the persisted artifact is the source
+    * of truth the assignments must be consistent with) and the
+    * assignments written. Releases `c`. */
+  private def writeIvfIndex(c: DataFrame, cells: Int, lloydIters: Int,
+                            nprobe: Int, outDir: String): Unit = {
+    val spark = c.sparkSession
     val centroids = lloydCentroids(c, cells, lloydIters)
     centroids.coalesce(1).write.mode("overwrite")
       .parquet(s"$outDir/centroids.parquet")
-    writeIvfMeta(corpus.sparkSession, outDir, cells)
-    // assign against the WRITTEN centroids: the persisted artifact is
-    // the source of truth the assignments must be consistent with
-    val written = corpus.sparkSession.read.parquet(s"$outDir/centroids.parquet")
-    val assigned =
-      if (cells > HierCellThreshold) assignCellsHierarchical(c, written, 1)
-      else assignCells(c, written, 1)
-    assigned.write.mode("overwrite").parquet(s"$outDir/assignments.parquet")
+    writeIvfMeta(spark, outDir, cells)
+    assignRouted(c, ivfCentroids(spark, outDir), nprobe, hierarchical(cells))
+      .write.mode("overwrite").parquet(s"$outDir/assignments.parquet")
     graft.Checkpoints.release(centroids)
     graft.Checkpoints.release(c)
   }
+
+  /** Build the IVF index ONCE and PERSIST it: the Lloyd centroids
+    * (cell, ctr) and the corpus cell assignments (n_id, cell) land as
+    * parquet under `outDir`. At 100 TB the index build — one Lloyd
+    * pipeline plus one corpus pass — is a scheduled job, not something
+    * recomputed per query ([[ivfTopK]] recomputes it; that is its toy
+    * form). Queries then run against the written index via
+    * [[ivfTopKIndexed]], touching the corpus only in the final
+    * candidate re-rank. The pipeline is bit-deterministic (exact
+    * integer Lloyd recentering, [[MeanScale]]) and parquet round-trips
+    * doubles bit-exact, so an index built in one session replays
+    * identically in another — which is also what lets the q119 oracle
+    * reuse the q51 literal-centroid replay. */
+  def buildIvfIndex(corpus: DataFrame, id: String, vec: String,
+                    outDir: String, cells: Int = 16,
+                    lloydIters: Int = 2): Unit =
+    writeIvfIndex(graft.Checkpoints.checkpoint(vectors(corpus, id, vec)),
+      cells, lloydIters, nprobe = 1, outDir)
 
   /** INCREMENTAL append to a persisted IVF index ([[buildIvfIndex]]) —
     * the embedding twin of the BM25 postings append
@@ -349,9 +459,7 @@ object Similarity {
   def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession,
                        indexDir: String,
                        batch: DataFrame, id: String, vec: String): Unit = {
-    val centroids = spark.read.parquet(s"$indexDir/centroids.parquet")
-    val c = batch.select(col(id).as("n_id"),
-      VectorFns.toDoubleArr(col(vec)).as("cv"))
+    val centroids = ivfCentroids(spark, indexDir)
     // The build's assignment mode comes from the PERSISTED meta sidecar
     // — the written centroid count is NOT a proxy for it (Lloyd can
     // write fewer than the requested `cells`: seed limit over a small
@@ -366,11 +474,9 @@ object Similarity {
     // without a sidecar fall back to the count heuristic (best effort;
     // every in-repo index carries the sidecar).
     val hier = readIvfMetaHierarchical(spark, indexDir)
-      .getOrElse(centroids.count() > HierCellThreshold)
-    val assigned =
-      if (hier) assignCellsHierarchical(c, centroids, 1)
-      else assignCells(c, centroids, 1)
-    assigned.write.mode("append").parquet(s"$indexDir/assignments.parquet")
+      .getOrElse(hierarchical(centroids.count()))
+    assignRouted(vectors(batch, id, vec), centroids, 1, hier)
+      .write.mode("append").parquet(s"$indexDir/assignments.parquet")
   }
 
   /** ANN top-k against a PERSISTED IVF index ([[buildIvfIndex]]): the
@@ -384,45 +490,21 @@ object Similarity {
                      id: String, vec: String, topK: Int,
                      nprobe: Int = 4): DataFrame = {
     val spark = corpus.sparkSession
-    val centroids = spark.read.parquet(s"$indexDir/centroids.parquet")
-    val index = spark.read.parquet(s"$indexDir/assignments.parquet")
-    val q = queries.select(col(id).as("q_id"),
-      VectorFns.toDoubleArr(col(vec)).as("qv"))
-    val probes = assignCells(
-      q.select(col("q_id").as("n_id"), col("qv").as("cv")), centroids, nprobe)
-      .select(col("n_id").as("q_id"), col("cell"))
-    val cand = probes.join(index, "cell")
-      .filter(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id")).distinct()
-    val c = corpus.select(col(id).as("n_id"),
-      VectorFns.toDoubleArr(col(vec)).as("cv"))
-    val scored = cand.join(c, "n_id").join(broadcast(q), "q_id")
-      .select(col("q_id"), col("n_id"),
-        round(ArrayCosine.cosine(col("qv"), col("cv")), 4).as("cos"))
-    Relational.topKPerGroup(scored, Seq(col("q_id")),
-      Seq(col("cos").desc, col("n_id")), topK)
+    val q = vectors(queries, id, vec, Query)
+    val cand = ivfProbe(q, ivfCentroids(spark, indexDir),
+      ivfPostings(spark, indexDir), nprobe)
+    bestPerQuery(rerank(cand, vectors(corpus, id, vec), q, cosScore),
+      "cos", topK)
   }
 
   def ivfTopK(corpus: DataFrame, queries: DataFrame, id: String,
               vec: String, topK: Int, cells: Int = 16, nprobe: Int = 4,
               lloydIters: Int = 2): DataFrame = {
-    val c = graft.Checkpoints.checkpoint(corpus.select(col(id).as("n_id"),
-      VectorFns.toDoubleArr(col(vec)).as("cv")))
+    val c = graft.Checkpoints.checkpoint(vectors(corpus, id, vec))
     val centroids = lloydCentroids(c, cells, lloydIters)
-    val index = assignCells(c, centroids, 1) // (n_id, cell)
-    val q = queries.select(col(id).as("q_id"),
-      VectorFns.toDoubleArr(col(vec)).as("qv"))
-    val probes = assignCells(
-      q.select(col("q_id").as("n_id"), col("qv").as("cv")), centroids, nprobe)
-      .select(col("n_id").as("q_id"), col("cell"))
-    val cand = probes.join(index, "cell")
-      .filter(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id")).distinct()
-    val scored = cand.join(c, "n_id").join(broadcast(q), "q_id")
-      .select(col("q_id"), col("n_id"),
-        round(ArrayCosine.cosine(col("qv"), col("cv")), 4).as("cos"))
-    Relational.topKPerGroup(scored, Seq(col("q_id")),
-      Seq(col("cos").desc, col("n_id")), topK)
+    val q = vectors(queries, id, vec, Query)
+    val cand = ivfProbe(q, centroids, assignCells(c, centroids, 1), nprobe)
+    bestPerQuery(rerank(cand, c, q, cosScore), "cos", topK)
   }
 
   /** IVF-bucketed embedding near-dup — THE low-threshold 100 TB path
@@ -443,40 +525,26 @@ object Similarity {
     * Measured (ScaleProbe): 10× corpus → 3.9× work, vs 31× for the
     * sign-LSH variant at the same threshold (5.8× before the
     * coarse-quantizer assignment landed). Centroid ASSIGNMENT
-    * auto-switches past 64 cells to the two-level coarse-quantizer
-    * route ([[assignCellsHierarchical]]): n·superProbe·√cells cosines
-    * instead of n·cells, FAISS-IVF-style, leaving the
-    * candidate-generation shape unchanged. */
+    * auto-switches past [[HierCellThreshold]] cells to the two-level
+    * coarse-quantizer route ([[assignCellsHierarchical]]):
+    * n·superProbe·√cells cosines instead of n·cells, FAISS-IVF-style,
+    * leaving the candidate-generation shape unchanged. */
   def cosinePairsIvf(emb: DataFrame, id: String, vec: String,
                      minCos: Double, targetCellSize: Int = 256,
                      nprobe: Int = 2, lloydIters: Int = 2): DataFrame = {
     // spread inside the checkpoint: `c` feeds every Lloyd round and
     // the n·cells assignment cosines — on a single-split scan all of
     // it otherwise runs one task wide (operators.Spread)
-    val c = graft.Checkpoints.checkpoint(
-      Spread.byKey(emb.select(col(id).as("n_id"),
-        VectorFns.toDoubleArr(col(vec)).as("cv")), col("n_id")))
-    val cells = math.max(4L, c.count() / targetCellSize).toInt
+    val c = graft.Checkpoints.checkpoint(vectors(emb, id, vec, spread = true))
+    val cells = dedupCells(c, targetCellSize)
     val centroids = lloydCentroids(c, cells, lloydIters)
-    // past ~64 cells, flat assignment's n·cells cosines dominate — use
-    // the two-level coarse-quantizer route (n·superProbe·√cells)
-    val assigned =
-      if (cells > 64) assignCellsHierarchical(c, centroids, nprobe)
-      else assignCells(c, centroids, nprobe) // (n_id, cell)
-    val cand = assigned.select(col("cell"), col("n_id").as("id_a"))
-      .join(assigned.select(col("cell"), col("n_id").as("id_b")), Seq("cell"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
-    cand
-      .join(c.select(col("n_id").as("id_a"), col("cv").as("va")), "id_a")
-      .join(c.select(col("n_id").as("id_b"), col("cv").as("vb")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(ArrayCosine.cosine(col("va"), col("vb")), 4).as("cos"))
-      .filter(col("cos") >= minCos)
+    verifyPairs(
+      cellPairs(assignRouted(c, centroids, nprobe, hierarchical(cells))),
+      c, minCos)
   }
 
   /** Build [[cosinePairsIvf]]'s blocking structure ONCE and PERSIST it
-    * (the [[buildIvfIndex]] discipline applied to the DEDUP regime):
+    * (the [[buildIvfIndex]] sequence applied to the DEDUP regime):
     * data-adaptive cell count (max(4, n/targetCellSize)), Lloyd
     * centroids, and the MULTI-probe corpus assignments (nprobe ≥ 2 —
     * dedup recall lives in corpus-side multi-probe, unlike the
@@ -489,19 +557,8 @@ object Similarity {
   def buildIvfDedupIndex(emb: DataFrame, id: String, vec: String,
                          outDir: String, targetCellSize: Int = 256,
                          nprobe: Int = 2, lloydIters: Int = 2): Unit = {
-    val c = graft.Checkpoints.checkpoint(emb.select(col(id).as("n_id"),
-      VectorFns.toDoubleArr(col(vec)).as("cv")))
-    val cells = math.max(4L, c.count() / targetCellSize).toInt
-    val centroids = lloydCentroids(c, cells, lloydIters)
-    centroids.coalesce(1).write.mode("overwrite")
-      .parquet(s"$outDir/centroids.parquet")
-    val written = emb.sparkSession.read.parquet(s"$outDir/centroids.parquet")
-    val assigned =
-      if (cells > 64) assignCellsHierarchical(c, written, nprobe)
-      else assignCells(c, written, nprobe)
-    assigned.write.mode("overwrite").parquet(s"$outDir/assignments.parquet")
-    graft.Checkpoints.release(centroids)
-    graft.Checkpoints.release(c)
+    val c = graft.Checkpoints.checkpoint(vectors(emb, id, vec))
+    writeIvfIndex(c, dedupCells(c, targetCellSize), lloydIters, nprobe, outDir)
   }
 
   /** [[cosinePairsIvf]] served from a PERSISTED index
@@ -511,34 +568,29 @@ object Similarity {
     * rounds, no assignment pass — the per-run cost profile an index
     * exists for. */
   def cosinePairsIvfIndexed(indexDir: String, emb: DataFrame, id: String,
-                            vec: String, minCos: Double): DataFrame = {
-    val assigned =
-      emb.sparkSession.read.parquet(s"$indexDir/assignments.parquet")
-    val c = emb.select(col(id).as("n_id"),
-      VectorFns.toDoubleArr(col(vec)).as("cv"))
-    val cand = assigned.select(col("cell"), col("n_id").as("id_a"))
-      .join(assigned.select(col("cell"), col("n_id").as("id_b")), Seq("cell"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
-    cand
-      .join(c.select(col("n_id").as("id_a"), col("cv").as("va")), "id_a")
-      .join(c.select(col("n_id").as("id_b"), col("cv").as("vb")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(ArrayCosine.cosine(col("va"), col("vb")), 4).as("cos"))
-      .filter(col("cos") >= minCos)
-  }
+                            vec: String, minCos: Double): DataFrame =
+    verifyPairs(cellPairs(ivfPostings(emb.sparkSession, indexDir)),
+      vectors(emb, id, vec), minCos)
 
   /** Nearest `take` centroid cells per vector (by cosine, deterministic
     * tie-break on cell id). Centroids are broadcast — there are never
     * many. */
   private[graft] def assignCells(vecs: DataFrame, centroids: DataFrame,
                                  take: Int): DataFrame = {
-    val scored = vecs.crossJoin(broadcast(centroids))
-      .select(col("n_id"), col("cell"),
-        ArrayCosine.cosine(col("cv"), col("ctr")).as("sim"))
-    // user exchange on the window key — same shuffle the top-k window
-    // needs anyway, but not AQE-coalescible (the n·cells score rows
-    // are tiny bytes / heavy CPU; measured collapsing to one task)
+    nearestCells(vecs.crossJoin(broadcast(centroids)), take)
+  }
+
+  /** Each vector's `take` best (vector, centroid) rows of `pairs` by
+    * cosine, ties on the lower cell id → (n_id, cell). The user exchange
+    * on the window key is the shuffle the top-k window needs anyway,
+    * but not AQE-coalescible: the n·cells score rows are tiny bytes and
+    * heavy CPU, and under AQE's size-based coalescing the scoring and
+    * the window collapsed to one task (measured, also on q72). The
+    * exchange is kept for its fixed partition count, so it stays even
+    * where the input is already wide. */
+  private def nearestCells(pairs: DataFrame, take: Int): DataFrame = {
+    val scored = pairs.select(col("n_id"), col("cell"),
+      ArrayCosine.cosine(col("cv"), col("ctr")).as("sim"))
     Relational.topKPerGroup(Spread.byKey(scored, col("n_id")),
       Seq(col("n_id")), Seq(col("sim").desc, col("cell")), take)
       .select(col("n_id"), col("cell"))
@@ -576,8 +628,7 @@ object Similarity {
     * Returns (sub, cell, ctr) with `ctr` of dims/m components. */
   def pqTrain(corpus: DataFrame, id: String, vec: String,
               m: Int = 4, k: Int = 16, lloydIters: Int = 2): DataFrame = {
-    val c = graft.Checkpoints.checkpoint(corpus.select(col(id).as("n_id"),
-      VectorFns.toDoubleArr(col(vec)).as("cv")))
+    val c = graft.Checkpoints.checkpoint(vectors(corpus, id, vec))
     val dims = c.select(size(col("cv"))).head.getInt(0)
     require(dims % m == 0, s"dims $dims not divisible by m $m")
     val sub = dims / m
@@ -596,17 +647,9 @@ object Similarity {
           .select(monotonically_increasing_id().as("n_id"), col("cv")), m, sub)
         .select(col("sub"), col("n_id").as("cell"), col("cv").as("ctr")))
     (0 until lloydIters).foreach { _ =>
-      val assigned = assignSubCells(sliced, books)
-      val refined = graft.Checkpoints.checkpoint(assigned
-        .join(sliced, Seq("n_id", "sub"))
-        .select(col("sub"), col("cell"), posexplode(col("cv")))
-        .groupBy(col("sub"), col("cell"), col("pos"))
-        .agg((sum(round(col("col") * MeanScale).cast("long")).cast("double")
-          / count(lit(1)) / MeanScale).as("m"))
-        .groupBy(col("sub"), col("cell"))
-        .agg(map_from_entries(array_sort(
-          collect_list(struct(col("pos"), col("m"))))).as("mm"))
-        .select(col("sub"), col("cell"), map_values(col("mm")).as("ctr")))
+      val refined = graft.Checkpoints.checkpoint(integerMeans(
+        assignSubCells(sliced, books).join(sliced, Seq("n_id", "sub")),
+        Seq("sub", "cell")))
       graft.Checkpoints.release(books)
       books = refined
     }
@@ -657,12 +700,46 @@ object Similarity {
     * vector. The codes column set is the compressed corpus
     * representation. */
   def pqEncode(corpus: DataFrame, id: String, vec: String,
-               codebooks: DataFrame, m: Int, subDims: Int): DataFrame = {
-    val c = corpus.select(col(id).as("n_id"),
-      VectorFns.toDoubleArr(col(vec)).as("cv"))
-    assignSubCells(subSlices(c, m, subDims), codebooks)
+               codebooks: DataFrame, m: Int, subDims: Int): DataFrame =
+    assignSubCells(subSlices(vectors(corpus, id, vec), m, subDims), codebooks)
       .select(col("n_id"), col("sub"), col("cell").as("code"))
+
+  /** The PQ codes pivoted wide, (n_id, `0`..`m-1`): one row per vector,
+    * the form the ADC scan and the persisted index read. */
+  private def pqCodes(corpus: DataFrame, id: String, vec: String,
+                      codebooks: DataFrame, m: Int, subDims: Int): DataFrame =
+    pqEncode(corpus, id, vec, codebooks, m, subDims)
+      .groupBy(col("n_id"))
+      .pivot("sub", 0 until m)
+      .agg(first(col("code")))
+
+  /** The codewords' subspace width (one job). */
+  private def subDims(books: DataFrame): Int =
+    books.select(size(col("ctr"))).head.getInt(0)
+
+  /** A persisted PQ index's codebooks and their subspace width. */
+  private def readPqBooks(spark: org.apache.spark.sql.SparkSession,
+                          dir: String): (DataFrame, Int) = {
+    val books = spark.read.parquet(s"$dir/codebooks.parquet")
+    (books, subDims(books))
   }
+
+  /** A persisted PQ index's wide codes, spread by n_id: the index is
+    * written compact (coalesced parquet), so the ADC scan is otherwise
+    * one task wide; one exchange of the (n_id, codes) rows stays
+    * index-only — no corpus scan enters the serve path
+    * (operators.Spread). */
+  private def readPqCodes(spark: org.apache.spark.sql.SparkSession,
+                          dir: String): DataFrame =
+    Spread.byKey(spark.read.parquet(s"$dir/codes.parquet"), col("n_id"))
+
+  /** The ADC scan: every code row against every query's lookup table,
+    * self-matches excluded. */
+  private def adcScan(encoded: DataFrame, tables: DataFrame, m: Int,
+                      k: Int): DataFrame =
+    encoded.crossJoin(broadcast(tables))
+      .filter(col("n_id") =!= col("q_id"))
+      .select(col("q_id"), col("n_id"), adcScore(m, k))
 
   /** ANN top-k by ASYMMETRIC DISTANCE over the PQ-compressed corpus,
     * with an exact shortlist re-rank: each query builds its m×k
@@ -682,11 +759,8 @@ object Similarity {
              topK: Int, m: Int = 4, k: Int = 16,
              lloydIters: Int = 2, shortlist: Int = 50): DataFrame = {
     val (encoded, tables, q) = pqParts(corpus, queries, id, vec, m, k, lloydIters)
-    val adc = encoded.crossJoin(broadcast(tables))
-      .filter(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("n_id"),
-        round(adcScore(m, k), 4).as("ip_pq"))
-    pqRerank(adc, corpus, q, id, vec, topK, shortlist)
+    exactIpRerank(adcScan(encoded, tables, m, k), "ip_pq", corpus, q, id,
+      vec, topK, shortlist)
   }
 
   /** IVF+PQ — the composed serving architecture (FAISS's IVFADC; Jégou
@@ -704,23 +778,16 @@ object Similarity {
                 vec: String, topK: Int, cells: Int = 16, nprobe: Int = 4,
                 m: Int = 8, k: Int = 64, lloydIters: Int = 2,
                 shortlist: Int = 50): DataFrame = {
-    val c = graft.Checkpoints.checkpoint(corpus.select(col(id).as("n_id"),
-      VectorFns.toDoubleArr(col(vec)).as("cv")))
+    val c = graft.Checkpoints.checkpoint(vectors(corpus, id, vec))
     val centroids = lloydCentroids(c, cells, lloydIters)
     val idx = assignCells(c, centroids, 1)
     val (encoded, tables, q) = pqParts(corpus, queries, id, vec, m, k, lloydIters)
-    val probes = assignCells(
-      q.select(col("q_id").as("n_id"), col("qv").as("cv")), centroids, nprobe)
-      .select(col("n_id").as("q_id"), col("cell"))
-    val cand = probes.join(idx, "cell")
-      .filter(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id")).distinct()
-    val adc = cand.join(encoded, "n_id").join(broadcast(tables), "q_id")
-      .select(col("q_id"), col("n_id"),
-        round(adcScore(m, k), 4).as("ip_pq"))
+    val adc = rerank(ivfProbe(q, centroids, idx, nprobe), encoded, tables,
+      adcScore(m, k))
     // c/centroids checkpoints stay pinned until the caller's
-    // releaseAll — idx/probes read them lazily (the ivfTopK convention)
-    pqRerank(adc, corpus, q, id, vec, topK, shortlist)
+    // releaseAll — idx and the probe read them lazily (the ivfTopK
+    // convention)
+    exactIpRerank(adc, "ip_pq", corpus, q, id, vec, topK, shortlist)
   }
 
   /** The PQ serving triple: codes pivoted wide (n_id, c0..c{m-1}), the
@@ -729,13 +796,9 @@ object Similarity {
                       vec: String, m: Int, k: Int, lloydIters: Int)
       : (DataFrame, DataFrame, DataFrame) = {
     val books = pqTrain(corpus, id, vec, m, k, lloydIters).localCheckpoint()
-    val sub = books.select(size(col("ctr"))).head.getInt(0)
-    val encoded = pqEncode(corpus, id, vec, books, m, sub)
-      .groupBy(col("n_id"))
-      .pivot("sub", 0 until m)
-      .agg(first(col("code")))
-    val q = queries.select(col(id).as("q_id"),
-      VectorFns.toDoubleArr(col(vec)).as("qv"))
+    val sub = subDims(books)
+    val encoded = pqCodes(corpus, id, vec, books, m, sub)
+    val q = vectors(queries, id, vec, Query)
     (encoded, adcTables(books, q, m, k, sub), q)
   }
 
@@ -771,15 +834,11 @@ object Similarity {
   def buildPqIndex(corpus: DataFrame, id: String, vec: String,
                    outDir: String, m: Int = 8, k: Int = 64,
                    lloydIters: Int = 2): Unit = {
-    val books = pqTrain(corpus, id, vec, m, k, lloydIters)
-    books.coalesce(1).write.mode("overwrite")
+    pqTrain(corpus, id, vec, m, k, lloydIters)
+      .coalesce(1).write.mode("overwrite")
       .parquet(s"$outDir/codebooks.parquet")
-    val written = corpus.sparkSession.read.parquet(s"$outDir/codebooks.parquet")
-    val sub = written.select(size(col("ctr"))).head.getInt(0)
-    pqEncode(corpus, id, vec, written, m, sub)
-      .groupBy(col("n_id"))
-      .pivot("sub", 0 until m)
-      .agg(first(col("code")))
+    val (written, sub) = readPqBooks(corpus.sparkSession, outDir)
+    pqCodes(corpus, id, vec, written, m, sub)
       .write.mode("overwrite").parquet(s"$outDir/codes.parquet")
   }
 
@@ -793,21 +852,11 @@ object Similarity {
                     id: String, vec: String, topK: Int, m: Int = 8,
                     k: Int = 64, shortlist: Int = 50): DataFrame = {
     val spark = corpus.sparkSession
-    val books = spark.read.parquet(s"$indexDir/codebooks.parquet")
-    val sub = books.select(size(col("ctr"))).head.getInt(0)
-    // spread the code scan: the index is written compact (coalesced
-    // parquet), so the ADC scan is otherwise one task wide; one
-    // exchange of the (n_id, codes) rows stays index-only — no corpus
-    // scan enters the serve path (operators.Spread)
-    val encoded = Spread.byKey(
-      spark.read.parquet(s"$indexDir/codes.parquet"), col("n_id"))
-    val q = queries.select(col(id).as("q_id"),
-      VectorFns.toDoubleArr(col(vec)).as("qv"))
-    val adc = encoded.crossJoin(broadcast(adcTables(books, q, m, k, sub)))
-      .filter(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("n_id"),
-        round(adcScore(m, k), 4).as("ip_pq"))
-    pqRerank(adc, corpus, q, id, vec, topK, shortlist)
+    val (books, sub) = readPqBooks(spark, indexDir)
+    val q = vectors(queries, id, vec, Query)
+    val adc = adcScan(readPqCodes(spark, indexDir),
+      adcTables(books, q, m, k, sub), m, k)
+    exactIpRerank(adc, "ip_pq", corpus, q, id, vec, topK, shortlist)
   }
 
   /** IVF+PQ over BOTH persisted indexes (the [[ivfPqTopK]] composition
@@ -822,47 +871,34 @@ object Similarity {
                        topK: Int, nprobe: Int = 4, m: Int = 8, k: Int = 64,
                        shortlist: Int = 50): DataFrame = {
     val spark = corpus.sparkSession
-    val centroids = spark.read.parquet(s"$ivfDir/centroids.parquet")
-    val idx = spark.read.parquet(s"$ivfDir/assignments.parquet")
-    val books = spark.read.parquet(s"$pqDir/codebooks.parquet")
-    val sub = books.select(size(col("ctr"))).head.getInt(0)
-    val encoded = spark.read.parquet(s"$pqDir/codes.parquet")
-    val q = queries.select(col(id).as("q_id"),
-      VectorFns.toDoubleArr(col(vec)).as("qv"))
-    val probes = assignCells(
-      q.select(col("q_id").as("n_id"), col("qv").as("cv")), centroids, nprobe)
-      .select(col("n_id").as("q_id"), col("cell"))
-    val cand = probes.join(idx, "cell")
-      .filter(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id")).distinct()
-    val adc = cand.join(encoded, "n_id")
-      .join(broadcast(adcTables(books, q, m, k, sub)), "q_id")
-      .select(col("q_id"), col("n_id"),
-        round(adcScore(m, k), 4).as("ip_pq"))
-    pqRerank(adc, corpus, q, id, vec, topK, shortlist)
+    val (books, sub) = readPqBooks(spark, pqDir)
+    val q = vectors(queries, id, vec, Query)
+    val cand = ivfProbe(q, ivfCentroids(spark, ivfDir),
+      ivfPostings(spark, ivfDir), nprobe)
+    val adc = rerank(cand, readPqCodes(spark, pqDir),
+      adcTables(books, q, m, k, sub), adcScore(m, k))
+    exactIpRerank(adc, "ip_pq", corpus, q, id, vec, topK, shortlist)
   }
 
   /** The FIXED-ORDER m-term ADC sum — left-to-right so the oracle can
-    * replay it term-for-term. */
+    * replay it term-for-term — rounded as `ip_pq`. */
   private def adcScore(m: Int, k: Int): Column =
-    (0 until m).map(mi =>
+    round((0 until m).map(mi =>
       element_at(col("tab"), lit(mi.toLong * k) + col(s"$mi")))
-      .reduce(_ + _)
+      .reduce(_ + _), 4).as("ip_pq")
 
-  /** Shortlist by ADC score, re-rank by exact sequential-fold IP. */
-  private def pqRerank(adc: DataFrame, corpus: DataFrame, q: DataFrame,
-                       id: String, vec: String, topK: Int,
-                       shortlist: Int): DataFrame = {
-    val cand = Relational.topKPerGroup(adc, Seq(col("q_id")),
-      Seq(col("ip_pq").desc, col("n_id")), shortlist)
+  /** Shortlist each query's `shortlist` best rows by the approximate
+    * score `approx` (ADC or integer SQ), then re-rank them by the exact
+    * IP against the raw corpus, rounded as `ip` — a sequential fold the
+    * PQ/SQ oracles replay term for term. */
+  private def exactIpRerank(scored: DataFrame, approx: String,
+                            corpus: DataFrame, q: DataFrame, id: String,
+                            vec: String, topK: Int,
+                            shortlist: Int): DataFrame = {
+    val cand = bestPerQuery(scored, approx, shortlist)
       .select(col("q_id"), col("n_id"))
-    val c = corpus.select(col(id).as("n_id"),
-      VectorFns.toDoubleArr(col(vec)).as("cv"))
-    val rescored = cand.join(c, "n_id").join(broadcast(q), "q_id")
-      .select(col("q_id"), col("n_id"),
-        round(VectorFns.dot(col("qv"), col("cv")), 4).as("ip"))
-    Relational.topKPerGroup(rescored, Seq(col("q_id")),
-      Seq(col("ip").desc, col("n_id")), topK)
+    bestPerQuery(rerank(cand, vectors(corpus, id, vec), q,
+      round(VectorFns.dot(col("qv"), col("cv")), 4).as("ip")), "ip", topK)
   }
 
   /** Two-level (coarse-quantizer) cell assignment — the FAISS-style
@@ -891,15 +927,7 @@ object Similarity {
     // score each vector only against centroids of its probed supers
     val candCentroids = vecToSuper
       .join(broadcast(centToSuper.join(centroids, "cell")), "sup")
-    val scored = candCentroids.join(vecs, "n_id")
-      .select(col("n_id"), col("cell"),
-        ArrayCosine.cosine(col("cv"), col("ctr")).as("sim"))
-    // same non-coalescible user exchange as [[assignCells]] — the
-    // probed-cells cosine scoring + top-k window otherwise ran one
-    // task wide under AQE's size-based coalescing (measured on q72)
-    Relational.topKPerGroup(Spread.byKey(scored, col("n_id")),
-      Seq(col("n_id")), Seq(col("sim").desc, col("cell")), take)
-      .select(col("n_id"), col("cell"))
+    nearestCells(candCentroids.join(vecs, "n_id"), take)
   }
 
   /** ANN top-k: candidates = corpus vectors sharing ≥1 LSH band bucket
@@ -934,15 +962,8 @@ object Similarity {
     val cand = cb.join(qb, Seq("band", "bkey"))
       .filter(col("q_id") =!= col("n_id"))
       .select(col("q_id"), col("n_id")).distinct()
-    val c = corpus.select(col(id).as("n_id"),
-      VectorFns.toDoubleArr(col(vec)).as("cv"))
-    val q = queries.select(col(id).as("q_id"),
-      VectorFns.toDoubleArr(col(vec)).as("qv"))
-    val scored = cand.join(c, "n_id").join(broadcast(q), "q_id")
-      .select(col("q_id"), col("n_id"),
-        round(ArrayCosine.cosine(col("qv"), col("cv")), 4).as("cos"))
-    Relational.topKPerGroup(scored, Seq(col("q_id")),
-      Seq(col("cos").desc, col("n_id")), k)
+    bestPerQuery(rerank(cand, vectors(corpus, id, vec),
+      vectors(queries, id, vec, Query), cosScore), "cos", k)
   }
 
   /** Semantic dedup KEEPER over an embedding column (the SemDeDup
@@ -1085,23 +1106,13 @@ object Similarity {
     val spark = corpus.sparkSession
     val scale = sqScale(readSqParams(spark, indexDir))
     val codes = spark.read.parquet(s"$indexDir/codes.parquet")
-    val q = queries.select(col(id).as("q_id"),
-      VectorFns.toDoubleArr(col(vec)).as("qv"))
+    val q = vectors(queries, id, vec, Query)
     val qc = q.select(col("q_id"), sqCodeExpr(col("qv"), scale).as("qcodes"))
     val scored = codes.join(broadcast(qc), col("q_id") =!= col("n_id"))
       .select(col("q_id"), col("n_id"),
         aggregate(zip_with(col("qcodes"), col("codes"), _ * _),
           lit(0L), _ + _).as("sq_ip"))
-    val cand = Relational.topKPerGroup(scored, Seq(col("q_id")),
-      Seq(col("sq_ip").desc, col("n_id")), shortlist)
-      .select(col("q_id"), col("n_id"))
-    val c = corpus.select(col(id).as("n_id"),
-      VectorFns.toDoubleArr(col(vec)).as("cv"))
-    val rescored = cand.join(c, "n_id").join(broadcast(q), "q_id")
-      .select(col("q_id"), col("n_id"),
-        round(VectorFns.dot(col("qv"), col("cv")), 4).as("ip"))
-    Relational.topKPerGroup(rescored, Seq(col("q_id")),
-      Seq(col("ip").desc, col("n_id")), topK)
+    exactIpRerank(scored, "sq_ip", corpus, q, id, vec, topK, shortlist)
   }
 
   /** Maximal-marginal-relevance re-ranking (Carbonell & Goldstein,
@@ -1141,19 +1152,14 @@ object Similarity {
     // candidate generation: the bruteForceTopK shape, but scores kept
     // as scaled ints and the candidate VECTOR carried for the
     // pairwise-sim stage
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val c = corpus.select(col(id).as("n_id"),
-      VectorFns.toDoubleArr(col(vec)).as("cv"))
-      .repartition(par, col("n_id"))
-    val q = queries.select(col(id).as("q_id"),
-      VectorFns.toDoubleArr(col(vec)).as("qv"))
+    val c = vectors(corpus, id, vec, spread = true)
+    val q = vectors(queries, id, vec, Query)
     val scored = c.join(broadcast(q), col("q_id") =!= col("n_id"))
       .select(col("q_id"), col("n_id"), col("cv"),
         round(ArrayCosine.cosine(col("qv"), col("cv")) * 10000, 0)
           .cast("long").as("rel"))
     val cand = graft.Checkpoints.checkpoint(
-      Relational.topKPerGroup(scored, Seq(col("q_id")),
-        Seq(col("rel").desc, col("n_id")), nCand)
+      bestPerQuery(scored, "rel", nCand)
         .select(col("q_id"), col("n_id"), col("cv"), col("rel")))
     // pairwise sims WITHIN each query's candidate list (≤ nCand² per
     // group — bounded by construction, never corpus-quadratic)
@@ -1171,8 +1177,7 @@ object Similarity {
             .cast("long"), lit(0L)).as("sim")))
     val lean = cand.select(col("q_id"), col("n_id"), col("rel"))
     // round 1: per-group argmax on rel alone (S is empty, maxsim = 0)
-    val first = Relational.topKPerGroup(lean, Seq(col("q_id")),
-      Seq(col("rel").desc, col("n_id")), 1)
+    val first = bestPerQuery(lean, "rel", 1)
       .select(col("q_id"), lit(1L).as("round"), col("n_id"), col("rel"),
         lit(0L).as("maxsim"), col("rel").as("score"))
     var selected = graft.Checkpoints.checkpoint(first)
@@ -1188,9 +1193,8 @@ object Similarity {
           Seq("q_id", "m_id"))
         .groupBy(col("q_id"), col("n_id"), col("rel"))
         .agg(max(col("sim")).as("maxsim"))
-      val pick = Relational.topKPerGroup(
-        ms.withColumn("score", col("rel") - col("maxsim")),
-        Seq(col("q_id")), Seq(col("score").desc, col("n_id")), 1)
+      val pick = bestPerQuery(
+        ms.withColumn("score", col("rel") - col("maxsim")), "score", 1)
         .select(col("q_id"), lit(r.toLong).as("round"), col("n_id"),
           col("rel"), col("maxsim"), col("score"))
       val nsel = graft.Checkpoints.checkpoint(selected.unionByName(pick))
@@ -1244,11 +1248,8 @@ object Similarity {
                     k: Int): DataFrame = {
     require(k >= 1, "pick at least one center")
     val spark = emb.sparkSession
-    val par = spark.sparkContext.defaultParallelism
     val pts = graft.Checkpoints.checkpoint(
-      emb.select(col(id).as("vec_id"),
-          VectorFns.toDoubleArr(col(vec)).as("pv"))
-        .repartition(par, col("vec_id")))
+      vectors(emb, id, vec, Side("vec_id", "pv"), spread = true))
     val seedRow = pts.orderBy(col("vec_id")).limit(1).collect()
     if (seedRow.isEmpty) { // empty input: nothing to cover
       graft.Checkpoints.release(pts)

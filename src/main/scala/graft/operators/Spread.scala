@@ -30,6 +30,11 @@ import org.apache.spark.sql.{Column, DataFrame}
   * partition count follows `defaultParallelism` (the driver's
   * `$SPARK_GRAFT_CPUS` contract locally, the executor fleet on a
   * cluster) — never a constant.
+  *
+  * This is the only keyed spread: no operator or query hash-partitions
+  * by a key with its own `repartition(n, key)` (SingleSourceSpec pins
+  * it). The vector-search family spreads through
+  * `Similarity.vectors(spread = true)`, which calls this.
   */
 object Spread {
   /** `df` hash-partitioned `defaultParallelism` ways by `key`. */

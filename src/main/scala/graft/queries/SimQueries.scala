@@ -82,10 +82,8 @@ object SimQueries {
     // a falling cosine mass are the rebuild signals. Oracle = the
     // literal-centroid assignment replay + the same scaled-int sum.
     "q178_ivf_quality" -> { (s, d) =>
-      import graft.functions.{ArrayCosine, VectorFns}
-      val emb = Tables.embeddings(s, d)
-        .select(col("vec_id").as("n_id"),
-          VectorFns.toDoubleArr(col("embedding")).as("cv"))
+      import graft.functions.ArrayCosine
+      val emb = Similarity.vectors(Tables.embeddings(s, d), "vec_id", "embedding")
       val cents = Similarity.lloydCentroids(emb, 16, 2)
       Similarity.assignCells(emb, cents, 1)
         .join(emb, "n_id").join(broadcast(cents), "cell")
@@ -175,29 +173,17 @@ object SimQueries {
     // touched only in the exact re-rank; zero-candidate eval vectors
     // surface with a −10⁴ sentinel, never silently dropped.
     "q261_semantic_contamination" -> { (s, d) =>
-      val spark = s
-      val centroids = spark.read.parquet(
-        s"${ivfIndexDir(s, d)}/centroids.parquet")
-      val index = spark.read.parquet(
-        s"${ivfIndexDir(s, d)}/assignments.parquet")
-      val q = queriesSubset(s, d).select(col("vec_id").as("q_id"),
-        graft.functions.VectorFns.toDoubleArr(col("embedding")).as("qv"))
-      val probes = Similarity.assignCells(
-          q.select(col("q_id").as("n_id"), col("qv").as("cv")),
-          centroids, 4)
-        .select(col("n_id").as("q_id"), col("cell"))
-      val cand = probes.join(index, "cell")
-        .filter(col("n_id") % 20 =!= 0) // training side only
-        .select(col("q_id"), col("n_id")).distinct()
-      val c = Tables.embeddings(s, d)
-        .select(col("vec_id").as("n_id"),
-          graft.functions.VectorFns.toDoubleArr(col("embedding")).as("cv"))
-      val scored = cand.join(c, "n_id").join(broadcast(q), "q_id")
-        .select(col("q_id"), col("n_id"),
-          round(graft.functions.ArrayCosine.cosine(col("qv"), col("cv"))
-            * 10000, 0).cast("long").as("cos_x10k"))
-      val best = graft.operators.Relational.topKPerGroup(scored,
-          Seq(col("q_id")), Seq(col("cos_x10k").desc, col("n_id")), 1)
+      val dir = ivfIndexDir(s, d)
+      val q = Similarity.vectors(queriesSubset(s, d), "vec_id", "embedding",
+        Similarity.Query)
+      val cand = Similarity.ivfProbe(q, Similarity.ivfCentroids(s, dir),
+        Similarity.ivfPostings(s, dir), 4,
+        keep = col("n_id") % 20 =!= 0) // training side only
+      val scored = Similarity.rerank(cand,
+        Similarity.vectors(Tables.embeddings(s, d), "vec_id", "embedding"), q,
+        round(graft.functions.ArrayCosine.cosine(col("qv"), col("cv"))
+          * 10000, 0).cast("long").as("cos_x10k"))
+      val best = Similarity.bestPerQuery(scored, "cos_x10k", 1)
         .select(col("q_id"), col("n_id").as("best_match"),
           col("cos_x10k"))
       q.select(col("q_id")).join(best, Seq("q_id"), "left")
@@ -216,8 +202,7 @@ object SimQueries {
     // the scheduled build). Reads ONLY the persisted assignments:
     // the readout costs one index scan, never a corpus pass.
     "q253_ivf_append_drift" -> { (s, d) =>
-      val idx = s.read.parquet(s"${ivfIncIndexDir(s, d)}/assignments.parquet")
-      idx.groupBy(col("cell"))
+      Similarity.ivfPostings(s, ivfIncIndexDir(s, d)).groupBy(col("cell"))
         .agg(sum(when(col("n_id") % 5 =!= 4, 1L).otherwise(0L)).as("n_base"),
           sum(when(col("n_id") % 5 === 4, 1L).otherwise(0L)).as("n_new"))
         .select(col("cell"), col("n_base"), col("n_new"),
@@ -386,21 +371,11 @@ object SimQueries {
     // swaps the candidate join for the persisted IVF index (the q141
     // serve discipline) with the agreement readout unchanged.
     "q235_knn_label_agreement" -> { (s, d) =>
-      import graft.functions.{ArrayCosine, VectorFns}
-      val par = s.sparkContext.defaultParallelism
-      val emb = Tables.embeddings(s, d)
-      val c = emb.select(col("vec_id").as("n_id"),
-          col("label").as("n_label"),
-          VectorFns.toDoubleArr(col("embedding")).as("cv"))
-        .repartition(par, col("n_id"))
-      val q = emb.select(col("vec_id").as("q_id"),
-          col("label").as("q_label"),
-          VectorFns.toDoubleArr(col("embedding")).as("qv"))
+      val (c, q) = labelledSides(Tables.embeddings(s, d), identity)
       val scored = c.join(broadcast(q), col("q_id") =!= col("n_id"))
         .select(col("q_id"), col("q_label"), col("n_label"), col("n_id"),
-          round(ArrayCosine.cosine(col("qv"), col("cv")), 4).as("cos"))
-      graft.operators.Relational.topKPerGroup(scored, Seq(col("q_id")),
-          Seq(col("cos").desc, col("n_id")), 5)
+          Similarity.cosScore)
+      Similarity.bestPerQuery(scored, "cos", 5)
         .groupBy(col("q_label").cast("long").as("label"))
         .agg(expr("count(1) div 5").as("n_vecs"),
           sum(when(col("n_label") === col("q_label"), 1L).otherwise(0L))
@@ -411,23 +386,13 @@ object SimQueries {
     },
 
     "q224_ann_filtered" -> { (s, d) =>
-      import graft.functions.{ArrayCosine, VectorFns}
-      val par = s.sparkContext.defaultParallelism
-      val emb = Tables.embeddings(s, d)
-      val c = emb.select(col("vec_id").as("n_id"),
-          col("label").as("n_label"),
-          VectorFns.toDoubleArr(col("embedding")).as("cv"))
-        .repartition(par, col("n_id"))
-      val q = emb.filter(col("vec_id") % 20 === 0)
-        .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-          VectorFns.toDoubleArr(col("embedding")).as("qv"))
+      val (c, q) = labelledSides(Tables.embeddings(s, d),
+        _.filter(col("vec_id") % 20 === 0))
       val scored = c.join(broadcast(q),
           col("q_label") === col("n_label") && col("q_id") =!= col("n_id"))
         .select(col("q_id"), col("q_label").cast("long").as("label"),
-          col("n_id"),
-          round(ArrayCosine.cosine(col("qv"), col("cv")), 4).as("cos"))
-      graft.operators.Relational.topKPerGroup(scored, Seq(col("q_id")),
-        Seq(col("cos").desc, col("n_id")), 5)
+          col("n_id"), Similarity.cosScore)
+      Similarity.bestPerQuery(scored, "cos", 5)
     },
 
     // Class-conditional EMBEDDING-DRIFT census — the vector-space
@@ -483,6 +448,16 @@ object SimQueries {
         "embedding", k = 8)
     }
   )
+
+  /** The labelled exact-search sides of q224/q235: the spread corpus
+    * (n_id, n_label, cv) and the query side (q_id, q_label, qv) drawn
+    * from `pick` of the same table. */
+  private def labelledSides(emb: DataFrame, pick: DataFrame => DataFrame)
+      : (DataFrame, DataFrame) =
+    (Similarity.vectors(emb, "vec_id", "embedding",
+       carry = Seq(col("label").as("n_label")), spread = true),
+     Similarity.vectors(pick(emb), "vec_id", "embedding", Similarity.Query,
+       carry = Seq(col("label").as("q_label"))))
 
   /** One persisted IVF index per (session, sfDir) — built on first use
     * (q51's parameters), reused by every later q119 run in the session:
@@ -931,9 +906,9 @@ object SimQueries {
     // switches to two-level assignment, which this replay does not
     // mirror → keep the rows-only check there (not reached at the
     // driver's SFs: sf0.1 is 5000/256 → 19 cells).
-    val cells72 = math.max(4L, emb.count() / 256).toInt
+    val cells72 = Similarity.dedupCells(emb, 256)
     val q72map =
-      if (cells72 > 64) Map.empty[String, String]
+      if (Similarity.hierarchical(cells72)) Map.empty[String, String]
       else {
         val c72 = Similarity.collectedCentroids(emb, "vec_id", "embedding",
           cells = cells72, lloydIters = 2)

@@ -1530,16 +1530,16 @@ object TextQueries {
       // checkpoint: the pair self-join reads the vectors on BOTH
       // sides — without it the whole vectorization pipeline (tokens →
       // tf → dictionary → weights → dense maps) evaluates twice.
-      // The repartition matters as much as the checkpoint, for TWO
+      // The spread matters as much as the checkpoint, for TWO
       // reasons (measured 11 s → 3.4 s at sf0.1): it rewrites the
       // map/transform-built BOXED arrays as UnsafeRow primitive
       // arrays (ArrayCosine's fast path over 12.5M pairs), and the
       // EXPLICIT partition count keeps AQE from coalescing the tiny
       // vector relation to one partition — which would serialize the
       // whole nested-loop pair scan through a single core.
-      val vecs = graft.Checkpoints.checkpoint(
-        Dedup.tfidfVectors(Tables.documents(s, d), "doc_id", "text")
-          .repartition(8, col("doc_id")))
+      val vecs = graft.Checkpoints.checkpoint(graft.operators.Spread.byKey(
+        Dedup.tfidfVectors(Tables.documents(s, d), "doc_id", "text"),
+        col("doc_id")))
       graft.operators.Similarity.cosinePairs(vecs, "doc_id", "tfidf", 0.9)
     },
 

@@ -6,13 +6,14 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps four decisions in one module each: the session configuration
+/** Keeps five decisions in one module each: the session configuration
   * in [[Session]], the runtime listener in [[Telemetry]], the
-  * per-(session, sfDir) substrate cache in [[graft.queries.SessionMemo]]
-  * and the stream start-and-drain in [[StreamRun]]'s drain helper.
-  * A harness or spec that builds its own session, or main code that
-  * hand-writes a listener, a session-keyed cache or a stream query,
-  * fails here. */
+  * per-(session, sfDir) substrate cache in [[graft.queries.SessionMemo]],
+  * the stream start-and-drain in [[StreamRun]]'s drain helper and the
+  * keyed spread in [[graft.operators.Spread]]. A harness or spec that
+  * builds its own session, or main code that hand-writes a listener, a
+  * session-keyed cache, a stream query or a keyed repartition, fails
+  * here. */
 class SingleSourceSpec extends AnyFunSuite {
 
   private def scalaFiles(roots: Seq[String]): Seq[Path] =
@@ -30,6 +31,35 @@ class SingleSourceSpec extends AnyFunSuite {
     }.map(_.toString).toSet
 
   private val Def = """\s*(?:private )?def (\w+)\b.*""".r
+
+  /** The argument text of the call whose `(` ends at `open` (exclusive),
+    * up to its balanced closing paren. */
+  private def argsAt(text: String, open: Int): String = {
+    var depth = 1
+    var i = open
+    while (depth > 0) {
+      text(i) match {
+        case '(' => depth += 1
+        case ')' => depth -= 1
+        case _ =>
+      }
+      i += 1
+    }
+    text.substring(open, i - 1)
+  }
+
+  /** Whether an argument list names a partitioning key: more than one
+    * top-level argument (count, key…), or a lone column. */
+  private def keyed(args: String): Boolean = {
+    var depth = 0
+    val topComma = args.exists {
+      case '(' => depth += 1; false
+      case ')' => depth -= 1; false
+      case ',' => depth == 0
+      case _ => false
+    }
+    topComma || Seq("col(", "column(", "expr(", "$\"").exists(args.contains)
+  }
 
   test("only Session builds a SparkSession") {
     // split so this file does not match its own scan
@@ -63,5 +93,20 @@ class SingleSourceSpec extends AnyFunSuite {
       assert(sites == Seq(("src/main/scala/graft/StreamRun.scala", Some("drain"))),
         needle)
     }
+  }
+
+  test("only Spread.byKey hash-partitions by a key in main code") {
+    // keyless repartition(1) / repartition(n) stays legal
+    val call = ".repartition("
+    val sites = for {
+      p <- scalaFiles(Seq("src/main/scala/graft/operators",
+        "src/main/scala/graft/queries"))
+      if p.getFileName.toString != "Spread.scala"
+      text = Files.readString(p)
+      i <- java.util.regex.Pattern.quote(call).r.findAllMatchIn(text)
+        .map(_.start).toSeq
+      if keyed(argsAt(text, i + call.length))
+    } yield s"$p:${text.substring(0, i).count(_ == '\n') + 1}"
+    assert(sites.isEmpty, sites.mkString("keyed repartition at ", ", ", ""))
   }
 }

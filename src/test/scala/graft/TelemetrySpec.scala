@@ -14,7 +14,8 @@ object TelemetrySpec {
 }
 
 /** [[Telemetry.measure]]: one task row per successful attempt, failed
-  * stages counted, and the tap detached however the body ends. */
+  * stages counted, and the tap detached however the body ends; and the
+  * [[Telemetry.revision]] a record names its code by. */
 class TelemetrySpec extends AnyFunSuite with SparkTestBase {
 
   test("a failed task counts a failed stage and adds no task row") {
@@ -75,5 +76,17 @@ class TelemetrySpec extends AnyFunSuite with SparkTestBase {
     assert(rows.map(_.shuffleBytesWritten).sum > 0)
     assert(rows.map(_.shuffleRecordsRead).sum >= 1000)
     assert(rows.map(_.stageId).distinct.forall(tap.stageName(_).nonEmpty))
+  }
+
+  test("revision names HEAD and the src tree as it is on disk") {
+    import scala.sys.process._
+    val r = Telemetry.revision()
+    val sha = "[0-9a-f]{40}"
+    assert(r.head.exists(_.matches(sha)), r)
+    assert(r.srcTree.exists(_.matches(sha)), r)
+    // clean exactly when the on-disk tree is HEAD's src tree
+    assert(r.srcDirty.contains(r.srcTree.get != "git rev-parse HEAD:src".!!.trim))
+    assert(Telemetry.Revision(None, None, None).json ==
+      "\"git_head\": null, \"src_dirty\": null, \"src_tree\": null")
   }
 }

@@ -16,6 +16,8 @@ protocol applies without debate.
 
 Output (OUT.json, default AUDIT_diff.json):
   {"old_sf": ..., "new_sf": ..., "keys": [...],
+   "old_src_tree": ..., "new_src_tree": ...,         # code each audit ran
+                                                     # (null if unrecorded)
    "n_common": N, "n_identical": K,
    "totals": {"old": {key: sum}, "new": {key: sum}},  # over common queries
    "changed": {q: {"old": {...}, "new": {...}}},      # executed-work deltas
@@ -53,6 +55,8 @@ def main(argv):
             changed[q] = {"old": a, "new": b}
     out = {
         "old_sf": old.get("sf"), "new_sf": new.get("sf"), "keys": keys,
+        "old_src_tree": old.get("src_tree"),
+        "new_src_tree": new.get("src_tree"),
         "n_common": len(common),
         "n_identical": len(common) - len(changed),
         "totals": {side: {k: sum(qs[q][k] for q in common) for k in keys}
