@@ -4,7 +4,7 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.graftshim.PlanBridge
 
 /** Lifecycle registry for `localCheckpoint` blocks.
@@ -27,7 +27,17 @@ import org.apache.spark.sql.graftshim.PlanBridge
   *    use [[checkpointPinned]] and survive `releaseAll`; every pinned
   *    block is held by a [[graft.queries.SessionMemo]], which releases
   *    it on a sfDir switch, after its session stops, and on
-  *    `SessionMemo.invalidate`.
+  *    `SessionMemo.invalidate`;
+  *  - a loop whose next round needs a scalar of this round's result (a
+  *    vertex count, a dangling mass, an L1 total) reads it with
+  *    [[checkpointObserved]] from the job that materializes the round,
+  *    instead of running a `count()`/`collect()` or carrying a 1-row
+  *    broadcast cross join into the next round's plan. The observed
+  *    aggregates sit at the TOP of the checkpointed plan, so their
+  *    accumulators are updated in the result stage, where Spark applies
+  *    each task's update once even when a task or stage is retried
+  *    (accumulators in a shuffle-map stage may double-count a
+  *    re-executed task): the scalars are exact under retry.
   *
   * Checkpointing is always on: [[Explain]] --audit reads the executed
   * plans, so no mode exists that turns a checkpoint into the identity.
@@ -45,6 +55,20 @@ object Checkpoints {
     * session-lifetime materialized views held by a
     * [[graft.queries.SessionMemo]] (e.g. the co-ship spine). */
   def checkpointPinned(df: DataFrame): DataFrame = doCheckpoint(df, pin = true)
+
+  /** [[checkpoint]] of `df` plus aggregate metrics over its rows, read
+    * in the SAME job: a fresh `Observation` goes on top of the plan, the
+    * eager `localCheckpoint` runs it, and the observation returns the
+    * scalars (one [[Row]], `metric` first, then `metrics` in order).
+    * Each metric needs an alias; an aggregate over zero rows observes
+    * its empty value (`count` 0, `sum` null). See the object scaladoc
+    * for why the scalars are exact under task retry. */
+  def checkpointObserved(df: DataFrame, metric: Column,
+                         metrics: Column*): (DataFrame, Row) = {
+    val obs = Observation()
+    val cp = checkpoint(df.observe(obs, metric, metrics: _*))
+    (cp, PlanBridge.observedRow(obs))
+  }
 
   private def doCheckpoint(df: DataFrame, pin: Boolean): DataFrame = {
     val cp = df.localCheckpoint()

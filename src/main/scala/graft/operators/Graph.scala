@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Checkpoints
@@ -1341,67 +1341,26 @@ object Graph {
     * by deg·iters ulps of `scale`), which perturbs absolute values but
     * not the centrality ordering — the quantity of interest.
     *
-    * Scale shape: per iteration one join (rank → out-share) + one
-    * groupBy (in-share sum) + one left join (teleport term), all keyed
-    * by vertex; rounds are checkpointed with eager release like every
-    * other loop here. The vertex count (one driver scalar, loop-guard
-    * bounded) prices the uniform teleport term. */
-  /** 0-row (v, rank_scaled) frame whose lineage touches only the RAW
-    * edge input — the empty-graph return for the PageRank variants.
-    * Deriving it from the loop's released checkpoint instead would
-    * violate [[Checkpoints.release]]'s contract (truncated lineage is
-    * unrecoverable if a consumer re-executes). `vExpr` fixes the vertex
-    * column's type to match the non-empty path's output. */
-  private def emptyRanks(edges: DataFrame, vExpr: org.apache.spark.sql.Column): DataFrame =
-    edges.limit(0).select(vExpr.as("v"), lit(0L).as("rank_scaled"))
-
+    * The symmetrized adjacency has no dangling vertex, so this is
+    * [[pageRankDirectedInt]] over both directions of every undirected
+    * edge: the same rounds, with a dangling share that is always 0.
+    *
+    * Scale shape: see [[pageRankRounds]]: one checkpoint of the
+    * adjacency with each vertex's degree on its rows, one of the
+    * vertex set that observes the vertex count, then one checkpoint
+    * per round (join rank → per-edge share, groupBy in-share sum, left
+    * join onto the vertices). */
   def pageRankInt(edges: DataFrame, a: String = "a", b: String = "b",
                   iters: Int = 3,
                   scale: Long = 1000000000000L): DataFrame = {
     val und = edges
       .select(least(col(a), col(b)).as("u"), greatest(col(a), col(b)).as("v"))
       .filter(col("u") =!= col("v") && col("u").isNotNull).distinct()
-    val adj = Checkpoints.checkpoint(
-      und.select(col("u").as("s"), col("v").as("d"))
-        .union(und.select(col("v").as("s"), col("u").as("d"))))
-    // verts and deg are LOOP-INVARIANT: materialize once instead of
-    // re-running the edge-scale distinct/groupBy inside every round's
-    // plan (guide §2.4 — each recomputation was a full exchange over
-    // the adjacency per iteration)
-    val verts = Checkpoints.checkpoint(adj.select(col("s").as("vx")).distinct())
-    val deg = Checkpoints.checkpoint(
-      adj.groupBy(col("s")).agg(count(lit(1)).as("dg")))
-    val n = verts.count() // bounded driver scalar: prices the teleport
-    if (n == 0L) { // empty graph: no vertices to price, avoid scale/0
-      // the empty result must NOT derive from the released checkpoint
-      // (release contract: truncated lineage cannot be re-executed), so
-      // rebuild a 0-row frame of the same shape from the raw input
-      Checkpoints.release(adj)
-      Checkpoints.release(verts)
-      Checkpoints.release(deg)
-      return emptyRanks(edges, least(col(a), col(b)))
-    }
-    val tele = (15L * (scale / n)) / 100L
-    var r = Checkpoints.checkpoint(
-      verts.withColumn("r", lit(scale / n)))
-    var i = 0
-    while (i < iters) {
-      val shares = r.join(deg, r("vx") === deg("s"))
-        .select(col("vx").as("sv"), expr("r div dg").as("share"))
-      val contrib = adj.join(shares, adj("s") === col("sv"))
-        .groupBy(adj("d").as("cv")).agg(sum(col("share")).as("m"))
-      val nxt = Checkpoints.checkpoint(
-        verts.join(contrib, verts("vx") === col("cv"), "left")
-          .select(col("vx"),
-            (lit(tele) + expr("(85 * coalesce(m, 0)) div 100")).as("r")))
-      Checkpoints.release(r)
-      r = nxt
-      i += 1
-    }
-    Checkpoints.release(adj)
-    Checkpoints.release(verts)
-    Checkpoints.release(deg)
-    r.select(col("vx").as("v"), col("r").as("rank_scaled"))
+    // both directions of a distinct canonical pair are distinct rows
+    pageRankRounds(
+      und.select(col("u").as("s"), col("v").as("d"), lit(1L).as("w"))
+        .union(und.select(col("v").as("s"), col("u").as("d"), lit(1L).as("w"))),
+      None, iters, scale)
   }
 
   /** DIRECTED integer PageRank with explicit dangling-mass
@@ -1432,72 +1391,21 @@ object Graph {
     * documented floor leakage (each div discards < 1 unit per EDGE
     * per round — GraphSpec asserts the bound).
     *
-    * Scale shape: per iteration one left join (rank → out-degree), a
-    * scalar aggregate for the dangling mass (1 row, broadcast cross
-    * join — never a driver collect), one join + groupBy for the
-    * in-shares, one left join for the recombination — all keyed by
-    * vertex. Rounds checkpoint with eager release like every loop
-    * here; the vertex count is the one bounded driver scalar. */
+    * Scale shape: see [[pageRankRounds]] — one checkpoint per round
+    * (join rank → per-edge share, groupBy in-share sum, left join onto
+    * the vertices), keyed by vertex; the dangling mass and the vertex
+    * count are observed on the checkpoints that compute them and
+    * enter the next round as literals. */
   def pageRankDirectedInt(edges: DataFrame, src: String = "src",
                           dst: String = "dst", iters: Int = 3,
                           scale: Long = 1000000000000L,
                           weightCol: String = ""): DataFrame = {
     val w = if (weightCol.isEmpty) lit(1L) else col(weightCol).cast("long")
-    val e = Checkpoints.checkpoint(
+    pageRankRounds(
       edges.select(col(src).as("s"), col(dst).as("d"), w.as("w"))
         .filter(col("s").isNotNull && col("d").isNotNull &&
-          col("s") =!= col("d") && col("w") > 0).distinct())
-    // verts, out-weights and the dangling-vertex set are LOOP-INVARIANT:
-    // materialize each once instead of re-running their edge-scale
-    // distinct/groupBy inside every round's plan (guide §2.4). The
-    // dangling set also replaces the per-round r⟕ow left join that the
-    // old shape executed TWICE per round (once under the dangling-mass
-    // broadcast, once for the shares) with one semi + one inner join.
-    val verts = Checkpoints.checkpoint(e.select(col("s").as("vx"))
-      .union(e.select(col("d").as("vx"))).distinct())
-    val ow = Checkpoints.checkpoint(
-      e.groupBy(col("s")).agg(sum(col("w")).as("tw")))
-    val dangset = Checkpoints.checkpoint(
-      verts.join(ow.select(col("s").as("vx")), Seq("vx"), "left_anti"))
-    def releaseInvariants(): Unit = {
-      Checkpoints.release(e)
-      Checkpoints.release(verts)
-      Checkpoints.release(ow)
-      Checkpoints.release(dangset)
-    }
-    val n = verts.count() // bounded driver scalar: prices the teleport
-    if (n == 0L) { // empty graph: no vertices to price, avoid scale/0
-      // see pageRankInt: never return a frame derived from the
-      // released checkpoint
-      releaseInvariants()
-      return emptyRanks(edges, col(src))
-    }
-    val tele = (15L * (scale / n)) / 100L
-    var r = Checkpoints.checkpoint(verts.withColumn("r", lit(scale / n)))
-    var i = 0
-    while (i < iters) {
-      // r semi dangset ≡ the old withOw.filter(tw IS NULL): a vertex is
-      // dangling iff it has no out-edge, and r covers exactly `verts`
-      val dang = r.join(dangset, Seq("vx"), "left_semi")
-        .agg(coalesce(sum(col("r")), lit(0L)).as("dm"))
-        .select(expr(s"dm div $n").as("dsh"))
-      val shares = r.join(ow, r("vx") === ow("s"))
-        .select(col("vx").as("sv"), col("r"), col("tw"))
-      val contrib = e.join(shares, e("s") === col("sv"))
-        .select(e("d").as("cv"), expr("(r * w) div tw").as("share"))
-        .groupBy(col("cv")).agg(sum(col("share")).as("m"))
-      val nxt = Checkpoints.checkpoint(
-        verts.join(contrib, verts("vx") === col("cv"), "left")
-          .crossJoin(broadcast(dang))
-          .select(col("vx"),
-            (lit(tele) +
-              expr("(85 * (coalesce(m, 0) + dsh)) div 100")).as("r")))
-      Checkpoints.release(r)
-      r = nxt
-      i += 1
-    }
-    releaseInvariants()
-    r.select(col("vx").as("v"), col("r").as("rank_scaled"))
+          col("s") =!= col("d") && col("w") > 0).distinct(),
+      None, iters, scale)
   }
 
   /** PERSONALIZED PageRank (PPR) — importance relative to a SEED set
@@ -1513,61 +1421,101 @@ object Graph {
     * form — GraphSpec asserts that equality as the cross-operator
     * consistency property.
     *
-    * Scale shape: one keyed join + groupBy per round over the edge
-    * list (identical dataflow to the uniform form); the seed set
-    * rides as a 0/1 vertex column, never a driver-side loop. */
+    * Scale shape: the rounds of [[pageRankRounds]], identical dataflow
+    * to the uniform form; the seed set rides as a 0/1 vertex column,
+    * and the dangling seed-restart mass is observed on each round's
+    * checkpoint — never a driver-side loop or a broadcast scalar. */
   def pageRankPersonalizedInt(edges: DataFrame, seeds: Seq[Long],
                               src: String = "src", dst: String = "dst",
                               iters: Int = 3,
                               scale: Long = 1000000000000L): DataFrame = {
     require(seeds.nonEmpty, "personalization needs a non-empty seed set")
-    val e = Checkpoints.checkpoint(
-      edges.select(col(src).as("s"), col(dst).as("d"))
+    pageRankRounds(
+      edges.select(col(src).as("s"), col(dst).as("d"), lit(1L).as("w"))
         .filter(col("s").isNotNull && col("d").isNotNull &&
-          col("s") =!= col("d")).distinct())
-    val k = seeds.size.toLong
-    // loop-invariant relations materialized once (guide §2.4) — same
-    // shape as [[pageRankDirectedInt]]: verts (with the seed flag),
-    // out-degrees, and the dangling set (replacing the per-round
-    // double-executed r⟕ow left join with one semi + one inner join)
-    val verts = Checkpoints.checkpoint(e.select(col("s").as("vx"))
-      .union(e.select(col("d").as("vx"))).distinct()
-      .withColumn("isw",
-        when(col("vx").isin(seeds: _*), lit(1L)).otherwise(lit(0L))))
-    val ow = Checkpoints.checkpoint(
-      e.groupBy(col("s")).agg(count(lit(1)).as("odg")))
-    val dangset = Checkpoints.checkpoint(
-      verts.select(col("vx"))
-        .join(ow.select(col("s").as("vx")), Seq("vx"), "left_anti"))
+          col("s") =!= col("d")).distinct(),
+      Some(seeds), iters, scale)
+  }
+
+  /** The integer rounds shared by the three PageRank forms, over a
+    * DISTINCT directed edge list `edges` = (s, d, w) with non-null,
+    * distinct endpoints and w > 0. `seeds` = None is the uniform form
+    * (every vertex is a seed, k = n); Some(S) restarts teleport and
+    * dangling mass to S (k = |S|). With isw(v) = 1 for a seed, else 0:
+    *   r_0(v) = isw(v) · (scale div k)
+    *   r_k(v) = (15 · (scale div k)) div 100 · isw(v)
+    *          + (85 · (Σ_{s→v} (r_{k−1}(s) · w) div W(s)
+    *                   + isw(v) · (Σ_{dangling} r_{k−1} div k))) div 100
+    *
+    * Scale shape: three kinds of checkpoint, each one SQL execution
+    * that also yields the loop's scalars, and no driver scalar outside
+    * them ([[Checkpoints.checkpointObserved]]):
+    *  - the edges, with W(s) = `sum(w) over (partition by s)` on every
+    *    row, so no out-weight relation is joined per round;
+    *  - the vertices (vx, dang, isw), `dang` from the max of an
+    *    out/in marker, observing n and the dangling seed count — which
+    *    prices round 0, whose ranks are the literal scale div k and are
+    *    never materialized;
+    *  - one per round: e ⋈ r_{k−1} on s → per-edge share, groupBy d,
+    *    left join onto the vertices; it observes Σ r over the dangling
+    *    vertices, and that mass enters the next round as a literal.
+    * Superseded rounds are released eagerly. An empty graph returns a
+    * 0-row frame over `edges` itself: one derived from a released
+    * checkpoint would violate [[Checkpoints.release]]'s contract
+    * (truncated lineage is unrecoverable if a consumer re-executes). */
+  private def pageRankRounds(edges: DataFrame, seeds: Option[Seq[Long]],
+                             iters: Int, scale: Long): DataFrame = {
+    val isw: Column => Column = seeds match {
+      case None => _ => lit(1L)
+      case Some(ss) => v => when(v.isin(ss: _*), lit(1L)).otherwise(lit(0L))
+    }
+    val e = Checkpoints.checkpoint(edges.withColumn("tw",
+      sum(col("w")).over(org.apache.spark.sql.expressions.Window
+        .partitionBy(col("s")))))
+    val (verts, vs) = Checkpoints.checkpointObserved(
+      e.select(col("s").as("vx"), lit(1).as("out"))
+        .union(e.select(col("d").as("vx"), lit(0).as("out")))
+        .groupBy(col("vx")).agg((max(col("out")) === 0).as("dang"))
+        .withColumn("isw", isw(col("vx"))),
+      count(lit(1)).as("n"),
+      coalesce(sum(when(col("dang"), col("isw"))), lit(0L)).as("dseeds"))
+    val n = vs.getLong(0)
+    if (n == 0L) { // empty graph: no vertices to price, avoid scale/0
+      Checkpoints.release(e)
+      Checkpoints.release(verts)
+      return edges.limit(0).select(col("s").as("v"), lit(0L).as("rank_scaled"))
+    }
+    val k = seeds.fold(n)(_.size.toLong)
     val tele = (15L * (scale / k)) / 100L
-    var r = Checkpoints.checkpoint(
-      verts.select(col("vx"), (col("isw") * lit(scale / k)).as("r")))
+    // round 0 is the literal r_0; its dangling mass is dseeds · r_0
+    var dm = vs.getLong(1) * (scale / k)
+    var r: DataFrame = null
     var i = 0
     while (i < iters) {
-      // r semi dangset ≡ the old withOw.filter(odg IS NULL)
-      val dang = r.join(dangset, Seq("vx"), "left_semi")
-        .agg(coalesce(sum(col("r")), lit(0L)).as("dm"))
-        .select(expr(s"dm div $k").as("dsh"))
-      val shares = r.join(ow, r("vx") === ow("s"))
-        .select(col("vx").as("sv"), col("r"), col("odg"))
-      val contrib = e.join(shares, e("s") === col("sv"))
-        .select(e("d").as("cv"), expr("r div odg").as("share"))
+      val shares =
+        if (r == null) e.select(col("d"),
+          (isw(col("s")) * lit(scale / k)).as("r"), col("w"), col("tw"))
+        else e.join(r, e("s") === r("vx"))
+          .select(e("d"), r("r"), e("w"), e("tw"))
+      val contrib = shares
+        .select(col("d").as("cv"), expr("(r * w) div tw").as("share"))
         .groupBy(col("cv")).agg(sum(col("share")).as("m"))
-      val nxt = Checkpoints.checkpoint(
+      val (nxt, obs) = Checkpoints.checkpointObserved(
         verts.join(contrib, verts("vx") === col("cv"), "left")
-          .crossJoin(broadcast(dang))
-          .select(col("vx"),
-            (lit(tele) * col("isw") +
-              expr("(85 * (coalesce(m, 0) + isw * dsh)) div 100"))
-              .as("r")))
-      Checkpoints.release(r)
+          .select(col("vx"), col("dang"),
+            (lit(tele) * col("isw") + expr(
+              s"(85 * (coalesce(m, 0) + isw * ${dm / k})) div 100")).as("r")),
+        coalesce(sum(when(col("dang"), col("r"))), lit(0L)).as("dm"))
+      if (r != null) Checkpoints.release(r)
       r = nxt
+      dm = obs.getLong(0)
       i += 1
     }
+    if (r == null) // no rounds: r_0 itself, over the live vertex block
+      return verts.select(col("vx").as("v"),
+        (col("isw") * lit(scale / k)).as("rank_scaled"))
     Checkpoints.release(e)
     Checkpoints.release(verts)
-    Checkpoints.release(ow)
-    Checkpoints.release(dangset)
     r.select(col("vx").as("v"), col("r").as("rank_scaled"))
   }
 
@@ -1639,11 +1587,20 @@ object Graph {
     * and the rescale multiply is ≤ maxdeg · scale² — scale 1e6 holds
     * to maxdeg ~9e6.
     *
-    * Scale shape: each half-round is one keyed join + one groupBy +
-    * one scalar aggregate (1-row broadcast cross join, never a driver
-    * collect) + one left join — all keyed by vertex, checkpointed with
-    * eager release. Sources (no in-edges) get authority 0, sinks hub
-    * 0, exactly as in the float formulation. */
+    * Scale shape: each half-round is ONE checkpoint — the raw sums
+    * (one keyed join of the edges with the previous raw sums, rescaled
+    * per row as (raw · scale) div total with the total a literal, then
+    * one groupBy) — which observes its own L1 total for the next
+    * half-round ([[Checkpoints.checkpointObserved]]: no scalar
+    * aggregate, broadcast cross join or driver collect). Round 0's hub
+    * weights are the literal `scale`. Every edge's target has a raw
+    * authority and every edge's source a raw hub sum, so the inner
+    * joins drop no edge; the vertex set appears only in the final
+    * plan, which left-joins the last two raw relations onto it —
+    * sources (no in-edges) get authority 0, sinks hub 0, exactly as in
+    * the float formulation. The edge block and the last two raw
+    * blocks stay live under the result (the harness's `releaseAll`
+    * drops them); every other raw block is released eagerly. */
   def hitsInt(edges: DataFrame, src: String = "src", dst: String = "dst",
               iters: Int = 2, scale: Long = 1000000L): DataFrame = {
     require(iters >= 1, "hitsInt needs at least one iteration")
@@ -1651,53 +1608,41 @@ object Graph {
       edges.select(col(src).as("s"), col(dst).as("d"))
         .filter(col("s").isNotNull && col("d").isNotNull &&
           col("s") =!= col("d")).distinct())
-    // loop-invariant: the vertex set feeds every half-round's
-    // densifying left join (4 recomputations of the edge-scale
-    // union+distinct at the default iters=2) — materialize once
-    // (guide §2.4)
-    val verts = Checkpoints.checkpoint(e.select(col("s").as("vx"))
-      .union(e.select(col("d").as("vx"))).distinct())
-    var h = Checkpoints.checkpoint(verts.withColumn("h", lit(scale)))
-    var a: DataFrame = null
+    // raw sums by `key` of per-edge values `x`, with their L1 total
+    // (1 when there are none, so an empty graph divides by 1)
+    def rawSums(x: DataFrame, key: String): (DataFrame, Long) = {
+      val (raw, tot) = Checkpoints.checkpointObserved(
+        x.groupBy(col(key).as("v")).agg(sum(col("x")).as("x")),
+        coalesce(sum(col("x")), lit(1L)).as("tot"))
+      (raw, tot.getLong(0))
+    }
+    def rescaled(tot: Long) = expr(s"(x * $scale) div $tot").as("x")
+    var araw, hraw: DataFrame = null
+    var at, ht = 0L
     var i = 0
     while (i < iters) {
-      // raw sums MATERIALIZED before the rescale (guide §2.4): the
-      // L1-total broadcast and the densifying left join both consume
-      // araw/hraw, and without a checkpoint the broadcast subquery
-      // re-executes the edge-scale join+groupBy — the whole e⋈rank
-      // pass ran TWICE per half-round (4 extra edge passes per run at
-      // iters=2). The materialized relation is vertex-scale.
-      val araw = Checkpoints.checkpoint(
-        e.join(h, e("s") === h("vx"))
-          .groupBy(e("d").as("av")).agg(sum(col("h")).as("ar")))
-      val atot = araw.agg(coalesce(sum(col("ar")), lit(1L)).as("at"))
-      val an = Checkpoints.checkpoint(
-        verts.join(araw, verts("vx") === col("av"), "left")
-          .crossJoin(broadcast(atot))
-          .select(col("vx"),
-            expr(s"(coalesce(ar, 0) * $scale) div at").as("a")))
-      Checkpoints.release(araw)
-      if (a != null) Checkpoints.release(a)
-      a = an
-      val hraw = Checkpoints.checkpoint(
-        e.join(a, e("d") === a("vx"))
-          .groupBy(e("s").as("hv")).agg(sum(col("a")).as("hr")))
-      val htot = hraw.agg(coalesce(sum(col("hr")), lit(1L)).as("ht"))
-      val hn = Checkpoints.checkpoint(
-        verts.join(hraw, verts("vx") === col("hv"), "left")
-          .crossJoin(broadcast(htot))
-          .select(col("vx"),
-            expr(s"(coalesce(hr, 0) * $scale) div ht").as("h")))
-      Checkpoints.release(hraw)
-      Checkpoints.release(h)
-      h = hn
+      val h = if (hraw == null) e.select(col("d"), lit(scale).as("x"))
+        else e.join(hraw, e("s") === hraw("v")).select(e("d"), rescaled(ht))
+      val (an, atn) = rawSums(h, "d")
+      Seq(araw, hraw).filter(_ != null).foreach(Checkpoints.release)
+      araw = an
+      at = atn
+      val (hn, htn) = rawSums(
+        e.join(araw, e("d") === araw("v")).select(e("s"), rescaled(at)), "s")
+      hraw = hn
+      ht = htn
       i += 1
     }
-    Checkpoints.release(e)
-    Checkpoints.release(verts)
-    a.join(h, Seq("vx"))
-      .select(col("vx").as("v"), col("a").as("authority"),
-        col("h").as("hub"))
+    val verts = e.select(col("s").as("vx"))
+      .union(e.select(col("d").as("vx"))).distinct()
+    verts
+      .join(araw.select(col("v").as("av"), col("x").as("ar")),
+        col("vx") === col("av"), "left")
+      .join(hraw.select(col("v").as("hv"), col("x").as("hr")),
+        col("vx") === col("hv"), "left")
+      .select(col("vx").as("v"),
+        expr(s"(coalesce(ar, 0) * $scale) div $at").as("authority"),
+        expr(s"(coalesce(hr, 0) * $scale) div $ht").as("hub"))
   }
 
   /** k-core decomposition by iterative degree peel: drop every vertex

@@ -1,7 +1,7 @@
 package org.apache.spark.sql.graftshim
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.{LogicalRDD, SparkStrategy}
@@ -48,6 +48,12 @@ object PlanBridge {
             None, None))
       case _ => df
     }
+
+  /** An observation's metrics as one [[Row]] in declaration order,
+    * blocking until the observed query has run (`Observation.get` keys
+    * them by name in an unordered map; the row accessor is
+    * `private[sql]`). */
+  def observedRow(o: Observation): Row = o.getRow
 
   /** Idempotently append a strategy to the session's planner. Checks
     * the planner's full strategy list, not just the experimental slot,

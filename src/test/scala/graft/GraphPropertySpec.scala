@@ -49,6 +49,107 @@ class GraphPropertySpec extends AnyFunSuite with SparkTestBase {
     level
   }
 
+  /** Driver-side replay of the integer PageRank recurrence the
+    * operators document: `seeds` = None is [[Graph.pageRankDirectedInt]]
+    * (k = n), Some(S) is [[Graph.pageRankPersonalizedInt]] (k = |S|).
+    * Edges are (s, d, w); self-loops and non-positive weights drop,
+    * duplicate rows collapse. */
+  private def replayPageRank(edges: Seq[(Long, Long, Long)],
+                             seeds: Option[Set[Long]], iters: Int,
+                             scale: Long): Map[Long, Long] = {
+    val e = edges.filter { case (s, d, w) => s != d && w > 0 }.distinct
+    val verts = e.flatMap { case (s, d, _) => Seq(s, d) }.distinct
+    if (verts.isEmpty) return Map.empty
+    val tw = e.groupMapReduce(_._1)(_._3)(_ + _)
+    val k = seeds.fold(verts.size.toLong)(_.size.toLong)
+    def isw(v: Long) = if (seeds.forall(_(v))) 1L else 0L
+    val tele = 15L * (scale / k) / 100L
+    var r = verts.map(v => v -> isw(v) * (scale / k)).toMap
+    (1 to iters).foreach { _ =>
+      val dsh = verts.filterNot(tw.contains).map(r).sum / k
+      val m = e.groupMapReduce(_._2) { case (s, _, w) => r(s) * w / tw(s) }(_ + _)
+      r = verts.map(v =>
+        v -> (tele * isw(v) + 85L * (m.getOrElse(v, 0L) + isw(v) * dsh) / 100L)).toMap
+    }
+    r
+  }
+
+  /** Driver-side replay of [[Graph.hitsInt]]'s L1-rescaled integer
+    * half-rounds; None when a total is 0 (the rescale divides by it). */
+  private def replayHits(edges: Seq[(Long, Long)], iters: Int,
+                         scale: Long): Option[Map[Long, (Long, Long)]] = {
+    val e = edges.filter { case (s, d) => s != d }.distinct
+    val verts = e.flatMap { case (s, d) => Seq(s, d) }.distinct
+    def rescale(raw: Map[Long, Long]): Option[Map[Long, Long]] = {
+      val tot = if (raw.isEmpty) 1L else raw.values.sum
+      if (tot == 0L) None
+      else Some(verts.map(v => v -> raw.getOrElse(v, 0L) * scale / tot).toMap)
+    }
+    val start = Option((Map.empty[Long, Long], verts.map(_ -> scale).toMap))
+    (1 to iters).foldLeft(start) { case (ah, _) =>
+      for {
+        (_, h) <- ah
+        a <- rescale(e.groupMapReduce(_._2)(x => h(x._1))(_ + _))
+        h2 <- rescale(e.groupMapReduce(_._1)(x => a(x._2))(_ + _))
+      } yield (a, h2)
+    }.map { case (a, h) => verts.map(v => v -> (a(v), h(v))).toMap }
+  }
+
+  /** Random digraph rows with self-loops, duplicate rows, sinks and
+    * sources, and weights in [-2, 5] (non-positive ones included). */
+  private def randomDigraph(rnd: scala.util.Random, nV: Int,
+                            nE: Int): Seq[(Long, Long, Long)] = {
+    val base = Seq.fill(nE)((rnd.nextInt(nV).toLong, rnd.nextInt(nV).toLong,
+      rnd.nextInt(8).toLong - 2))
+    // a dedicated sink and source beyond nV, a self-loop, a duplicate
+    base ++ Seq((0L, nV.toLong, 1L), (nV + 1L, 1L, 1L), (2L, 2L, 1L), base.head)
+  }
+
+  test("integer PageRank and HITS equal the driver-side replay of their " +
+       "recurrences on random digraphs") {
+    val rnd = new scala.util.Random(31)
+    var hitsCompared = 0
+    (1 to 4).foreach { trial =>
+      val rows = randomDigraph(rnd, nV = 10 + 4 * trial, nE = 12 + 8 * trial)
+      val weighted = rows.toDF("src", "dst", "w")
+      val plain = rows.map { case (s, d, _) => (s, d, 1L) }
+      val verts = rows.flatMap(r => Seq(r._1, r._2)).distinct.sorted
+      // a seed outside the graph keeps its share of |S| but no vertex
+      val seeds = Seq(verts.head, verts(verts.size / 2), 1000L)
+      val iters = 1 + trial % 3
+      Seq(1000000000000L, 1000L).foreach { scale =>
+        def ranks(df: org.apache.spark.sql.DataFrame) =
+          df.as[(Long, Long)].collect().toMap
+        assert(ranks(Graph.pageRankDirectedInt(weighted, iters = iters,
+          scale = scale)) == replayPageRank(plain, None, iters, scale),
+          s"directed, trial $trial, scale $scale: $rows")
+        assert(ranks(Graph.pageRankDirectedInt(weighted, iters = iters,
+          scale = scale, weightCol = "w")) ==
+          replayPageRank(rows, None, iters, scale),
+          s"weighted, trial $trial, scale $scale: $rows")
+        assert(ranks(Graph.pageRankPersonalizedInt(weighted, seeds,
+          iters = iters, scale = scale)) ==
+          replayPageRank(plain, Some(seeds.toSet), iters, scale),
+          s"personalized, trial $trial, scale $scale: $rows")
+      }
+      Seq(1000000L, 7L).foreach { scale =>
+        val edges = rows.map { case (s, d, _) => (s, d) }
+        def hits() = Graph.hitsInt(edges.toDF("src", "dst"), iters = iters,
+          scale = scale).as[(Long, Long, Long)].collect()
+          .map(r => r._1 -> (r._2, r._3)).toMap
+        replayHits(edges, iters, scale) match {
+          case Some(want) =>
+            hitsCompared += 1
+            assert(hits() == want, s"hits, trial $trial, scale $scale: $edges")
+          case None => // a zero L1 total: the rescale divides by zero
+            intercept[ArithmeticException](hits())
+        }
+      }
+      graft.Checkpoints.releaseAll(spark)
+    }
+    assert(hitsCompared >= 4, "too few HITS trials reached a comparison")
+  }
+
   test("connectedComponents agrees with union-find on random graphs") {
     val rnd = new scala.util.Random(7)
     (1 to 3).foreach { trial =>
