@@ -14,9 +14,10 @@ import graft.Telemetry.{censusKeys, measure}
   * the production configuration, checkpoints on, each in a fresh
   * session and twice: a warm pass that builds the session-pinned spines
   * and persisted indexes the query serves from, then a measured pass.
-  * It writes one row per query to AUDIT.json (`GRAFT_AUDIT_OUT`
-  * overrides the path), under a header naming the code it ran
-  * ([[Telemetry.Revision]]):
+  * It writes one row per query to AUDIT.json — AUDIT_subset.json when
+  * queries are named, so a subset never overwrites the full record;
+  * `GRAFT_AUDIT_OUT` overrides either ([[auditOut]]) — under a header
+  * naming the code it ran ([[Telemetry.Revision]]):
   *
   *  - `rt_*`: what the measured pass ran — jobs, completed, skipped
   *    (AQE exchange reuse, already-computed checkpoint parents) and
@@ -124,6 +125,12 @@ object Explain {
     "q211_ann_mrr_at_k",    // brute-force exact side (q28) + centroid assignment (q51)
     "q215_hard_negatives")  // brute-force exact side (q28) + centroid assignment (q51)
 
+  /** The audit's output path: `override` (`GRAFT_AUDIT_OUT`) if set,
+    * else AUDIT.json for a full audit and AUDIT_subset.json for a
+    * subset of named queries. */
+  private[graft] def auditOut(`override`: Option[String], subset: Boolean): String =
+    `override`.getOrElse(if (subset) "AUDIT_subset.json" else "AUDIT.json")
+
   def main(args: Array[String]): Unit = {
     val audit = args.headOption.contains("--audit")
     val rest = if (audit) args.drop(1) else args
@@ -176,7 +183,7 @@ object Explain {
       }
       println(s"[audit] stale intended-NLJ entries: ${stale.mkString(" ")}")
       println(s"[audit] ${names.size} queries, $flagged unintended nested-loop plans")
-      val out = sys.env.getOrElse("GRAFT_AUDIT_OUT", "AUDIT.json")
+      val out = auditOut(sys.env.get("GRAFT_AUDIT_OUT"), subset = rest.length > 1)
       java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
         rows.mkString(
           s"""{"sf": "$sfDir", ${revision.json}, """ +
@@ -184,6 +191,7 @@ object Explain {
             s""""stale_intended_nlj": [${stale.map(n => s""""$n"""").mkString(", ")}], """ +
             s""""queries": {""",
           ",\n", "}}"))
+      println(s"[audit] wrote $out")
     } else {
       val spark = session()
       names.foreach { n =>

@@ -1345,18 +1345,18 @@ object Graph {
     * [[pageRankDirectedInt]] over both directions of every undirected
     * edge: the same rounds, with a dangling share that is always 0.
     *
-    * Scale shape: see [[pageRankRounds]]: one checkpoint of the
-    * adjacency with each vertex's degree on its rows, one of the
-    * vertex set that observes the vertex count, then one checkpoint
-    * per round (join rank → per-edge share, groupBy in-share sum, left
-    * join onto the vertices). */
+    * Scale shape: see [[pageRankRounds]]: one checkpoint of the vertex
+    * state (each vertex's adjacency set and out-weight on its row),
+    * which observes the vertex count, then one exchange and one
+    * checkpoint per round. A canonical pair seen twice, or in both
+    * orientations, collapses in the adjacency set, so no `distinct`
+    * runs here. */
   def pageRankInt(edges: DataFrame, a: String = "a", b: String = "b",
                   iters: Int = 3,
                   scale: Long = 1000000000000L): DataFrame = {
     val und = edges
       .select(least(col(a), col(b)).as("u"), greatest(col(a), col(b)).as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull).distinct()
-    // both directions of a distinct canonical pair are distinct rows
+      .filter(col("u") =!= col("v") && col("u").isNotNull)
     pageRankRounds(
       und.select(col("u").as("s"), col("v").as("d"), lit(1L).as("w"))
         .union(und.select(col("v").as("s"), col("u").as("d"), lit(1L).as("w"))),
@@ -1391,11 +1391,12 @@ object Graph {
     * documented floor leakage (each div discards < 1 unit per EDGE
     * per round — GraphSpec asserts the bound).
     *
-    * Scale shape: see [[pageRankRounds]] — one checkpoint per round
-    * (join rank → per-edge share, groupBy in-share sum, left join onto
-    * the vertices), keyed by vertex; the dangling mass and the vertex
-    * count are observed on the checkpoints that compute them and
-    * enter the next round as literals. */
+    * Scale shape: see [[pageRankRounds]] — one exchange and one
+    * checkpoint per round over a vertex state keyed by vertex; the
+    * dangling mass and the vertex count are observed on the
+    * checkpoints that compute them and enter the next round as
+    * literals. Duplicate (s, d, w) rows collapse in the adjacency set,
+    * so no `distinct` runs here. */
   def pageRankDirectedInt(edges: DataFrame, src: String = "src",
                           dst: String = "dst", iters: Int = 3,
                           scale: Long = 1000000000000L,
@@ -1404,7 +1405,7 @@ object Graph {
     pageRankRounds(
       edges.select(col(src).as("s"), col(dst).as("d"), w.as("w"))
         .filter(col("s").isNotNull && col("d").isNotNull &&
-          col("s") =!= col("d") && col("w") > 0).distinct(),
+          col("s") =!= col("d") && col("w") > 0),
       None, iters, scale)
   }
 
@@ -1422,8 +1423,9 @@ object Graph {
     * consistency property.
     *
     * Scale shape: the rounds of [[pageRankRounds]], identical dataflow
-    * to the uniform form; the seed set rides as a 0/1 vertex column,
-    * and the dangling seed-restart mass is observed on each round's
+    * to the uniform form — one exchange and one checkpoint per round;
+    * the seed set rides as a 0/1 column of the vertex state, and the
+    * dangling seed-restart mass is observed on each round's
     * checkpoint — never a driver-side loop or a broadcast scalar. */
   def pageRankPersonalizedInt(edges: DataFrame, seeds: Seq[Long],
                               src: String = "src", dst: String = "dst",
@@ -1433,33 +1435,34 @@ object Graph {
     pageRankRounds(
       edges.select(col(src).as("s"), col(dst).as("d"), lit(1L).as("w"))
         .filter(col("s").isNotNull && col("d").isNotNull &&
-          col("s") =!= col("d")).distinct(),
+          col("s") =!= col("d")),
       Some(seeds), iters, scale)
   }
 
   /** The integer rounds shared by the three PageRank forms, over a
-    * DISTINCT directed edge list `edges` = (s, d, w) with non-null,
-    * distinct endpoints and w > 0. `seeds` = None is the uniform form
-    * (every vertex is a seed, k = n); Some(S) restarts teleport and
-    * dangling mass to S (k = |S|). With isw(v) = 1 for a seed, else 0:
+    * directed edge list `edges` = (s, d, w) with non-null, distinct
+    * endpoints and w > 0; a repeated (s, d, w) row counts once.
+    * `seeds` = None is the uniform form (every vertex is a seed,
+    * k = n); Some(S) restarts teleport and dangling mass to S
+    * (k = |S|). With isw(v) = 1 for a seed, else 0:
     *   r_0(v) = isw(v) · (scale div k)
     *   r_k(v) = (15 · (scale div k)) div 100 · isw(v)
     *          + (85 · (Σ_{s→v} (r_{k−1}(s) · w) div W(s)
     *                   + isw(v) · (Σ_{dangling} r_{k−1} div k))) div 100
     *
-    * Scale shape: three kinds of checkpoint, each one SQL execution
-    * that also yields the loop's scalars, and no driver scalar outside
-    * them ([[Checkpoints.checkpointObserved]]):
-    *  - the edges, with W(s) = `sum(w) over (partition by s)` on every
-    *    row, so no out-weight relation is joined per round;
-    *  - the vertices (vx, dang, isw), `dang` from the max of an
-    *    out/in marker, observing n and the dangling seed count — which
-    *    prices round 0, whose ranks are the literal scale div k and are
-    *    never materialized;
-    *  - one per round: e ⋈ r_{k−1} on s → per-edge share, groupBy d,
-    *    left join onto the vertices; it observes Σ r over the dangling
-    *    vertices, and that mass enters the next round as a literal.
-    * Superseded rounds are released eagerly. An empty graph returns a
+    * Scale shape: Pregel-style vertex state, one row per vertex, and
+    * no driver scalar outside the checkpoints that compute them
+    * ([[Checkpoints.checkpointObserved]]):
+    *  - one checkpoint of (vx, adj = collect_set(struct(d, w)), tw =
+    *    W(vx), dang, isw), one exchange; the set does the edge dedup.
+    *    It observes n and the dangling seed count — which prices round
+    *    0, whose ranks are the literal scale div k and are never
+    *    materialized;
+    *  - one checkpoint per round: a [[superstep]] — each vertex keeps
+    *    its row and sends (r · w) div tw along its adjacency, one
+    *    exchange groups both by vertex — observing Σ r over the
+    *    dangling vertices, which enters the next round as a literal.
+    * Superseded states are released eagerly. An empty graph returns a
     * 0-row frame over `edges` itself: one derived from a released
     * checkpoint would violate [[Checkpoints.release]]'s contract
     * (truncated lineage is unrecoverable if a consumer re-executes). */
@@ -1469,19 +1472,19 @@ object Graph {
       case None => _ => lit(1L)
       case Some(ss) => v => when(v.isin(ss: _*), lit(1L)).otherwise(lit(0L))
     }
-    val e = Checkpoints.checkpoint(edges.withColumn("tw",
-      sum(col("w")).over(org.apache.spark.sql.expressions.Window
-        .partitionBy(col("s")))))
+    // typed from the edges: vertices need not be longs (q218's are words)
+    val out = edges.select(col("s").as("vx"), struct(col("d"), col("w")).as("o"))
     val (verts, vs) = Checkpoints.checkpointObserved(
-      e.select(col("s").as("vx"), lit(1).as("out"))
-        .union(e.select(col("d").as("vx"), lit(0).as("out")))
-        .groupBy(col("vx")).agg((max(col("out")) === 0).as("dang"))
-        .withColumn("isw", isw(col("vx"))),
+      out.union(edges.select(col("d").as("vx"),
+          lit(null).cast(out.schema("o").dataType).as("o")))
+        .groupBy(col("vx")).agg(collect_set(col("o")).as("adj"))
+        .select(col("vx"), col("adj"),
+          aggregate(col("adj"), lit(0L), (t, o) => t + o("w")).as("tw"),
+          (size(col("adj")) === 0).as("dang"), isw(col("vx")).as("isw")),
       count(lit(1)).as("n"),
       coalesce(sum(when(col("dang"), col("isw"))), lit(0L)).as("dseeds"))
     val n = vs.getLong(0)
     if (n == 0L) { // empty graph: no vertices to price, avoid scale/0
-      Checkpoints.release(e)
       Checkpoints.release(verts)
       return edges.limit(0).select(col("s").as("v"), lit(0L).as("rank_scaled"))
     }
@@ -1489,34 +1492,42 @@ object Graph {
     val tele = (15L * (scale / k)) / 100L
     // round 0 is the literal r_0; its dangling mass is dseeds · r_0
     var dm = vs.getLong(1) * (scale / k)
-    var r: DataFrame = null
+    var r = col("isw") * lit(scale / k)
+    var st = verts
     var i = 0
     while (i < iters) {
-      val shares =
-        if (r == null) e.select(col("d"),
-          (isw(col("s")) * lit(scale / k)).as("r"), col("w"), col("tw"))
-        else e.join(r, e("s") === r("vx"))
-          .select(e("d"), r("r"), e("w"), e("tw"))
-      val contrib = shares
-        .select(col("d").as("cv"), expr("(r * w) div tw").as("share"))
-        .groupBy(col("cv")).agg(sum(col("share")).as("m"))
       val (nxt, obs) = Checkpoints.checkpointObserved(
-        verts.join(contrib, verts("vx") === col("cv"), "left")
-          .select(col("vx"), col("dang"),
+        superstep(st, "r", st.select(explode(col("adj")).as("o"), r.as("r"),
+            col("tw")).select(col("o.d").as("vx"), expr("(r * o.w) div tw").as("x")))
+          .select(col("vx"), col("adj"), col("tw"), col("dang"), col("isw"),
             (lit(tele) * col("isw") + expr(
-              s"(85 * (coalesce(m, 0) + isw * ${dm / k})) div 100")).as("r")),
+              s"(85 * (coalesce(x, 0) + isw * ${dm / k})) div 100")).as("r")),
         coalesce(sum(when(col("dang"), col("r"))), lit(0L)).as("dm"))
-      if (r != null) Checkpoints.release(r)
-      r = nxt
+      Checkpoints.release(st)
+      st = nxt
+      r = col("r")
       dm = obs.getLong(0)
       i += 1
     }
-    if (r == null) // no rounds: r_0 itself, over the live vertex block
-      return verts.select(col("vx").as("v"),
-        (col("isw") * lit(scale / k)).as("rank_scaled"))
-    Checkpoints.release(e)
-    Checkpoints.release(verts)
-    r.select(col("vx").as("v"), col("r").as("rank_scaled"))
+    st.select(col("vx").as("v"), r.as("rank_scaled"))
+  }
+
+  /** One message-passing superstep over a vertex state `st` keyed by
+    * `vx` (Pregel's vertex-state rounds): every vertex keeps its row,
+    * `msgs` = (vx, x) adds one row per message, and ONE exchange groups
+    * both by vertex. The message sum becomes `x` (null for a vertex
+    * that received none); every state column but `vx` and `replaced`
+    * rides through the group with `first(ignoreNulls)`, since message
+    * rows hold nulls there. */
+  private def superstep(st: DataFrame, replaced: String,
+                        msgs: DataFrame): DataFrame = {
+    val carry = st.columns.toSeq.filterNot(Set("vx", replaced))
+    st.select(col("vx") +: carry.map(col) :+ lit(null).cast("long").as("x"): _*)
+      .union(msgs.select(col("vx") +: carry.map(c =>
+        lit(null).cast(st.schema(c).dataType).as(c)) :+ col("x"): _*))
+      .groupBy(col("vx"))
+      .agg(sum(col("x")).as("x"),
+        carry.map(c => first(col(c), ignoreNulls = true).as(c)): _*)
   }
 
   /** k-truss decomposition by iterative peel over [[triangleSupport]]:
@@ -1582,67 +1593,60 @@ object Graph {
     * The classic L2 normalization is replaced by integer L1 rescaling
     * to `scale` — same ranking fixpoint, but every step stays exact
     * int64 floor arithmetic, so the rounds unroll as cross-engine
-    * oracle CTEs (the q87/q98 discipline). Overflow headroom: values
-    * are ≤ scale after each rescale, so raw sums are ≤ maxdeg · scale
-    * and the rescale multiply is ≤ maxdeg · scale² — scale 1e6 holds
-    * to maxdeg ~9e6.
+    * oracle CTEs (the q87/q98 discipline). A total of 0 (no edges, or
+    * every raw sum floored to 0) divides by 1, so every value reads 0.
+    * Overflow headroom: values are ≤ scale after each rescale, so raw
+    * sums are ≤ maxdeg · scale and the rescale multiply is
+    * ≤ maxdeg · scale² — scale 1e6 holds to maxdeg ~9e6.
     *
-    * Scale shape: each half-round is ONE checkpoint — the raw sums
-    * (one keyed join of the edges with the previous raw sums, rescaled
-    * per row as (raw · scale) div total with the total a literal, then
-    * one groupBy) — which observes its own L1 total for the next
-    * half-round ([[Checkpoints.checkpointObserved]]: no scalar
-    * aggregate, broadcast cross join or driver collect). Round 0's hub
-    * weights are the literal `scale`. Every edge's target has a raw
-    * authority and every edge's source a raw hub sum, so the inner
-    * joins drop no edge; the vertex set appears only in the final
-    * plan, which left-joins the last two raw relations onto it —
-    * sources (no in-edges) get authority 0, sinks hub 0, exactly as in
-    * the float formulation. The edge block and the last two raw
-    * blocks stay live under the result (the harness's `releaseAll`
-    * drops them); every other raw block is released eagerly. */
+    * Scale shape: one checkpoint of the vertex state (vx, outs, ins),
+    * one exchange — the two sets do the edge dedup — then each
+    * half-round is ONE [[superstep]] and ONE checkpoint: every vertex
+    * sends its rescaled hub value along `outs` (or its authority along
+    * `ins`), with the previous total a literal, and the group sums the
+    * raw `a` (or `h`) column while the other one rides along. Each
+    * checkpoint observes its own L1 total for the next half-round
+    * ([[Checkpoints.checkpointObserved]]: no scalar aggregate,
+    * broadcast cross join or driver collect). Round 0's hub weights
+    * are the literal `scale`. The result rescales the last state's
+    * raw columns — sources (no in-edges) get authority 0, sinks hub 0,
+    * exactly as in the float formulation — and leaves that one block
+    * live (the harness's `releaseAll` drops it); every superseded
+    * state is released eagerly. */
   def hitsInt(edges: DataFrame, src: String = "src", dst: String = "dst",
               iters: Int = 2, scale: Long = 1000000L): DataFrame = {
     require(iters >= 1, "hitsInt needs at least one iteration")
-    val e = Checkpoints.checkpoint(
-      edges.select(col(src).as("s"), col(dst).as("d"))
-        .filter(col("s").isNotNull && col("d").isNotNull &&
-          col("s") =!= col("d")).distinct())
-    // raw sums by `key` of per-edge values `x`, with their L1 total
-    // (1 when there are none, so an empty graph divides by 1)
-    def rawSums(x: DataFrame, key: String): (DataFrame, Long) = {
-      val (raw, tot) = Checkpoints.checkpointObserved(
-        x.groupBy(col(key).as("v")).agg(sum(col("x")).as("x")),
-        coalesce(sum(col("x")), lit(1L)).as("tot"))
-      (raw, tot.getLong(0))
+    val e = edges.select(col(src).as("s"), col(dst).as("d"))
+      .filter(col("s").isNotNull && col("d").isNotNull && col("s") =!= col("d"))
+    val none = lit(null).cast(e.schema("s").dataType)
+    var st = Checkpoints.checkpoint(
+      e.select(col("s").as("vx"), col("d").as("o"), none.as("i"))
+        .union(e.select(col("d").as("vx"), none.as("o"), col("s").as("i")))
+        .groupBy(col("vx"))
+        .agg(collect_set(col("o")).as("outs"), collect_set(col("i")).as("ins")))
+    // every vertex sends `x` along its `along` set; the receivers' sums
+    // become raw column `raw`, returned with their L1 total
+    def half(along: String, x: Column, raw: String): Long = {
+      val (nxt, tot) = Checkpoints.checkpointObserved(
+        superstep(st, raw, st.select(explode(col(along)).as("vx"), x.as("x")))
+          .withColumnRenamed("x", raw),
+        coalesce(sum(col(raw)), lit(0L)).as("tot"))
+      Checkpoints.release(st)
+      st = nxt
+      val t = tot.getLong(0)
+      if (t == 0L) 1L else t
     }
-    def rescaled(tot: Long) = expr(s"(x * $scale) div $tot").as("x")
-    var araw, hraw: DataFrame = null
+    def rescaled(raw: String, tot: Long) = expr(s"($raw * $scale) div $tot")
     var at, ht = 0L
     var i = 0
     while (i < iters) {
-      val h = if (hraw == null) e.select(col("d"), lit(scale).as("x"))
-        else e.join(hraw, e("s") === hraw("v")).select(e("d"), rescaled(ht))
-      val (an, atn) = rawSums(h, "d")
-      Seq(araw, hraw).filter(_ != null).foreach(Checkpoints.release)
-      araw = an
-      at = atn
-      val (hn, htn) = rawSums(
-        e.join(araw, e("d") === araw("v")).select(e("s"), rescaled(at)), "s")
-      hraw = hn
-      ht = htn
+      at = half("outs", if (i == 0) lit(scale) else rescaled("h", ht), "a")
+      ht = half("ins", rescaled("a", at), "h")
       i += 1
     }
-    val verts = e.select(col("s").as("vx"))
-      .union(e.select(col("d").as("vx"))).distinct()
-    verts
-      .join(araw.select(col("v").as("av"), col("x").as("ar")),
-        col("vx") === col("av"), "left")
-      .join(hraw.select(col("v").as("hv"), col("x").as("hr")),
-        col("vx") === col("hv"), "left")
-      .select(col("vx").as("v"),
-        expr(s"(coalesce(ar, 0) * $scale) div $at").as("authority"),
-        expr(s"(coalesce(hr, 0) * $scale) div $ht").as("hub"))
+    st.select(col("vx").as("v"),
+      rescaled("coalesce(a, 0)", at).as("authority"),
+      rescaled("coalesce(h, 0)", ht).as("hub"))
   }
 
   /** k-core decomposition by iterative degree peel: drop every vertex

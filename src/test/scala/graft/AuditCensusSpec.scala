@@ -40,4 +40,11 @@ class AuditCensusSpec extends AnyFunSuite with SparkTestBase {
     // side is a ReusedExchange of the first and adds none
     assert(c.census("shuffles") == 2)
   }
+
+  test("a subset audit writes its own file unless GRAFT_AUDIT_OUT is set") {
+    assert(Explain.auditOut(None, subset = false) == "AUDIT.json")
+    assert(Explain.auditOut(None, subset = true) == "AUDIT_subset.json")
+    assert(Explain.auditOut(Some("/tmp/a.json"), subset = true) == "/tmp/a.json")
+    assert(Explain.auditOut(Some("/tmp/a.json"), subset = false) == "/tmp/a.json")
+  }
 }

@@ -4,17 +4,18 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Job budget of the two queries of perfbench's `graph-iter` workload
   * (q98 directed PageRank, q104 HITS): a warm execution — the pinned
-  * co-ship, k-NN and pair spines already built — runs the edge and
-  * vertex checkpoints, one checkpoint per round or half-round with its
-  * loop scalar observed on it, and the final action; no per-round
-  * `count()`, scalar aggregate or re-aggregation of the co-ship spine.
-  * Each budget is the count measured at sf0.001 on `local[4]` plus a
-  * margin of 2 for AQE job jitter. */
+  * co-ship, k-NN, pair and directed citation spines already built —
+  * runs one vertex-state checkpoint, then one exchange and one
+  * checkpoint per round or half-round with its loop scalar observed on
+  * it, and the final action; no separate edge checkpoint, per-round
+  * join, `count()` or scalar aggregate, and no rebuild of the citation
+  * spine. Each budget is the count measured at sf0.001 on `local[4]`
+  * plus a margin of 2 for AQE job jitter. */
 class GraphIterJobBudgetSpec extends AnyFunSuite with SparkTestBase {
 
   private val budgets = Seq(
-    "q98_citation_pagerank" -> (29 + 2),
-    "q104_citation_hits" -> (30 + 2))
+    "q98_citation_pagerank" -> (9 + 2),
+    "q104_citation_hits" -> (11 + 2))
 
   budgets.foreach { case (q, budget) =>
     test(s"$q runs at most $budget jobs per warm execution") {

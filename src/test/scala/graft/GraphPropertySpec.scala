@@ -75,25 +75,28 @@ class GraphPropertySpec extends AnyFunSuite with SparkTestBase {
   }
 
   /** Driver-side replay of [[Graph.hitsInt]]'s L1-rescaled integer
-    * half-rounds; None when a total is 0 (the rescale divides by it). */
+    * half-rounds; a total of 0 (no raw sums, or all of them 0) divides
+    * by 1. */
   private def replayHits(edges: Seq[(Long, Long)], iters: Int,
-                         scale: Long): Option[Map[Long, (Long, Long)]] = {
+                         scale: Long): Map[Long, (Long, Long)] = {
     val e = edges.filter { case (s, d) => s != d }.distinct
     val verts = e.flatMap { case (s, d) => Seq(s, d) }.distinct
-    def rescale(raw: Map[Long, Long]): Option[Map[Long, Long]] = {
-      val tot = if (raw.isEmpty) 1L else raw.values.sum
-      if (tot == 0L) None
-      else Some(verts.map(v => v -> raw.getOrElse(v, 0L) * scale / tot).toMap)
+    def rescale(raw: Map[Long, Long]): Map[Long, Long] = {
+      val tot = raw.values.sum max 1L
+      verts.map(v => v -> raw.getOrElse(v, 0L) * scale / tot).toMap
     }
-    val start = Option((Map.empty[Long, Long], verts.map(_ -> scale).toMap))
-    (1 to iters).foldLeft(start) { case (ah, _) =>
-      for {
-        (_, h) <- ah
-        a <- rescale(e.groupMapReduce(_._2)(x => h(x._1))(_ + _))
-        h2 <- rescale(e.groupMapReduce(_._1)(x => a(x._2))(_ + _))
-      } yield (a, h2)
-    }.map { case (a, h) => verts.map(v => v -> (a(v), h(v))).toMap }
+    val (a, h) = (1 to iters).foldLeft(
+      (Map.empty[Long, Long], verts.map(_ -> scale).toMap)) { case ((_, h), _) =>
+      val a = rescale(e.groupMapReduce(_._2)(x => h(x._1))(_ + _))
+      (a, rescale(e.groupMapReduce(_._1)(x => a(x._2))(_ + _)))
+    }
+    verts.map(v => v -> (a(v), h(v))).toMap
   }
+
+  private def hitsRanks(edges: org.apache.spark.sql.DataFrame, iters: Int,
+                        scale: Long): Map[Long, (Long, Long)] =
+    Graph.hitsInt(edges, iters = iters, scale = scale)
+      .as[(Long, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
 
   /** Random digraph rows with self-loops, duplicate rows, sinks and
     * sources, and weights in [-2, 5] (non-positive ones included). */
@@ -108,7 +111,6 @@ class GraphPropertySpec extends AnyFunSuite with SparkTestBase {
   test("integer PageRank and HITS equal the driver-side replay of their " +
        "recurrences on random digraphs") {
     val rnd = new scala.util.Random(31)
-    var hitsCompared = 0
     (1 to 4).foreach { trial =>
       val rows = randomDigraph(rnd, nV = 10 + 4 * trial, nE = 12 + 8 * trial)
       val weighted = rows.toDF("src", "dst", "w")
@@ -132,22 +134,40 @@ class GraphPropertySpec extends AnyFunSuite with SparkTestBase {
           replayPageRank(plain, Some(seeds.toSet), iters, scale),
           s"personalized, trial $trial, scale $scale: $rows")
       }
+      // scale 7 floors many rescaled values, and some totals, to 0
       Seq(1000000L, 7L).foreach { scale =>
         val edges = rows.map { case (s, d, _) => (s, d) }
-        def hits() = Graph.hitsInt(edges.toDF("src", "dst"), iters = iters,
-          scale = scale).as[(Long, Long, Long)].collect()
-          .map(r => r._1 -> (r._2, r._3)).toMap
-        replayHits(edges, iters, scale) match {
-          case Some(want) =>
-            hitsCompared += 1
-            assert(hits() == want, s"hits, trial $trial, scale $scale: $edges")
-          case None => // a zero L1 total: the rescale divides by zero
-            intercept[ArithmeticException](hits())
-        }
+        assert(hitsRanks(edges.toDF("src", "dst"), iters, scale) ==
+          replayHits(edges, iters, scale), s"hits, trial $trial, scale $scale: $edges")
       }
       graft.Checkpoints.releaseAll(spark)
     }
-    assert(hitsCompared >= 4, "too few HITS trials reached a comparison")
+    // two edges at scale 1: each authority floors to 1 div 2 = 0, so the
+    // hub half-round's raw sums are present and total 0
+    val split = Seq((0L, 1L), (2L, 3L))
+    assert(replayHits(split, 1, 1L).values.forall(_ == ((0L, 0L))))
+    assert(hitsRanks(split.toDF("src", "dst"), 1, 1L) == replayHits(split, 1, 1L))
+    graft.Checkpoints.releaseAll(spark)
+  }
+
+  test("parallel edges with distinct weights all count, exact duplicates once") {
+    // (0→1) at weights 2 and 5 and (0→2) at weight 2 are three distinct
+    // rows; each of them also appears twice
+    val base = Seq((0L, 1L, 2L), (0L, 1L, 5L), (0L, 2L, 2L), (1L, 2L, 1L),
+      (2L, 0L, 3L), (2L, 3L, 1L), (3L, 1L, 4L), (3L, 1L, 1L))
+    val rows = base ++ base.take(3) ++ Seq((2L, 3L, 1L))
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long)].collect().toMap
+    val weighted = Graph.pageRankDirectedInt(rows.toDF("src", "dst", "w"),
+      iters = 3, weightCol = "w")
+    assert(ranks(weighted) == replayPageRank(base, None, 3, 1000000000000L))
+    assert(ranks(weighted) == ranks(Graph.pageRankDirectedInt(
+      base.toDF("src", "dst", "w"), iters = 3, weightCol = "w")))
+    // HITS ignores weights: parallel (s, d) pairs are one edge
+    val pairs = rows.map { case (s, d, _) => (s, d) }
+    assert(hitsRanks(pairs.toDF("src", "dst"), 2, 1000000L) ==
+      replayHits(pairs.distinct, 2, 1000000L))
+    graft.Checkpoints.releaseAll(spark)
   }
 
   test("connectedComponents agrees with union-find on random graphs") {
