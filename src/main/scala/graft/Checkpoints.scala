@@ -20,7 +20,11 @@ import org.apache.spark.sql.graftshim.PlanBridge
   *  - loop bodies call [[release]] on each superseded round's result as
   *    soon as its successor is materialized (a lost localCheckpoint
   *    block is unrecoverable, so releasing early also SHRINKS the
-  *    failure window at scale — fewer retained blocks, less to lose);
+  *    failure window at scale — fewer retained blocks, less to lose).
+  *    A loop releases only the blocks it created, never the state it
+  *    was given: that input belongs to its caller (a pinned vertex
+  *    state serves every execution of a session), and a lazy last
+  *    round may still read it when the caller's action runs;
   *  - harness mains (Bench, Verify) call [[releaseAll]] once a query's
   *    action completes, dropping every block the finished query left
   *    behind. Session-lifetime materializations (the co-ship spine)
@@ -62,11 +66,14 @@ object Checkpoints {
     * scalars (one [[Row]], `metric` first, then `metrics` in order).
     * Each metric needs an alias; an aggregate over zero rows observes
     * its empty value (`count` 0, `sum` null). See the object scaladoc
-    * for why the scalars are exact under task retry. */
-  def checkpointObserved(df: DataFrame, metric: Column,
-                         metrics: Column*): (DataFrame, Row) = {
+    * for why the scalars are exact under task retry. With `pin` the
+    * block survives [[releaseAll]], like [[checkpointPinned]]: a
+    * session-lifetime loop input (a vertex state) together with the
+    * scalars its build observed. */
+  def checkpointObserved(df: DataFrame, pin: Boolean = false)(
+      metric: Column, metrics: Column*): (DataFrame, Row) = {
     val obs = Observation()
-    val cp = checkpoint(df.observe(obs, metric, metrics: _*))
+    val cp = doCheckpoint(df.observe(obs, metric, metrics: _*), pin)
     (cp, PlanBridge.observedRow(obs))
   }
 

@@ -1347,20 +1347,20 @@ object Graph {
     *
     * Scale shape: see [[pageRankRounds]]: one checkpoint of the vertex
     * state (each vertex's adjacency set and out-weight on its row),
-    * which observes the vertex count, then one exchange and one
-    * checkpoint per round. A canonical pair seen twice, or in both
-    * orientations, collapses in the adjacency set, so no `distinct`
-    * runs here. */
+    * which observes the vertex count, then one exchange per round, a
+    * checkpoint for every round but the last. A canonical pair seen
+    * twice, or in both orientations, collapses in the adjacency set,
+    * so no `distinct` runs here. */
   def pageRankInt(edges: DataFrame, a: String = "a", b: String = "b",
                   iters: Int = 3,
                   scale: Long = 1000000000000L): DataFrame = {
     val und = edges
       .select(least(col(a), col(b)).as("u"), greatest(col(a), col(b)).as("v"))
       .filter(col("u") =!= col("v") && col("u").isNotNull)
-    pageRankRounds(
-      und.select(col("u").as("s"), col("v").as("d"), lit(1L).as("w"))
-        .union(und.select(col("v").as("s"), col("u").as("d"), lit(1L).as("w"))),
-      None, iters, scale)
+    pageRankRounds(pageRankState(
+      und.select(col("u").as("s"), col("v").as("d"))
+        .union(und.select(col("v").as("s"), col("u").as("d"))), "s", "d"),
+      iters, scale)
   }
 
   /** DIRECTED integer PageRank with explicit dangling-mass
@@ -1391,23 +1391,18 @@ object Graph {
     * documented floor leakage (each div discards < 1 unit per EDGE
     * per round — GraphSpec asserts the bound).
     *
-    * Scale shape: see [[pageRankRounds]] — one exchange and one
-    * checkpoint per round over a vertex state keyed by vertex; the
-    * dangling mass and the vertex count are observed on the
-    * checkpoints that compute them and enter the next round as
-    * literals. Duplicate (s, d, w) rows collapse in the adjacency set,
-    * so no `distinct` runs here. */
+    * Scale shape: [[pageRankState]], then [[pageRankRounds]] — one
+    * exchange per round over a vertex state keyed by vertex, a
+    * checkpoint for every round but the last, which the caller's
+    * action computes; the dangling mass and the vertex count are
+    * observed on the checkpoints that compute them and enter the next
+    * round as literals. Duplicate (s, d, w) rows collapse in the
+    * adjacency set, so no `distinct` runs here. */
   def pageRankDirectedInt(edges: DataFrame, src: String = "src",
                           dst: String = "dst", iters: Int = 3,
                           scale: Long = 1000000000000L,
-                          weightCol: String = ""): DataFrame = {
-    val w = if (weightCol.isEmpty) lit(1L) else col(weightCol).cast("long")
-    pageRankRounds(
-      edges.select(col(src).as("s"), col(dst).as("d"), w.as("w"))
-        .filter(col("s").isNotNull && col("d").isNotNull &&
-          col("s") =!= col("d") && col("w") > 0),
-      None, iters, scale)
-  }
+                          weightCol: String = ""): DataFrame =
+    pageRankRounds(pageRankState(edges, src, dst, weightCol), iters, scale)
 
   /** PERSONALIZED PageRank (PPR) — importance relative to a SEED set
     * (Page et al.'s personalization vector; the seed-based relevance
@@ -1423,28 +1418,69 @@ object Graph {
     * consistency property.
     *
     * Scale shape: the rounds of [[pageRankRounds]], identical dataflow
-    * to the uniform form — one exchange and one checkpoint per round;
-    * the seed set rides as a 0/1 column of the vertex state, and the
-    * dangling seed-restart mass is observed on each round's
-    * checkpoint — never a driver-side loop or a broadcast scalar. */
+    * to the uniform form — one exchange per round, a checkpoint for
+    * every round but the last; the seed set rides as a 0/1 column of
+    * the vertex state, and the dangling seed-restart mass is observed
+    * on each checkpointed round — never a driver-side loop or a
+    * broadcast scalar. */
   def pageRankPersonalizedInt(edges: DataFrame, seeds: Seq[Long],
                               src: String = "src", dst: String = "dst",
                               iters: Int = 3,
-                              scale: Long = 1000000000000L): DataFrame = {
-    require(seeds.nonEmpty, "personalization needs a non-empty seed set")
-    pageRankRounds(
-      edges.select(col(src).as("s"), col(dst).as("d"), lit(1L).as("w"))
-        .filter(col("s").isNotNull && col("d").isNotNull &&
-          col("s") =!= col("d")),
-      Some(seeds), iters, scale)
+                              scale: Long = 1000000000000L): DataFrame =
+    pageRankRounds(pageRankState(edges, src, dst, seeds = Some(seeds)),
+      iters, scale)
+
+  /** A checkpointed vertex state keyed by `vx` — the input of
+    * [[pageRankRounds]] ([[pageRankState]]) or [[hitsRounds]]
+    * ([[hitsState]]) — with the scalars its build observed: `n`
+    * vertices and `dseeds` dangling seeds; `k` is the size of the seed
+    * set (n for the uniform form and HITS). The rounds never release
+    * it, so one pinned state serves every execution of a session. */
+  final case class VertexState(frame: DataFrame, n: Long, dseeds: Long, k: Long)
+
+  /** The vertex state of the PageRank rounds over the directed edges
+    * (src → dst, weight `weightCol` or 1): one row per vertex,
+    * (vx, adj = collect_set(struct(d, w)), tw = W(vx), dang, isw), one
+    * exchange and one eager checkpoint, pinned when `pin` (a
+    * [[graft.queries.SessionMemo]] then holds it). Self-loops, null
+    * endpoints and non-positive weights drop; the set does the edge
+    * dedup, so a repeated (s, d, w) row counts once. `seeds` = None is
+    * the uniform form (every vertex is a seed, k = n); Some(S) restarts
+    * teleport and dangling mass to S (k = |S|, isw(v) = 1 for v in S,
+    * else 0). The checkpoint observes n and the dangling seed count,
+    * which prices round 0, whose ranks are the literal scale div k and
+    * are never materialized. The vertex type comes from the edges:
+    * vertices need not be longs (q218's are words). */
+  def pageRankState(edges: DataFrame, src: String = "src",
+                    dst: String = "dst", weightCol: String = "",
+                    seeds: Option[Seq[Long]] = None,
+                    pin: Boolean = false): VertexState = {
+    require(seeds.forall(_.nonEmpty),
+      "personalization needs a non-empty seed set")
+    val w = if (weightCol.isEmpty) lit(1L) else col(weightCol).cast("long")
+    val e = edges.select(col(src).as("s"), col(dst).as("d"), w.as("w"))
+      .filter(col("s").isNotNull && col("d").isNotNull &&
+        col("s") =!= col("d") && col("w") > 0)
+    val isw: Column => Column = seeds match {
+      case None => _ => lit(1L)
+      case Some(ss) => v => when(v.isin(ss: _*), lit(1L)).otherwise(lit(0L))
+    }
+    val out = e.select(col("s").as("vx"), struct(col("d"), col("w")).as("o"))
+    val (frame, vs) = Checkpoints.checkpointObserved(
+      out.union(e.select(col("d").as("vx"),
+          lit(null).cast(out.schema("o").dataType).as("o")))
+        .groupBy(col("vx")).agg(collect_set(col("o")).as("adj"))
+        .select(col("vx"), col("adj"),
+          aggregate(col("adj"), lit(0L), (t, o) => t + o("w")).as("tw"),
+          (size(col("adj")) === 0).as("dang"), isw(col("vx")).as("isw")),
+      pin)(count(lit(1)).as("n"),
+      coalesce(sum(when(col("dang"), col("isw"))), lit(0L)).as("dseeds"))
+    val n = vs.getLong(0)
+    VertexState(frame, n, vs.getLong(1), seeds.fold(n)(_.size.toLong))
   }
 
   /** The integer rounds shared by the three PageRank forms, over a
-    * directed edge list `edges` = (s, d, w) with non-null, distinct
-    * endpoints and w > 0; a repeated (s, d, w) row counts once.
-    * `seeds` = None is the uniform form (every vertex is a seed,
-    * k = n); Some(S) restarts teleport and dangling mass to S
-    * (k = |S|). With isw(v) = 1 for a seed, else 0:
+    * [[pageRankState]]. With isw(v) = 1 for a seed, else 0:
     *   r_0(v) = isw(v) · (scale div k)
     *   r_k(v) = (15 · (scale div k)) div 100 · isw(v)
     *          + (85 · (Σ_{s→v} (r_{k−1}(s) · w) div W(s)
@@ -1453,63 +1489,46 @@ object Graph {
     * Scale shape: Pregel-style vertex state, one row per vertex, and
     * no driver scalar outside the checkpoints that compute them
     * ([[Checkpoints.checkpointObserved]]):
-    *  - one checkpoint of (vx, adj = collect_set(struct(d, w)), tw =
-    *    W(vx), dang, isw), one exchange; the set does the edge dedup.
-    *    It observes n and the dangling seed count — which prices round
-    *    0, whose ranks are the literal scale div k and are never
-    *    materialized;
-    *  - one checkpoint per round: a [[superstep]] — each vertex keeps
-    *    its row and sends (r · w) div tw along its adjacency, one
-    *    exchange groups both by vertex — observing Σ r over the
-    *    dangling vertices, which enters the next round as a literal.
-    * Superseded states are released eagerly. An empty graph returns a
-    * 0-row frame over `edges` itself: one derived from a released
-    * checkpoint would violate [[Checkpoints.release]]'s contract
-    * (truncated lineage is unrecoverable if a consumer re-executes). */
-  private def pageRankRounds(edges: DataFrame, seeds: Option[Seq[Long]],
-                             iters: Int, scale: Long): DataFrame = {
-    val isw: Column => Column = seeds match {
-      case None => _ => lit(1L)
-      case Some(ss) => v => when(v.isin(ss: _*), lit(1L)).otherwise(lit(0L))
-    }
-    // typed from the edges: vertices need not be longs (q218's are words)
-    val out = edges.select(col("s").as("vx"), struct(col("d"), col("w")).as("o"))
-    val (verts, vs) = Checkpoints.checkpointObserved(
-      out.union(edges.select(col("d").as("vx"),
-          lit(null).cast(out.schema("o").dataType).as("o")))
-        .groupBy(col("vx")).agg(collect_set(col("o")).as("adj"))
-        .select(col("vx"), col("adj"),
-          aggregate(col("adj"), lit(0L), (t, o) => t + o("w")).as("tw"),
-          (size(col("adj")) === 0).as("dang"), isw(col("vx")).as("isw")),
-      count(lit(1)).as("n"),
-      coalesce(sum(when(col("dang"), col("isw"))), lit(0L)).as("dseeds"))
-    val n = vs.getLong(0)
-    if (n == 0L) { // empty graph: no vertices to price, avoid scale/0
-      Checkpoints.release(verts)
-      return edges.limit(0).select(col("s").as("v"), lit(0L).as("rank_scaled"))
-    }
-    val k = seeds.fold(n)(_.size.toLong)
+    *  - round 0 reads the state's observed n and dangling seed count;
+    *    the state is given, so a memoized one costs no job here;
+    *  - every round is a [[superstep]] — each vertex keeps its row and
+    *    sends (r · w) div tw along its adjacency, one exchange groups
+    *    both by vertex. Each round but the last is one checkpoint
+    *    observing Σ r over the dangling vertices, which enters the next
+    *    round as a literal; the last round's dangling mass is never
+    *    read, so it stays lazy and the caller's action computes it.
+    * The loop releases each superseded state it created as soon as its
+    * successor is materialized, never the given state, which the lazy
+    * last round reads when `iters` = 1. An empty graph returns a 0-row
+    * frame over the (live) given state. */
+  def pageRankRounds(st: VertexState, iters: Int = 3,
+                     scale: Long = 1000000000000L): DataFrame = {
+    if (st.n == 0L) // empty graph: no vertices to price, avoid scale/0
+      return st.frame.select(col("vx").as("v"), lit(0L).as("rank_scaled"))
+    val k = st.k
     val tele = (15L * (scale / k)) / 100L
+    def round(cur: DataFrame, r: Column, dm: Long): DataFrame =
+      superstep(cur, "r", cur.select(explode(col("adj")).as("o"), r.as("r"),
+          col("tw")).select(col("o.d").as("vx"), expr("(r * o.w) div tw").as("x")))
+        .select(col("vx"), col("adj"), col("tw"), col("dang"), col("isw"),
+          (lit(tele) * col("isw") + expr(
+            s"(85 * (coalesce(x, 0) + isw * ${dm / k})) div 100")).as("r"))
     // round 0 is the literal r_0; its dangling mass is dseeds · r_0
-    var dm = vs.getLong(1) * (scale / k)
+    var dm = st.dseeds * (scale / k)
     var r = col("isw") * lit(scale / k)
-    var st = verts
-    var i = 0
+    var cur = st.frame
+    var i = 1
     while (i < iters) {
-      val (nxt, obs) = Checkpoints.checkpointObserved(
-        superstep(st, "r", st.select(explode(col("adj")).as("o"), r.as("r"),
-            col("tw")).select(col("o.d").as("vx"), expr("(r * o.w) div tw").as("x")))
-          .select(col("vx"), col("adj"), col("tw"), col("dang"), col("isw"),
-            (lit(tele) * col("isw") + expr(
-              s"(85 * (coalesce(x, 0) + isw * ${dm / k})) div 100")).as("r")),
+      val (nxt, obs) = Checkpoints.checkpointObserved(round(cur, r, dm))(
         coalesce(sum(when(col("dang"), col("r"))), lit(0L)).as("dm"))
-      Checkpoints.release(st)
-      st = nxt
+      if (cur ne st.frame) Checkpoints.release(cur)
+      cur = nxt
       r = col("r")
       dm = obs.getLong(0)
       i += 1
     }
-    st.select(col("vx").as("v"), r.as("rank_scaled"))
+    val ranked = if (iters >= 1) round(cur, r, dm) else cur.withColumn("r", r)
+    ranked.select(col("vx").as("v"), col("r").as("rank_scaled"))
   }
 
   /** One message-passing superstep over a vertex state `st` keyed by
@@ -1599,40 +1618,60 @@ object Graph {
     * sums are ≤ maxdeg · scale and the rescale multiply is
     * ≤ maxdeg · scale² — scale 1e6 holds to maxdeg ~9e6.
     *
-    * Scale shape: one checkpoint of the vertex state (vx, outs, ins),
-    * one exchange — the two sets do the edge dedup — then each
-    * half-round is ONE [[superstep]] and ONE checkpoint: every vertex
-    * sends its rescaled hub value along `outs` (or its authority along
-    * `ins`), with the previous total a literal, and the group sums the
-    * raw `a` (or `h`) column while the other one rides along. Each
-    * checkpoint observes its own L1 total for the next half-round
-    * ([[Checkpoints.checkpointObserved]]: no scalar aggregate,
-    * broadcast cross join or driver collect). Round 0's hub weights
-    * are the literal `scale`. The result rescales the last state's
-    * raw columns — sources (no in-edges) get authority 0, sinks hub 0,
-    * exactly as in the float formulation — and leaves that one block
-    * live (the harness's `releaseAll` drops it); every superseded
-    * state is released eagerly. */
+    * Scale shape: [[hitsState]], then [[hitsRounds]]. */
   def hitsInt(edges: DataFrame, src: String = "src", dst: String = "dst",
-              iters: Int = 2, scale: Long = 1000000L): DataFrame = {
-    require(iters >= 1, "hitsInt needs at least one iteration")
+              iters: Int = 2, scale: Long = 1000000L): DataFrame =
+    hitsRounds(hitsState(edges, src, dst), iters, scale)
+
+  /** The vertex state of the HITS rounds over the directed edges
+    * (src → dst): one row per vertex, (vx, outs, ins), one exchange
+    * and one eager checkpoint, pinned when `pin`, observing n (the
+    * rounds read no scalar of it). Self-loops and null endpoints drop;
+    * the two sets do the edge dedup. */
+  def hitsState(edges: DataFrame, src: String = "src", dst: String = "dst",
+                pin: Boolean = false): VertexState = {
     val e = edges.select(col(src).as("s"), col(dst).as("d"))
       .filter(col("s").isNotNull && col("d").isNotNull && col("s") =!= col("d"))
     val none = lit(null).cast(e.schema("s").dataType)
-    var st = Checkpoints.checkpoint(
+    val (frame, vs) = Checkpoints.checkpointObserved(
       e.select(col("s").as("vx"), col("d").as("o"), none.as("i"))
         .union(e.select(col("d").as("vx"), none.as("o"), col("s").as("i")))
         .groupBy(col("vx"))
-        .agg(collect_set(col("o")).as("outs"), collect_set(col("i")).as("ins")))
+        .agg(collect_set(col("o")).as("outs"), collect_set(col("i")).as("ins")),
+      pin)(count(lit(1)).as("n"))
+    VertexState(frame, vs.getLong(0), 0L, vs.getLong(0))
+  }
+
+  /** The half-rounds of [[hitsInt]] over a [[hitsState]].
+    *
+    * Scale shape: each half-round is ONE [[superstep]] and ONE
+    * checkpoint over the vertex state: every vertex sends its rescaled
+    * hub value along `outs` (or its authority along `ins`), with the
+    * previous total a literal, and the group sums the raw `a` (or `h`)
+    * column while the other one rides along. Each checkpoint observes
+    * its own L1 total for the next half-round
+    * ([[Checkpoints.checkpointObserved]]: no scalar aggregate,
+    * broadcast cross join or driver collect); the last one's total
+    * rescales the hubs, so every half-round is materialized. Round 0's
+    * hub weights are the literal `scale`. The result rescales the last
+    * state's raw columns — sources (no in-edges) get authority 0, sinks
+    * hub 0, exactly as in the float formulation — and leaves that one
+    * block live (the harness's `releaseAll` drops it); every
+    * superseded state the loop created is released eagerly, the given
+    * state never. */
+  def hitsRounds(st: VertexState, iters: Int = 2,
+                 scale: Long = 1000000L): DataFrame = {
+    require(iters >= 1, "hitsInt needs at least one iteration")
+    var cur = st.frame
     // every vertex sends `x` along its `along` set; the receivers' sums
     // become raw column `raw`, returned with their L1 total
     def half(along: String, x: Column, raw: String): Long = {
       val (nxt, tot) = Checkpoints.checkpointObserved(
-        superstep(st, raw, st.select(explode(col(along)).as("vx"), x.as("x")))
-          .withColumnRenamed("x", raw),
+        superstep(cur, raw, cur.select(explode(col(along)).as("vx"), x.as("x")))
+          .withColumnRenamed("x", raw))(
         coalesce(sum(col(raw)), lit(0L)).as("tot"))
-      Checkpoints.release(st)
-      st = nxt
+      if (cur ne st.frame) Checkpoints.release(cur)
+      cur = nxt
       val t = tot.getLong(0)
       if (t == 0L) 1L else t
     }
@@ -1644,7 +1683,7 @@ object Graph {
       ht = half("ins", rescaled("a", at), "h")
       i += 1
     }
-    st.select(col("vx").as("v"),
+    cur.select(col("vx").as("v"),
       rescaled("coalesce(a, 0)", at).as("authority"),
       rescaled("coalesce(h, 0)", ht).as("hub"))
   }

@@ -170,6 +170,46 @@ class GraphPropertySpec extends AnyFunSuite with SparkTestBase {
     graft.Checkpoints.releaseAll(spark)
   }
 
+  test("one pinned vertex state serves repeated executions at iters 1 to 3, " +
+       "equal to the edges form term for term, also after releaseAll") {
+    val rows = randomDigraph(new scala.util.Random(43), nV = 18, nE = 40)
+    val df = rows.toDF("src", "dst", "w")
+    val seeds = rows.flatMap(r => Seq(r._1, r._2)).distinct.sorted.take(3)
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long)].collect().toMap
+    def hits(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    def pinned = graft.Checkpoints.trackedCount(spark) -
+      graft.Checkpoints.trackedCount(spark, includePinned = false)
+    val pinnedBefore = pinned
+    val weighted = Graph.pageRankState(df, weightCol = "w", pin = true)
+    val personalized = Graph.pageRankState(df, seeds = Some(seeds), pin = true)
+    val hubs = Graph.hitsState(df, pin = true)
+    try {
+      // a lazy last round that reads the pinned state directly, run
+      // only after the rounds' own blocks are released
+      val oneRound = Graph.pageRankRounds(weighted, iters = 1)
+      (1 to 2).foreach { pass =>
+        (1 to 3).foreach { iters =>
+          val at = s"pass $pass, iters $iters"
+          assert(ranks(Graph.pageRankRounds(weighted, iters)) ==
+            ranks(Graph.pageRankDirectedInt(df, iters = iters, weightCol = "w")),
+            s"weighted, $at")
+          assert(ranks(Graph.pageRankRounds(personalized, iters)) ==
+            ranks(Graph.pageRankPersonalizedInt(df, seeds, iters = iters)),
+            s"personalized, $at")
+          assert(hits(Graph.hitsRounds(hubs, iters)) ==
+            hits(Graph.hitsInt(df, iters = iters)), s"hits, $at")
+        }
+        graft.Checkpoints.releaseAll(spark)
+        assert(pinned == pinnedBefore + 3, s"pass $pass")
+      }
+      assert(ranks(oneRound) == replayPageRank(rows, None, 1, 1000000000000L))
+    } finally Seq(weighted, personalized, hubs)
+      .foreach(st => graft.Checkpoints.release(st.frame))
+    assert(pinned == pinnedBefore)
+  }
+
   test("connectedComponents agrees with union-find on random graphs") {
     val rnd = new scala.util.Random(7)
     (1 to 3).foreach { trial =>
