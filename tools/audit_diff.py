@@ -34,8 +34,9 @@ KEYS = ("rt_jobs", "rt_stages", "shuffles", "bhj", "smj", "shj", "nlj")
 # two audits of the same code (ROADMAP, "Executed-counter jitter"). A
 # change on one of them alone says nothing about the code; they stay in
 # "changed" and are also listed in "changed_known_jitter".
-KNOWN_JITTER = ("q26", "q99", "q156", "q157", "q160", "q182", "q188",
-                "q199", "q220", "q221", "q236", "q251")
+KNOWN_JITTER = ("q26", "q99", "q102", "q123", "q156", "q157", "q160",
+                "q182", "q188", "q199", "q220", "q221", "q236", "q250",
+                "q251")
 
 
 def jitter_prone(q):
