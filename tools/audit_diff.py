@@ -30,8 +30,8 @@ import sys
 
 KEYS = ("rt_jobs", "rt_stages", "shuffles", "bhj", "smj", "shj", "nlj")
 
-# Queries whose executed counters differ by +-1 job or shuffle between
-# two audits of the same code (ROADMAP, "Executed-counter jitter"). A
+# Queries whose executed counters differ by a job or shuffle or two
+# between two audits of the same code (ROADMAP, "Executed-counter jitter"). A
 # change on one of them alone says nothing about the code; they stay in
 # "changed" and are also listed in "changed_known_jitter".
 KNOWN_JITTER = ("q26", "q99", "q102", "q123", "q156", "q157", "q160",
