@@ -303,8 +303,7 @@ object ScaleProbe {
             w => concat(w, lit(s"_$k")))).as("text"))
       }.reduce(_ union _).localCheckpoint()
       def er(d: DataFrame) = time(
-        Dedup.resolveEntities(d, "doc_id", "text", 0.8,
-          starComponents = true).count())
+        Dedup.resolveEntities(d, "doc_id", "text", 0.8).count())
       er(docs); er(docs10) // codegen warmup at both sizes (see below)
       val (eb, _) = er(docs); val (eB, nE) = er(docs10)
       println(f"[probe] entity-res:  $eb%.1fs -> $eB%.1fs (${eB / eb}%.1fx, $nE docs grouped, data 10x)")

@@ -676,27 +676,19 @@ object Dedup {
     * Returns (id, canonical_id): every document mapped to its duplicate
     * -cluster representative (itself when unique). Each stage is a
     * bounded-fanout dataflow; the only iteration is component
-    * propagation.
-    *
-    * `starComponents = true` routes clustering through
-    * [[Graph.connectedComponentsStar]] (large-star/small-star,
-    * O(log n) rounds) — THE 100 TB path when duplicate clusters can
-    * chain (propagation's round count is the cluster diameter, which
-    * long chains of pairwise-similar docs make unbounded). The default
-    * stays label propagation: near-dup clusters are usually
-    * small-diameter, where its per-round cost wins. Both paths return
-    * identical labels (min id per component) — DedupSpec asserts it. */
+    * propagation, by [[Graph.connectedComponentsStar]] (large-star/
+    * small-star, O(log n) rounds): duplicate clusters can chain, and
+    * min-label propagation's round count is the cluster diameter. Its
+    * labels are the min id per component, as propagation's would be
+    * (DedupSpec asserts it on the fixture). */
   def resolveEntities(df: DataFrame, idCol: String, textCol: String,
-                      minJaccard: Double = 0.8,
-                      starComponents: Boolean = false): DataFrame = {
+                      minJaccard: Double = 0.8): DataFrame = {
     // checkpointed: the component loop's guards would otherwise
     // re-run the whole PPJoin subtree every round
     val verified = graft.Checkpoints.checkpoint(
       ngramJaccardPairs(df, idCol, textCol, 3, minJaccard)
         .select(col("id_a"), col("id_b")))
-    val comps =
-      if (starComponents) Graph.connectedComponentsStar(verified, "id_a", "id_b")
-      else Graph.connectedComponents(verified, "id_a", "id_b")
+    val comps = Graph.connectedComponentsStar(verified, "id_a", "id_b")
     df.select(col(idCol))
       .join(comps, df(idCol) === comps("v"), "left")
       .select(col(idCol),

@@ -12,19 +12,22 @@ import graft.Strings.jsonEscape
   * round-trips (its author flags that as the scalability bug,
   * `StaticNet.scala:337-345`).
   *
-  * Scale design shared by all three loops:
-  *  - state lives in DataFrames keyed by vertex — shuffles partition by
-  *    vertex id, never collect to the driver;
-  *  - `localCheckpoint` every iteration cuts the lineage chain (an
-  *    unchecked iterative plan grows exponentially in Catalyst), and
-  *    each superseded round's blocks are released as soon as the next
-  *    round materializes ([[graft.Checkpoints]]) — the loop retains at
-  *    most two rounds of state, not O(iterations) pinned RDDs;
-  *  - iteration counts are bounded: hierarchy depth for closure, BFS
-  *    depth, and component diameter for label propagation (dedup
-  *    clusters are near-cliques, so 3-5 rounds suffice; a general
-  *    100 TB graph swaps in [[connectedComponentsStar]], the
-  *    O(log n)-round large-star/small-star contraction).
+  * Scale design: state lives in DataFrames keyed by vertex — shuffles
+  * partition by vertex id, never collect to the driver — and the
+  * closure, component, distance, arrival, generation, peel and
+  * core-number loops run under the one [[fixpoint]] loop:
+  *  - each round is one eager `localCheckpoint` (lineage truncation:
+  *    an unchecked iterative plan grows exponentially in Catalyst) that
+  *    also observes the loop's convergence scalar
+  *    ([[Checkpoints.checkpointObserved]]) — no separate `count()` job;
+  *  - each superseded round is released as soon as its successor is
+  *    materialized, so a loop retains at most two rounds of state; the
+  *    frame a loop is given is never released (its caller owns it);
+  *  - every loop has a round cap, and returns whether it converged, so
+  *    a caller that needs the fixpoint can require it.
+  * A neighbour-aggregate round is one [[superstep]] over a vertex state
+  * that carries its adjacency and a `changed` flag ([[relax]]): only
+  * changed vertices send, one exchange per round.
   */
 object Graph {
 
@@ -42,34 +45,25 @@ object Graph {
     *
     * Self-loops are dropped up front (the reference defends against
     * `parent == fieldId` cycles, `App.scala:28-31`); other cycles are
-    * cut by the iteration bound. */
+    * cut by the iteration bound.
+    *
+    * Scale shape: a [[fixpoint]] of [[relax]] rounds over a vertex state
+    * (node, its children, anc): after k rounds anc(v) is v's k-th
+    * ancestor, and anc_{k+1}(v) = anc_k(parent(v)), so each node sends
+    * its anc to its children — one exchange per round, the moved-node
+    * count observed on the round's checkpoint. */
   def rootClosure(edges: DataFrame, child: String = "child",
                   parent: String = "parent", maxIter: Int = 20): DataFrame = {
-    val e = Checkpoints.checkpoint(edges.filter(col(child) =!= col(parent))
-      .select(col(child).as("c"), col(parent).as("p"))
-      .groupBy(col("c")).agg(min(col("p")).as("p"))) // functional: one parent per child
-    // start: every node that appears anywhere, pointing at itself
-    var cur = e.select(col("c").as("node")).union(e.select(col("p")))
-      .distinct().withColumn("anc", col("node"))
-    var prevCp: DataFrame = null
-    var i = 0
-    var moved = 1L
-    while (i < maxIter && moved > 0) {
-      val nxt = Checkpoints.checkpoint(cur.join(e, cur("anc") === e("c"), "left")
-        .select(col("node"),
-          coalesce(col("p"), col("anc")).as("anc"),
-          (col("p").isNotNull && col("p") =!= col("anc")).as("changed")))
-      moved = nxt.filter(col("changed")).count()
-      if (prevCp != null) Checkpoints.release(prevCp) // superseded round
-      prevCp = nxt
-      cur = nxt.drop("changed")
-      i += 1
-    }
-    // after >=1 round `cur`'s lineage is truncated at its checkpoint and
-    // no longer reads `e` — release it; the final round stays tracked
-    // for the caller's releaseAll once results are consumed
-    if (prevCp != null) Checkpoints.release(e)
-    cur.select(col("node"), col("anc").as("root"))
+    val e = edges.filter(col(child) =!= col(parent))
+      .groupBy(col(child).as("c")).agg(min(col(parent)).as("p")) // functional: one parent per child
+    val kids = e.select(col("c").as("vx"), lit(null).cast(e.schema("c").dataType).as("k"))
+      .union(e.select(col("p").as("vx"), col("c").as("k")))
+      .groupBy(col("vx")).agg(collect_list(col("k")).as("kids"))
+    fixpoint(kids.select(col("vx"), col("kids"), col("vx").as("anc"),
+        lit(true).as("changed")), maxIter) { st =>
+      relax(st, "anc", min,
+        _.select(explode(col("kids")).as("vx"), col("anc").as("x")))(_ =!= _)
+    }._1.select(col("vx").as("node"), col("anc").as("root"))
   }
 
   /** Ego BFS to `depth` over undirected edges (G5 — the reference's
@@ -419,61 +413,35 @@ object Graph {
     * CTEs (the q87/q98 discipline applied to path costs — float
     * shortest paths never hash-match cross-engine).
     *
-    * The distance frontier is kept SPARSE (only reached vertices carry
-    * a row — no INF sentinels), so each round is one keyed join +
-    * union + groupBy-min over the reached set, checkpointed with eager
-    * release like every loop here. Fixed `rounds` (a query parameter,
-    * like PageRank's iteration count) rather than a convergence guard:
-    * distances are exact for every vertex within `rounds` hops of the
-    * source, and the oracle unrolls the same count.
-    * At 100 TB this is the standard ~diameter-bounded relaxation; a
-    * full-convergence variant would add the cached-count guard used by
-    * [[kCore]]. Returns (v, dist) for vertices reached within
+    * Fixed `rounds` (a query parameter, like PageRank's iteration
+    * count) rather than a convergence guard: distances are exact for
+    * every vertex within `rounds` hops of the source, and the oracle
+    * unrolls the same count. Once no distance changes, every remaining
+    * round is an identity, so the loop stops early with the same result.
+    *
+    * Scale shape: a [[fixpoint]] of [[relax]] rounds over a vertex state
+    * (v, adjacency with weights, dist, changed); an unreached vertex
+    * has a null dist, and only vertices whose distance changed relax
+    * their edges. Returns (v, dist) for vertices reached within
     * `rounds` hops (source included at dist 0). */
   def shortestPathsInt(edges: DataFrame, source: Long, rounds: Int,
                        a: String = "a", b: String = "b",
                        w: String = "w"): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val sym = Checkpoints.checkpoint(
-      edges.select(col(a).as("u"), col(b).as("v"), col(w).cast("long").as("wt"))
-        .union(edges.select(col(b).as("u"), col(a).as("v"),
-          col(w).cast("long").as("wt")))
-        .filter(col("u") =!= col("v") && col("wt") >= 0L)
-        .groupBy(col("u"), col("v")).agg(min(col("wt")).as("wt")))
-    var dist = Checkpoints.checkpoint(Seq((source, 0L)).toDF("v", "dist"))
-    // DELTA FRONTIER — same argument as [[earliestArrival]]: a vertex
-    // whose tentative distance did not change last round re-produces
-    // last round's candidates verbatim, which the min-merge already
-    // absorbed, so relaxing only the changed set leaves every
-    // per-round state IDENTICAL while the edge-join probe shrinks as
-    // labels settle. Rounds are caller-fixed, but once the delta is
-    // empty every remaining round is an identity, so the loop exits
-    // early with the exact same `dist` the full unroll would return.
-    var delta = dist
-    var i = 0
-    while (i < rounds) {
-      val relaxed = delta.alias("dd").join(sym.alias("ss"),
-          col("dd.v") === col("ss.u"))
-        .select(col("ss.v").as("v"),
-          (col("dd.dist") + col("ss.wt")).as("dist"))
-      val next = Checkpoints.checkpoint(
-        dist.select(col("v"), col("dist")).union(relaxed)
-          .groupBy(col("v")).agg(min(col("dist")).as("dist")))
-      val nd = Checkpoints.checkpoint(
-        next.alias("nn").join(dist.alias("oo"),
-            col("nn.v") === col("oo.v"), "left")
-          .filter(col("oo.v").isNull || col("nn.dist") < col("oo.dist"))
-          .select(col("nn.v").as("v"), col("nn.dist").as("dist")))
-      if (delta ne dist) Checkpoints.release(delta)
-      Checkpoints.release(dist)
-      dist = next
-      delta = nd
-      i = if (nd.isEmpty) rounds else i + 1
-    }
-    if (delta ne dist) Checkpoints.release(delta)
-    Checkpoints.release(sym)
-    dist
+    val sym = edges.select(col(a).as("u"), col(b).as("v"), col(w).cast("long").as("wt"))
+      .union(edges.select(col(b).as("u"), col(a).as("v"), col(w).cast("long").as("wt")))
+      .filter(col("u") =!= col("v") && col("wt") >= 0L)
+      .groupBy(col("u"), col("v")).agg(min(col("wt")).as("wt"))
+      .select(col("u").as("vx"), struct(col("v"), col("wt")).as("o"),
+        lit(null).cast("long").as("dist"))
+    val st = sym.union(Seq(source).toDF("vx").select(col("vx"),
+        lit(null).cast(sym.schema("o").dataType).as("o"), lit(0L).as("dist")))
+      .groupBy(col("vx")).agg(collect_list(col("o")).as("adj"), min(col("dist")).as("dist"))
+    fixpoint(st.withColumn("changed", col("dist").isNotNull), rounds) { cur =>
+      relax(cur, "dist", min, _.select(explode(col("adj")).as("o"), col("dist"))
+        .select(col("o.v").as("vx"), (col("dist") + col("o.wt")).as("x")))(_ < _)
+    }._1.filter(col("dist").isNotNull).select(col("vx").as("v"), col("dist"))
   }
 
   /** TEMPORAL (time-respecting) EARLIEST-ARRIVAL reachability — the
@@ -489,11 +457,15 @@ object Graph {
     * everything") on the sources, each round relaxes every edge whose
     * timestamp is ≥ its tail's arrival and keeps the per-vertex MIN;
     * labels only decrease and the edge set only widens as labels
-    * drop, so the fixpoint is the true earliest arrival and the
-    * cheap (count, sum) signature detects it (the kCore cached-guard
-    * convention). Rounds ≤ the longest foremost journey's hop count.
-    * Edges are treated as undirected (both traversal directions at
-    * the edge's timestamp).
+    * drop, so the fixpoint is the true earliest arrival. Rounds ≤ the
+    * longest foremost journey's hop count. Edges are treated as
+    * undirected (both traversal directions at the edge's timestamp).
+    *
+    * Scale shape: a [[fixpoint]] of [[relax]] rounds over a vertex state
+    * (v, timestamped adjacency, arrival, changed): only vertices whose
+    * arrival changed relax their edges, and the round with no change
+    * ends the loop; an unconverged loop fails rather than return
+    * incomplete arrivals.
     *
     * Returns (v, arrival) for every temporally reachable vertex;
     * sources carry the -1 sentinel. */
@@ -503,90 +475,46 @@ object Graph {
     require(sources.nonEmpty, "at least one source")
     val spark = edges.sparkSession
     import spark.implicits._
-    val sym = Checkpoints.checkpoint(
-      edges.select(col(a).cast("long").as("u"), col(b).cast("long").as("v"),
-          col(ts).cast("long").as("t"))
-        .union(edges.select(col(b).cast("long").as("u"),
-          col(a).cast("long").as("v"), col(ts).cast("long").as("t")))
-        .filter(col("u") =!= col("v") && col("t").isNotNull)
-        .distinct())
-    var arr = Checkpoints.checkpoint(
-      sources.distinct.map(s => (s, -1L)).toDF("v", "arrival"))
-    // DELTA FRONTIER (guide §2.3 shuffle fewer bytes / §2.4): only
-    // vertices whose label CHANGED last round can produce a candidate
-    // the min-merge hasn't already absorbed — if arrival(u) is
-    // unchanged, u's edge relaxations this round are byte-identical to
-    // last round's, which round r−1 already merged. Relaxing the delta
-    // instead of the full label set leaves every per-round state
-    // IDENTICAL (monotone-min induction), but the edge-scale join
-    // probe shrinks from |reached| to |frontier|, which collapses as
-    // the fixpoint nears. Stability ≡ empty delta, replacing the old
-    // (count, sum) signature scalar — same round count, same result.
-    var delta = arr
-    var stable = false
-    var i = 0
-    while (!stable && i < maxIter) {
-      val relaxed = delta.alias("aa").join(sym.alias("ss"),
-          col("aa.v") === col("ss.u") && col("ss.t") >= col("aa.arrival"))
-        .select(col("ss.v").as("v"), col("ss.t").as("arrival"))
-      val next = Checkpoints.checkpoint(
-        arr.union(relaxed).groupBy(col("v"))
-          .agg(min(col("arrival")).as("arrival")))
-      val nd = Checkpoints.checkpoint(
-        next.alias("nn").join(arr.alias("oo"),
-            col("nn.v") === col("oo.v"), "left")
-          .filter(col("oo.v").isNull ||
-            col("nn.arrival") < col("oo.arrival"))
-          .select(col("nn.v").as("v"), col("nn.arrival").as("arrival")))
-      stable = nd.isEmpty
-      if (delta ne arr) Checkpoints.release(delta)
-      Checkpoints.release(arr)
-      arr = next
-      delta = nd
-      i += 1
+    val sym = edges.select(col(a).cast("long").as("u"), col(b).cast("long").as("v"),
+        col(ts).cast("long").as("t"))
+      .union(edges.select(col(b).cast("long").as("u"),
+        col(a).cast("long").as("v"), col(ts).cast("long").as("t")))
+      .filter(col("u") =!= col("v") && col("t").isNotNull)
+      .select(col("u").as("vx"), struct(col("v"), col("t")).as("o"),
+        lit(null).cast("long").as("arrival"))
+    val st = sym.union(sources.distinct.toDF("vx").select(col("vx"),
+        lit(null).cast(sym.schema("o").dataType).as("o"), lit(-1L).as("arrival")))
+      .groupBy(col("vx")).agg(collect_set(col("o")).as("adj"), min(col("arrival")).as("arrival"))
+    val (arr, converged) = fixpoint(
+        st.withColumn("changed", col("arrival").isNotNull), maxIter) { cur =>
+      relax(cur, "arrival", min, _.select(explode(col("adj")).as("o"), col("arrival"))
+        .filter(col("o.t") >= col("arrival"))
+        .select(col("o.v").as("vx"), col("o.t").as("x")))(_ < _)
     }
-    if (delta ne arr) Checkpoints.release(delta)
-    Checkpoints.release(sym)
-    // a silent non-fixpoint would return quietly incomplete arrivals —
-    // same discipline as the SCC outer require
-    require(stable,
+    require(converged,
       s"earliestArrival did not converge in $maxIter rounds " +
         "(a foremost journey is longer) — raise maxIter")
-    arr
+    arr.filter(col("arrival").isNotNull).select(col("vx").as("v"), col("arrival"))
   }
 
   /** Connected components by min-label propagation — the clustering
     * step of duplicate-entity resolution (SURVEY.md §2.11): candidate
     * pairs from LSH become edges, components become entity groups.
-    * Returns (vertex, component = min vertex id in component). */
+    * Returns (vertex, component = min vertex id in component).
+    *
+    * Scale shape: a [[fixpoint]] of [[relax]] rounds over a vertex state
+    * (v, neighbours, comp): a vertex whose label dropped sends it to its
+    * neighbours, one exchange per round. */
   def connectedComponents(edges: DataFrame, a: String = "a",
                           b: String = "b", maxIter: Int = 15): DataFrame = {
-    val sym = Checkpoints.checkpoint(edges.select(col(a).as("s"), col(b).as("d"))
-      .union(edges.select(col(b).as("s"), col(a).as("d")))
-      .distinct())
-    var lbl = sym.select(col("s").as("v")).distinct()
-      .withColumn("comp", col("v"))
-    var prevCp: DataFrame = null
-    var i = 0
-    var moved = 1L
-    while (i < maxIter && moved > 0) {
-      val nbrMin = sym.join(lbl, sym("d") === lbl("v"))
-        .groupBy(col("s")).agg(min(col("comp")).as("nbr_comp"))
-      val nxt = Checkpoints.checkpoint(
-        lbl.join(nbrMin, lbl("v") === nbrMin("s"), "left")
-          .select(col("v"),
-            least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"),
-            (coalesce(col("nbr_comp"), col("comp")) < col("comp")).as("changed")))
-      moved = nxt.filter(col("changed")).count()
-      if (prevCp != null) Checkpoints.release(prevCp) // superseded round
-      prevCp = nxt
-      lbl = nxt.drop("changed")
-      i += 1
-    }
-    // the final label set no longer reads `sym` once checkpointed; the
-    // last round itself stays tracked for the caller's releaseAll
-    if (prevCp != null) Checkpoints.release(sym)
-    lbl
+    val st = edges.select(col(a).as("vx"), col(b).as("d"))
+      .union(edges.select(col(b).as("vx"), col(a).as("d")))
+      .groupBy(col("vx")).agg(collect_set(col("d")).as("nbrs"))
+    fixpoint(st.select(col("vx"), col("nbrs"), col("vx").as("comp"),
+        lit(true).as("changed")), maxIter) { cur =>
+      relax(cur, "comp", min,
+        _.select(explode(col("nbrs")).as("vx"), col("comp").as("x")))(_ < _)
+    }._1.select(col("vx").as("v"), col("comp"))
   }
 
   /** Approximate Neighborhood Function via mergeable KMV registers —
@@ -659,16 +587,15 @@ object Graph {
     * set: large-star rewires every neighbor v > u to m(u); small-star
     * rewires every v <= u (and u itself) to m(u). At the fixed point
     * the edges form stars whose centers are the component minima.
-    * Each phase is one groupBy(min) + one join, all keyed by vertex —
-    * the same shuffle discipline as every other loop here.
+    * Each phase is one groupBy(min) + one join, all keyed by vertex;
+    * a round (both phases) is one [[fixpoint]] checkpoint observing the
+    * edge count.
     *
     * Returns (v, comp = min vertex id in component). */
   def connectedComponentsStar(edges: DataFrame, a: String = "a",
                               b: String = "b", maxIter: Int = 25): DataFrame = {
     val verts = Checkpoints.checkpoint(edges.select(col(a).as("v"))
       .union(edges.select(col(b).as("v"))).distinct())
-    var e = Checkpoints.checkpoint(edges.select(col(a).as("u"), col(b).as("v"))
-      .filter(col("u") =!= col("v")).distinct())
 
     def phase(ed: DataFrame, large: Boolean): DataFrame = {
       val sym = ed.union(ed.select(col("v").as("u"), col("u").as("v")))
@@ -682,26 +609,15 @@ object Graph {
         .select(col("v").as("u"), col("m").as("v"))
       val kept = if (large) rewired
         else rewired.union(mins.select(col("mu").as("u"), col("m").as("v")))
-      // checkpointed: the fixpoint guard below EXECUTES every round
-      // (count + except)
-      Checkpoints.checkpoint(kept.filter(col("u") =!= col("v")).distinct())
+      kept.filter(col("u") =!= col("v")).distinct()
     }
 
-    var i = 0
-    var stable = false
-    var eCount = e.count() // carried across rounds: one count job per round
-    while (i < maxIter && !stable) {
-      val mid = phase(e, large = true)
-      val next = phase(mid, large = false)
-      Checkpoints.release(mid) // large-star result superseded by `next`
-      // fixed point: identical edge sets — except() runs only on the
-      // rounds where the cheap cached-count guard already matches
-      val nextCount = next.count()
-      stable = nextCount == eCount && next.except(e).isEmpty
-      Checkpoints.release(e) // superseded round (after the except above)
-      e = next
-      eCount = nextCount
-      i += 1
+    // fixed point: identical edge sets — except() runs only on the
+    // rounds whose observed edge count already matches
+    val (e, _) = fixpoint(edges.select(col(a).as("u"), col(b).as("v"))
+        .filter(col("u") =!= col("v")).distinct(), maxIter, count(lit(1)),
+      (p, n) => n.m == p.m && n.frame.except(p.frame).isEmpty) { cur =>
+      phase(phase(cur, large = true), large = false)
     }
     // stars: every non-center u points at its component min (min-agg is
     // defensive for an early maxIter stop mid-contraction)
@@ -719,25 +635,11 @@ object Graph {
     * so the loop takes max(fwd, bwd) convergence rounds instead of
     * their sum and half the per-round scheduling. Returns
     * (v, f = dir-0 min, b = dir-1 min). */
-  // debug-only wall clock for the sccDebug traces (no effect otherwise)
-  private val sccT0 = new java.util.concurrent.atomic.AtomicLong(0L)
-  private def sccMs: Long = {
-    sccT0.compareAndSet(0L, System.nanoTime())
-    (System.nanoTime() - sccT0.get()) / 1000000L
-  }
-
   private def minReachBoth(verts: DataFrame, edges: DataFrame,
                            maxIter: Int): DataFrame = {
     val e2 = edges.select(col("s"), col("d"), lit(0).as("dir"))
       .union(edges.select(col("d").as("s"), col("s").as("d"),
         lit(1).as("dir")))
-    // lblCp stays the BARE checkpoint so releases are real (a release
-    // on a projection over it would be a structural no-op)
-    var lblCp = Checkpoints.checkpoint(
-      verts.select(col("v"), explode(array(lit(0), lit(1))).as("dir"))
-        .withColumn("m", col("v")).withColumn("changed", lit(false)))
-    var moved = 1L
-    var i = 0
     // SHORTCUTTING (pointer jumping on the label relation): the
     // current label m(v) is by invariant a vertex that reaches v
     // (dir-adjusted), and reachability is transitive, so (m → v) is
@@ -761,35 +663,29 @@ object Graph {
           least(col("lb.m"), coalesce(col("pm"), col("lb.m"))).as("m"),
           col("lb.m0").as("m0"))
     }
-    // TWO steps per checkpointed round: the checkpoint + count fixed
-    // cost (the dominant per-round cost of a Spark fixpoint) is paid
-    // once per two propagation steps; `m0` carries the round-start
-    // label so `changed` is still exact.
-    while (moved > 0 && i < maxIter) {
-      val l0 = lblCp.drop("changed").withColumn("m0", col("m"))
-      val l2 = step(step(l0))
-      val nxt = Checkpoints.checkpoint(
-        l2.select(col("v"), col("dir"), col("m"),
-          (col("m") < col("m0")).as("changed")))
-      moved = nxt.filter(col("changed")).count()
-      if (java.lang.Boolean.getBoolean("graft.sccDebug"))
-        System.err.println(s"[scc +${sccMs}ms]   reach round=$i moved=$moved")
-      Checkpoints.release(lblCp)
-      lblCp = nxt
-      i += 1
+    // TWO steps per [[fixpoint]] round: the checkpoint fixed cost (the
+    // dominant per-round cost of a Spark fixpoint) is paid once per two
+    // propagation steps; `m0` carries the round-start label so
+    // `changed` is still exact.
+    val (lbl, converged) = fixpoint(
+        verts.select(col("v"), explode(array(lit(0), lit(1))).as("dir"))
+          .withColumn("m", col("v")).withColumn("changed", lit(true)),
+        maxIter) { cur =>
+      step(step(cur.drop("changed").withColumn("m0", col("m"))))
+        .select(col("v"), col("dir"), col("m"), (col("m") < col("m0")).as("changed"))
     }
     // unconverged f/b labels could settle vertices into WRONG SCCs
     // while still draining nActive — the outer require would not catch
     // it, so the fixpoint itself must assert (shortcutting makes
     // maxIter rounds unreachable in practice; the guard is free)
-    require(moved == 0,
+    require(converged,
       s"SCC reachability coloring did not converge in $maxIter rounds " +
         "— raise maxInner")
     val out = Checkpoints.checkpoint(
-      lblCp.groupBy(col("v"))
+      lbl.groupBy(col("v"))
         .agg(min(when(col("dir") === 0, col("m"))).as("f"),
           min(when(col("dir") === 1, col("m"))).as("b")))
-    Checkpoints.release(lblCp)
+    Checkpoints.release(lbl)
     out
   }
 
@@ -907,9 +803,6 @@ object Graph {
       val stats = nf.agg(count(lit(1)), coalesce(max(col("hop")), lit(0L))).head
       n = stats.getLong(0)
       lastHop = stats.getLong(1)
-      if (java.lang.Boolean.getBoolean("graft.sccDebug"))
-        System.err.println(
-          s"[scc +${sccMs}ms]   pivot bfs round=$i new=$n lastHop=$lastHop")
       if (n > 0) {
         // stripConstraints: the checkpoints carry inferred constraints
         // over projected-away attributes that crash
@@ -955,9 +848,6 @@ object Graph {
         }
         val keep = pivots.map(find).distinct
         if (keep.length < pivots.length) {
-          if (java.lang.Boolean.getBoolean("graft.sccDebug"))
-            System.err.println(
-              s"[scc +${sccMs}ms]   wave dedupe ${pivots.length}->${keep.length}")
           val nr = Checkpoints.checkpoint(
             reached.filter(col("p").isin(keep: _*)))
           val nfr = Checkpoints.checkpoint(
@@ -1002,10 +892,6 @@ object Graph {
                                           maxInner: Int,
                                           pivotFastPath: Boolean,
                                           numPivots: Int): DataFrame = {
-    if (java.lang.Boolean.getBoolean("graft.sccDebug")) {
-      sccT0.set(System.nanoTime()) // per-run epoch, not per-JVM
-      System.err.println(s"[scc +${sccMs}ms] enter")
-    }
     // checkpoint the RAW edge projection once: `active` and `verts`
     // both derive from it, and the input subtree (e.g. a window over
     // the co-ship spine) must not execute twice
@@ -1042,8 +928,6 @@ object Graph {
     }
     var outer = 0
     var nActive = verts.count()
-    if (java.lang.Boolean.getBoolean("graft.sccDebug"))
-      System.err.println(s"[scc +${sccMs}ms] init nActive=$nActive")
     while (nActive > 0 && outer < maxOuter) {
       // The giant-SCC fast path runs INSTEAD of the first trim+color
       // round: the pivot sweeps don't need a trimmed graph (satellites
@@ -1053,32 +937,21 @@ object Graph {
       // fixpoint instead of two.
       val pivotRound = pivotFastPath && outer == 0
       // 1. TRIM to fixpoint: no-in or no-out vertices lie on no cycle.
-      // The peel iterates on the EDGE relation alone (one checkpoint +
-      // one carried count per iteration); every vertex dropped along
-      // the way is settled as a singleton in ONE batch at the end —
-      // per-iteration settle/remove churn was the dominant constant
-      // at fixture scale.
-      var eCount = -1L
-      var prevCount = -2L
-      var t = 0
-      while (!pivotRound && eCount != prevCount && t < maxInner) {
-        val hasIn = active.select(col("d").as("v")).distinct()
-        val hasOut = active.select(col("s").as("v")).distinct()
-        val ok = hasIn.join(hasOut, Seq("v")) // in AND out degree ≥ 1
-        val nxtE = Checkpoints.checkpoint(active
-          .join(ok.select(col("v").as("s")), Seq("s"), "left_semi")
-          .join(ok.select(col("v").as("d")), Seq("d"), "left_semi"))
-        prevCount = if (t == 0) active.count() else eCount
-        eCount = nxtE.count()
-        Checkpoints.release(active)
-        active = nxtE
-        if (java.lang.Boolean.getBoolean("graft.sccDebug"))
-          System.err.println(s"[scc +${sccMs}ms] outer=$outer trim=$t edges=$eCount")
-        t += 1
-      }
-      // alive after the peel = vertices with both directions in the
-      // surviving edge set; everything else is a singleton SCC
+      // The [[peel]] iterates on the EDGE relation alone; every vertex
+      // dropped along the way is settled as a singleton in ONE batch at
+      // the end — per-iteration settle/remove churn was the dominant
+      // constant at fixture scale. Alive after the peel = vertices with
+      // both directions in the surviving edge set; everything else is
+      // a singleton SCC.
       if (!pivotRound) {
+        val kept = peel(active, maxInner) { cur =>
+          val ok = cur.select(col("d").as("v")).distinct() // in AND out degree ≥ 1
+            .join(cur.select(col("s").as("v")).distinct(), Seq("v"))
+          cur.join(ok.select(col("v").as("s")), Seq("s"), "left_semi")
+            .join(ok.select(col("v").as("d")), Seq("d"), "left_semi")
+        }
+        Checkpoints.release(active)
+        active = kept
         val aliveV = Checkpoints.checkpoint(
           active.select(col("d").as("v")).distinct()
             .join(active.select(col("s").as("v")).distinct(), Seq("v")))
@@ -1092,8 +965,6 @@ object Graph {
           verts = aliveV
           nActive -= trimmed
         } else { Checkpoints.release(aliveV); Checkpoints.release(dead) }
-        if (java.lang.Boolean.getBoolean("graft.sccDebug"))
-          System.err.println(s"[scc +${sccMs}ms] outer=$outer trimmed=$trimmed nActive=$nActive")
       }
       if (nActive > 0 && pivotRound) {
         // GIANT-SCC FAST PATH (first round only): tagged frontier
@@ -1110,13 +981,8 @@ object Graph {
           .groupBy(col("v")).agg(count(lit(1)).as("deg"))
           .orderBy(col("deg").desc, col("v")).limit(numPivots)
           .collect().map(_.getLong(0)).toSeq
-        if (java.lang.Boolean.getBoolean("graft.sccDebug"))
-          System.err.println(s"[scc +${sccMs}ms] pivots=${pivots.take(4)}…")
         val settled = pivotScc(pivots, active, maxInner)
         val coreN = settled.count()
-        if (java.lang.Boolean.getBoolean("graft.sccDebug"))
-          System.err.println(
-            s"[scc +${sccMs}ms] outer=$outer pivot cores settled=$coreN")
         settle(settled) // stays alive as a result batch
         removeSettled(settled)
         nActive -= coreN
@@ -1127,8 +993,6 @@ object Graph {
           fb.filter(col("f") === col("b"))
             .select(col("v"), col("f").as("scc_id")))
         val nSettled = settled.count()
-        if (java.lang.Boolean.getBoolean("graft.sccDebug"))
-          System.err.println(s"[scc +${sccMs}ms] outer=$outer colored settled=$nSettled nActive=$nActive")
         Checkpoints.release(fb)
         // ≥ 1 SCC settles per weak component per round (the min-vertex
         // one), so nSettled = 0 only on an empty active set
@@ -1141,8 +1005,6 @@ object Graph {
     require(nActive == 0,
       s"SCC coloring did not converge in $maxOuter outer rounds " +
         s"($nActive vertices unsettled) — raise maxOuter")
-    if (java.lang.Boolean.getBoolean("graft.sccDebug"))
-      System.err.println(s"[scc +${sccMs}ms] return")
     // empty edge list → nothing ever settled; keep the (v, scc_id) shape
     if (batches.isEmpty) verts.select(col("v"), col("v").as("scc_id"))
     else batches.reduce(_ union _)
@@ -1154,47 +1016,33 @@ object Graph {
     * condensation). Iterative monotone Bellman relax as whole-graph
     * dataflow: lvl(v) starts 0 everywhere, each round takes
     * max(lvl(v), max over in-edges (p → v) of lvl(p) + 1). Levels
-    * only INCREASE and are bounded by the DAG depth, so the scalar
-    * sum signature detects the fixpoint in depth+1 rounds; on a
-    * CYCLIC input levels grow without bound and the convergence
-    * require fires — the operator doubles as a cycle detector.
-    * All state vertex-keyed; rounds = depth (small for condensations
-    * of scale-free graphs — the giant core contracts to one vertex).
+    * only INCREASE and are bounded by the DAG depth, so the loop
+    * settles in depth+1 rounds; on a CYCLIC input levels grow without
+    * bound and the convergence require fires — the operator doubles as
+    * a cycle detector. Rounds = depth (small for condensations of
+    * scale-free graphs — the giant core contracts to one vertex).
+    *
+    * Scale shape: a [[fixpoint]] of [[relax]] rounds over a vertex state
+    * (v, out-neighbours, lvl): a vertex whose level rose sends lvl + 1
+    * along its out-edges, and the max wins.
     *
     * Returns (v, generation) for every vertex of the edge list. */
   def dagGenerations(edges: DataFrame, src: String = "src",
                      dst: String = "dst", maxIter: Int = 100): DataFrame = {
-    val e = Checkpoints.checkpoint(
-      edges.select(col(src).cast("long").as("s"),
-        col(dst).cast("long").as("d")).distinct())
-    var lvl = Checkpoints.checkpoint(
-      e.select(col("s").as("v")).union(e.select(col("d").as("v"))).distinct()
-        .withColumn("lvl", lit(0L)))
-    var sumPrev = -1L
-    var stable = false
-    var i = 0
-    while (!stable && i < maxIter) {
-      val relax = e.alias("ee").join(lvl.alias("ll"),
-          col("ee.s") === col("ll.v"))
-        .groupBy(col("ee.d").as("v"))
-        .agg(max(col("ll.lvl") + 1L).as("pl"))
-      val nxt = Checkpoints.checkpoint(
-        lvl.alias("l0").join(relax, Seq("v"), "left")
-          .select(col("v"),
-            greatest(col("lvl"), coalesce(col("pl"), col("lvl"))).as("lvl")))
-      // levels only increase: the sum changes iff any level changed
-      val sm = nxt.agg(coalesce(sum(col("lvl")), lit(0L))).head.getLong(0)
-      stable = sm == sumPrev
-      sumPrev = sm
-      Checkpoints.release(lvl)
-      lvl = nxt
-      i += 1
+    val e = edges.select(col(src).cast("long").as("s"),
+      col(dst).cast("long").as("d")).distinct()
+    val st = e.select(col("s").as("vx"), col("d").as("o"))
+      .union(e.select(col("d").as("vx"), lit(null).cast("long").as("o")))
+      .groupBy(col("vx")).agg(collect_list(col("o")).as("outs"))
+    val (lvl, converged) = fixpoint(st.select(col("vx"), col("outs"),
+        lit(0L).as("lvl"), lit(true).as("changed")), maxIter) { cur =>
+      relax(cur, "lvl", max,
+        _.select(explode(col("outs")).as("vx"), (col("lvl") + 1L).as("x")))(_ > _)
     }
-    Checkpoints.release(e)
-    require(stable,
+    require(converged,
       s"dagGenerations did not converge in $maxIter rounds — " +
         "the input has a directed cycle or depth > maxIter")
-    lvl.select(col("v"), col("lvl").as("generation"))
+    lvl.select(col("vx").as("v"), col("lvl").as("generation"))
   }
 
   /** Triangle enumeration by degree-ordered orientation (Cohen,
@@ -1221,9 +1069,7 @@ object Graph {
     // pure waste (r18).
     val und =
       if (assumeCanonical) edges.select(col(a).as("u"), col(b).as("v"))
-      else edges
-        .select(least(col(a), col(b)).as("u"), greatest(col(a), col(b)).as("v"))
-        .filter(col("u") =!= col("v") && col("u").isNotNull).distinct()
+      else undirected(edges, a, b)
     val deg = und.select(col("u").as("n")).union(und.select(col("v").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("deg"))
     // orient by (deg, id): src is the smaller endpoint in that order
@@ -1275,9 +1121,7 @@ object Graph {
                       assumeCanonical: Boolean = false): DataFrame = {
     val und =
       if (assumeCanonical) edges.select(col(a).as("u"), col(b).as("v"))
-      else edges
-        .select(least(col(a), col(b)).as("u"), greatest(col(a), col(b)).as("v"))
-        .filter(col("u") =!= col("v") && col("u").isNotNull).distinct()
+      else undirected(edges, a, b)
     val sup = triangles(edges, a, b, assumeCanonical)
       .select(explode(array(
         struct(col("x").as("u"), col("y").as("v")),
@@ -1311,9 +1155,7 @@ object Graph {
   def commonNeighbors(edges: DataFrame, a: String = "a", b: String = "b",
                       minCommon: Long = 1L,
                       maxDegree: Long = Long.MaxValue): DataFrame = {
-    val und = edges
-      .select(least(col(a), col(b)).as("u"), greatest(col(a), col(b)).as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull).distinct()
+    val und = undirected(edges, a, b)
     val adj = und.select(col("u").as("s"), col("v").as("d"))
       .union(und.select(col("v").as("s"), col("u").as("d")))
     val deg = adj.groupBy(col("s").as("n")).agg(count(lit(1)).as("deg"))
@@ -1534,19 +1376,82 @@ object Graph {
   /** One message-passing superstep over a vertex state `st` keyed by
     * `vx` (Pregel's vertex-state rounds): every vertex keeps its row,
     * `msgs` = (vx, x) adds one row per message, and ONE exchange groups
-    * both by vertex. The message sum becomes `x` (null for a vertex
-    * that received none); every state column but `vx` and `replaced`
-    * rides through the group with `first(ignoreNulls)`, since message
-    * rows hold nulls there. */
-  private def superstep(st: DataFrame, replaced: String,
-                        msgs: DataFrame): DataFrame = {
+    * both by vertex. The messages' `agg` (sum, min or max) becomes `x`
+    * (null for a vertex that received none); every state column but
+    * `vx` and `replaced` rides through the group with
+    * `first(ignoreNulls)`, since message rows hold nulls there. */
+  private def superstep(st: DataFrame, replaced: String, msgs: DataFrame,
+                        agg: Column => Column = sum): DataFrame = {
     val carry = st.columns.toSeq.filterNot(Set("vx", replaced))
-    st.select(col("vx") +: carry.map(col) :+ lit(null).cast("long").as("x"): _*)
+    st.select(col("vx") +: carry.map(col) :+
+        lit(null).cast(msgs.schema("x").dataType).as("x"): _*)
       .union(msgs.select(col("vx") +: carry.map(c =>
         lit(null).cast(st.schema(c).dataType).as(c)) :+ col("x"): _*))
       .groupBy(col("vx"))
-      .agg(sum(col("x")).as("x"),
+      .agg(agg(col("x")).as("x"),
         carry.map(c => first(col(c), ignoreNulls = true).as(c)): _*)
+  }
+
+  /** One round of a monotone label loop: a [[superstep]] over a vertex
+    * state (vx, …, `lbl`, changed) in which only the `changed` vertices
+    * send, `send` turning their rows into (vx, x) messages. A vertex
+    * takes the messages' `agg` where it is `better` than its label (or
+    * its label is null, not yet reached), and `changed` then marks
+    * exactly the vertices whose label moved. Sending only from changed
+    * vertices leaves every round's state identical to sending from all:
+    * an unchanged vertex would repeat the message its receivers already
+    * absorbed last round (the monotone-min argument, and its max twin). */
+  private def relax(st: DataFrame, lbl: String, agg: Column => Column,
+                    send: DataFrame => DataFrame)(
+      better: (Column, Column) => Column): DataFrame = {
+    val moved = col("x").isNotNull && coalesce(better(col("x"), col(lbl)), lit(true))
+    superstep(st, "changed", send(st.filter(col("changed"))), agg)
+      .select(st.columns.toSeq.map {
+        case `lbl` => when(moved, col("x")).otherwise(col(lbl)).as(lbl)
+        case "changed" => moved.as("changed")
+        case c => col(c)
+      }: _*)
+  }
+
+  /** A checkpointed [[fixpoint]] state and the scalar its job observed. */
+  private final case class Round(frame: DataFrame, m: Long)
+
+  /** The one convergence loop of this object. It checkpoints `init`, then
+    * applies `round` until `done(previous, next)` holds or `cap` rounds
+    * ran, and returns the last state with whether it converged (callers
+    * that need the fixpoint require it, with their own message). It owns
+    * the loop discipline:
+    *  - each state is one eager checkpoint that observes `metric` (a
+    *    Long aggregate over its rows) on the same job
+    *    ([[Checkpoints.checkpointObserved]]) — no `count()` action;
+    *  - a state whose metric is 0 is settled: nothing changed, or
+    *    nothing is left;
+    *  - each superseded state is released once its successor is
+    *    materialized, so at most two are alive; the last one stays for
+    *    the caller's action (the harness's `releaseAll` drops it), and
+    *    `init` itself is never released (the caller owns what it
+    *    gives; the loop releases only the checkpoints it made).
+    * The default metric counts `changed` rows and the default `done` is
+    * "no row changed": the monotone label loops of [[relax]]. */
+  private def fixpoint(init: DataFrame, cap: Int,
+                       metric: Column = count(when(col("changed"), lit(1))),
+                       done: (Round, Round) => Boolean = (_, n) => n.m == 0L)(
+      round: DataFrame => DataFrame): (DataFrame, Boolean) = {
+    def materialize(df: DataFrame): Round = {
+      val (cp, obs) = Checkpoints.checkpointObserved(df)(metric.as("m"))
+      Round(cp, obs.getLong(0))
+    }
+    var cur = materialize(init)
+    var converged = cur.m == 0L
+    var i = 0
+    while (!converged && i < cap) {
+      val nxt = materialize(round(cur.frame))
+      converged = done(cur, nxt)
+      Checkpoints.release(cur.frame)
+      cur = nxt
+      i += 1
+    }
+    (cur.frame, converged)
   }
 
   /** k-truss decomposition by iterative peel over [[triangleSupport]]:
@@ -1566,39 +1471,20 @@ object Graph {
     * Scale shape: each round is one [[triangles]] pass (degree-ordered
     * orientation, O(Σ d_out²) wedges with the O(√m) celebrity bound) +
     * one keyed groupBy + one keyed join — never all-pairs; rounds are
-    * localCheckpointed with eager release ([[graft.Checkpoints]]), the
-    * same loop discipline as [[connectedComponentsStar]]. The per-round
-    * edge count (the fixpoint guard) is the only driver scalar. Round
+    * the [[fixpoint]] loop, each round's edge count observed on its
+    * checkpoint, the fixpoint "count unchanged or 0". Round
     * count is O(peel depth), small on real graphs; each round only
     * shrinks the edge set, so per-round cost is non-increasing. */
   def kTruss(edges: DataFrame, k: Int, a: String = "a",
              b: String = "b"): DataFrame = {
     require(k >= 3, "k-truss needs k >= 3")
-    var cur = Checkpoints.checkpoint(
-      edges.select(least(col(a), col(b)).as("u"),
-          greatest(col(a), col(b)).as("v"))
-        .filter(col("u") =!= col("v") && col("u").isNotNull).distinct())
-    var m = cur.count()
-    var done = m == 0L
-    while (!done) {
-      // cur is canonical by construction (init canonicalizes; each
-      // round's output is a filtered projection of it) — skip the
-      // per-round re-canonicalization shuffles
-      val nxt = Checkpoints.checkpoint(
-        triangleSupport(cur, "u", "v", assumeCanonical = true)
-          .filter(col("support") >= k - 2).select(col("u"), col("v")))
-      val m2 = nxt.count()
-      if (m2 == m) { // fixpoint: nxt ≡ cur, drop the new copy
-        Checkpoints.release(nxt)
-        done = true
-      } else {
-        Checkpoints.release(cur)
-        cur = nxt
-        m = m2
-        done = m == 0L
-      }
+    // the state is canonical by construction (the input is
+    // canonicalized; each round's output is a filtered projection of
+    // it) — skip the per-round re-canonicalization shuffles
+    peel(undirected(edges, a, b)) { cur =>
+      triangleSupport(cur, "u", "v", assumeCanonical = true)
+        .filter(col("support") >= k - 2).select(col("u"), col("v"))
     }
-    cur
   }
 
   /** Integer HITS (hubs and authorities) on a DIRECTED graph — the
@@ -1696,41 +1582,35 @@ object Graph {
     *
     * Scale shape: each round is one degree groupBy + two semi-joins —
     * strictly cheaper than a truss round (no triangle enumeration);
-    * same checkpoint-with-release loop discipline, edge count as the
-    * fixpoint guard (the only driver scalar). The edge set only
+    * the same [[fixpoint]] peel as [[kTruss]]. The edge set only
     * shrinks, so per-round cost is non-increasing; round count is the
     * peel depth (measured 9 at sf0.1 on the q103 substrate). */
   def kCore(edges: DataFrame, k: Int, a: String = "a",
             b: String = "b"): DataFrame = {
     require(k >= 1, "k-core needs k >= 1")
-    var cur = Checkpoints.checkpoint(
-      edges.select(least(col(a), col(b)).as("u"),
-          greatest(col(a), col(b)).as("v"))
-        .filter(col("u") =!= col("v") && col("u").isNotNull).distinct())
-    var m = cur.count()
-    var done = m == 0L
-    while (!done) {
-      val deg = cur.select(col("u").as("n"))
+    peel(undirected(edges, a, b)) { cur =>
+      val keep = cur.select(col("u").as("n"))
         .union(cur.select(col("v").as("n")))
         .groupBy(col("n")).agg(count(lit(1)).as("dg"))
-      val keep = deg.filter(col("dg") >= k).select(col("n"))
-      val nxt = Checkpoints.checkpoint(cur
-        .join(keep.select(col("n").as("u")), Seq("u"), "left_semi")
+        .filter(col("dg") >= k).select(col("n"))
+      cur.join(keep.select(col("n").as("u")), Seq("u"), "left_semi")
         .join(keep.select(col("n").as("v")), Seq("v"), "left_semi")
-        .select(col("u"), col("v")))
-      val m2 = nxt.count()
-      if (m2 == m) { // fixpoint: nxt ≡ cur, drop the new copy
-        Checkpoints.release(nxt)
-        done = true
-      } else {
-        Checkpoints.release(cur)
-        cur = nxt
-        m = m2
-        done = m == 0L
-      }
+        .select(col("u"), col("v"))
     }
-    cur
   }
+
+  /** A peel to fixpoint over an edge set: `round` drops edges until a
+    * round keeps every edge or none (or `cap` rounds ran), read off each
+    * round's observed edge count. */
+  private def peel(init: DataFrame, cap: Int = Int.MaxValue)(
+      round: DataFrame => DataFrame): DataFrame =
+    fixpoint(init, cap, count(lit(1)), (p, n) => n.m == p.m || n.m == 0L)(round)._1
+
+  /** Distinct canonical (u < v) undirected edges over endpoint columns
+    * `a` and `b`; self-loops and null endpoints drop. */
+  private def undirected(edges: DataFrame, a: String, b: String): DataFrame =
+    edges.select(least(col(a), col(b)).as("u"), greatest(col(a), col(b)).as("v"))
+      .filter(col("u") =!= col("v") && col("u").isNotNull).distinct()
 
   /** Temporal edge CHURN over a (src, dst, period) long-form edge log
     * — the year-over-year evolution measure the reference's dynamic
@@ -1786,10 +1666,7 @@ object Graph {
   def labelPropagation(edges: DataFrame, rounds: Int = 4,
                        a: String = "a", b: String = "b"): DataFrame = {
     require(rounds >= 1, "at least one propagation round")
-    val und = Checkpoints.checkpoint(
-      edges.select(least(col(a), col(b)).as("u"),
-          greatest(col(a), col(b)).as("v"))
-        .filter(col("u") =!= col("v") && col("u").isNotNull).distinct())
+    val und = Checkpoints.checkpoint(undirected(edges, a, b))
     val adj = Checkpoints.checkpoint(
       und.select(col("u").as("s"), col("v").as("d"))
         .union(und.select(col("v").as("s"), col("u").as("d"))))
@@ -1825,10 +1702,7 @@ object Graph {
   def labelSpread(edges: DataFrame, seeds: DataFrame, rounds: Int = 4,
                   a: String = "a", b: String = "b"): DataFrame = {
     require(rounds >= 1, "at least one spreading round")
-    val und = Checkpoints.checkpoint(
-      edges.select(least(col(a), col(b)).as("u"),
-          greatest(col(a), col(b)).as("v"))
-        .filter(col("u") =!= col("v") && col("u").isNotNull).distinct())
+    val und = Checkpoints.checkpoint(undirected(edges, a, b))
     val adj = Checkpoints.checkpoint(
       und.select(col("u").as("s"), col("v").as("d"))
         .union(und.select(col("v").as("s"), col("u").as("d"))))
@@ -1955,10 +1829,7 @@ object Graph {
                         rounds: Int = 2, a: String = "a",
                         b: String = "b"): DataFrame = {
     require(rounds >= 1, "at least one refinement round")
-    val und = Checkpoints.checkpoint(
-      edges.select(least(col(a), col(b)).as("u"),
-          greatest(col(a), col(b)).as("v"))
-        .filter(col("u") =!= col("v") && col("u").isNotNull).distinct())
+    val und = Checkpoints.checkpoint(undirected(edges, a, b))
     val adj = Checkpoints.checkpoint(
       und.select(col("u").as("s"), col("v").as("d"))
         .union(und.select(col("v").as("s"), col("u").as("d"))))
@@ -2088,9 +1959,7 @@ object Graph {
     val l1 = Checkpoints.checkpoint(level1.getOrElse(
       refineCommunities(edges,
         labelPropagation(edges, lpaRounds, a, b), refineRounds, a, b)))
-    val und = edges.select(least(col(a), col(b)).as("u"),
-        greatest(col(a), col(b)).as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull).distinct()
+    val und = undirected(edges, a, b)
     // community multigraph: cu <= cv, cu == cv rows carry internal mass
     val ce = Checkpoints.checkpoint(und
       .join(l1.select(col("v").as("u"), col("community").as("cu")), Seq("u"))
@@ -2237,8 +2106,9 @@ object Graph {
     * Rounds are data-dependent (≤ graph diameter-ish in practice —
     * GraphSpec measures the real substrate; a path graph is the
     * pathological O(n) case); each round is one join + one windowed
-    * rank + one groupBy, all keyed by vertex — no driver state beyond
-    * the fixpoint certificate (the monotone Σest scalar).
+    * rank + one groupBy, all keyed by vertex — a [[fixpoint]] loop whose
+    * certificate, the monotone Σest scalar, is observed on each
+    * round's checkpoint.
     *
     * H via window rank: neighbors ranked by estimate desc;
     * H = max(min(rank, est)) — ties get arbitrary distinct ranks,
@@ -2247,42 +2117,26 @@ object Graph {
                   b: String = "b"): DataFrame = {
     // checkpointed: the adjacency feeds every round (and round 0
     // twice: degree init + first H)
-    val und = Checkpoints.checkpoint(
-      edges.select(least(col(a), col(b)).as("u"),
-          greatest(col(a), col(b)).as("v"))
-        .filter(col("u") =!= col("v") && col("u").isNotNull).distinct())
+    val und = Checkpoints.checkpoint(undirected(edges, a, b))
     val adj = Checkpoints.checkpoint(
       und.select(col("u").as("s"), col("v").as("d"))
         .union(und.select(col("v").as("s"), col("u").as("d"))))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("s")).orderBy(col("nc").desc)
-    var est = Checkpoints.checkpoint(adj.groupBy(col("s"))
-      .agg(count(lit(1)).as("c")).select(col("s").as("v"), col("c")))
     // Σest strictly decreases every non-fixpoint round (updates only
-    // ever lower estimates) — one driver scalar per round
-    var total = est.agg(sum(col("c"))).head().getLong(0)
-    var done = total == 0L
-    while (!done) {
+    // ever lower estimates), so an unchanged sum is the fixpoint
+    fixpoint(adj.groupBy(col("s")).agg(count(lit(1)).as("c"))
+        .select(col("s").as("v"), col("c")), Int.MaxValue,
+      coalesce(sum(col("c")), lit(0L)), (p, n) => n.m == p.m) { est =>
       val h = adj
         .join(est.select(col("v").as("d"), col("c").as("nc")), "d")
         .select(col("s"), col("nc"))
         .withColumn("rk", row_number().over(w))
         .groupBy(col("s"))
         .agg(max(least(col("rk"), col("nc"))).as("h"))
-      val nxt = Checkpoints.checkpoint(
-        est.join(h, est("v") === h("s"))
-          .select(col("v"), least(col("c"), col("h")).as("c")))
-      val t2 = nxt.agg(sum(col("c"))).head().getLong(0)
-      if (t2 == total) {
-        Checkpoints.release(nxt) // fixpoint: nxt ≡ est, drop the copy
-        done = true
-      } else {
-        Checkpoints.release(est)
-        est = nxt
-        total = t2
-      }
-    }
-    est.select(col("v"), col("c").as("core"))
+      est.join(h, est("v") === h("s"))
+        .select(col("v"), least(col("c"), col("h")).as("c"))
+    }._1.select(col("v"), col("c").as("core"))
   }
 
   /** Temporal (dynamic) edges — G7, the reference's DLink

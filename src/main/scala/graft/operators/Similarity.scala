@@ -795,7 +795,7 @@ object Similarity {
   private def pqParts(corpus: DataFrame, queries: DataFrame, id: String,
                       vec: String, m: Int, k: Int, lloydIters: Int)
       : (DataFrame, DataFrame, DataFrame) = {
-    val books = pqTrain(corpus, id, vec, m, k, lloydIters).localCheckpoint()
+    val books = graft.Checkpoints.checkpoint(pqTrain(corpus, id, vec, m, k, lloydIters))
     val sub = subDims(books)
     val encoded = pqCodes(corpus, id, vec, books, m, sub)
     val q = vectors(queries, id, vec, Query)

@@ -1637,10 +1637,9 @@ object CoreQueries {
     // intended NLJ (q42 convention); JoinsSpec holds the
     // no-false-negative, determinism, fpp, and reduction properties.
     "q121_bloom_join" -> { (s, d) =>
-      val dim = Tables.orders(s, d)
+      val dim = graft.Checkpoints.checkpoint(Tables.orders(s, d)
         .filter(col("o_totalprice") > 450000.0)
-        .select(col("o_orderkey"), col("o_orderpriority"))
-        .localCheckpoint()
+        .select(col("o_orderkey"), col("o_orderpriority")))
       graft.operators.Joins.bloomPrefilterJoin(
           Tables.lineitem(s, d), "l_orderkey", dim, "o_orderkey")
         .groupBy(col("o_orderpriority"))
@@ -1726,13 +1725,12 @@ object CoreQueries {
     // every cell, both inner products, and the depth-min.
     "q135_cm_join_size" -> { (s, d) =>
       import graft.operators.Sketches
-      val a = Tables.lineitem(s, d)
-        .select(col("l_partkey").cast("string").as("k"))
-        .localCheckpoint() // two consumers: cells + exact counts
-      val b = Tables.lineitem(s, d)
+      // checkpointed: two consumers: cells + exact counts
+      val a = graft.Checkpoints.checkpoint(Tables.lineitem(s, d)
+        .select(col("l_partkey").cast("string").as("k")))
+      val b = graft.Checkpoints.checkpoint(Tables.lineitem(s, d)
         .filter(col("l_shipdate") >= ts("1996-01-01 00:00:00"))
-        .select(col("l_partkey").cast("string").as("k"))
-        .localCheckpoint()
+        .select(col("l_partkey").cast("string").as("k")))
       val est = Sketches.countMinJoinSize(
         Sketches.countMinCells(a, col("k"), CmJsMults, CmJsWidth),
         Sketches.countMinCells(b, col("k"), CmJsMults, CmJsWidth))

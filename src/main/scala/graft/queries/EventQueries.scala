@@ -1037,12 +1037,12 @@ object EventQueries {
     // not — StreamingSpec asserts bit-equality including a replayed
     // batch).
     "q134_window_hll_distinct" -> { (s, d) =>
-      val ev = Tables.events(s, d).filter(col("user_id").isNotNull)
+      // checkpointed: two consumers: registers + exact
+      val ev = graft.Checkpoints.checkpoint(Tables.events(s, d).filter(col("user_id").isNotNull)
         .select(unix_timestamp(
             window(col("ts"), "1 day").getField("start")).as("ws"),
           col("event_type"), col("user_id").cast("string").as("k"),
-          col("user_id"))
-        .localCheckpoint() // two consumers: registers + exact
+          col("user_id")))
       val regs = graft.operators.Sketches.hllRegisters(
         ev, Seq("ws", "event_type"), col("k"))
       val est = graft.operators.Sketches.hllEstimate(
@@ -1068,10 +1068,10 @@ object EventQueries {
     "q123_window_quantile_sketch" -> { (s, d) =>
       val probs = Seq(0.5, 0.9)
       val agg = graft.functions.QDigestAgg(16, 4096, probs)
-      val ev = Tables.events(s, d)
+      // checkpointed: three consumers: sketch, ranks, targets
+      val ev = graft.Checkpoints.checkpoint(Tables.events(s, d)
         .select(window(col("ts"), "1 day").getField("start").as("win"),
-          floor(col("value") * 100).cast("long").as("v"))
-        .localCheckpoint() // three consumers: sketch, ranks, targets
+          floor(col("value") * 100).cast("long").as("v")))
       val sk = ev.groupBy(col("win"))
         .agg(agg(col("v")).as("qs"), count(lit(1)).as("n"))
       val targets = sk.select(col("win"), col("n"),

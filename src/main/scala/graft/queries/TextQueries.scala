@@ -761,7 +761,7 @@ object TextQueries {
     // resolveEntities dataflow must agree, not just the pair list.
     "q93_entity_resolution" -> { (s, d) =>
       val assign = Dedup.resolveEntities(Tables.documents(s, d),
-        "doc_id", "text", minJaccard = 0.8, starComponents = true)
+        "doc_id", "text", minJaccard = 0.8)
       // group size as a WINDOW count over canonical_id: one exchange on
       // the grouping key, where the old groupBy + join-back shape both
       // shuffled twice AND executed the whole (un-checkpointed) assign
@@ -1415,11 +1415,11 @@ object TextQueries {
     // a window over ~uniform source partitions (the q117/q124 note
     // applies at a skewed 100 TB histogram).
     "q126_token_mixture" -> { (s, d) =>
-      val docs = Tables.documents(s, d).filter(col("doc_id") >= 0)
+      // checkpointed: consumers: cumsum, token total, weight total
+      val docs = graft.Checkpoints.checkpoint(Tables.documents(s, d).filter(col("doc_id") >= 0)
         .select(col("doc_id"), col("source"),
           (substring(col("source"), 4, 10).cast("long") % 4 + 1).as("w"),
-          graft.functions.Bpe.tokenCount(col("text")).as("n_tokens"))
-        .localCheckpoint() // consumers: cumsum, token total, weight total
+          graft.functions.Bpe.tokenCount(col("text")).as("n_tokens")))
       val scalars = docs.agg(sum(col("n_tokens")).as("total_tokens"))
         .crossJoin(broadcast(docs.select(col("source"), col("w")).distinct()
           .agg(sum(col("w")).as("w_total"))))
@@ -1446,10 +1446,10 @@ object TextQueries {
     // the whole plan — weights, totals, hash order, cross-multiplied
     // cut — replays in the oracle with zero float risk.
     "q155_temperature_mixture" -> { (s, d) =>
-      val docs = Tables.documents(s, d).filter(col("doc_id") >= 0)
+      // checkpointed: consumers: weights, totals, cumsum
+      val docs = graft.Checkpoints.checkpoint(Tables.documents(s, d).filter(col("doc_id") >= 0)
         .select(col("doc_id"), col("source"),
-          graft.functions.Bpe.tokenCount(col("text")).as("n_tokens"))
-        .localCheckpoint() // consumers: weights, totals, cumsum
+          graft.functions.Bpe.tokenCount(col("text")).as("n_tokens")))
       val srcW = docs.groupBy(col("source"))
         .agg(sum(col("n_tokens")).as("src_tokens"))
         .select(col("source"),
@@ -1491,7 +1491,8 @@ object TextQueries {
       val words = TextFns.words(TextFns.norm(col("text")))
       // spread ahead of langId + BPE — single-split scan otherwise
       // runs both in one task (1.05 s measured; operators.Spread)
-      val docs = graft.operators.Spread.byKey(
+      // checkpointed: consumers: rank (sampled twice), totals
+      val docs = graft.Checkpoints.checkpoint(graft.operators.Spread.byKey(
           Tables.documents(s, d).filter(col("doc_id") >= 0)
             .select(col("doc_id"), col("text")), col("doc_id"))
         .select(col("doc_id"), TextFns.langId(words).as("lang_pred"),
@@ -1499,8 +1500,7 @@ object TextQueries {
         .withColumn("w", when(col("lang_pred") === "en", 4L)
           .when(col("lang_pred") === "de", 3L)
           .when(col("lang_pred") === "fr", 2L)
-          .otherwise(1L))
-        .localCheckpoint() // consumers: rank (sampled twice), totals
+          .otherwise(1L)))
       val scalars = docs.agg(sum(col("n_tokens")).as("total_tokens"))
         .crossJoin(broadcast(docs.select(col("lang_pred"), col("w")).distinct()
           .agg(sum(col("w")).as("w_total"))))
@@ -1587,14 +1587,14 @@ object TextQueries {
     "q122_countmin_bigrams" -> { (s, d) =>
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("doc_id")).orderBy(col("pos"))
-      val bg = Tables.documents(s, d)
+      // checkpointed: two consumers: cells + exact counts
+      val bg = graft.Checkpoints.checkpoint(Tables.documents(s, d)
         .select(col("doc_id"),
           posexplode(TextFns.words(TextFns.norm(col("text"))))
             .as(Seq("pos", "w0")))
         .withColumn("w1", lead(col("w0"), 1).over(w))
         .filter(col("w1").isNotNull)
-        .select(concat_ws(" ", col("w0"), col("w1")).as("bg"))
-        .localCheckpoint() // two consumers: cells + exact counts
+        .select(concat_ws(" ", col("w0"), col("w1")).as("bg")))
       val cells = graft.operators.Sketches.countMinCells(
         bg, col("bg"), CmMults, CmWidth)
       val exact = bg.groupBy(col("bg")).agg(count(lit(1)).as("exact_cnt"))
@@ -1739,13 +1739,13 @@ object TextQueries {
     "q198_decontaminated_mix" -> { (s, d) =>
       val docs = Tables.documents(s, d)
       val census = censusSpine(s, d) // shared with q195 — built once
-      val clean = docs.filter(col("doc_id") % 50 =!= 0)
+      // checkpointed: consumers: per-source totals + cumsum
+      val clean = graft.Checkpoints.checkpoint(docs.filter(col("doc_id") % 50 =!= 0)
         .join(census.select(col("doc_id"), col("contaminated")),
           Seq("doc_id"), "left")
         .filter(coalesce(col("contaminated"), lit(0L)) === 0L)
         .select(col("doc_id"), col("source"),
-          graft.functions.Bpe.tokenCount(col("text")).as("n_tokens"))
-        .localCheckpoint() // consumers: per-source totals + cumsum
+          graft.functions.Bpe.tokenCount(col("text")).as("n_tokens")))
       val srcTot = clean.groupBy(col("source"))
         .agg(sum(col("n_tokens")).as("src_tokens"))
       val byHash = org.apache.spark.sql.expressions.Window

@@ -49,19 +49,41 @@ class CheckpointHygieneSpec extends AnyFunSuite with SparkTestBase {
 
   test("iterative loops retain at most two rounds of state while running") {
     import spark.implicits._
+    import graft.operators.Graph
     // a 64-node path graph forces many propagation rounds; historical
     // behavior pinned 2 checkpoints per round for the whole call
-    val edges = (0L until 63L).map(i => (i, i + 1)).toDF("a", "b")
+    val path = (0L until 63L).map(i => (i, i + 1, 1L))
+    val edges = path.map(e => (e._1, e._2)).toDF("a", "b")
     Checkpoints.release(edges) // not a checkpoint: a no-op, must not throw
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val comps = graft.operators.Graph
-      .connectedComponentsStar(edges).collect()
-    assert(comps.forall(_.getLong(1) == 0L))
-    val live = spark.sparkContext.getPersistentRDDs.keySet -- before
-    // verts + final edge set only — every superseded round was released
-    assert(live.size <= 3, s"loop retained ${live.size} checkpoints")
-    Checkpoints.releaseAll(spark)
-    val after = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(after.isEmpty)
+    val weighted = path.toDF("a", "b", "w")
+    val cycle = (0L until 8L).map(i => (i, (i + 1) % 8)).toDF("src", "dst")
+    // every fixpoint loop, run to its fixpoint or cap over the path (the
+    // SCC coloring, over a cycle, is the minReachBoth fixpoint)
+    val loops = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "connectedComponentsStar" -> (() => Graph.connectedComponentsStar(edges)),
+      "connectedComponents" -> (() => Graph.connectedComponents(edges)),
+      "rootClosure" -> (() => Graph.rootClosure(edges.toDF("child", "parent"))),
+      "shortestPathsInt" -> (() => Graph.shortestPathsInt(weighted, 0L, rounds = 20)),
+      "earliestArrival" -> (() =>
+        Graph.earliestArrival(weighted, Seq(0L), ts = "w", maxIter = 70)),
+      "dagGenerations" -> (() => Graph.dagGenerations(edges.toDF("src", "dst"))),
+      "kCore" -> (() => Graph.kCore(edges, k = 2)),
+      "kTruss" -> (() => Graph.kTruss(edges, k = 3)),
+      "stronglyConnectedComponents" -> (() => Graph.stronglyConnectedComponents(
+        cycle, "src", "dst", 50, 100, pivotFastPath = false, numPivots = 1)))
+    loops.foreach { case (name, run) =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val rows = run().collect()
+      if (name == "connectedComponentsStar")
+        assert(rows.forall(_.getLong(1) == 0L))
+      val live = spark.sparkContext.getPersistentRDDs.keySet -- before
+      // the result's blocks only (verts + final edge set for the star,
+      // settled batch + emptied vertex and edge sets for the SCC) —
+      // every superseded round was released
+      assert(live.size <= 3, s"$name retained ${live.size} checkpoints")
+      Checkpoints.releaseAll(spark)
+      val after = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(after.isEmpty, name)
+    }
   }
 }

@@ -454,6 +454,39 @@ class GraphPropertySpec extends AnyFunSuite with SparkTestBase {
     graft.Checkpoints.releaseAll(spark)
   }
 
+  test("dagGenerations of an edgeless input is empty") {
+    val got = Graph.dagGenerations(Seq.empty[(Long, Long)].toDF("src", "dst"))
+    assert(got.columns.toSeq == Seq("v", "generation"))
+    assert(got.collect().isEmpty)
+    graft.Checkpoints.releaseAll(spark)
+  }
+
+  test("shortestPathsInt equals hop-bounded Bellman-Ford on random weighted graphs") {
+    val rnd = new scala.util.Random(61)
+    (1 to 3).foreach { trial =>
+      // weights -1..7: negative edges drop, parallel edges keep the min
+      val edges = Seq.fill(50)((rnd.nextInt(25).toLong, rnd.nextInt(25).toLong,
+        rnd.nextInt(9).toLong - 1L)).filter(e => e._1 != e._2)
+      val sym = edges.flatMap { case (a, b, w) => Seq((a, b, w), (b, a, w)) }
+        .filter(_._3 >= 0L)
+      val src = edges.head._1
+      val rounds = trial + 1
+      var dist = Map(src -> 0L)
+      (1 to rounds).foreach { _ =>
+        val cand = for ((u, v, w) <- sym; du <- dist.get(u)) yield v -> (du + w)
+        dist = (dist.toSeq ++ cand).groupMapReduce(_._1)(_._2)(math.min)
+      }
+      val got = Graph.shortestPathsInt(edges.toDF("a", "b", "w"), src, rounds)
+        .as[(Long, Long)].collect().toMap
+      assert(got == dist, s"trial $trial: $edges")
+      graft.Checkpoints.releaseAll(spark)
+    }
+    // a source outside the edge list still reaches itself
+    assert(Graph.shortestPathsInt(Seq((1L, 2L, 3L)).toDF("a", "b", "w"), 9L, 2)
+      .as[(Long, Long)].collect().toMap == Map(9L -> 0L))
+    graft.Checkpoints.releaseAll(spark)
+  }
+
   /** Sequential label-correcting earliest arrival (undirected temporal
     * edges, t ≥ tail arrival, sources at -1). */
   private def bruteArrival(edges: Seq[(Long, Long, Long)],

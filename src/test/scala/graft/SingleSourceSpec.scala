@@ -6,14 +6,15 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps five decisions in one module each: the session configuration
+/** Keeps six decisions in one module each: the session configuration
   * in [[Session]], the runtime listener in [[Telemetry]], the
   * per-(session, sfDir) substrate cache in [[graft.queries.SessionMemo]],
-  * the stream start-and-drain in [[StreamRun]]'s drain helper and the
-  * keyed spread in [[graft.operators.Spread]]. A harness or spec that
-  * builds its own session, or main code that hand-writes a listener, a
-  * session-keyed cache, a stream query or a keyed repartition, fails
-  * here. */
+  * the stream start-and-drain in [[StreamRun]]'s drain helper, the
+  * keyed spread in [[graft.operators.Spread]] and the checkpoint
+  * registry [[Checkpoints]]. A harness or spec that builds its own
+  * session, or main code that hand-writes a listener, a session-keyed
+  * cache, a stream query, a keyed repartition or an unregistered
+  * checkpoint, fails here. */
 class SingleSourceSpec extends AnyFunSuite {
 
   private def scalaFiles(roots: Seq[String]): Seq[Path] =
@@ -108,5 +109,18 @@ class SingleSourceSpec extends AnyFunSuite {
       if keyed(argsAt(text, i + call.length))
     } yield s"$p:${text.substring(0, i).count(_ == '\n') + 1}"
     assert(sites.isEmpty, sites.mkString("keyed repartition at ", ", ", ""))
+  }
+
+  test("only Checkpoints calls localCheckpoint in operators/ and queries/") {
+    // a raw checkpoint's blocks are never registered, so releaseAll
+    // cannot drop them
+    val call = ".localCheckpoint("
+    val sites = for {
+      p <- scalaFiles(Seq("src/main/scala/graft/operators",
+        "src/main/scala/graft/queries"))
+      lines = Files.readAllLines(p).asScala.toVector
+      i <- lines.indices if lines(i).contains(call)
+    } yield s"$p:${i + 1}"
+    assert(sites.isEmpty, sites.mkString("raw localCheckpoint at ", ", ", ""))
   }
 }
