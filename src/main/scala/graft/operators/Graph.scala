@@ -1400,7 +1400,8 @@ object Graph {
     * exactly the vertices whose label moved. Sending only from changed
     * vertices leaves every round's state identical to sending from all:
     * an unchanged vertex would repeat the message its receivers already
-    * absorbed last round (the monotone-min argument, and its max twin). */
+    * absorbed last round (by monotonicity for min and max labels; in
+    * the root climb a child's label already is its parent's last one). */
   private def relax(st: DataFrame, lbl: String, agg: Column => Column,
                     send: DataFrame => DataFrame)(
       better: (Column, Column) => Column): DataFrame = {
@@ -1470,9 +1471,9 @@ object Graph {
     *
     * Scale shape: each round is one [[triangles]] pass (degree-ordered
     * orientation, O(Σ d_out²) wedges with the O(√m) celebrity bound) +
-    * one keyed groupBy + one keyed join — never all-pairs; rounds are
-    * the [[fixpoint]] loop, each round's edge count observed on its
-    * checkpoint, the fixpoint "count unchanged or 0". Round
+    * one keyed groupBy + one keyed join — never all-pairs. The rounds
+    * run under [[peel]]: each round's edge count is observed on its
+    * checkpoint, and the fixpoint is "count unchanged or 0". Round
     * count is O(peel depth), small on real graphs; each round only
     * shrinks the edge set, so per-round cost is non-increasing. */
   def kTruss(edges: DataFrame, k: Int, a: String = "a",
@@ -1582,7 +1583,7 @@ object Graph {
     *
     * Scale shape: each round is one degree groupBy + two semi-joins —
     * strictly cheaper than a truss round (no triangle enumeration);
-    * the same [[fixpoint]] peel as [[kTruss]]. The edge set only
+    * the same [[peel]] as [[kTruss]]. The edge set only
     * shrinks, so per-round cost is non-increasing; round count is the
     * peel depth (measured 9 at sf0.1 on the q103 substrate). */
   def kCore(edges: DataFrame, k: Int, a: String = "a",
