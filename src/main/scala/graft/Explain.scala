@@ -118,8 +118,8 @@ object Explain {
     "q167_rank_fusion",     // broadcast corpus-stats + query-vector scalars (q88 shape)
     "q127_ann_ivfpq_topk",  // broadcast centroid + codebook assignment (q51 shape)
     "q135_cm_join_size",    // 1-row est x 1-row exact scalar combine
-    "q188_communities_refined", // broadcast m + Q_int flag scalars (q42 shape)
-    "q251_louvain_multilevel", // broadcast m/flag/self-loop scalars (q188 shape)
+    "q188_communities_refined", // broadcast 1-row Q_int guard-flag scalars (q42 shape)
+    "q251_louvain_multilevel", // broadcast 1-row Q_int guard-flag scalars (q188 shape)
     "q196_ann_recall_at_k", // brute-force exact side (q28) + centroid assignment (q51)
     "q197_ann_ndcg_at_k",   // brute-force exact side (q28) + centroid assignment (q51)
     "q211_ann_mrr_at_k",    // brute-force exact side (q28) + centroid assignment (q51)

@@ -14,20 +14,25 @@ import graft.Strings.jsonEscape
   *
   * Scale design: state lives in DataFrames keyed by vertex — shuffles
   * partition by vertex id, never collect to the driver — and the
-  * closure, component, distance, arrival, generation, peel and
-  * core-number loops run under the one [[fixpoint]] loop:
+  * iterative loops run under the one [[fixpoint]] loop: the root
+  * closure, both connected-component loops, the SCC coloring and trim,
+  * shortest paths, earliest arrival, DAG generations, k-core, k-truss,
+  * core numbers, label propagation, label spreading and the Louvain
+  * local moves of [[refineCommunities]] and [[louvainTwoLevel]].
   *  - each round is one eager `localCheckpoint` (lineage truncation:
   *    an unchecked iterative plan grows exponentially in Catalyst) that
   *    also observes the loop's convergence scalar
   *    ([[Checkpoints.checkpointObserved]]) — no separate `count()` job;
   *  - each superseded round is released as soon as its successor is
-  *    materialized, so a loop retains at most two rounds of state; the
+  *    materialized, together with the scratch checkpoints the successor
+  *    was built from, so a loop retains at most two rounds of state; the
   *    frame a loop is given is never released (its caller owns it);
   *  - every loop has a round cap, and returns whether it converged, so
   *    a caller that needs the fixpoint can require it.
   * A neighbour-aggregate round is one [[superstep]] over a vertex state
-  * that carries its adjacency and a `changed` flag ([[relax]]): only
-  * changed vertices send, one exchange per round.
+  * that carries its adjacency and a `changed` flag: in a monotone loop
+  * ([[relax]]) only changed vertices send, in a vote ([[vote]]) every
+  * labelled vertex does; one exchange per round either way.
   */
 object Graph {
 
@@ -617,7 +622,7 @@ object Graph {
     val (e, _) = fixpoint(edges.select(col(a).as("u"), col(b).as("v"))
         .filter(col("u") =!= col("v")).distinct(), maxIter, count(lit(1)),
       (p, n) => n.m == p.m && n.frame.except(p.frame).isEmpty) { cur =>
-      phase(phase(cur, large = true), large = false)
+      Step(phase(phase(cur, large = true), large = false))
     }
     // stars: every non-center u points at its component min (min-agg is
     // defensive for an early maxIter stop mid-contraction)
@@ -671,8 +676,8 @@ object Graph {
         verts.select(col("v"), explode(array(lit(0), lit(1))).as("dir"))
           .withColumn("m", col("v")).withColumn("changed", lit(true)),
         maxIter) { cur =>
-      step(step(cur.drop("changed").withColumn("m0", col("m"))))
-        .select(col("v"), col("dir"), col("m"), (col("m") < col("m0")).as("changed"))
+      Step(step(step(cur.drop("changed").withColumn("m0", col("m"))))
+        .select(col("v"), col("dir"), col("m"), (col("m") < col("m0")).as("changed")))
     }
     // unconverged f/b labels could settle vertices into WRONG SCCs
     // while still draining nActive — the outer require would not catch
@@ -1376,8 +1381,9 @@ object Graph {
   /** One message-passing superstep over a vertex state `st` keyed by
     * `vx` (Pregel's vertex-state rounds): every vertex keeps its row,
     * `msgs` = (vx, x) adds one row per message, and ONE exchange groups
-    * both by vertex. The messages' `agg` (sum, min or max) becomes `x`
-    * (null for a vertex that received none); every state column but
+    * both by vertex. The messages' `agg` becomes `x` (null for a vertex
+    * that received none): `sum` (PageRank, HITS), `min` or `max` (the
+    * [[relax]] loops) or `mode` (the [[vote]] loops); every state column but
     * `vx` and `replaced` rides through the group with
     * `first(ignoreNulls)`, since message rows hold nulls there. */
   private def superstep(st: DataFrame, replaced: String, msgs: DataFrame,
@@ -1404,18 +1410,43 @@ object Graph {
     * the root climb a child's label already is its parent's last one). */
   private def relax(st: DataFrame, lbl: String, agg: Column => Column,
                     send: DataFrame => DataFrame)(
-      better: (Column, Column) => Column): DataFrame = {
+      better: (Column, Column) => Column): Step = {
     val moved = col("x").isNotNull && coalesce(better(col("x"), col(lbl)), lit(true))
-    superstep(st, "changed", send(st.filter(col("changed"))), agg)
+    Step(superstep(st, "changed", send(st.filter(col("changed"))), agg)
       .select(st.columns.toSeq.map {
         case `lbl` => when(moved, col("x")).otherwise(col(lbl)).as(lbl)
         case "changed" => moved.as("changed")
         case c => col(c)
-      }: _*)
+      }: _*))
+  }
+
+  /** One synchronous majority-vote round over a vertex state (vx, adj,
+    * …, lab, changed): every labelled vertex sends its label along
+    * `adj`, and the [[superstep]]'s `mode` picks the label received most
+    * often, ties to the lowest (null when none arrived) — the
+    * deterministic (count desc, label asc) vote. `keep` turns the vote
+    * into the new label, and `changed` marks the vertices whose label
+    * moved. A vote is not monotone, so every labelled vertex sends,
+    * changed or not. */
+  private def vote(st: DataFrame)(keep: Column => Column): Step = {
+    val lab = keep(col("x"))
+    Step(superstep(st, "changed", st.filter(col("lab").isNotNull)
+        .select(explode(col("adj")).as("vx"), col("lab").as("x")),
+      mode(_, deterministic = true))
+      .select(st.columns.toSeq.map {
+        case "lab" => lab.as("lab")
+        case "changed" => (!(lab <=> col("lab"))).as("changed")
+        case c => col(c)
+      }: _*))
   }
 
   /** A checkpointed [[fixpoint]] state and the scalar its job observed. */
   private final case class Round(frame: DataFrame, m: Long)
+
+  /** What a [[fixpoint]] round returns: the next state, still lazy, and
+    * the scratch checkpoints the round made for it, which the loop
+    * releases once that state is materialized. */
+  private final case class Step(state: DataFrame, scratch: DataFrame*)
 
   /** The one convergence loop of this object. It checkpoints `init`, then
     * applies `round` until `done(previous, next)` holds or `cap` rounds
@@ -1428,16 +1459,19 @@ object Graph {
     *  - a state whose metric is 0 is settled: nothing changed, or
     *    nothing is left;
     *  - each superseded state is released once its successor is
-    *    materialized, so at most two are alive; the last one stays for
-    *    the caller's action (the harness's `releaseAll` drops it), and
-    *    `init` itself is never released (the caller owns what it
-    *    gives; the loop releases only the checkpoints it made).
+    *    materialized, and so is the scratch the successor's [[Step]]
+    *    returned with it, so at most two states are alive; the last one
+    *    stays for the caller's action (the harness's `releaseAll` drops
+    *    it), and `init` itself is never released (the caller owns what
+    *    it gives; the loop releases only the checkpoints it made).
     * The default metric counts `changed` rows and the default `done` is
-    * "no row changed": the monotone label loops of [[relax]]. */
+    * "no row changed": the label loops of [[relax]], [[vote]] and
+    * [[localMoveWeighted]], whose rounds are deterministic functions of
+    * the labels, so a round that moves nothing is the fixpoint. */
   private def fixpoint(init: DataFrame, cap: Int,
                        metric: Column = count(when(col("changed"), lit(1))),
                        done: (Round, Round) => Boolean = (_, n) => n.m == 0L)(
-      round: DataFrame => DataFrame): (DataFrame, Boolean) = {
+      round: DataFrame => Step): (DataFrame, Boolean) = {
     def materialize(df: DataFrame): Round = {
       val (cp, obs) = Checkpoints.checkpointObserved(df)(metric.as("m"))
       Round(cp, obs.getLong(0))
@@ -1446,9 +1480,10 @@ object Graph {
     var converged = cur.m == 0L
     var i = 0
     while (!converged && i < cap) {
-      val nxt = materialize(round(cur.frame))
+      val step = round(cur.frame)
+      val nxt = materialize(step.state)
       converged = done(cur, nxt)
-      Checkpoints.release(cur.frame)
+      (cur.frame +: step.scratch).foreach(Checkpoints.release)
       cur = nxt
       i += 1
     }
@@ -1605,7 +1640,8 @@ object Graph {
     * round's observed edge count. */
   private def peel(init: DataFrame, cap: Int = Int.MaxValue)(
       round: DataFrame => DataFrame): DataFrame =
-    fixpoint(init, cap, count(lit(1)), (p, n) => n.m == p.m || n.m == 0L)(round)._1
+    fixpoint(init, cap, count(lit(1)), (p, n) => n.m == p.m || n.m == 0L)(
+      cur => Step(round(cur)))._1
 
   /** Distinct canonical (u < v) undirected edges over endpoint columns
     * `a` and `b`; self-loops and null endpoints drop. */
@@ -1659,72 +1695,60 @@ object Graph {
     * count replays exactly (the pageRankInt discipline; asynchronous
     * LPA's update order is engine-internal and can't be oracled).
     * Densely connected groups converge onto one label within a few
-    * rounds; `rounds` is a query parameter, not a fixpoint search.
+    * rounds; `rounds` is a query parameter, not a convergence test.
     *
-    * Per round: one adjacency join + one (vertex, label) count + one
-    * per-vertex top-1 (WindowGroupLimit-planned) — all keyed by
-    * vertex, no driver state at all. Returns (v, community). */
+    * Scale shape: a [[fixpoint]] of [[vote]] rounds over a vertex state
+    * (v, neighbour set, label): each round is one exchange and one
+    * checkpoint, no join or window, and a round in which no label moved
+    * ends the loop early (every later round would repeat it). Returns
+    * (v, community). */
   def labelPropagation(edges: DataFrame, rounds: Int = 4,
                        a: String = "a", b: String = "b"): DataFrame = {
     require(rounds >= 1, "at least one propagation round")
-    val und = Checkpoints.checkpoint(undirected(edges, a, b))
-    val adj = Checkpoints.checkpoint(
-      und.select(col("u").as("s"), col("v").as("d"))
-        .union(und.select(col("v").as("s"), col("u").as("d"))))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("s")).orderBy(col("c").desc, col("lab"))
-    var lab = Checkpoints.checkpoint(
-      adj.select(col("s").as("v")).distinct().withColumn("lab", col("v")))
-    (0 until rounds).foreach { _ =>
-      val nxt = Checkpoints.checkpoint(
-        adj.join(lab.select(col("v").as("d"), col("lab")), "d")
-          .groupBy(col("s"), col("lab")).agg(count(lit(1)).as("c"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
-          .select(col("s").as("v"), col("lab")))
-      Checkpoints.release(lab)
-      lab = nxt
-    }
-    lab.select(col("v"), col("lab").as("community"))
+    val st = neighbours(edges, a, b).groupBy(col("vx"))
+      .agg(collect_set(col("n")).as("adj"))
+    fixpoint(st.select(col("vx"), col("adj"), col("vx").as("lab"),
+      lit(true).as("changed")), rounds)(vote(_)(identity))._1
+      .select(col("vx").as("v"), col("lab").as("community"))
   }
 
   /** SEMI-SUPERVISED label spreading — the graph-SSL primitive (Zhu &
     * Ghahramani 2002, hard-label variant — public): `seeds` (v, label)
-    * carry fixed ground-truth labels; each synchronous round every
-    * vertex takes the majority label over its LABELED neighbors
-    * ((count DESC, label ASC) — [[labelPropagation]]'s deterministic
-    * vote), and seed vertices stay CLAMPED to their given label — the
-    * property that separates SSL from plain community LPA (a label
-    * cannot be voted off its own seed, so spreading converges toward
-    * the seeds' basins). Fixed rounds → oracle-unrollable; vertices no
-    * label has reached are absent from the output. The
-    * training-data-labeling shape: a few human labels, a similarity
-    * graph, labels for the rest. */
+    * carry fixed ground-truth labels, one per vertex; each synchronous
+    * round every vertex takes the majority label over its LABELED
+    * neighbors ((count DESC, label ASC) — [[labelPropagation]]'s
+    * deterministic vote), and seed vertices stay CLAMPED to their given
+    * label — the property that separates SSL from plain community LPA
+    * (a label cannot be voted off its own seed, so spreading converges
+    * toward the seeds' basins). Fixed rounds → oracle-unrollable;
+    * vertices no label has reached are absent from the output, and a
+    * seed without edges keeps its row. The training-data-labeling
+    * shape: a few human labels, a similarity graph, labels for the rest.
+    *
+    * Scale shape: [[labelPropagation]]'s, over a vertex state that also
+    * carries the seed label: only labelled vertices send, and a seed
+    * keeps its own label whatever the vote. */
   def labelSpread(edges: DataFrame, seeds: DataFrame, rounds: Int = 4,
                   a: String = "a", b: String = "b"): DataFrame = {
     require(rounds >= 1, "at least one spreading round")
-    val und = Checkpoints.checkpoint(undirected(edges, a, b))
-    val adj = Checkpoints.checkpoint(
-      und.select(col("u").as("s"), col("v").as("d"))
-        .union(und.select(col("v").as("s"), col("u").as("d"))))
-    val sd = Checkpoints.checkpoint(
-      seeds.select(col("v"), col("label")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("s")).orderBy(col("c").desc, col("label"))
-    var lab = sd
-    (0 until rounds).foreach { _ =>
-      val votes = adj.join(lab.select(col("v").as("d"), col("label")), "d")
-        .groupBy(col("s"), col("label")).agg(count(lit(1)).as("c"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("s").as("v"), col("label"))
-      val nxt = Checkpoints.checkpoint(
-        sd.unionByName(
-          votes.join(sd.select(col("v")), Seq("v"), "left_anti")))
-      if (!(lab eq sd)) Checkpoints.release(lab)
-      lab = nxt
-    }
-    lab
+    val nb = neighbours(edges, a, b)
+    val sd = seeds.select(col("v").as("vx"),
+      lit(null).cast(nb.schema("n").dataType).as("n"), col("label").as("seed"))
+    val st = nb.withColumn("seed", lit(null).cast(sd.schema("seed").dataType))
+      .union(sd)
+      .groupBy(col("vx")).agg(collect_set(col("n")).as("adj"), min(col("seed")).as("seed"))
+    fixpoint(st.select(col("vx"), col("adj"), col("seed"), col("seed").as("lab"),
+      lit(true).as("changed")), rounds)(vote(_)(coalesce(col("seed"), _)))._1
+      .filter(col("lab").isNotNull).select(col("vx").as("v"), col("lab").as("label"))
+  }
+
+  /** Both directions (vx, n) of every undirected edge (a, b); self-loops
+    * and null endpoints drop. The vote loops collect `n` into a set per
+    * vertex, which does the edge dedup. */
+  private def neighbours(edges: DataFrame, a: String, b: String): DataFrame = {
+    val e = edges.select(col(a).as("s"), col(b).as("d")).filter(col("s") =!= col("d"))
+    e.select(col("s").as("vx"), col("d").as("n"))
+      .union(e.select(col("d").as("vx"), col("s").as("n")))
   }
 
   /** MODULARITY of a vertex partition over an undirected edge list —
@@ -1734,12 +1758,13 @@ object Graph {
     * Σ contrib = 4m²·Q and every value replays bit-exactly in any
     * engine (no float division until the reader derives Q). `edges`
     * must be distinct undirected pairs (a ≠ b); `labels` must cover
-    * every endpoint (as [[labelPropagation]]'s output does).
+    * every endpoint (as [[labelPropagation]]'s output does). The edges
+    * are read three times, so a caller passes a checkpoint (q165 does).
     * One degree aggregate + one two-sided label join + one group —
     * all keyed exchanges, m is the only broadcast scalar. */
   def modularity(edges: DataFrame, labels: DataFrame,
                  a: String = "a", b: String = "b"): DataFrame = {
-    val ed = Checkpoints.checkpoint(edges.select(col(a), col(b)))
+    val ed = edges.select(col(a), col(b))
     val deg = ed.select(col(a).as("v"))
       .unionByName(ed.select(col(b).as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("deg"))
@@ -1770,12 +1795,13 @@ object Graph {
     * basis points with a guarded denominator (`greatest(1, …)`: a
     * partition that converged to one community has 2m − vol = 0; both
     * engines guard identically so the gate still hash-matches).
-    * Same scale shape as modularity: one degree aggregate, one
+    * Same scale shape as modularity, and like it reads the edges three
+    * times (q236 passes a checkpoint): one degree aggregate, one
     * two-sided label join, one cut explode, all keyed exchanges; m is
     * the only broadcast scalar. */
   def conductance(edges: DataFrame, labels: DataFrame,
                   a: String = "a", b: String = "b"): DataFrame = {
-    val ed = Checkpoints.checkpoint(edges.select(col(a), col(b)))
+    val ed = edges.select(col(a), col(b))
     val deg = ed.select(col(a).as("v"))
       .unionByName(ed.select(col(b).as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("deg"))
@@ -1821,110 +1847,16 @@ object Graph {
     * the branch decision is itself replay-exact (two integer Q_int
     * scalars), so a fixed round count unrolls into the oracle.
     *
-    * Shapes per round: degree/label joins and (vertex, community)
-    * counts — all keyed exchanges; the two Q_int scalars and m are
-    * 1-row broadcasts (the q42 convention); the single-best fallback
-    * is a distributed TakeOrdered(1), not a global window. Returns
+    * Scale shape: [[localMoveWeighted]] over the distinct undirected
+    * edges with unit weights (so every weight sum is the edge count the
+    * formulas above name) from the given labels. Returns
     * (v, community). */
   def refineCommunities(edges: DataFrame, labels: DataFrame,
                         rounds: Int = 2, a: String = "a",
-                        b: String = "b"): DataFrame = {
-    require(rounds >= 1, "at least one refinement round")
-    val und = Checkpoints.checkpoint(undirected(edges, a, b))
-    val adj = Checkpoints.checkpoint(
-      und.select(col("u").as("s"), col("v").as("d"))
-        .union(und.select(col("v").as("s"), col("u").as("d"))))
-    val deg = Checkpoints.checkpoint(
-      adj.groupBy(col("s")).agg(count(lit(1)).as("deg"))
-        .select(col("s").as("v"), col("deg")))
-    // m MATERIALIZED once (guide §2.4): the 1-row broadcast is
-    // consumed by prop AND the guard in EVERY round, and un-checkpointed
-    // each use re-ran the count over the full edge blocks — 2 edge-scale
-    // scans per round for a loop-invariant scalar.
-    val mm = Checkpoints.checkpoint(und.agg(count(lit(1)).as("m")))
-    // Guard comparison Q(proposed) > Q(current) with BOTH partitions
-    // scored in ONE edge-scale pass (guide §2.4): the old shape ran the
-    // exact integer score qint = 4m·Σe_in − Σd_c² twice per round — two
-    // separate und⋈labels⋈labels double joins over the edge list.
-    // Carrying both labelings on one joined (v, lab_old, lab_new) frame
-    // prices both partitions from a single double join; the integers
-    // are term-for-term the same (e_in = Σ_edges [l_u = l_v], count ≡
-    // coalesced conditional sum; Σd² per labeling over the same frame).
-    def guardFlag(labOld: DataFrame, labNew: DataFrame): DataFrame = {
-      val both = labOld.select(col("v"), col("lab").as("lo"))
-        .join(labNew.select(col("v"), col("lab").as("ln")), Seq("v"))
-      val ein2 = und
-        .join(both.select(col("v").as("u"), col("lo").as("lou"),
-          col("ln").as("lnu")), Seq("u"))
-        .join(both.select(col("v"), col("lo").as("lov"),
-          col("ln").as("lnv")), Seq("v"))
-        .agg(coalesce(sum(when(col("lou") === col("lov"), 1L)
-            .otherwise(0L)), lit(0L)).as("eo"),
-          coalesce(sum(when(col("lnu") === col("lnv"), 1L)
-            .otherwise(0L)), lit(0L)).as("en"))
-      val bd = both.join(deg, "v")
-      val sdo = bd.groupBy(col("lo")).agg(sum(col("deg")).as("dsum"))
-        .agg(sum(col("dsum") * col("dsum")).as("sdo"))
-      val sdn = bd.groupBy(col("ln")).agg(sum(col("deg")).as("dsum"))
-        .agg(sum(col("dsum") * col("dsum")).as("sdn"))
-      ein2.crossJoin(sdo).crossJoin(sdn).crossJoin(broadcast(mm))
-        .select((lit(4L) * col("m") * col("en") - col("sdn") >
-          lit(4L) * col("m") * col("eo") - col("sdo")).as("take_all"))
-    }
-    var lab = Checkpoints.checkpoint(
-      labels.select(col("v"), col("community").as("lab")))
-    (0 until rounds).foreach { _ =>
-      val dc = lab.join(deg, "v").groupBy(col("lab"))
-        .agg(sum(col("deg")).as("dsum"))
-      val kv = adj.join(lab.select(col("v").as("d"), col("lab")), "d")
-        .groupBy(col("s"), col("lab")).agg(count(lit(1)).as("k"))
-        .select(col("s").as("v"), col("lab"), col("k"))
-      val own = lab.select(col("v"), col("lab").as("cur"))
-        .join(deg, "v")
-        .join(dc.select(col("lab").as("cur"), col("dsum").as("dcur")),
-          Seq("cur"))
-        .join(kv.select(col("v"), col("lab").as("cur"),
-          col("k").as("kown")), Seq("v", "cur"), "left")
-        .na.fill(0L, Seq("kown"))
-      val wBest = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("v")).orderBy(col("dq").desc, col("lab"))
-      val prop = Checkpoints.checkpoint(
-        own.join(kv, Seq("v")).filter(col("lab") =!= col("cur"))
-          .join(dc, Seq("lab"))
-          .crossJoin(broadcast(mm))
-          .withColumn("dq",
-            lit(4L) * col("m") * (col("k") - col("kown")) -
-              lit(2L) * col("deg") *
-                (col("dsum") - (col("dcur") - col("deg"))))
-          .withColumn("rn", row_number().over(wBest))
-          .filter(col("rn") === 1 && col("dq") > 0)
-          .select(col("v"), col("lab").as("tgt"), col("dq")))
-      val pall = Checkpoints.checkpoint(
-        lab.join(prop.select(col("v"), col("tgt")), Seq("v"), "left")
-          .select(col("v"), coalesce(col("tgt"), col("lab")).as("lab")))
-      val flag = guardFlag(lab, pall)
-      val single = prop.orderBy(col("dq").desc, col("v")).limit(1)
-        .select(col("v"), col("tgt"))
-      val nxt = Checkpoints.checkpoint(
-        lab.join(pall.select(col("v"), col("lab").as("pl")), Seq("v"))
-          .join(single.select(col("v"), col("tgt").as("sl")),
-            Seq("v"), "left")
-          .crossJoin(broadcast(flag))
-          .select(col("v"),
-            when(col("take_all"), col("pl"))
-              .when(col("sl").isNotNull, col("sl"))
-              .otherwise(col("lab")).as("lab")))
-      Checkpoints.release(lab)
-      Checkpoints.release(prop)
-      Checkpoints.release(pall)
-      lab = nxt
-    }
-    Checkpoints.release(und)
-    Checkpoints.release(mm)
-    Checkpoints.release(adj)
-    Checkpoints.release(deg)
-    lab.select(col("v"), col("lab").as("community"))
-  }
+                        b: String = "b"): DataFrame =
+    localMoveWeighted(undirected(edges, a, b).withColumn("w", lit(1L)),
+      Some(labels.select(col("v"), col("community").as("lab"))), rounds)
+      .select(col("v"), col("lab").as("community"))
 
   /** MULTI-LEVEL Louvain (Blondel et al. 2008, "Fast unfolding of
     * communities in large networks" — public): the coarsen-and-repeat
@@ -1941,12 +1873,16 @@ object Graph {
     * by the guard: full proposal set only if the recomputed score
     * improves, else the single best exact-ΔQ move, else no change).
     *
-    * Scale shape: the contraction is two keyed joins + one aggregate;
-    * the coarse graph has one vertex per community, so the level-2
-    * rounds run on data orders of magnitude smaller than the input —
-    * the property that makes Louvain viable at 100 TB (each level
-    * shrinks the graph geometrically; all joins stay
-    * hash-partitioned on vertex/community keys).
+    * Scale shape: the contraction is two keyed joins + one aggregate,
+    * checkpointed once by [[localMoveWeighted]], which runs the coarse
+    * rounds from the identity partition; the coarse graph has one
+    * vertex per community, so the level-2 rounds run on data orders of
+    * magnitude smaller than the input — the property that makes
+    * Louvain viable at 100 TB (each level shrinks the graph
+    * geometrically; all joins stay hash-partitioned on
+    * vertex/community keys). A `level1` partition is read as given
+    * (q251 hands in the pinned q188 block); the computed one is already
+    * a projection of the refinement's last checkpoint.
     *
     * Returns (v, c1, community): the level-1 label and the final
     * level-2 label projected back to the finest grain. */
@@ -1954,72 +1890,68 @@ object Graph {
                       refineRounds: Int = 2, coarseRounds: Int = 2,
                       a: String = "a", b: String = "b",
                       level1: Option[DataFrame] = None): DataFrame = {
-    // `level1` lets a caller hand in an already-materialized level-1
-    // partition (v, community) — the build/serve split when the q188
-    // labels are session-pinned and shared
-    val l1 = Checkpoints.checkpoint(level1.getOrElse(
+    val l1 = level1.getOrElse(
       refineCommunities(edges,
-        labelPropagation(edges, lpaRounds, a, b), refineRounds, a, b)))
-    val und = undirected(edges, a, b)
-    // community multigraph: cu <= cv, cu == cv rows carry internal mass
-    val ce = Checkpoints.checkpoint(und
+        labelPropagation(edges, lpaRounds, a, b), refineRounds, a, b))
+    // community multigraph: u <= v, u == v rows carry internal mass
+    val ce = undirected(edges, a, b)
       .join(l1.select(col("v").as("u"), col("community").as("cu")), Seq("u"))
       .join(l1.select(col("v"), col("community").as("cv")), Seq("v"))
-      .select(least(col("cu"), col("cv")).as("cu"),
-        greatest(col("cu"), col("cv")).as("cv"))
-      .groupBy(col("cu"), col("cv")).agg(count(lit(1)).as("w")))
-    val l2 = localMoveWeighted(ce, coarseRounds)
-    val out = l1.select(col("v"), col("community").as("c1"))
-      .join(l2.select(col("c").as("c1"), col("lab").as("community")),
-        Seq("c1"))
+      .select(least(col("cu"), col("cv")).as("u"),
+        greatest(col("cu"), col("cv")).as("v"))
+      .groupBy(col("u"), col("v")).agg(count(lit(1)).as("w"))
+    val l2 = localMoveWeighted(ce, None, coarseRounds)
+    l1.select(col("v"), col("community").as("c1"))
+      .join(l2.select(col("v").as("c1"), col("lab").as("community")), Seq("c1"))
       .select(col("v"), col("c1"), col("community"))
-    out
   }
 
-  /** Guarded local-move rounds over a WEIGHTED community multigraph
-    * (`ce`: cu <= cv, weight; cu == cv rows are self-loops) starting
-    * from the identity partition — the coarse-level engine of
-    * [[louvainTwoLevel]]. Mirrors [[refineCommunities]] with
-    * sum-of-weight arithmetic: weighted degree D_c = 2·w_self +
-    * Σ cross w, move gain ΔQ_int = 4m(k_new − k_own) −
-    * 2·D_c·(D_tgt − (D_cur − D_c)), and the partition score
-    * 4m·(cross-internal weight + total self-loop weight) − Σ D² (the
-    * self-loop term is labeling-invariant but keeps the score on the
-    * exact 4m²·Q scale). Returns (c, lab). */
-  private[graft] def localMoveWeighted(ce: DataFrame,
+  /** The guarded local-move rounds of [[refineCommunities]] and
+    * [[louvainTwoLevel]] over a WEIGHTED multigraph `ed` (u, v, w); a
+    * u == v row is a self-loop. `labels` (v, lab) is the starting
+    * partition, None the identity partition over the endpoints. With
+    * weighted degree D_x = Σ cross w + 2·self w, m = Σ w and k_c = x's
+    * weight into c, a move of x from its community to c gains
+    * ΔQ_int = 4m(k_c − k_own) − 2·D_x·(D_c − (D_own − D_x)), and the
+    * partition score is 4m·(cross-internal weight + self-loop weight)
+    * − Σ D²: the self-loop term is labeling-invariant but keeps the
+    * score on the exact 4m²·Q scale. Unit weights without self-loops
+    * make every sum the count [[refineCommunities]] names.
+    *
+    * Scale shape: the edges are checkpointed once, observing m and the
+    * self-loop mass, which enter every round as literals; the degrees
+    * are one more checkpoint. The rounds run under [[fixpoint]]: each
+    * checkpoints its proposals and its proposed labels as scratch,
+    * scores both partitions in one edge-scale pass (the guard flag, a
+    * 1-row broadcast) and takes the full set, the single best move
+    * (a distributed TakeOrdered(1)) or nothing; a round in which no
+    * label moved ends the loop. Returns (v, lab). */
+  private[graft] def localMoveWeighted(ed: DataFrame, labels: Option[DataFrame],
                                        rounds: Int): DataFrame = {
     require(rounds >= 1, "at least one move round")
-    val cross = Checkpoints.checkpoint(
-      ce.filter(col("cu") =!= col("cv"))
-        .select(col("cu"), col("cv"), col("w")))
-    // 1-row loop-invariant scalars materialized once (guide §2.4) —
-    // selfW and m are broadcast into every round's guard (and m into
-    // every round's proposals); un-checkpointed each broadcast re-ran
-    // its aggregate over the coarse edge relation per use.
-    val selfW = Checkpoints.checkpoint(
-      ce.filter(col("cu") === col("cv"))
-        .agg(coalesce(sum(col("w")), lit(0L)).as("sw")))
-    val adj = Checkpoints.checkpoint(
-      cross.select(col("cu").as("s"), col("cv").as("d"), col("w"))
-        .union(cross.select(col("cv").as("s"), col("cu").as("d"), col("w"))))
+    val (e, obs) = Checkpoints.checkpointObserved(
+      ed.select(col("u"), col("v"), col("w")))(
+      coalesce(sum(col("w")), lit(0L)).as("m"),
+      coalesce(sum(when(col("u") === col("v"), col("w"))), lit(0L)).as("sw"))
+    val (m4, sw) = (4L * obs.getLong(0), obs.getLong(1))
+    val cross = e.filter(col("u") =!= col("v"))
+    val adj = cross.select(col("u").as("s"), col("v").as("d"), col("w"))
+      .union(cross.select(col("v").as("s"), col("u").as("d"), col("w")))
     val deg = Checkpoints.checkpoint(
-      adj.select(col("s").as("c"), col("w"))
-        .union(ce.filter(col("cu") === col("cv"))
-          .select(col("cu").as("c"), (col("w") * 2).as("w")))
-        .groupBy(col("c")).agg(sum(col("w")).as("deg"))
-        .select(col("c").as("v"), col("deg")))
-    val mm = Checkpoints.checkpoint(ce.agg(sum(col("w")).as("m")))
-    // fused guard — see [[refineCommunities]].guardFlag: both labelings
-    // scored from ONE cross⋈labels⋈labels pass (weighted arithmetic;
-    // the self-loop term sw rides on both sides exactly as before)
+      adj.select(col("s").as("v"), col("w"))
+        .union(e.filter(col("u") === col("v"))
+          .select(col("u").as("v"), (col("w") * 2).as("w")))
+        .groupBy(col("v")).agg(sum(col("w")).as("deg")))
+    // Q_int(proposed) > Q_int(current), both partitions scored from ONE
+    // cross⋈labels⋈labels pass over a (v, lab_old, lab_new) frame
     def guardFlag(labOld: DataFrame, labNew: DataFrame): DataFrame = {
       val both = labOld.select(col("v"), col("lab").as("lo"))
         .join(labNew.select(col("v"), col("lab").as("ln")), Seq("v"))
       val ein2 = cross
-        .join(both.select(col("v").as("cu"), col("lo").as("lou"),
-          col("ln").as("lnu")), Seq("cu"))
-        .join(both.select(col("v").as("cv"), col("lo").as("lov"),
-          col("ln").as("lnv")), Seq("cv"))
+        .join(both.select(col("v").as("u"), col("lo").as("lou"),
+          col("ln").as("lnu")), Seq("u"))
+        .join(both.select(col("v"), col("lo").as("lov"),
+          col("ln").as("lnv")), Seq("v"))
         .agg(coalesce(sum(when(col("lou") === col("lov"), col("w"))
             .otherwise(0L)), lit(0L)).as("eo"),
           coalesce(sum(when(col("lnu") === col("lnv"), col("w"))
@@ -2030,15 +1962,16 @@ object Graph {
       val sdn = bd.groupBy(col("ln")).agg(sum(col("deg")).as("dsum"))
         .agg(sum(col("dsum") * col("dsum")).as("sdn"))
       ein2.crossJoin(sdo).crossJoin(sdn)
-        .crossJoin(broadcast(mm)).crossJoin(broadcast(selfW))
-        .select((lit(4L) * col("m") * (col("en") + col("sw")) - col("sdn") >
-          lit(4L) * col("m") * (col("eo") + col("sw")) - col("sdo"))
-          .as("take_all"))
+        .select((lit(m4) * (col("en") + sw) - col("sdn") >
+          lit(m4) * (col("eo") + sw) - col("sdo")).as("take_all"))
     }
-    var lab = Checkpoints.checkpoint(
-      ce.select(col("cu").as("v")).union(ce.select(col("cv").as("v")))
-        .distinct().withColumn("lab", col("v")))
-    (0 until rounds).foreach { _ =>
+    val wBest = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("v")).orderBy(col("dq").desc, col("lab"))
+    val init = labels.getOrElse(
+      e.select(col("u").as("v")).union(e.select(col("v"))).distinct()
+        .withColumn("lab", col("v")))
+    val (out, _) = fixpoint(init.withColumn("changed", lit(true)), rounds) { cur =>
+      val lab = cur.select(col("v"), col("lab"))
       val dc = lab.join(deg, "v").groupBy(col("lab"))
         .agg(sum(col("deg")).as("dsum"))
       val kv = adj.join(lab.select(col("v").as("d"), col("lab")), "d")
@@ -2051,14 +1984,11 @@ object Graph {
         .join(kv.select(col("v"), col("lab").as("cur"),
           col("k").as("kown")), Seq("v", "cur"), "left")
         .na.fill(0L, Seq("kown"))
-      val wBest = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("v")).orderBy(col("dq").desc, col("lab"))
       val prop = Checkpoints.checkpoint(
         own.join(kv, Seq("v")).filter(col("lab") =!= col("cur"))
           .join(dc, Seq("lab"))
-          .crossJoin(broadcast(mm))
           .withColumn("dq",
-            lit(4L) * col("m") * (col("k") - col("kown")) -
+            lit(m4) * (col("k") - col("kown")) -
               lit(2L) * col("deg") *
                 (col("dsum") - (col("dcur") - col("deg"))))
           .withColumn("rn", row_number().over(wBest))
@@ -2067,29 +1997,19 @@ object Graph {
       val pall = Checkpoints.checkpoint(
         lab.join(prop.select(col("v"), col("tgt")), Seq("v"), "left")
           .select(col("v"), coalesce(col("tgt"), col("lab")).as("lab")))
-      val flag = guardFlag(lab, pall)
       val single = prop.orderBy(col("dq").desc, col("v")).limit(1)
         .select(col("v"), col("tgt"))
-      val nxt = Checkpoints.checkpoint(
-        lab.join(pall.select(col("v"), col("lab").as("pl")), Seq("v"))
-          .join(single.select(col("v"), col("tgt").as("sl")),
-            Seq("v"), "left")
-          .crossJoin(broadcast(flag))
-          .select(col("v"),
-            when(col("take_all"), col("pl"))
-              .when(col("sl").isNotNull, col("sl"))
-              .otherwise(col("lab")).as("lab")))
-      Checkpoints.release(lab)
-      Checkpoints.release(prop)
-      Checkpoints.release(pall)
-      lab = nxt
+      val moved = when(col("take_all"), col("pl"))
+        .when(col("sl").isNotNull, col("sl")).otherwise(col("lab"))
+      Step(lab.join(pall.select(col("v"), col("lab").as("pl")), Seq("v"))
+        .join(single.select(col("v"), col("tgt").as("sl")), Seq("v"), "left")
+        .crossJoin(broadcast(guardFlag(lab, pall)))
+        .select(col("v"), moved.as("lab"), (!(moved <=> col("lab"))).as("changed")),
+        prop, pall)
     }
-    Checkpoints.release(cross)
-    Checkpoints.release(adj)
+    Checkpoints.release(e)
     Checkpoints.release(deg)
-    Checkpoints.release(selfW)
-    Checkpoints.release(mm)
-    lab.select(col("v").as("c"), col("lab"))
+    out.select(col("v"), col("lab"))
   }
 
   /** FULL k-core decomposition — the per-vertex core NUMBER (largest k
@@ -2135,8 +2055,8 @@ object Graph {
         .withColumn("rk", row_number().over(w))
         .groupBy(col("s"))
         .agg(max(least(col("rk"), col("nc"))).as("h"))
-      est.join(h, est("v") === h("s"))
-        .select(col("v"), least(col("c"), col("h")).as("c"))
+      Step(est.join(h, est("v") === h("s"))
+        .select(col("v"), least(col("c"), col("h")).as("c")))
     }._1.select(col("v"), col("c").as("core"))
   }
 

@@ -2303,8 +2303,9 @@ object GraphQueries {
   // community) edge counts, the exact-integer ΔQ best move per vertex
   // (ΔQ desc, target label asc; kept if ΔQ > 0), then the guarded
   // apply — the full proposal set if the recomputed Q_int improves,
-  // else the single best proposal (ΔQ desc, v asc). Mirrors
-  // Graph.refineCommunities term for term.
+  // else the single best proposal (ΔQ desc, v asc). Mirrors a
+  // unit-weight round of Graph.localMoveWeighted (refineCommunities'
+  // form) term for term; m is the `mm` CTE here, a literal there.
   private def refineRoundSql(r: Int): String = {
     val p = s"rl${r - 1}"
     s"""dc$r AS MATERIALIZED (SELECT l.lab, CAST(sum(dg.deg) AS BIGINT) AS dsum

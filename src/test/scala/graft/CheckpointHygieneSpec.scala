@@ -58,7 +58,8 @@ class CheckpointHygieneSpec extends AnyFunSuite with SparkTestBase {
     val weighted = path.toDF("a", "b", "w")
     val cycle = (0L until 8L).map(i => (i, (i + 1) % 8)).toDF("src", "dst")
     // every fixpoint loop, run to its fixpoint or cap over the path (the
-    // SCC coloring, over a cycle, is the minReachBoth fixpoint)
+    // SCC coloring, over a cycle, is the minReachBoth fixpoint; the
+    // community loops are the vote and local-move rounds)
     val loops = Seq[(String, () => org.apache.spark.sql.DataFrame)](
       "connectedComponentsStar" -> (() => Graph.connectedComponentsStar(edges)),
       "connectedComponents" -> (() => Graph.connectedComponents(edges)),
@@ -70,7 +71,13 @@ class CheckpointHygieneSpec extends AnyFunSuite with SparkTestBase {
       "kCore" -> (() => Graph.kCore(edges, k = 2)),
       "kTruss" -> (() => Graph.kTruss(edges, k = 3)),
       "stronglyConnectedComponents" -> (() => Graph.stronglyConnectedComponents(
-        cycle, "src", "dst", 50, 100, pivotFastPath = false, numPivots = 1)))
+        cycle, "src", "dst", 50, 100, pivotFastPath = false, numPivots = 1)),
+      "labelPropagation" -> (() => Graph.labelPropagation(edges, rounds = 6)),
+      "labelSpread" -> (() => Graph.labelSpread(edges,
+        Seq((0L, 0L), (40L, 40L)).toDF("v", "label"), rounds = 6)),
+      "refineCommunities" -> (() => Graph.refineCommunities(edges,
+        Graph.labelPropagation(edges, rounds = 2), rounds = 3)),
+      "louvainTwoLevel" -> (() => Graph.louvainTwoLevel(edges)))
     loops.foreach { case (name, run) =>
       val before = spark.sparkContext.getPersistentRDDs.keySet
       val rows = run().collect()
@@ -78,8 +85,9 @@ class CheckpointHygieneSpec extends AnyFunSuite with SparkTestBase {
         assert(rows.forall(_.getLong(1) == 0L))
       val live = spark.sparkContext.getPersistentRDDs.keySet -- before
       // the result's blocks only (verts + final edge set for the star,
-      // settled batch + emptied vertex and edge sets for the SCC) —
-      // every superseded round was released
+      // settled batch + emptied vertex and edge sets for the SCC, the
+      // LPA labels + refined labels + coarse labels for Louvain) — every
+      // superseded round and its scratch was released
       assert(live.size <= 3, s"$name retained ${live.size} checkpoints")
       Checkpoints.releaseAll(spark)
       val after = spark.sparkContext.getPersistentRDDs.keySet -- before

@@ -13,11 +13,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * aggregate or seed pick. The `Graph.fixpoint` loops — q19 root
   * closure, q34 components, q110 shortest paths, q191 earliest arrival
   * and q200 generations — run one superstep and one observing
-  * checkpoint per round, with no `count()` or `isEmpty` job. Each
-  * budget is the count measured at sf0.001 on `local[4]` plus a margin
-  * for AQE job jitter: 2, or 1 for q104, so that its budget still fails
-  * the 11 jobs HITS ran when every execution built its own vertex
-  * state. */
+  * checkpoint per round, with no `count()` or `isEmpty` job. So do the
+  * community loops under it: q147 label propagation and q179 label
+  * spreading, one `mode` superstep per round with no join, and q251's
+  * coarse Louvain level, whose local moves read m as a literal
+  * observed on their one edge checkpoint. Each budget is the count
+  * measured at sf0.001 on `local[4]` plus a margin for AQE job jitter:
+  * 2, or 1 for q104, so that its budget still fails the 11 jobs HITS
+  * ran when every execution built its own vertex state. */
 class GraphIterJobBudgetSpec extends AnyFunSuite with SparkTestBase {
 
   private val budgets = Seq(
@@ -29,7 +32,10 @@ class GraphIterJobBudgetSpec extends AnyFunSuite with SparkTestBase {
     "q34_cosupply_components" -> (7 + 2),
     "q110_shortest_paths" -> (20 + 2),
     "q191_temporal_reach" -> (11 + 2),
-    "q200_citation_generations" -> (15 + 2))
+    "q200_citation_generations" -> (15 + 2),
+    "q147_communities" -> (12 + 2),
+    "q179_label_spread" -> (14 + 2),
+    "q251_louvain_multilevel" -> (98 + 2))
 
   budgets.foreach { case (q, budget) =>
     test(s"$q runs at most $budget jobs per warm execution") {

@@ -542,4 +542,105 @@ class GraphPropertySpec extends AnyFunSuite with SparkTestBase {
     assert(gotD == (0L to 15L).map(v => v -> v).toMap)
     graft.Checkpoints.releaseAll(spark)
   }
+
+  /** Driver-side replay of the guarded local moves of
+    * [[Graph.localMoveWeighted]] over weighted multigraph rows (u, v, w),
+    * u == v a self-loop, from `labels`: per round the exact-ΔQ best move
+    * of every labelled vertex with edges ((ΔQ desc, label asc), kept if
+    * ΔQ > 0), then the full proposal set if it raises
+    * Q_int = 4m·(internal cross weight + self-loop weight) − Σ D²,
+    * else the single best proposal ((ΔQ desc, v asc)), else nothing.
+    * Returns the labels and the branch each round took. */
+  private def replayLocalMoves(edges: Seq[(Long, Long, Long)],
+                               labels: Map[Long, Long],
+                               rounds: Int): (Map[Long, Long], Seq[String]) = {
+    val m = edges.map(_._3).sum
+    val sw = edges.collect { case (u, v, w) if u == v => w }.sum
+    val cross = edges.filter { case (u, v, _) => u != v }
+    val adj = cross.flatMap { case (u, v, w) => Seq((u, v, w), (v, u, w)) }
+    val deg = (adj.map { case (s, _, w) => s -> w } ++
+      edges.collect { case (u, v, w) if u == v => u -> 2 * w })
+      .groupMapReduce(_._1)(_._2)(_ + _)
+    def dsum(l: Map[Long, Long]) = l.toSeq.collect {
+      case (x, c) if deg.contains(x) => c -> deg(x) }.groupMapReduce(_._1)(_._2)(_ + _)
+    def score(l: Map[Long, Long]) = 4 * m * (sw + cross.collect {
+      case (u, v, w) if l.contains(u) && l.contains(v) && l(u) == l(v) => w }.sum) -
+      dsum(l).values.map(d => d * d).sum
+    var lab = labels
+    val branches = (1 to rounds).map { _ =>
+      val dc = dsum(lab)
+      val kv = adj.collect { case (s, d, w) if lab.contains(d) => (s, lab(d)) -> w }
+        .groupMapReduce(_._1)(_._2)(_ + _)
+      val props = lab.toSeq.filter(x => deg.contains(x._1)).flatMap { case (x, cur) =>
+        val kown = kv.getOrElse((x, cur), 0L)
+        kv.toSeq.collect { case ((s, c), k) if s == x && c != cur =>
+          (c, 4 * m * (k - kown) - 2 * deg(x) * (dc(c) - (dc(cur) - deg(x))))
+        }.sortBy { case (c, dq) => (-dq, c) }.headOption
+          .filter(_._2 > 0).map { case (c, dq) => (x, c, dq) }
+      }
+      val all = lab ++ props.map(p => p._1 -> p._2)
+      if (score(all) > score(lab)) { lab = all; "all" }
+      else if (props.nonEmpty) {
+        val (x, c, _) = props.minBy { case (x, _, dq) => (-dq, x) }
+        lab = lab.updated(x, c); "single"
+      } else "none"
+    }
+    (lab, branches)
+  }
+
+  test("localMoveWeighted equals the driver-side replay of the guarded " +
+       "local moves on random weighted multigraphs, in both forms") {
+    val rnd = new scala.util.Random(43)
+    def moves(df: org.apache.spark.sql.DataFrame) = df.as[(Long, Long)].collect().toMap
+    val taken = scala.collection.mutable.Set[String]()
+    (1 to 4).foreach { trial =>
+      val nV = 6 + 2 * trial
+      // self-loops, duplicate rows and repeated pairs with other weights
+      val base = Seq.fill(6 + 4 * trial) {
+        val (x, y) = (rnd.nextInt(nV).toLong, rnd.nextInt(nV).toLong)
+        (math.min(x, y), math.max(x, y), 1L + rnd.nextInt(5))
+      }
+      val rows = base ++ Seq((1L, 1L, 3L), base.head, (base.head._1, base.head._2, 7L))
+      val verts = rows.flatMap(r => Seq(r._1, r._2)).distinct
+      // the refineCommunities form: the distinct undirected edges at unit
+      // weight, from given labels (an edgeless labelled vertex included)
+      val unit = rows.collect { case (u, v, _) if u != v => (u, v, 1L) }.distinct
+      val given = verts.map(v => v -> rnd.nextInt(3).toLong).toMap + (99L -> 1L)
+      (1 to 3).foreach { rounds =>
+        val (want, br) = replayLocalMoves(unit, given, rounds)
+        taken ++= br
+        assert(moves(Graph.refineCommunities(rows.map(r => (r._1, r._2)).toDF("a", "b"),
+          given.toSeq.toDF("v", "community"), rounds)) == want,
+          s"refine form, trial $trial, rounds $rounds: $rows $given")
+        // the coarse form: every row weighted, from the identity partition
+        val (coarse, cbr) = replayLocalMoves(rows, verts.map(v => v -> v).toMap, rounds)
+        taken ++= cbr
+        assert(moves(Graph.localMoveWeighted(rows.toDF("u", "v", "w"), None, rounds)) ==
+          coarse, s"coarse form, trial $trial, rounds $rounds: $rows")
+        graft.Checkpoints.releaseAll(spark)
+      }
+    }
+    assert(Set("all", "single").subsetOf(taken), s"branches taken: $taken")
+    // a merge, then nothing moves: the loop stops after round 2, and the
+    // labels equal those of all three replayed rounds
+    val merge = Seq((1L, 1L, 1L), (2L, 2L, 1L), (1L, 2L, 10L))
+    val merged = replayLocalMoves(merge, Map(1L -> 1L, 2L -> 2L), 3)
+    assert(merged == ((Map(1L -> 2L, 2L -> 2L), Seq("single", "none", "none"))))
+    assert(moves(Graph.localMoveWeighted(merge.toDF("u", "v", "w"), None, 3)) == merged._1)
+    // one edge between two singletons: both propose the swap, which only
+    // relabels the partition, so the guard rejects the full set and the
+    // single best move (vertex 1 into 2) lands
+    val swap = replayLocalMoves(Seq((1L, 2L, 1L)), Map(1L -> 1L, 2L -> 2L), 1)
+    assert(swap == ((Map(1L -> 2L, 2L -> 2L), Seq("single"))))
+    assert(moves(Graph.refineCommunities(Seq((1L, 2L)).toDF("a", "b"),
+      Seq((1L, 1L), (2L, 2L)).toDF("v", "community"), 1)) == swap._1)
+    // edgeless: m = 0 and no proposal, so the given labels come back
+    val labels = Map(1L -> 5L, 2L -> 5L, 3L -> 7L)
+    assert(replayLocalMoves(Nil, labels, 2) == ((labels, Seq("none", "none"))))
+    assert(moves(Graph.refineCommunities(Seq.empty[(Long, Long)].toDF("a", "b"),
+      labels.toSeq.toDF("v", "community"), 2)) == labels)
+    assert(Graph.localMoveWeighted(Seq.empty[(Long, Long, Long)].toDF("u", "v", "w"),
+      None, 2).isEmpty)
+    graft.Checkpoints.releaseAll(spark)
+  }
 }

@@ -885,8 +885,8 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     // full-apply guard (score unchanged), so the single best move
     // (ΔQ desc, v asc → v=1 into 2) lands, and round 2 is a no-op.
     val ce = Seq((1L, 1L, 1L), (2L, 2L, 1L), (1L, 2L, 10L))
-      .toDF("cu", "cv", "w")
-    val out = Graph.localMoveWeighted(ce, rounds = 2)
+      .toDF("u", "v", "w")
+    val out = Graph.localMoveWeighted(ce, None, rounds = 2)
       .as[(Long, Long)].collect().toMap
     assert(out == Map(1L -> 2L, 2L -> 2L))
     graft.Checkpoints.releaseAll(spark)
